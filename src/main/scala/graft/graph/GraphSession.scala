@@ -11,13 +11,22 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Mutations buffer into an op list (the WAL analog, Persistent/Log.hs:20-28)
   * and are applied as *batched* DataFrame transformations: consecutive ops of
-  * the same type collapse into one union / anti-join / index-derivation job.
-  * Reads force application of pending ops first — so a session behaves
-  * exactly like the reference's sequential transaction while executing
-  * O(runs), not O(ops), Spark jobs. Node handles are stable global ids
-  * (the reference's tx-local ordinals, Persistent.hs:126-171, are a
-  * serialization detail we deliberately replace — documented divergence
-  * with identical observable state).
+  * the same type collapse into one run. Reads force application of pending
+  * ops first — so a session behaves exactly like the reference's sequential
+  * transaction while executing O(runs), not O(ops), Spark jobs. Node
+  * handles are stable global ids (the reference's tx-local ordinals,
+  * Persistent.hs:126-171, are a serialization detail we deliberately
+  * replace — documented divergence with identical observable state).
+  *
+  * A run's cost follows its delta, not the state: it materializes only the
+  * tables it changed (NewNode: nodes; AddTarget, RemoveTarget, RemoveNode:
+  * edges and index; SetValue: nodes and index), and an AddTarget run first
+  * runs one lookup (a broadcast job and a collect job). A driver-issued
+  * commit of new nodes and edges between them runs 6 Spark jobs, the WAL
+  * write included, however large the graph; it still copies each table it
+  * changed in full on the executors. Bulk commits (GraphStore.commitBulk)
+  * never touch the driver: they stay distributed joins over the whole
+  * delta.
   *
   * Applied ops additionally accumulate in a drainable log so a persistent
   * wrapper (graft.store.GraphStore) can append them as WAL batches.
@@ -118,8 +127,8 @@ final class GraphSession[V] private (
         if (runs.nonEmpty && runs.last.last.getClass == op.getClass) runs.last += op
         else runs += ArrayBuffer(op)
       }
-      // TWO-PHASE COLLAPSE: each run below costs a localCheckpoint (a Spark
-      // job), so an interleaved [new, add, new, add, …] batch — the shape a
+      // TWO-PHASE COLLAPSE: each run below costs localCheckpoints (Spark
+      // jobs), so an interleaved [new, add, new, add, …] batch — the shape a
       // write-shipping poll or driver-side ingest loop produces — would pay
       // O(batch) jobs. When the batch contains ONLY NewNode+AddTarget ops
       // AND every add references only pre-existing ids or ids defined
@@ -161,9 +170,11 @@ final class GraphSession[V] private (
       var st = state
       try {
         runs.foreach { run =>
-          // localCheckpoint after EVERY run: index derivation references the
-          // nodes plan twice, so without truncation the logical plan doubles
-          // per run (2^runs blowup in the analyzer)
+          // localCheckpoint after EVERY run, of the tables the run changed
+          // only: setValue's index derivation references the nodes plan
+          // twice, so without truncation the logical plan doubles per run
+          // (2^runs blowup in the analyzer); tables a run left alone are
+          // already materialized and are not copied again
           st = (run.head match {
             case _: NewNode[_] =>
               st.withNewNodes(run.collect { case NewNode(id, v) => (id, v) }.toSeq)
@@ -177,14 +188,15 @@ final class GraphSession[V] private (
               st.withoutTargets(run.collect { case RemoveTarget(s, d) => (s, d) }.toSeq)
             case _: RemoveNode[_] =>
               st.withoutNodes(run.collect { case RemoveNode(id) => id }.toSeq)
-          }).checkpointed()
+          }).checkpointedSince(st)
         }
       } catch {
         case e: Throwable =>
           pending.clear() // abort the batch: discard ITS ops, not the session
-          // the in-plan guards (GraphState raise_error) fire during
-          // checkpointed()'s materialization as a wrapped SparkException —
-          // translate back to the session contract's typed error
+          // the in-plan setValue guard (GraphState raise_error) fires
+          // during the checkpoint's materialization as a wrapped
+          // SparkException — translate back to the session contract's
+          // typed error (addTarget's driver-side check already throws it)
           GraphSession.unknownIdMessage(e) match {
             case Some(msg) => throw new IllegalArgumentException(msg, e)
             case None => throw e
@@ -204,7 +216,7 @@ final class GraphSession[V] private (
     */
   private[graft] def applyBulkTargets(delta: org.apache.spark.sql.DataFrame): Unit = {
     applied()
-    state = state.withTargetsDF(delta).checkpointed()
+    state = state.withTargetsDF(delta).checkpointedSince(state)
   }
 
   /** Replay a logged op verbatim — ids are preserved (not re-allocated),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /** Immutable graph state as three DataFrames — the Spark mapping of the
   * reference's per-node `Refs` structure
   * (/root/reference/library/GraphDB/Graph.hs:27-34):
@@ -17,11 +19,14 @@ import org.apache.spark.sql.types._
   *
   * State transitions are whole-DataFrame transformations (union /
   * anti-join), mirroring the reference's own WAL-replay model where state =
-  * checkpoint ⊕ replay(ops) (Persistent/Log.hs:38-52). At 100 TB the same
-  * code paths run as batch jobs: deltas arrive as DataFrames (see
-  * [[GraphState.bulkLoad]]), index derivation is a join + flatMap over the
-  * delta only, and all three tables are partitioned by their join key
-  * (`src`) so chained hops don't re-shuffle.
+  * checkpoint ⊕ replay(ops) (Persistent/Log.hs:38-52). Driver-issued op
+  * batches carry driver-sized deltas: they enter plans as local relations,
+  * and addTarget derives its index rows on the driver after one lookup job
+  * ([[GraphState.withTargets]]). At 100 TB the bulk paths run as batch
+  * jobs: deltas arrive as DataFrames (see [[GraphState.bulkLoad]],
+  * [[GraphState.withTargetsDF]]), index derivation is a join + flatMap over
+  * the delta only, and the bulk-loaded tables are partitioned by their
+  * join key (`src`) so chained hops don't re-shuffle.
   */
 object GraphState {
 
@@ -110,8 +115,12 @@ final case class GraphState[V](
 
   import GraphState._
 
-  private def rowsDF(rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+  /** Driver-held rows as a local relation: they enter a plan as data (a
+    * LocalTableScan), never as literals, so a plan's size and its generated
+    * code do not depend on the ids a batch carries.
+    */
+  private def localDF(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** Append freshly allocated nodes (op #1, Graph.hs:40-41). Unlinked nodes
     * are invisible to stats/persistence until an edge reaches them —
@@ -120,41 +129,84 @@ final case class GraphState[V](
     */
   def withNewNodes(vs: Seq[(Long, V)]): GraphState[V] = {
     val rows = vs.map { case (id, v) => Row(id, model.kindOf(v), model.toValueRow(v)) }
-    copy(nodes = nodes.unionByName(rowsDF(rows, nodesSchema(model))))
+    copy(nodes = nodes.unionByName(localDF(rows, nodesSchema(model))))
   }
 
   /** addTarget (op #6, Graph.hs:57-61): idempotent edge insert + index key
-    * emission for the new edges only.
+    * emission for the new edges only — the driver-issued path, whose cost
+    * follows the delta, not the tables.
     *
-    * Endpoint ids are validated IN-PLAN like [[withValues]]' guard: the
-    * reference errors on an invalid node ref, and without the check a
-    * typo'd id would silently create a phantom edge — counted by
-    * stats/reachability but invisible to getTargets (deriveIndex's inner
-    * join emits no keys for it), WAL-logged and replayed into every
+    * One lookup job fetches both things the delta needs: the endpoints'
+    * `(id, kind, value)` rows, and the existing edges among those endpoints
+    * (a superset of the requested pairs that already exist). The batch's
+    * ids enter as ONE local relation, broadcast once and reused by all
+    * three semi-joins. The edge and index deltas are then computed here,
+    * the index rows by the model's own `indexes(target, source)` — the
+    * function [[GraphState.deriveIndex]] runs on the executors for the
+    * bulk paths — and unioned onto the tables as local relations.
+    *
+    * Endpoint ids of new edges are validated: the reference errors on an
+    * invalid node ref, and without the check a typo'd id would silently
+    * create a phantom edge — counted by stats/reachability but invisible to
+    * getTargets (no index keys for it), WAL-logged and replayed into every
     * follower, and persisted dangling by the checkpoint. NodeId is a plain
     * Long, so the typed API cannot make bad refs unrepresentable the way
-    * the reference's model typeclass does — the plan must.
+    * the reference's model typeclass does — the apply must. An unknown id
+    * raises IllegalArgumentException before any table changes.
     *
     * `validate = false` is for FOLLOWER replay (OplogStream): a follower
     * bootstrapped mid-history legitimately lacks nodes its WAL suffix
     * references (e.g. a checkpoint-less replica of an events-only store) —
-    * tolerance there is the documented eventual-consistency posture, while
-    * the WRITER session path always validates (the reference server is
-    * what refuses invalid refs).
+    * the edge is still added, with no index rows for it. Tolerance there is
+    * the documented eventual-consistency posture, while the WRITER session
+    * path always validates (the reference server is what refuses invalid
+    * refs).
     */
   def withTargets(pairs: Seq[(Long, Long)],
       validate: Boolean = true): GraphState[V] = {
-    val delta0 = rowsDF(pairs.distinct.map(p => Row(p._1, p._2)), edgesSchema)
-      .join(edges, Seq("src", "dst"), "left_anti")
-    val delta = if (validate) guardEndpoints(delta0) else delta0
-    val newIndex = deriveIndex(model, nodes, delta)
-    copy(edges = edges.unionByName(delta), index = index.unionByName(newIndex))
+    val wanted = pairs.distinct
+    val ids = localDF(wanted.flatMap(p => Seq(p._1, p._2)).distinct.map(Row(_)),
+      StructType(Seq(StructField("id", LongType, nullable = false))))
+    def idsAs(c: String) = ids.select(col("id").as(c))
+    val hits = nodes.join(ids, Seq("id"), "left_semi")
+      .select(col("id"), lit(null).cast(LongType).as("dst"),
+        col("kind"), col("value"))
+      .unionByName(edges
+        .join(idsAs("src"), Seq("src"), "left_semi")
+        .join(idsAs("dst"), Seq("dst"), "left_semi")
+        .select(col("src").as("id"), col("dst"),
+          lit(null).cast(StringType).as("kind"),
+          lit(null).cast(model.valueSchema).as("value")))
+      .collect()
+    val (nodeHits, edgeHits) = hits.partition(_.isNullAt(1))
+    val present = edgeHits.map(r => (r.getLong(0), r.getLong(1))).toSet
+    val delta = wanted.filterNot(present)
+    if (delta.isEmpty) return this
+    val known: Map[Long, V] = nodeHits.map(r =>
+      r.getLong(0) -> model.fromValueRow(r.getString(2), r.getStruct(3))).toMap
+    if (validate) for ((s, d) <- delta; (side, id) <- Seq("src" -> s, "dst" -> d)
+        if !known.contains(id))
+      throw new IllegalArgumentException(
+        s"addTarget $side references unknown node id $id — nodes must be created first")
+    val newIndex = delta.flatMap { case (s, d) =>
+      (known.get(d), known.get(s)) match {
+        case (Some(tgt), Some(src)) =>
+          model.indexes(tgt, src).map(k => Row(s, k.kind, k.key, d))
+        case _ => Nil
+      }
+    }
+    copy(
+      edges = edges.unionByName(localDF(delta.map(p => Row(p._1, p._2)), edgesSchema)),
+      index =
+        if (newIndex.isEmpty) index
+        else index.unionByName(localDF(newIndex, indexSchema)))
   }
 
-  /** In-plan endpoint validation: any edge whose src/dst is not a known
-    * node id raises at execution time. Two left joins against the node id
-    * set + a null check — at ingest scale that is two hash joins on a
-    * bigint key, map-side combined by AQE when the node table broadcasts.
+  /** In-plan endpoint validation for the bulk path: any edge whose src/dst
+    * is not a known node id raises at execution time. Two left joins
+    * against the node id set + a null check — at ingest scale that is two
+    * hash joins on a bigint key, map-side combined by AQE when the node
+    * table broadcasts.
     */
   private def guardEndpoints(delta: DataFrame): DataFrame = {
     def guard(side: String) = {
@@ -213,7 +265,7 @@ final case class GraphState[V](
 
   /** removeTarget (op #7, Graph.hs:63-67): unlink + drop the edge's keys. */
   def withoutTargets(pairs: Seq[(Long, Long)]): GraphState[V] = {
-    val delta = rowsDF(pairs.map(p => Row(p._1, p._2)), edgesSchema)
+    val delta = localDF(pairs.map(p => Row(p._1, p._2)), edgesSchema)
     copy(
       edges = edges.join(delta, Seq("src", "dst"), "left_anti"),
       index = index.join(delta, Seq("src", "dst"), "left_anti"))
@@ -225,7 +277,7 @@ final case class GraphState[V](
     * Graph.hs:145-195).
     */
   def withoutNodes(ids: Seq[Long]): GraphState[V] = {
-    val delta = rowsDF(ids.map(Row(_)), StructType(Seq(
+    val delta = localDF(ids.map(Row(_)), StructType(Seq(
       StructField("dst", LongType, nullable = false))))
     copy(
       edges = edges.join(delta, Seq("dst"), "left_anti"),
@@ -238,7 +290,7 @@ final case class GraphState[V](
     */
   def withValues(vs: Seq[(Long, V)]): GraphState[V] = {
     val rows = vs.map { case (id, v) => Row(id, model.kindOf(v), model.toValueRow(v)) }
-    val delta = rowsDF(rows, nodesSchema(model))
+    val delta = localDF(rows, nodesSchema(model))
     // the reference errors on an invalid node ref; without this check a
     // typo'd id would silently FABRICATE a node row (and its WAL'd 'set'
     // op would replay the phantom into every follower). The check is IN
@@ -246,8 +298,9 @@ final case class GraphState[V](
     // eager anti-join count(): the eager form ran one extra distributed
     // job per SetValue batch on the session, replay, AND follower paths.
     // It fires on materialization — immediate in practice, because every
-    // session-path withValues is followed by checkpointed(), which
-    // materializes all columns eagerly (so pruning cannot elide it).
+    // session-path withValues is followed by checkpointedSince(), which
+    // materializes the changed nodes table eagerly, all columns (so
+    // pruning cannot elide it).
     val known = nodes.select(col("id"), lit(true).as("_known"))
     val checked = delta
       .join(known, Seq("id"), "left")
@@ -269,13 +322,40 @@ final case class GraphState[V](
         .unionByName(deriveIndex(model, newNodes, incoming)))
   }
 
-  /** Materialize and truncate lineage. Called after each applied op batch —
-    * without it a long mutation session accumulates an unbounded plan.
+  /** Materialize all three tables as they are — for state just loaded from
+    * a checkpoint, whose files a later close() may move to the archive.
     */
   def checkpointed(): GraphState[V] = copy(
     nodes = nodes.localCheckpoint(true),
     edges = edges.localCheckpoint(true),
     index = index.localCheckpoint(true))
+
+  /** The checkpoint rule of every op applier: materialize the tables this
+    * state changed against `prev` (the state the step started from) and
+    * keep the others as they are. Materializing truncates lineage — without
+    * it a long mutation session accumulates an unbounded plan. Each changed
+    * table is coalesced back to at most max(its partition count in `prev`,
+    * `spark.sql.shuffle.partitions`), so a stream of small deltas does not
+    * add a partition to the table, and a task to every later scan of it,
+    * per step.
+    */
+  def checkpointedSince(prev: GraphState[V]): GraphState[V] = {
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def ckpt(was: DataFrame, now: DataFrame): DataFrame =
+      if (now eq was) was
+      else now.coalesce(math.max(partitions(was), shufflePartitions))
+        .localCheckpoint(true)
+    copy(
+      nodes = ckpt(prev.nodes, nodes),
+      edges = ckpt(prev.edges, edges),
+      index = ckpt(prev.index, index))
+  }
+
+  /** Partition count of a table, read from its physical RDD: planning only,
+    * no action (`Dataset.rdd` would register one).
+    */
+  private def partitions(df: DataFrame): Int =
+    df.queryExecution.toRdd.getNumPartitions
 
   /** Partition adjacency by `src` so chained hop-joins are co-partitioned
     * (the shuffle happens once at load, not per hop).

@@ -307,7 +307,7 @@ final class GraphReplica[V] private (
               "delivery; bootstrap a fresh replica")
         val rows = pendingDirs(dir)._1
         state =
-          if (isBulk) state.withTargetsDF(rows.select("src", "dst")).checkpointed()
+          if (isBulk) state.withTargetsDF(rows.select("src", "dst")).checkpointedSince(state)
           else OplogStream.applyOpBatch(model, state, rows)
         appliedMark = k
         pendingDirs -= dir

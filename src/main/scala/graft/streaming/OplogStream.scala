@@ -180,6 +180,7 @@ object OplogStream {
     var run = List.empty[org.apache.spark.sql.Row]
     def flush(): Unit = if (run.nonEmpty) {
       val rs = run.reverse
+      val prev = st
       rs.head.getString(1) match {
         case "add" if isBulk(rs.head) =>
           st = st.withTargetsDF(st.spark.createDataFrame(
@@ -205,7 +206,7 @@ object OplogStream {
         case "rmt" => st = st.withoutTargets(rs.map(r => (r.getLong(3), r.getLong(4))))
         case "rm" => st = st.withoutNodes(rs.map(_.getLong(2)))
       }
-      st = st.checkpointed()
+      st = st.checkpointedSince(prev)
       run = Nil
     }
     rows.foreach { r =>
