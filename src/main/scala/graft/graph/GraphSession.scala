@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -18,15 +17,18 @@ import scala.collection.mutable.ArrayBuffer
   * Persistent.hs:126-171, are a serialization detail we deliberately
   * replace — documented divergence with identical observable state).
   *
-  * A run's cost follows its delta, not the state: it materializes only the
-  * tables it changed (NewNode: nodes; AddTarget, RemoveTarget, RemoveNode:
-  * edges and index; SetValue: nodes and index), and an AddTarget run first
-  * runs one lookup (a broadcast job and a collect job). A driver-issued
-  * commit of new nodes and edges between them runs 6 Spark jobs, the WAL
-  * write included, however large the graph; it still copies each table it
-  * changed in full on the executors. Bulk commits (GraphStore.commitBulk)
-  * never touch the driver: they stay distributed joins over the whole
-  * delta.
+  * A run's cost follows its delta, not the state. NewNode and AddTarget
+  * runs append their rows to the tables' driver-held tails and copy no
+  * table; an AddTarget run first runs one lookup (a broadcast job and a
+  * collect job). A driver-issued commit of new nodes and edges between
+  * them runs 3 Spark jobs, the WAL write included, however large the
+  * graph. A table materializes only when its tail would pass
+  * `GraphState.TailBound` rows, or when a SetValue, RemoveTarget or
+  * RemoveNode run changes it (SetValue: nodes and index; the two removes:
+  * edges and index) — see [[GraphState.checkpointedSince]]. A point read
+  * (getValue, getTargets, targets, sources) runs one Spark job and compiles
+  * no class for a new id. Bulk commits (GraphStore.commitBulk) never touch
+  * the driver: they stay distributed joins over the whole delta.
   *
   * Applied ops additionally accumulate in a drainable log so a persistent
   * wrapper (graft.store.GraphStore) can append them as WAL batches.
@@ -80,34 +82,21 @@ final class GraphSession[V] private (
   // ---------------------------------------------------------------- reads
 
   /** getValue (op #2, GraphDB.hs:306-309). */
-  def getValue(n: NodeId): V = {
-    val r = applied().nodes.where(col("id") === n)
-      .select(col("kind"), col("value")).head()
-    model.fromValueRow(r.getString(0), r.getStruct(1))
-  }
+  def getValue(n: NodeId): V = applied().getValue(n)
 
   /** getTargets (op #5, GraphDB.hs:323-327): nodes reachable from `n` via
-    * index key `k`. Distinct per key (the multimap holds a set per key,
-    * Graph.hs:69-70).
+    * index key `k`, distinct.
     */
-  def getTargets(n: NodeId, k: IndexKey): Seq[NodeId] =
-    targetsDF(n, k).collect().map(_.getLong(0)).toSeq
+  def getTargets(n: NodeId, k: IndexKey): Seq[NodeId] = applied().getTargets(n, k)
 
   /** Dataset form of getTargets — the composable hop for analytics plans. */
-  def targetsDF(n: NodeId, k: IndexKey): DataFrame =
-    applied().index
-      .where(col("src") === n && col("kkind") === k.kind && col("key") === k.key)
-      .select(col("dst")).distinct()
+  def targetsDF(n: NodeId, k: IndexKey): DataFrame = applied().targetsDF(n, k)
 
   /** Distinct targets regardless of key (traverseTargets, Graph.hs:72-77). */
-  def targets(n: NodeId): Seq[NodeId] =
-    applied().edges.where(col("src") === n)
-      .select(col("dst")).distinct().collect().map(_.getLong(0)).toSeq
+  def targets(n: NodeId): Seq[NodeId] = applied().targets(n)
 
   /** Sources of a node (traverseSources/getSources, Graph.hs:79-80,135-139). */
-  def sources(n: NodeId): Seq[NodeId] =
-    applied().edges.where(col("dst") === n)
-      .select(col("src")).distinct().collect().map(_.getLong(0)).toSeq
+  def sources(n: NodeId): Seq[NodeId] = applied().sources(n)
 
   /** getStats (op #9, GraphDB.hs:355-356): (nodes, edges, index entries)
     * of the closure reachable from `from` (default root).
@@ -122,39 +111,48 @@ final class GraphSession[V] private (
   def applied(): GraphState[V] = {
     if (pending.nonEmpty) {
       // Collapse consecutive same-type ops into one batch application.
-      val runs = ArrayBuffer[ArrayBuffer[GraphOp[V]]]()
-      pending.foreach { op =>
-        if (runs.nonEmpty && runs.last.last.getClass == op.getClass) runs.last += op
-        else runs += ArrayBuffer(op)
-      }
-      // TWO-PHASE COLLAPSE: each run below costs localCheckpoints (Spark
-      // jobs), so an interleaved [new, add, new, add, …] batch — the shape a
-      // write-shipping poll or driver-side ingest loop produces — would pay
-      // O(batch) jobs. When the batch contains ONLY NewNode+AddTarget ops
-      // AND every add references only pre-existing ids or ids defined
-      // EARLIER in the batch, applying [all news][all adds] is
-      // order-equivalent: news only define (never reference), adds only
-      // reference (never define) and are idempotent set-inserts, and the
-      // dependency check keeps invalid programs invalid (an add naming a
-      // not-yet-created id still aborts via the in-plan guard). Two jobs
-      // instead of O(batch).
-      if (runs.size > 2 && pending.forall {
-            case _: NewNode[_] | _: AddTarget[_] => true
-            case _ => false
-          }) {
-        val newIds = pending.collect { case NewNode(id, _) => id }.toSet
+      def sameTypeRuns(ops: Seq[GraphOp[V]]): Seq[Seq[GraphOp[V]]] =
+        ops.foldLeft(Vector.empty[Vector[GraphOp[V]]]) {
+          case (rs, op) if rs.nonEmpty && rs.last.head.getClass == op.getClass =>
+            rs.init :+ (rs.last :+ op)
+          case (rs, op) => rs :+ Vector(op)
+        }
+      // TWO-PHASE COLLAPSE: each AddTarget run below costs a lookup (Spark
+      // jobs), so an interleaved [new, add, new, add, …] stretch — the
+      // shape a write-shipping poll, a driver-side ingest loop or a WAL
+      // replay produces — would pay O(stretch) jobs. When every add of a
+      // maximal NewNode+AddTarget stretch references only ids that exist
+      // before the stretch or are defined EARLIER in it, applying [all
+      // news][all adds] of the stretch is order-equivalent: news only
+      // define (never reference), adds only reference (never define) and
+      // are idempotent set-inserts, and the dependency check keeps invalid
+      // programs invalid (an add naming a not-yet-created id still aborts
+      // via the driver-side check). One lookup per stretch instead of
+      // O(stretch).
+      def collapsed(stretch: Seq[GraphOp[V]]): Seq[Seq[GraphOp[V]]] = {
+        val newIds = stretch.collect { case NewNode(id, _) => id }.toSet
         val defined = scala.collection.mutable.Set[Long]()
-        val depsOk = pending.forall {
+        val depsOk = stretch.forall {
           case NewNode(id, _) => defined += id; true
           case AddTarget(s, d) => (!newIds(s) || defined(s)) && (!newIds(d) || defined(d))
           case _ => true
         }
-        if (depsOk) {
-          val news = pending.collect { case op @ NewNode(_, _) => op: GraphOp[V] }
-          val adds = pending.collect { case op @ AddTarget(_, _) => op: GraphOp[V] }
-          runs.clear()
-          Seq(news, adds).filter(_.nonEmpty).foreach(r => runs += r)
-        }
+        if (!depsOk) sameTypeRuns(stretch)
+        else Seq(stretch.filter(_.isInstanceOf[NewNode[_]]),
+          stretch.filter(_.isInstanceOf[AddTarget[_]])).filter(_.nonEmpty)
+      }
+      def appends(op: GraphOp[V]): Boolean = op match {
+        case _: NewNode[_] | _: AddTarget[_] => true
+        case _ => false
+      }
+      val runs = ArrayBuffer[Seq[GraphOp[V]]]()
+      var rest = pending.toSeq
+      while (rest.nonEmpty) {
+        val (stretch, afterStretch) = rest.span(appends)
+        val (others, next) = afterStretch.span(op => !appends(op))
+        runs ++= collapsed(stretch)
+        runs ++= sameTypeRuns(others)
+        rest = next
       }
       // The whole pending batch applies ATOMICALLY against a local copy:
       // `state` is only advanced after every run succeeded. On a mid-run
@@ -170,11 +168,12 @@ final class GraphSession[V] private (
       var st = state
       try {
         runs.foreach { run =>
-          // localCheckpoint after EVERY run, of the tables the run changed
-          // only: setValue's index derivation references the nodes plan
-          // twice, so without truncation the logical plan doubles per run
-          // (2^runs blowup in the analyzer); tables a run left alone are
-          // already materialized and are not copied again
+          // settle after EVERY run the tables the run changed: appends
+          // stay in the tail up to its bound, any other change
+          // materializes — setValue's index derivation references the
+          // nodes plan twice, so without truncation the logical plan
+          // doubles per run (2^runs blowup in the analyzer); tables a run
+          // left alone are not touched
           st = (run.head match {
             case _: NewNode[_] =>
               st.withNewNodes(run.collect { case NewNode(id, v) => (id, v) }.toSeq)

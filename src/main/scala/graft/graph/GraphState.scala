@@ -6,6 +6,8 @@ import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
 
+import graft.functions.Param
+
 /** Immutable graph state as three DataFrames — the Spark mapping of the
   * reference's per-node `Refs` structure
   * (/root/reference/library/GraphDB/Graph.hs:27-34):
@@ -22,11 +24,27 @@ import scala.jdk.CollectionConverters._
   * checkpoint ⊕ replay(ops) (Persistent/Log.hs:38-52). Driver-issued op
   * batches carry driver-sized deltas: they enter plans as local relations,
   * and addTarget derives its index rows on the driver after one lookup job
-  * ([[GraphState.withTargets]]). At 100 TB the bulk paths run as batch
-  * jobs: deltas arrive as DataFrames (see [[GraphState.bulkLoad]],
-  * [[GraphState.withTargetsDF]]), index derivation is a join + flatMap over
-  * the delta only, and the bulk-loaded tables are partitioned by their
-  * join key (`src`) so chained hops don't re-shuffle.
+  * ([[GraphState.withTargets]]).
+  *
+  * Each table is a materialized base plus a TAIL of rows appended on the
+  * driver ([[GraphState.Table]]); readers see base ∪ tail as one
+  * DataFrame, the tail entering the plan as one local relation scanned as
+  * one partition. NewNode and AddTarget append to the tail and copy
+  * nothing; a table materializes (through [[checkpointedSince]]) when its
+  * tail would pass [[GraphState.TailBound]] rows, or when a run that is not
+  * append-only (SetValue, RemoveTarget, RemoveNode, a bulk edge delta)
+  * changes it. The tail is part of this immutable value, so an aborted
+  * batch discards it with the rest of its local copy.
+  *
+  * Point reads ([[getValue]], [[getTargets]], [[targets]], [[sources]])
+  * run one Spark job each and bind their ids by reference
+  * ([[graft.functions.Param]]), so a read of a new id compiles no class.
+  *
+  * At 100 TB the bulk paths run as batch jobs: deltas arrive as DataFrames
+  * (see [[GraphState.bulkLoad]], [[GraphState.withTargetsDF]]), index
+  * derivation is a join + flatMap over the delta only, and the bulk-loaded
+  * tables are partitioned by their join key (`src`) so chained hops don't
+  * re-shuffle.
   */
 object GraphState {
 
@@ -44,6 +62,51 @@ object GraphState {
     StructField("id", LongType, nullable = false),
     StructField("kind", StringType, nullable = false),
     StructField("value", model.valueSchema, nullable = true)))
+
+  /** Most rows a table's tail holds: an append that would pass it
+    * materializes the table instead. Reads filter the tail on the driver
+    * (the optimizer evaluates a filter over a local relation in place), so
+    * the bound keeps that work and the plan's size small.
+    */
+  private[graft] val TailBound = 1024
+
+  /** One table of a state: a base plan plus the rows appended to it on the
+    * driver since it last materialized. `df` is base ∪ tail; the tail
+    * enters it as ONE local relation, scanned as one partition.
+    */
+  final class Table private[GraphState] (
+      val base: DataFrame, val tail: Vector[Row], schema: StructType) {
+
+    lazy val df: DataFrame = withTail(_.coalesce(1))
+
+    private def withTail(scan: DataFrame => DataFrame): DataFrame =
+      if (tail.isEmpty) base
+      else base.unionByName(scan(base.sparkSession.createDataFrame(tail.asJava, schema)))
+
+    private[GraphState] def appended(rows: Seq[Row]): Table =
+      if (rows.isEmpty) this else new Table(base, tail ++ rows, schema)
+
+    /** A change that is not an append: `plan` becomes the base, to be
+      * materialized by the next [[GraphState.checkpointedSince]].
+      */
+    private[GraphState] def replaced(plan: DataFrame): Table =
+      new Table(plan, Vector.empty, schema)
+
+    /** Base ∪ tail as a new materialized base, coalesced to `partitions`.
+      * The tail is scanned in parallel here, not as one partition: one
+      * batch past the bound (a bulk replay) must not shrink the table to a
+      * single partition.
+      */
+    private[GraphState] def materialized(partitions: Option[Int]): Table =
+      replaced(partitions.fold(df)(withTail(identity).coalesce).localCheckpoint(true))
+  }
+
+  def apply[V](spark: SparkSession, model: GraphModel[V],
+      nodes: DataFrame, edges: DataFrame, index: DataFrame): GraphState[V] =
+    GraphState(spark, model,
+      new Table(nodes, Vector.empty, nodesSchema(model)),
+      new Table(edges, Vector.empty, edgesSchema),
+      new Table(index, Vector.empty, indexSchema))
 
   def empty[V](spark: SparkSession, model: GraphModel[V]): GraphState[V] = {
     def e(s: StructType) =
@@ -109,11 +172,15 @@ object GraphState {
 final case class GraphState[V](
     spark: SparkSession,
     model: GraphModel[V],
-    nodes: DataFrame,
-    edges: DataFrame,
-    index: DataFrame) {
+    nodeTable: GraphState.Table,
+    edgeTable: GraphState.Table,
+    indexTable: GraphState.Table) {
 
   import GraphState._
+
+  def nodes: DataFrame = nodeTable.df
+  def edges: DataFrame = edgeTable.df
+  def index: DataFrame = indexTable.df
 
   /** Driver-held rows as a local relation: they enter a plan as data (a
     * LocalTableScan), never as literals, so a plan's size and its generated
@@ -127,10 +194,8 @@ final case class GraphState[V](
     * reachability scoping preserves the reference's "not persisted unless
     * linked" doc (GraphDB.hs:296-300).
     */
-  def withNewNodes(vs: Seq[(Long, V)]): GraphState[V] = {
-    val rows = vs.map { case (id, v) => Row(id, model.kindOf(v), model.toValueRow(v)) }
-    copy(nodes = nodes.unionByName(localDF(rows, nodesSchema(model))))
-  }
+  def withNewNodes(vs: Seq[(Long, V)]): GraphState[V] = copy(nodeTable =
+    nodeTable.appended(vs.map { case (id, v) => Row(id, model.kindOf(v), model.toValueRow(v)) }))
 
   /** addTarget (op #6, Graph.hs:57-61): idempotent edge insert + index key
     * emission for the new edges only — the driver-issued path, whose cost
@@ -143,7 +208,7 @@ final case class GraphState[V](
     * three semi-joins. The edge and index deltas are then computed here,
     * the index rows by the model's own `indexes(target, source)` — the
     * function [[GraphState.deriveIndex]] runs on the executors for the
-    * bulk paths — and unioned onto the tables as local relations.
+    * bulk paths — and appended to the tables' tails.
     *
     * Endpoint ids of new edges are validated: the reference errors on an
     * invalid node ref, and without the check a typo'd id would silently
@@ -196,10 +261,8 @@ final case class GraphState[V](
       }
     }
     copy(
-      edges = edges.unionByName(localDF(delta.map(p => Row(p._1, p._2)), edgesSchema)),
-      index =
-        if (newIndex.isEmpty) index
-        else index.unionByName(localDF(newIndex, indexSchema)))
+      edgeTable = edgeTable.appended(delta.map(p => Row(p._1, p._2))),
+      indexTable = indexTable.appended(newIndex))
   }
 
   /** In-plan endpoint validation for the bulk path: any edge whose src/dst
@@ -240,8 +303,8 @@ final case class GraphState[V](
       .distinct()
       .join(edges, Seq("src", "dst"), "left_anti")
     copy(
-      edges = edges.unionByName(d),
-      index = index.unionByName(deriveIndex(model, nodes, d)))
+      edgeTable = edgeTable.replaced(edges.unionByName(d)),
+      indexTable = indexTable.replaced(index.unionByName(deriveIndex(model, nodes, d))))
   }
 
   /** [[withTargetsDF]] WITH the writer-path endpoint guard: every edge
@@ -259,16 +322,16 @@ final case class GraphState[V](
       .distinct()
       .join(edges, Seq("src", "dst"), "left_anti"))
     copy(
-      edges = edges.unionByName(d),
-      index = index.unionByName(deriveIndex(model, nodes, d)))
+      edgeTable = edgeTable.replaced(edges.unionByName(d)),
+      indexTable = indexTable.replaced(index.unionByName(deriveIndex(model, nodes, d))))
   }
 
   /** removeTarget (op #7, Graph.hs:63-67): unlink + drop the edge's keys. */
   def withoutTargets(pairs: Seq[(Long, Long)]): GraphState[V] = {
     val delta = localDF(pairs.map(p => Row(p._1, p._2)), edgesSchema)
     copy(
-      edges = edges.join(delta, Seq("src", "dst"), "left_anti"),
-      index = index.join(delta, Seq("src", "dst"), "left_anti"))
+      edgeTable = edgeTable.replaced(edges.join(delta, Seq("src", "dst"), "left_anti")),
+      indexTable = indexTable.replaced(index.join(delta, Seq("src", "dst"), "left_anti")))
   }
 
   /** remove (op #8, Graph.hs:126-127): detach from ALL sources — incoming
@@ -280,8 +343,8 @@ final case class GraphState[V](
     val delta = localDF(ids.map(Row(_)), StructType(Seq(
       StructField("dst", LongType, nullable = false))))
     copy(
-      edges = edges.join(delta, Seq("dst"), "left_anti"),
-      index = index.join(delta, Seq("dst"), "left_anti"))
+      edgeTable = edgeTable.replaced(edges.join(delta, Seq("dst"), "left_anti")),
+      indexTable = indexTable.replaced(index.join(delta, Seq("dst"), "left_anti")))
   }
 
   /** setValue (op #3, Graph.hs:46-55): replace the value and re-derive the
@@ -316,39 +379,41 @@ final case class GraphState[V](
       .unionByName(checked)
     val touched = delta.select(col("id").as("dst"))
     val incoming = edges.join(touched, Seq("dst"))
-    GraphState(spark, model, newNodes,
-      edges,
-      index.join(touched, Seq("dst"), "left_anti")
-        .unionByName(deriveIndex(model, newNodes, incoming)))
+    copy(
+      nodeTable = nodeTable.replaced(newNodes),
+      indexTable = indexTable.replaced(index.join(touched, Seq("dst"), "left_anti")
+        .unionByName(deriveIndex(model, newNodes, incoming))))
   }
 
   /** Materialize all three tables as they are — for state just loaded from
     * a checkpoint, whose files a later close() may move to the archive.
     */
   def checkpointed(): GraphState[V] = copy(
-    nodes = nodes.localCheckpoint(true),
-    edges = edges.localCheckpoint(true),
-    index = index.localCheckpoint(true))
+    nodeTable = nodeTable.materialized(None),
+    edgeTable = edgeTable.materialized(None),
+    indexTable = indexTable.materialized(None))
 
-  /** The checkpoint rule of every op applier: materialize the tables this
-    * state changed against `prev` (the state the step started from) and
-    * keep the others as they are. Materializing truncates lineage — without
-    * it a long mutation session accumulates an unbounded plan. Each changed
-    * table is coalesced back to at most max(its partition count in `prev`,
-    * `spark.sql.shuffle.partitions`), so a stream of small deltas does not
-    * add a partition to the table, and a task to every later scan of it,
-    * per step.
+  /** The checkpoint rule of every op applier: settle the tables this state
+    * changed against `prev` (the state the step started from) and keep the
+    * others as they are. A table that only gained tail rows stays as it is
+    * while its tail holds at most [[GraphState.TailBound]] rows — no Spark
+    * job. Past the bound, or after a change that is not an append, it
+    * materializes: that truncates lineage (without it a long mutation
+    * session accumulates an unbounded plan), and the table is coalesced
+    * back to at most max(the partition count of `prev`'s base,
+    * `spark.sql.shuffle.partitions`), so neither a stream of small deltas
+    * nor the tail's own partition adds a task to every later scan of it.
     */
   def checkpointedSince(prev: GraphState[V]): GraphState[V] = {
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def ckpt(was: DataFrame, now: DataFrame): DataFrame =
+    def settle(was: Table, now: Table): Table =
       if (now eq was) was
-      else now.coalesce(math.max(partitions(was), shufflePartitions))
-        .localCheckpoint(true)
+      else if ((now.base eq was.base) && now.tail.size <= TailBound) now
+      else now.materialized(Some(math.max(partitions(was.base), shufflePartitions)))
     copy(
-      nodes = ckpt(prev.nodes, nodes),
-      edges = ckpt(prev.edges, edges),
-      index = ckpt(prev.index, index))
+      nodeTable = settle(prev.nodeTable, nodeTable),
+      edgeTable = settle(prev.edgeTable, edgeTable),
+      indexTable = settle(prev.indexTable, indexTable))
   }
 
   /** Partition count of a table, read from its physical RDD: planning only,
@@ -357,12 +422,48 @@ final case class GraphState[V](
   private def partitions(df: DataFrame): Int =
     df.queryExecution.toRdd.getNumPartitions
 
-  /** Partition adjacency by `src` so chained hop-joins are co-partitioned
-    * (the shuffle happens once at load, not per hop).
+  // ------------------------------------------------------------ point reads
+  // One Spark job each: the filter is collected (`head()` would scan one
+  // partition, then the rest, in two jobs) and ids are deduped on the
+  // driver (a planned `distinct()` runs as a map job plus a result job
+  // under AQE). Ids and keys bind as [[Param]]s, so every id shares one
+  // generated class.
+
+  /** getValue (op #2). Throws NoSuchElementException for an unknown id (the
+    * reference's invalid-ref failure).
     */
-  def repartitioned(): GraphState[V] = copy(
-    edges = edges.repartition(col("src")),
-    index = index.repartition(col("src")))
+  def getValue(n: Long): V = {
+    val rows = nodes.where(col("id") === Param(n))
+      .select(col("kind"), col("value")).collect()
+    if (rows.isEmpty) throw new NoSuchElementException(s"no node with id $n")
+    model.fromValueRow(rows(0).getString(0), rows(0).getStruct(1))
+  }
+
+  /** getTargets (op #5, Graph.hs:69-70): nodes reachable from `n` via
+    * index key `k`. Distinct per key (the multimap holds a set per key).
+    */
+  def getTargets(n: Long, k: IndexKey): Seq[Long] = distinctIds(keyed(n, k))
+
+  /** Dataset form of [[getTargets]] — the composable hop for analytics
+    * plans, deduped in the plan.
+    */
+  def targetsDF(n: Long, k: IndexKey): DataFrame = keyed(n, k).distinct()
+
+  /** Distinct targets regardless of key (traverseTargets, Graph.hs:72-77). */
+  def targets(n: Long): Seq[Long] =
+    distinctIds(edges.where(col("src") === Param(n)).select(col("dst")))
+
+  /** Sources of a node (traverseSources/getSources, Graph.hs:79-80,135-139). */
+  def sources(n: Long): Seq[Long] =
+    distinctIds(edges.where(col("dst") === Param(n)).select(col("src")))
+
+  private def keyed(n: Long, k: IndexKey): DataFrame =
+    index.where(col("src") === Param(n) && col("kkind") === Param(k.kind) &&
+        col("key") === Param(k.key))
+      .select(col("dst"))
+
+  private def distinctIds(df: DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).distinct.toSeq
 
   /** getStats (op #9, Graph.hs:82-118): (reachable nodes, distinct edges
     * among them, index entries among them), scoped by BFS from `from`.

@@ -62,14 +62,10 @@ final class GraphReplica[V] private (
   // The served read surface (Server.hs dispatches the same session ops it
   // receives over the wire; here they run against the follower state).
 
-  /** getValue — same contract as GraphSession.getValue (throws on an
-    * unknown id, the reference's invalid-ref failure).
+  /** getValue — [[GraphState.getValue]], as GraphSession.getValue (throws
+    * on an unknown id, the reference's invalid-ref failure).
     */
-  def getValue(n: Long): V = {
-    val r = state.nodes.where(col("id") === n)
-      .select(col("kind"), col("value")).head()
-    model.fromValueRow(r.getString(0), r.getStruct(1))
-  }
+  def getValue(n: Long): V = state.getValue(n)
 
   /** Batched point reads: N lookups answered by ONE Spark job. The
     * single-id [[getValue]] runs a full DataFrame filter per call (fine
@@ -96,20 +92,13 @@ final class GraphReplica[V] private (
     }
 
   /** getTargets under an index key — distinct, like the writer side. */
-  def getTargets(n: Long, k: IndexKey): Seq[Long] =
-    state.index
-      .where(col("src") === n && col("kkind") === k.kind && col("key") === k.key)
-      .select(col("dst")).distinct().collect().map(_.getLong(0)).toSeq
+  def getTargets(n: Long, k: IndexKey): Seq[Long] = state.getTargets(n, k)
 
   /** traverseTargets — distinct targets regardless of key. */
-  def targets(n: Long): Seq[Long] =
-    state.edges.where(col("src") === n)
-      .select(col("dst")).distinct().collect().map(_.getLong(0)).toSeq
+  def targets(n: Long): Seq[Long] = state.targets(n)
 
   /** traverseSources. */
-  def sources(n: Long): Seq[Long] =
-    state.edges.where(col("dst") === n)
-      .select(col("src")).distinct().collect().map(_.getLong(0)).toSeq
+  def sources(n: Long): Seq[Long] = state.sources(n)
 
   /** getStats of the closure reachable from `from` (default root). */
   def getStats(from: Long = 0L): (Long, Long, Long) = state.stats(from)

@@ -171,71 +171,39 @@ class GraphSessionSpec extends AnyFunSuite {
     val a = g.newNode(Artist(1, "A"))
     g.addTarget(g.root, a)
     g.getStats() // flush pending ops so the measurement sees ONE set-run
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { actions.add(funcName); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val names = CostProbe.costOf(spark) {
       g.setValue(a, Artist(1, "B"))
       g.applied()
-      // listener events are async — wait until the action list stabilizes
-      var prev = -1; var cur = actions.size(); var spins = 0
-      while (cur != prev || spins < 3) {
-        prev = cur; Thread.sleep(200); cur = actions.size(); spins += 1
-      }
-      // applying one SetValue run must cost exactly the 2 checkpoint
-      // materializations of the tables it changes (nodes and index) — the
-      // unknown-id guard rides in the plan; the eager anti-join used to
-      // surface here as an extra `count` action on the session, replay, and
-      // follower paths alike
-      val names = scala.jdk.CollectionConverters.IteratorHasAsScala(
-        actions.iterator()).asScala.toList
-      assert(!names.contains("count"),
-        s"validation must not run an eager count action; saw $names")
-      assert(names.size <= 2, s"expected ≤2 actions (checkpoints), saw $names")
-    } finally spark.listenerManager.unregister(listener)
+    }.actions
+    // applying one SetValue run must cost exactly the 2 checkpoint
+    // materializations of the tables it changes (nodes and index) — the
+    // unknown-id guard rides in the plan; the eager anti-join used to
+    // surface here as an extra `count` action on the session, replay, and
+    // follower paths alike
+    assert(!names.contains("count"),
+      s"validation must not run an eager count action; saw $names")
+    assert(names.size <= 2, s"expected ≤2 actions (checkpoints), saw $names")
     assert(g.getValue(a) === Artist(1, "B"))
   }
 
   test("interleaved new/add batch two-phase collapses: O(1) checkpoints, same state") {
     val g = GraphSession.inMemory(spark, CatalogueModel, CatRoot: Cat)
     g.getStats() // flush the root so the measurement sees only the batch
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { actions.add(funcName); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      // the write-shipping poll shape: 16 txns of newNode+addTarget each —
-      // 32 alternating runs before the collapse, TWO after it: the nodes
-      // checkpoint, then addTarget's one lookup and the edges and index
-      // checkpoints
-      val ids = (1 to 16).map { i =>
+    // the write-shipping poll shape: 16 txns of newNode+addTarget each —
+    // 32 alternating runs before the collapse, TWO after it: the nodes
+    // append, then addTarget's one lookup and the edges and index appends
+    // (no checkpoint: the rows stay in the tables' tails)
+    var ids = Seq.empty[Long]
+    val names = CostProbe.costOf(spark) {
+      ids = (1 to 16).map { i =>
         val n = g.newNode(Song(s"tp$i")); g.addTarget(g.root, n); n
       }
       g.applied()
-      var prev = -1; var cur = actions.size(); var spins = 0
-      while (cur != prev || spins < 3) {
-        prev = cur; Thread.sleep(200); cur = actions.size(); spins += 1
-      }
-      val names = scala.jdk.CollectionConverters.IteratorHasAsScala(
-        actions.iterator()).asScala.toList
-      assert(names.size <= 4,
-        s"interleaved new/add must collapse to 2 runs (≤4 actions), saw ${names.size}: $names")
-      assert(g.getStats() === ((17L, 16L, 16L)))
-      ids.foreach(n => assert(g.sources(n) === Seq(g.root)))
-    } finally spark.listenerManager.unregister(listener)
+    }.actions
+    assert(names.size <= 1,
+      s"interleaved new/add must collapse to 2 runs (≤1 action), saw ${names.size}: $names")
+    assert(g.getStats() === ((17L, 16L, 16L)))
+    ids.foreach(n => assert(g.sources(n) === Seq(g.root)))
   }
 
   test("two-phase collapse keeps forward references invalid (defined-before-use)") {
@@ -251,6 +219,14 @@ class GraphSessionSpec extends AnyFunSuite {
     assert(n === guess, "fixture must hit the future id for the test to bite")
     val e = intercept[IllegalArgumentException](g.getStats())
     assert(e.getMessage.contains("unknown node id"))
+    assert(g.getStats() === ((1L, 0L, 0L)), "aborted batch leaves pre-batch state")
+    // the same inside a new/add stretch that follows another op
+    g.setValue(g.root, CatRoot)
+    val guess2 = g.idWatermark
+    g.addTarget(g.root, guess2)
+    assert(g.newNode(Song("too-late-2")) === guess2)
+    val e2 = intercept[IllegalArgumentException](g.getStats())
+    assert(e2.getMessage.contains("unknown node id"))
     assert(g.getStats() === ((1L, 0L, 0L)), "aborted batch leaves pre-batch state")
   }
 
