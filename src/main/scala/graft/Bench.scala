@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main — driver contract: ONE JSON line on stdout with
   * per-query wall seconds at SPARK_GRAFT_SF_DIR.
@@ -14,32 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // probed-partition serving (px62/px63/px64): with the default
-      // reuseBroadcastOnly=true the planner degrades the cells scan's
-      // dynamicpruning filters to literal TRUE when it cannot reuse the
-      // probe-side broadcast (measured: 484/484 files read at batch=1);
-      // standalone DPP subqueries re-run only the tiny probes plan and
-      // cut the scan to the probed cells (measured: 8/484 files)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      // top-k serving (r18): per-query ranking is a bounded
-      // TypedImperativeAggregate (ObjectHashAggregateExec). The default
-      // 128-distinct-keys sort-fallback is calibrated for unbounded
-      // sketch buffers; TopKEntries buffers are ≤ k·33 B, so hash-agg a
-      // ≤ 1M-query batch per task (≤ ~400 MB at serving k ≤ 10) before
-      // falling back. Scale-independent: bounds memory by BATCH size,
-      // not corpus size.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession(cpus)
 
     def run(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -89,11 +65,12 @@ object Bench {
     // ~4 KB tail window (r7 and r8 both lost the per-query map to it),
     // making round-over-round per-query adjudication impossible from the
     // round record alone. A file survives truncation; written atomically
-    // so a crashed bench never leaves a half-record behind. Best-effort:
-    // a read-only cwd must not fail the bench itself.
+    // so a crashed bench never leaves a half-record behind, and keyed by
+    // the core count so runs at different core counts do not overwrite
+    // each other. Best-effort: a read-only cwd must not fail the bench.
     try {
       val detail = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json"))
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", s"bench_detail_c$cpus.json"))
       val tmp = detail.resolveSibling(detail.getFileName.toString + ".tmp")
       java.nio.file.Files.writeString(tmp, fullLine + "\n")
       java.nio.file.Files.move(tmp, detail,
@@ -103,32 +80,12 @@ object Bench {
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] detail file write failed (non-fatal): $e")
     }
-    // r19: the driver's ~4 KB stdout tail window truncates the full line's
-    // queries map (PERF_r18 `per_query` came back empty — the tail caught
-    // only the trailing SPREAD map), so the per-query times are RE-EMITTED
-    // here as compact chunked lines, each far below the window and all of
-    // them together (~3.3 KB) inside it, placed just before the compact
-    // total so the tail always carries complete per-query data. Additive
-    // only: the full line above and the total_compact trailer below are
-    // byte-identical to r18.
-    locally {
-      val entries = results.map(r => "\"" + r._1 + "\":" + fmt(r._2))
-      val maxChunkBytes = 1100
-      val chunks = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer.empty[String])
-      var sz = 0
-      entries.foreach { e =>
-        if (sz + e.length > maxChunkBytes && chunks.last.nonEmpty) {
-          chunks += scala.collection.mutable.ArrayBuffer.empty[String]
-          sz = 0
-        }
-        chunks.last += e
-        sz += e.length + 1
-      }
-      chunks.zipWithIndex.foreach { case (c, i) =>
-        println(s"""{"metric":"per_query","part":${i + 1},"parts":${chunks.length},"queries":{${c.mkString(",")}}}""")
-      }
-    }
+    // A caller that keeps only the last 2,000 characters of stdout never
+    // sees the full line whole. This line carries every query's best
+    // time, values only, in the sorted-name order of the full line's
+    // `queries` map (-1.000 = failed): 118 values take about 750 B, so it
+    // and the trailer below always survive the tail.
+    println(s"""{"metric":"per_query","order":"sorted_names","values":${results.map(r => fmt(r._2)).mkString("[", ",", "]")}}""")
     // tail-truncation insurance: the full line above exceeds the driver's
     // ~4 KB tail window once per-query maps grow, and round 6 lost its
     // headline number exactly that way ("parsed": null). This compact

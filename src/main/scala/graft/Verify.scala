@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,31 +17,7 @@ object Verify {
       case Array(s, o) => (s, o, Option.empty[Set[String]])
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // probed-partition serving (px62/px63/px64): with the default
-      // reuseBroadcastOnly=true the planner degrades the cells scan's
-      // dynamicpruning filters to literal TRUE when it cannot reuse the
-      // probe-side broadcast (measured: 484/484 files read at batch=1);
-      // standalone DPP subqueries re-run only the tiny probes plan and
-      // cut the scan to the probed cells (measured: 8/484 files)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      // top-k serving (r18): per-query ranking is a bounded
-      // TypedImperativeAggregate (ObjectHashAggregateExec). The default
-      // 128-distinct-keys sort-fallback is calibrated for unbounded
-      // sketch buffers; TopKEntries buffers are ≤ k·33 B, so hash-agg a
-      // ≤ 1M-query batch per task (≤ ~400 MB at serving k ≤ 10) before
-      // falling back. Scale-independent: bounds memory by BATCH size,
-      // not corpus size.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.queries.Declared.Q
 import graft.graph.GraphQueries
 
-/** Declared queries for the GraphX/Pregel analytics layer, each with a
+/** Declared queries for the iterative analytics layer, each with a
   * DuckDB oracle derived from the star schema's known topology.
   */
 object AnalyticsQueries {
@@ -88,8 +88,7 @@ object AnalyticsQueries {
     // topology: depth 0 = root, 1 = regions, 2 = nations, 3 = customers.
     // Routed through the bounded-diameter DataFrame frontier loop (this
     // graph is depth ≤ 3 by construction); AnalyticsSpec cross-checks it
-    // against the GraphX Pregel route, which remains the path for graphs
-    // of unknown/unbounded diameter.
+    // against GraphX Pregel.
     Q("ga1_pregel_bfs_depths",
       (s, d) => {
         val g = GraphQueries.geoGraph(s, d, withCustomers = true)
@@ -105,9 +104,9 @@ object AnalyticsQueries {
 
     // Connected components over a per-nation customer star (every customer
     // linked to its nation's min custkey → one component per nation with
-    // ≥2 customers). Star, not chain: CC label propagation needs
-    // O(diameter) supersteps, so a 6000-node path would take 6000 Pregel
-    // iterations — the star converges in 2 at any scale.
+    // ≥2 customers). At ≤ DriverCCMaxEdges edges the pair set is
+    // union-found on the driver; above it the alternating-star loop runs,
+    // whose round count does not grow with the star's size.
     // Oracle recomputes components/largest from counts.
     Q("ga2_connected_components",
       (s, d) => {
@@ -117,7 +116,7 @@ object AnalyticsQueries {
           min("c_custkey").over(Window.partitionBy("c_nationkey")))
           .where(col("c_custkey") =!= col("hub"))
           .select(col("hub").as("src"), col("c_custkey").as("dst"))
-        val cc = GraphAnalytics.connectedComponents(star)
+        val cc = GraphAnalytics.connectedComponentsDF(star)
         cc.groupBy("component").agg(count(lit(1)).as("sz"))
           .agg(count(lit(1)).as("components"), max("sz").as("largest"))
       },
@@ -136,8 +135,7 @@ object AnalyticsQueries {
     // HALF_UP) and DuckDB's ROUND (scaled multiply + C rounding) disagree
     // on 7th-decimal ties, whereas multiply+floor is the same two IEEE
     // ops in both engines — no rounding-mode surface at all.
-    // Tol-converged GraphX pageRank remains as a cross-check in
-    // AnalyticsSpec.
+    // AnalyticsSpec cross-checks it against GraphX's staticPageRank.
     Q("ga3_pagerank",
       (s, d) => {
         val g = GraphQueries.geoGraph(s, d, withCustomers = false)
@@ -148,11 +146,11 @@ object AnalyticsQueries {
       Some(pageRankOracleSql)),
 
     // Triangle count over the co-supplier graph (suppliers linked when they
-    // supply the same filtered part) — GraphX triangleCount vs an exact SQL
-    // triple self-join oracle. The graph stays bounded because edges are
-    // per-part supplier pairs over a selective dimension filter; at 100 TB
-    // the same plan holds (distinct + equi-join candidate generation, then
-    // GraphX on the induced subgraph, never on the raw fact table).
+    // supply the same filtered part) vs an exact SQL triple self-join
+    // oracle. The graph stays bounded because edges are per-part supplier
+    // pairs over a selective dimension filter; at 100 TB the same plan
+    // holds (distinct + equi-join candidate generation, then the wedge
+    // count on the induced subgraph, never on the raw fact table).
     Q("ga4_triangle_count",
       (s, d) => {
         import s.implicits._

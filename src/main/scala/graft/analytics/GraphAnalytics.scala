@@ -1,57 +1,23 @@
 package graft.analytics
 
-import org.apache.spark.graphx.{Edge, Graph, Pregel, VertexId}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GraphX/Pregel analytics over graft graph state — the iterative side
-  * that one Catalyst plan can't express (SURVEY §4.2): reachability, BFS
-  * depths, connected components, PageRank. The reference's only iterative
-  * computation is its BFS serialize/stats walk
+/** Iterative analytics over graft graph state — the side that one
+  * Catalyst plan can't express (SURVEY §4.2): BFS depths, connected
+  * components, PageRank, triangle counting. The reference's only
+  * iterative computation is its BFS serialize/stats walk
   * (/root/reference/library/GraphDB/Graph.hs:82-118,145-195); everything
   * else here is capability the reference lacks but a graph analytics user
   * expects.
   *
-  * Scale notes: `Graph.fromEdges` hash-partitions the edge RDD; Pregel
-  * supersteps are joins between the vertex and edge partitions, so a
-  * 1000-executor run behaves like any iterative shuffle workload — no
-  * driver-side iteration state beyond the superstep counter. For the
-  * small-diameter graphs of this schema (≤4 hops) the DataFrame BFS in
-  * graft.graph.Reachability is usually faster (no RDD conversion); Pregel
-  * wins when diameter or frontier size explodes.
+  * Every algorithm is plain DataFrame dataflow: each superstep is a join
+  * plus a group-by (the Pregelix posture), so a 1000-executor run behaves
+  * like any iterative shuffle workload, with no RDD conversion. GraphX's
+  * built-ins are the specs' oracle (`GraphXOracle` in the tests), not a
+  * production path.
   */
 object GraphAnalytics {
-
-  /** edges DataFrame (src, dst) → GraphX edge RDD. */
-  private def edgeRDD(edges: DataFrame): RDD[Edge[Unit]] =
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-
-  /** BFS depth of every vertex reachable from `root` (directed), via
-    * Pregel min-hop propagation. Returns DataFrame(id, depth).
-    */
-  def bfsDepths(edges: DataFrame, root: Long): DataFrame = {
-    val spark = edges.sparkSession
-    val g = Graph.fromEdges(edgeRDD(edges), defaultValue = Int.MaxValue)
-      .mapVertices((id, _) => if (id == root) 0 else Int.MaxValue)
-    val res = Pregel(g, Int.MaxValue, activeDirection =
-      org.apache.spark.graphx.EdgeDirection.Out)(
-      vprog = (_, d, msg) => math.min(d, msg),
-      sendMsg = t =>
-        if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
-          Iterator((t.dstId, t.srcAttr + 1))
-        else Iterator.empty,
-      mergeMsg = math.min)
-    import spark.implicits._
-    val out = res.vertices.filter(_._2 != Int.MaxValue)
-      .map { case (id, d) => (id, d.toLong) }
-      .toDF("id", "depth")
-    // Graph.fromEdges materializes only edge ENDPOINTS — an isolated root
-    // would otherwise be missing its depth-0 row entirely
-    out.unionByName(Seq((root, 0L)).toDF("id", "depth"))
-      .groupBy("id").agg(min("depth").as("depth"))
-  }
 
   /** BFS depths via a DataFrame frontier loop — the fast route for graphs
     * of KNOWN small diameter (this schema's geo graph is depth ≤ 3).
@@ -62,8 +28,7 @@ object GraphAnalytics {
     * when it is not — and costs only what the levels cost. Semantically
     * exact when the true eccentricity of `root` is ≤ `maxDepth`; the loop
     * stops early on an empty frontier, and `maxDepth` is the safety bound
-    * for callers who misjudge the diameter (use [[bfsDepths]] / Pregel
-    * when the diameter is unknown or unbounded).
+    * for callers who misjudge the diameter.
     */
   def bfsDepthsBounded(edges: DataFrame, root: Long, maxDepth: Int = 16): DataFrame = {
     val spark = edges.sparkSession
@@ -95,26 +60,15 @@ object GraphAnalytics {
     visited
   }
 
-  /** Undirected connected components (GraphX built-in). Returns
-    * DataFrame(id, component) with component = min vertex id.
-    */
-  def connectedComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    Graph.fromEdges(edgeRDD(edges), defaultValue = ())
-      .connectedComponents()
-      .vertices.map { case (id, c) => (id, c) }.toDF("id", "component")
-  }
-
   /** Undirected connected components as a pure DataFrame loop — the
     * alternating large-star/small-star algorithm (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14). Same
-    * output contract as [[connectedComponents]]: DataFrame(id, component)
-    * with component = min vertex id of the component, every endpoint
-    * labeled (AnalyticsSpec cross-checks DF == GraphX on chains, cliques,
-    * stars and random graphs).
+    * "Connected Components in MapReduce and Beyond", SoCC'14). Output:
+    * DataFrame(id, component) with component = min vertex id of the
+    * component, every endpoint labeled — GraphX's contract
+    * (AnalyticsSpec cross-checks DF == GraphX on chains, cliques, stars
+    * and random graphs).
     *
-    * Why it exists alongside GraphX: a dedup pipeline's pair graph is an
+    * Why DataFrames and not GraphX: a dedup pipeline's pair graph is an
     * induced subgraph of a larger Catalyst plan — staying in DataFrames
     * avoids the RDD conversion + GraphX fixed superstep overhead
     * (~3-5 s on this box), keeps one lineage for the whole pipeline, and
@@ -189,12 +143,14 @@ object GraphAnalytics {
     var e = raw.where(col("u") =!= col("v"))
     var fp = fingerprint(e)
     if (fp._1 <= driverMaxEdges) {
-      // driver union-find over the cached pair set (bounded by the count
-      // the fingerprint just computed; `raw` is checkpoint-cached, so the
-      // collect re-reads cached blocks, not the upstream pair plan).
-      // Same output contract: every endpoint labeled with its
-      // component's MIN vertex id — identical rows to the loop below
-      // (AnalyticsSpec pins driver == loop == GraphX on the same graphs).
+      // driver union-find over the cached pair set (`raw` is
+      // checkpoint-cached, so the collect re-reads cached blocks, not the
+      // upstream pair plan). ONE collect of `raw` yields both the edges
+      // and the vertex set: its rows are the fingerprint's edge count
+      // plus at most one self-loop per vertex. Same output contract:
+      // every endpoint labeled with its component's MIN vertex id —
+      // identical rows to the loop below (AnalyticsSpec pins driver ==
+      // loop == GraphX on the same graphs).
       val spark = edges.sparkSession
       import spark.implicits._
       val parent = new java.util.HashMap[Long, Long]()
@@ -207,11 +163,13 @@ object GraphAnalytics {
         }
         r
       }
-      e.collect().foreach { row =>
-        val (ru, rv) = (find(row.getLong(0)), find(row.getLong(1)))
+      val ids = scala.collection.mutable.LinkedHashSet.empty[Long]
+      raw.collect().foreach { row =>
+        val (u, v) = (row.getLong(0), row.getLong(1))
+        ids += u += v
+        val (ru, rv) = (find(u), find(v))
         if (ru != rv) parent.put(math.max(ru, rv), math.min(ru, rv))
       }
-      val ids = verts.collect().map(_.getLong(0))
       val minOfRoot = new java.util.HashMap[Long, Long]()
       ids.foreach { id =>
         val r = find(id)
@@ -246,15 +204,6 @@ object GraphAnalytics {
     require(converged, s"connectedComponentsDF did not converge in $maxIter rounds")
     verts.join(e, verts("id") === e("u"), "left_outer")
       .select(col("id"), coalesce(col("v"), col("id")).as("component"))
-  }
-
-  /** PageRank (GraphX built-in), tol-converged. DataFrame(id, rank). */
-  def pageRank(edges: DataFrame, tol: Double = 1e-4): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    Graph.fromEdges(edgeRDD(edges), defaultValue = ())
-      .pageRank(tol)
-      .vertices.map { case (id, r) => (id, r) }.toDF("id", "rank")
   }
 
   /** Fixed-iteration PageRank as a pure DataFrame power method —
@@ -345,17 +294,6 @@ object GraphAnalytics {
     ranks
   }
 
-  /** Total triangle count of an undirected simple graph (GraphX built-in,
-    * which canonicalizes and drops self-loops). Each triangle is counted
-    * at all 3 vertices, hence the /3. Caller passes (src, dst) edges;
-    * duplicates are tolerated (canonicalization dedupes).
-    */
-  def triangleCount(edges: DataFrame): Long = {
-    val g = Graph.fromEdges(edgeRDD(edges), defaultValue = ())
-      .partitionBy(org.apache.spark.graphx.PartitionStrategy.RandomVertexCut)
-    g.triangleCount().vertices.map(_._2.toLong).fold(0L)(_ + _) / 3
-  }
-
   /** Triangle count as a pure Catalyst plan — DEGREE-ORIENTED wedge
     * counting (Chiba–Nishizeki / Schank–Wagner "forward" algorithm as a
     * join): canonicalize edges to a simple undirected set, then orient
@@ -363,7 +301,7 @@ object GraphAnalytics {
     * order (degree, id). Each triangle then has exactly ONE vertex with
     * out-edges to the other two, so counting (wedge at a) ⋈ (closing
     * oriented edge) counts each triangle exactly once — no /3, and EXACT
-    * (same answer as [[triangleCount]]; AnalyticsSpec cross-checks).
+    * (same answer as GraphX's triangleCount; AnalyticsSpec cross-checks).
     *
     * Why orientation and not the naive u<v wedge join: wedge rows are
     * Σ outdeg², and orienting by degree bounds every out-degree by

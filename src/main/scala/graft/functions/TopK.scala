@@ -117,11 +117,10 @@ private[functions] final class TopKBuf(val k: Int) {
   * paths carry their (c1, c2) partition key (for the pruned float
   * fetch-back join) and the ADC path its exact integer score in `aux`.
   *
-  * NOTE ObjectHashAggregateExec's sort-based fallback
-  * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`, default
-  * 128 DISTINCT KEYS per task) — calibrated for unbounded sketch buffers,
-  * pessimal here where a buffer is ≤ k·33 bytes: the session builders
-  * raise it so high-cardinality query batches aggregate by hash, not by
+  * NOTE ObjectHashAggregateExec's sort-based fallback (default 128
+  * DISTINCT KEYS per task) is calibrated for unbounded sketch buffers,
+  * pessimal here where a buffer is ≤ k·33 bytes: [[graft.GraftSession]]
+  * raises it so high-cardinality query batches aggregate by hash, not by
   * sort (the whole point of replacing the windows).
   */
 private[functions] object TopKBuf {

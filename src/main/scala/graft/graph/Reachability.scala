@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * DataFrame, localCheckpoint-ing per level so the plan stays flat. Each
   * level is one shuffle-free-ish job when `edges` is partitioned by `src`
   * (frontier is broadcast when small — the common case). This is the same
-  * dataflow Pregel runs; for graphs with huge diameter a GraphX Pregel
-  * variant is available in graft.analytics.
+  * dataflow Pregel runs (graft.analytics.GraphAnalytics runs BFS depths
+  * the same way).
   */
 object Reachability {
 

@@ -222,7 +222,7 @@ object Dedup {
     * and labels every vertex with its component's minimum vertex id, so
     * the kept id per cluster IS the label; docs in no pair survive
     * untouched via the anti-join. (AnalyticsSpec proves DF CC == GraphX
-    * CC; the GraphX route remains for callers already in RDD land.)
+    * CC.)
     */
   def keepRepresentatives(docs: DataFrame, idCol: String,
       pairs: DataFrame): DataFrame = {

@@ -966,8 +966,8 @@ object Similarity {
       }
     }
     // phase labels (guide §1.5): the build is a chain of driver-blocking
-    // actions — labeling each lets tools/BuildProfile (and the UI)
-    // attribute the cold-build wall clock per phase
+    // actions — labeling each lets `graft.tools.Inspect … jobs` (and the
+    // UI) attribute the cold-build wall clock per phase
     def phase[T](name: String)(f: => T): T = {
       spark.sparkContext.setJobDescription(s"ivf2-build: $name")
       try f finally spark.sparkContext.setJobDescription(null)
@@ -1292,14 +1292,13 @@ object Similarity {
     * (the declared oracle queries use (2, 4) for export determinism,
     * which IS the derived point at oracle scales).
     *
-    * Session requirement: set
-    * `spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly=false`.
-    * With Spark's default (true) the planner silently degrades the cells
-    * scan's dynamicpruning filters to literal TRUE whenever it cannot
-    * reuse the probe-side broadcast — the STATIC plan still prints the
-    * filters, but the executed scan reads every partition (measured:
-    * 484/484 files at batch=1 vs 8/484 with the conf; PipelineSpec pins
-    * the runtime metrics). The standalone pruning subquery re-runs only
+    * Session requirement: the dynamic-partition-pruning setting of
+    * [[graft.GraftSession]]. With Spark's default the planner silently
+    * degrades the cells scan's dynamicpruning filters to literal TRUE
+    * whenever it cannot reuse the probe-side broadcast — the STATIC plan
+    * still prints the filters, but the executed scan reads every
+    * partition (measured: 484/484 files at batch=1 vs 8/484 with the
+    * conf; PipelineSpec pins the runtime metrics). The standalone pruning subquery re-runs only
     * the tiny probes plan — always worth it against a corpus-sized scan.
     */
   def twoLevelTopKFromIndex(index: TwoLevelIndex, queries: DataFrame,
@@ -1465,7 +1464,7 @@ object Similarity {
     * law at 0.664 — both knobs must track the cell count (SERVE_r16).
     *
     * Same session requirement as [[twoLevelTopKFromIndex]]
-    * (reuseBroadcastOnly=false), or both scans here degrade to full
+    * ([[graft.GraftSession]]'s pruning setting), or both scans here degrade to full
     * reads at runtime. The probes side (batch × nprobe rows, each
     * carrying the query vector and its packed codes) is broadcast —
     * right for the query-serving shape this implements (batch ≪

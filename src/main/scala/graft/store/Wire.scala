@@ -336,10 +336,9 @@ object Wire {
     new Server(Some(replica), Some(store))
 
   /** Serve quantized ANN top-k over the wire from a persisted two-level
-    * index dir. The session must carry the serving conf
-    * (`dynamicPartitionPruning.reuseBroadcastOnly=false` — see
-    * Similarity.twoLevelTopKFromIndex) or every served scan silently
-    * degrades to a full read.
+    * index dir. The session must carry the serving configuration of
+    * [[graft.GraftSession]] (see Similarity.twoLevelTopKFromIndex) or
+    * every served scan silently degrades to a full read.
     */
   def serveAnn(spark: SparkSession, indexDir: String): Server[Nothing] =
     new Server[Nothing](None, None, Some((spark, indexDir)))

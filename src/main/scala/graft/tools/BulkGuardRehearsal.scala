@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
@@ -19,14 +19,7 @@ object BulkGuardRehearsal {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 500000L
     val k = if (args.length > 1) args(1).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.cpus(32))
 
     import graft.graph.{GraphQueries, GraphState}
     // arg 3 "hand" swaps in the hand-written codec — lets one run A/B the

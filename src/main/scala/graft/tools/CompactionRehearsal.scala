@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Similarity
@@ -36,19 +36,7 @@ object CompactionRehearsal {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString) // bounded TopKEntries buffers (r18) — see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.cpus(32))
 
     val corpus = graft.Tables.load(spark, dataDir, "embeddings")
       .select(col("vec_id"), col("embedding"))

@@ -1,0 +1,108 @@
+package graft.tools
+
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import org.apache.spark.ListenerBusShim
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import scala.jdk.CollectionConverters._
+
+/** What a block of driver code costs in Spark: the jobs it starts, the
+  * stages they run and the classes whole-stage codegen compiles for it.
+  */
+object CostProbe {
+
+  /** A finished job: its `spark.job.description` ("" when unset). */
+  final case class Job(id: Int, description: String, seconds: Double)
+
+  /** A completed stage with its summed task metrics; `site` is the first
+    * graft (or Dataset) frame of its call site.
+    */
+  final case class Stage(id: Int, site: String, tasks: Int, seconds: Double,
+      runMs: Long, cpuMs: Long, shuffleRead: Long, shuffleWritten: Long,
+      outputRecords: Long)
+
+  /** The Spark jobs a block started, the Dataset actions it ran by name
+    * ("collect", "localCheckpoint", …, failed ones included), the executed
+    * plans of its successful actions (final adaptive plans), its finished
+    * jobs and stages, and the codegen compiles meanwhile.
+    */
+  final case class Cost(jobs: Int, actions: Seq[String], plans: Seq[SparkPlan],
+      finished: Seq[Job], stages: Seq[Stage], compiles: Long) {
+    override def toString: String =
+      s"Cost($jobs jobs, actions $actions, $compiles compiles)"
+  }
+
+  /** Run `f` and return its [[Cost]]. Listener events are asynchronous, so
+    * the bus is drained before the listeners attach (events of earlier work
+    * must not count) and again after `f` (its own events must).
+    */
+  def costOf(spark: SparkSession)(f: => Unit): Cost = {
+    val started = new ConcurrentHashMap[Int, (String, Long)]()
+    val finished = new ConcurrentLinkedQueue[Job]()
+    val stages = new ConcurrentLinkedQueue[Stage]()
+    val actions = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val description = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        started.put(e.jobId, (description, e.time)); ()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(started.get(e.jobId)).foreach { case (d, t0) =>
+          finished.add(Job(e.jobId, d, (e.time - t0) / 1e3))
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        val seconds = (for (a <- i.completionTime; b <- i.submissionTime)
+          yield (a - b) / 1e3).getOrElse(0d)
+        val site = i.details.linesIterator
+          .find(l => l.contains("graft.") || l.contains("Dataset"))
+          .getOrElse(i.name).trim
+        val m = Option(i.taskMetrics)
+        stages.add(Stage(i.stageId, site, i.numTasks, seconds,
+          m.fold(0L)(_.executorRunTime), m.fold(0L)(_.executorCpuTime / 1000000L),
+          m.fold(0L)(_.shuffleReadMetrics.recordsRead),
+          m.fold(0L)(_.shuffleWriteMetrics.recordsWritten),
+          m.fold(0L)(_.outputMetrics.recordsWritten)))
+        ()
+      }
+    }
+    val actionListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        actions.add(funcName); plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = {
+        actions.add(funcName); ()
+      }
+    }
+    ListenerBusShim.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(actionListener)
+    try {
+      val compiles = compilesOf(f)
+      ListenerBusShim.drain(spark.sparkContext)
+      Cost(started.size, actions.asScala.toList, plans.asScala.toList,
+        finished.asScala.toList.sortBy(_.id), stages.asScala.toList.sortBy(_.id),
+        compiles)
+    } finally {
+      spark.listenerManager.unregister(actionListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+  }
+
+  /** Run `f` and return how many classes codegen compiled meanwhile (cache
+    * hits are not compiles).
+    */
+  def compilesOf(f: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+}

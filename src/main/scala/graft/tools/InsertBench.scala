@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.graph.GraphQueries.{GeoModel, GeoRoot, GeoV, RegionV}
 import graft.store.GraphStore
 
@@ -28,14 +26,7 @@ object InsertBench {
   def main(args: Array[String]): Unit = {
     val ns = args.headOption.getOrElse("1000,21000,1000000")
       .split(",").toSeq.map(_.trim.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.cpus(32))
     import spark.implicits._
 
     def fmt(v: Double): String =

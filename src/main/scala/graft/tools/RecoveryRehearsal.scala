@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what GraphStoreSpec only proves correct: the COST of WAL
@@ -27,14 +26,7 @@ object RecoveryRehearsal {
     val baseEdges = if (args.nonEmpty) args(0).toLong else 2000000L
     val nBatches = if (args.length > 1) args(1).toInt else 20
     val opsPerBatch = if (args.length > 2) args(2).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.cpus(32))
 
     import graft.graph.GraphQueries
     import graft.store.GraphStore

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Similarity
@@ -32,23 +32,7 @@ object RetrainCadence {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // probed-partition serving (px62/px63/px64): with the default
-      // reuseBroadcastOnly=true the planner degrades the cells scan's
-      // dynamicpruning filters to literal TRUE when it cannot reuse the
-      // probe-side broadcast (measured: 484/484 files read at batch=1);
-      // standalone DPP subqueries re-run only the tiny probes plan and
-      // cut the scan to the probed cells (measured: 8/484 files)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.cpus(32))
 
     val base = graft.Tables.load(spark, dataDir, "embeddings")
       .select(col("vec_id"), col("embedding")).localCheckpoint(true)

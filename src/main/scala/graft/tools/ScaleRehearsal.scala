@@ -126,25 +126,7 @@ object ScaleRehearsal {
     require(K >= 2 && (K <= 4096 || !tables("embeddings")),
       s"blowup $K out of range (embedding copies = rotations × sign " +
         "patterns cover K ≤ 64·64)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // probed-partition serving (px62/px63/px64): with the default
-      // reuseBroadcastOnly=true the planner degrades the cells scan's
-      // dynamicpruning filters to literal TRUE when it cannot reuse the
-      // probe-side broadcast (measured: 484/484 files read at batch=1);
-      // standalone DPP subqueries re-run only the tiny probes plan and
-      // cut the scan to the probed cells (measured: 8/484 files)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString) // bounded TopKEntries buffers (r18) — see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.cpus(32))
 
     synthesize(spark, src, dst, tables)
 

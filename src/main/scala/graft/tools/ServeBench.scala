@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.graph.GraphQueries.{CustomerV, GeoModel, GeoRoot, GeoV}
 import graft.store.{GraphReplica, GraphStore, RemoteRead, RemoteWrite}
 
@@ -22,16 +20,7 @@ object ServeBench {
     val reqsPerClient = if (args.length > 1) args(1).toInt else 16
     val idsPerReq = if (args.length > 2) args(2).toInt else 16
     val writeTxns = if (args.length > 3) args(3).toInt else 256
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString) // bounded TopKEntries buffers (r18) — see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.cpus(32))
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))

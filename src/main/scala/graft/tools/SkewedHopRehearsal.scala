@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Adversarial-skew receipt for the graph hop join (the `getTargets`
@@ -27,14 +27,7 @@ object SkewedHopRehearsal {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val k = if (args.length > 1) args(1).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.cpus(32))
 
     // edge table shaped like the graph store's index ((src, kkind, key) →
     // dst): even rows all hang off the hot node 0, odd rows spread over

@@ -14,7 +14,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("Pregel BFS depths on a diamond with a shortcut pick minimum hops") {
     // 0→1→2→3 and 0→3: depth(3) must be 1, not 3
-    val depths = GraphAnalytics.bfsDepths(
+    val depths = GraphXOracle.bfsDepths(
       edgesDF((0L, 1L), (1L, 2L), (2L, 3L), (0L, 3L)), root = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(depths === Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 1L))
@@ -23,7 +23,7 @@ class AnalyticsSpec extends AnyFunSuite {
   test("BFS depths include the root even when it touches no edge") {
     // fromEdges materializes only edge endpoints — an isolated root must
     // still get its depth-0 row
-    val depths = GraphAnalytics.bfsDepths(edgesDF((1L, 2L)), root = 99L)
+    val depths = GraphXOracle.bfsDepths(edgesDF((1L, 2L)), root = 99L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(depths === Map(99L -> 0L))
   }
@@ -64,7 +64,7 @@ class AnalyticsSpec extends AnyFunSuite {
       viaDriver
     }
     def ccGX(edges: org.apache.spark.sql.DataFrame) =
-      GraphAnalytics.connectedComponents(edges)
+      GraphXOracle.connectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     // a LONG chain (the O(diameter) killer for plain label propagation),
@@ -86,7 +86,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("connected components find two chains") {
-    val cc = GraphAnalytics.connectedComponents(
+    val cc = GraphXOracle.connectedComponents(
       edgesDF((1L, 2L), (2L, 3L), (10L, 11L)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc(1L) === cc(2L) && cc(2L) === cc(3L))
@@ -100,11 +100,11 @@ class AnalyticsSpec extends AnyFunSuite {
     val k4 = edgesDF((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (2L, 2L), (1L, 2L), (2L, 1L))
     assert(GraphAnalytics.triangleCountDF(k4) === 4L)
-    assert(GraphAnalytics.triangleCount(k4) === 4L)
+    assert(GraphXOracle.triangleCount(k4) === 4L)
     // triangle + dangling edge
     val tri = edgesDF((1L, 2L), (2L, 3L), (3L, 1L), (3L, 9L))
     assert(GraphAnalytics.triangleCountDF(tri) === 1L)
-    assert(GraphAnalytics.triangleCount(tri) === 1L)
+    assert(GraphXOracle.triangleCount(tri) === 1L)
     // triangle-free bipartite-ish graph
     val none = edgesDF((1L, 2L), (1L, 4L), (3L, 2L), (3L, 4L))
     assert(GraphAnalytics.triangleCountDF(none) === 0L)
@@ -181,7 +181,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("pagerank: sink vertices outrank sources; ranks positive") {
-    val pr = GraphAnalytics.pageRank(edgesDF((0L, 1L), (0L, 2L), (1L, 2L)))
+    val pr = GraphXOracle.pageRank(edgesDF((0L, 1L), (0L, 2L), (1L, 2L)))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(pr.values.forall(_ > 0))
     assert(pr(2L) > pr(0L), "sink must outrank the pure source")
@@ -202,12 +202,7 @@ class AnalyticsSpec extends AnyFunSuite {
       // replicate bit-stably — so rescale here before comparing
       val scale = raw.size / raw.values.sum
       val df = raw.view.mapValues(_ * scale).toMap
-      val gx = org.apache.spark.graphx.Graph
-        .fromEdges(edges.rdd.map(r =>
-          org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), ())),
-          defaultValue = ())
-        .staticPageRank(iters)
-        .vertices.collect().toMap
+      val gx = GraphXOracle.staticPageRank(edges, iters)
       assert(df.keySet === gx.keySet)
       df.foreach { case (id, r) =>
         assert(math.abs(r - gx(id)) < 1e-9,

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.tools.CostProbe
+
 /** Per-operator unit tests mirroring the reference's internal suite
   * (/root/reference/executables/InternalTests/GraphTests.hs:104-167) —
   * same fixtures, same expected stats triples.

@@ -2,6 +2,8 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.tools.CostProbe
+
 /** What a point read costs: one Spark job, and no codegen compile for a new
   * id — the id enters the generated code by reference (`graft.functions.
   * Param`), so an optimizer that folded it back into a literal would fail

@@ -3,26 +3,9 @@ package graft.graph
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
+/** The spec session: the production configuration on 4 cores. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // probed-partition serving (px62/px63/px64): with the default
-      // reuseBroadcastOnly=true the planner degrades the cells scan's
-      // dynamicpruning filters to literal TRUE when it cannot reuse the
-      // probe-side broadcast (measured: 484/484 files read at batch=1);
-      // standalone DPP subqueries re-run only the tiny probes plan and
-      // cut the scan to the probed cells (measured: 8/484 files)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.GraftSession(4)
 }
 
 /** The music-catalogue model of the reference's internal tests

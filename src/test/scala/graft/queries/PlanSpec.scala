@@ -253,4 +253,16 @@ class PlanSpec extends AnyFunSuite {
     assert("documents\\.parquet".r.findAllIn(p).isEmpty,
       s"consumers must read the cut, not re-scan documents.parquet:\n$p")
   }
+
+  test("px64 batch serve: the final plan runs no dynamic-pruning subquery") {
+    // a whole-corpus batch probes every cell, so a pruning subquery would
+    // re-run the batch probes plan to prune nothing; the cells-side join
+    // key mixes in the no-op `nbr & 0` to keep the PartitionPruning rule
+    // out (Similarity.twoLevelTopKFromIndex). An optimizer that folded
+    // `x & 0` to 0 would bring the subqueries back and fail this.
+    val p = graft.tools.Inspect.run(spark, Array("px64_sim_batch_serve", sf, "plan"))
+    assert(p.contains("isFinalPlan=true"), s"expected the final adaptive plan:\n$p")
+    assert(!p.toLowerCase.contains("dynamicpruning"),
+      s"px64 must not plan a dynamic-pruning subquery:\n$p")
+  }
 }

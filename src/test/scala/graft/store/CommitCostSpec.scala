@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph._
+import graft.tools.CostProbe
 
 /** What a driver-issued commit costs: Spark jobs in proportion to its delta,
   * not to the state — appends go to the tables' driver-held tails and copy
