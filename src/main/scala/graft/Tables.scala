@@ -29,16 +29,18 @@ object Tables {
     * px35's triple-regex pass each ran as ONE task). A NO-OP whenever the
     * input already carries ≥ cores partitions — the 100 TB shape, where
     * scans have thousands of splits and an added exchange would reshuffle
-    * the corpus for nothing. The gate reads the planned RDD's partition
-    * count — zero jobs run. Row-preserving: callers' aggregations and
-    * two-phase ranks are partitioning-insensitive by construction.
+    * the corpus for nothing. The gate reads the partition count of the
+    * frame's own planned RDD (`df.rdd` would plan the query a second time,
+    * behind a deserializer) — zero jobs run. Row-preserving: callers'
+    * aggregations and two-phase ranks are partitioning-insensitive by
+    * construction.
     */
   def spread(df: DataFrame): DataFrame = {
-    // streaming plans cannot be probed via .rdd (and micro-batches are
+    // streaming plans cannot be probed for an RDD (and micro-batches are
     // already split by the source) — pass through untouched
     if (df.isStreaming) return df
     val n = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= n) df else df.repartition(n)
+    if (df.queryExecution.toRdd.getNumPartitions >= n) df else df.repartition(n)
   }
 
   /** The fixture has stored `events.ts` two ways across driver

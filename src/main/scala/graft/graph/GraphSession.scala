@@ -19,10 +19,11 @@ import scala.collection.mutable.ArrayBuffer
   *
   * A run's cost follows its delta, not the state. NewNode and AddTarget
   * runs append their rows to the tables' driver-held tails and copy no
-  * table; an AddTarget run first runs one lookup (a broadcast job and a
-  * collect job). A driver-issued commit of new nodes and edges between
-  * them runs 3 Spark jobs, the WAL write included, however large the
-  * graph. A table materializes only when its tail would pass
+  * table; an AddTarget run first runs one lookup, a single collect job
+  * that binds the batch's ids by reference. A driver-issued commit of new
+  * nodes and edges between them runs 1 Spark job, that lookup, however
+  * large the graph: the WAL batch is written on the driver without a
+  * Spark job (graft.store.OpBatchFile). A table materializes only when its tail would pass
   * `GraphState.TailBound` rows, or when a SetValue, RemoveTarget or
   * RemoveNode run changes it (SetValue: nodes and index; the two removes:
   * edges and index) — see [[GraphState.checkpointedSince]]. A point read

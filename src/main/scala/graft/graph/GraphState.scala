@@ -24,7 +24,7 @@ import graft.functions.Param
   * checkpoint ⊕ replay(ops) (Persistent/Log.hs:38-52). Driver-issued op
   * batches carry driver-sized deltas: they enter plans as local relations,
   * and addTarget derives its index rows on the driver after one lookup job
-  * ([[GraphState.withTargets]]).
+  * that binds the batch's ids by reference ([[GraphState.withTargets]]).
   *
   * Each table is a materialized base plus a TAIL of rows appended on the
   * driver ([[GraphState.Table]]); readers see base ∪ tail as one
@@ -204,8 +204,10 @@ final case class GraphState[V](
     * One lookup job fetches both things the delta needs: the endpoints'
     * `(id, kind, value)` rows, and the existing edges among those endpoints
     * (a superset of the requested pairs that already exist). The batch's
-    * ids enter as ONE local relation, broadcast once and reused by all
-    * three semi-joins. The edge and index deltas are then computed here,
+    * id set `S` enters as a filter, `id ∈ S` on nodes and `src ∈ S ∧
+    * dst ∈ S` on edges, bound by reference ([[Param.in]]): no join, no
+    * broadcast job, and no class compiled for a new batch. The edge and
+    * index deltas are then computed here,
     * the index rows by the model's own `indexes(target, source)` — the
     * function [[GraphState.deriveIndex]] runs on the executors for the
     * bulk paths — and appended to the tables' tails.
@@ -230,15 +232,12 @@ final case class GraphState[V](
   def withTargets(pairs: Seq[(Long, Long)],
       validate: Boolean = true): GraphState[V] = {
     val wanted = pairs.distinct
-    val ids = localDF(wanted.flatMap(p => Seq(p._1, p._2)).distinct.map(Row(_)),
-      StructType(Seq(StructField("id", LongType, nullable = false))))
-    def idsAs(c: String) = ids.select(col("id").as(c))
-    val hits = nodes.join(ids, Seq("id"), "left_semi")
+    val ids = wanted.flatMap(p => Seq(p._1, p._2)).toSet
+    val hits = nodes.where(Param.in(col("id"), ids))
       .select(col("id"), lit(null).cast(LongType).as("dst"),
         col("kind"), col("value"))
       .unionByName(edges
-        .join(idsAs("src"), Seq("src"), "left_semi")
-        .join(idsAs("dst"), Seq("dst"), "left_semi")
+        .where(Param.in(col("src"), ids) && Param.in(col("dst"), ids))
         .select(col("src").as("id"), col("dst"),
           lit(null).cast(StringType).as("kind"),
           lit(null).cast(model.valueSchema).as("value")))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.functions.Param
 import graft.graph.{GraphModel, GraphState, IndexKey}
 import graft.streaming.OplogStream
 
@@ -73,16 +74,17 @@ final class GraphReplica[V] private (
     * per job — see PLANS.md) — a serving layer fanning out point reads
     * should batch them here. Unknown ids are simply absent from the
     * result (the single-id API keeps its throwing contract). Result is
-    * driver-sized: one row per requested id.
+    * driver-sized: one row per requested id. Up to 10k ids bind by
+    * reference ([[Param.in]]), so a new id list compiles no class.
     */
   def getValues(ns: Seq[Long]): Map[Long, V] =
     if (ns.isEmpty) Map.empty
     else {
       val wanted =
-        if (ns.size <= 10000) state.nodes.where(col("id").isin(ns: _*))
+        if (ns.size <= 10000) state.nodes.where(Param.in(col("id"), ns))
         else {
-          // a giant in-list stresses codegen; past ~10k ids a broadcast
-          // semi-join is the plan that scales
+          // past ~10k ids the set would ship inside every task; a
+          // broadcast semi-join ships it once
           import spark.implicits._
           state.nodes.join(broadcast(ns.toDF("id")), Seq("id"), "left_semi")
         }

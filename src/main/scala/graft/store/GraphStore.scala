@@ -94,12 +94,11 @@ final class GraphStore[V] private (
         })
     }
 
-  private def enqueueWal(name: String, df: org.apache.spark.sql.DataFrame,
-      txnTags: Seq[String] = Seq.empty): Unit = {
+  private def enqueueWal(name: String, txnTags: Seq[String])(write: Path => Unit): Unit = {
     rethrowWalFailure()
     walExec.execute { () =>
       if (walFailure.get() == null) {
-        try writeWalBatch(name, df, txnTags)
+        try writeWalBatch(name, txnTags)(write)
         catch { case e: Throwable => walFailure.compareAndSet(null, e) }
       }
     }
@@ -183,13 +182,15 @@ final class GraphStore[V] private (
       val rows = ops.zipWithIndex.map { case (op, i) =>
         GraphStore.opToRow(model, op, base + i.toLong)
       }
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), opSchema)
+      // the batch is written on the driver by parquet's own writer: no
+      // Spark job (OpBatchFile)
+      val write = (dir: Path) => OpBatchFile.write(spark, opSchema, rows, dir)
       // buffered mode acknowledges BEFORE the write is durable (the
       // reference's PersistenceBuffering trade): the log is cleared at
       // enqueue, and a crash loses at most the buffered suffix — see the
       // async-WAL block above. Synchronous mode keeps write-then-clear.
-      if (buffered) enqueueWal(f"batch-$batchSeq%06d", df, txnTags)
-      else writeWalBatch(f"batch-$batchSeq%06d", df, txnTags)
+      if (buffered) enqueueWal(f"batch-$batchSeq%06d", txnTags)(write)
+      else writeWalBatch(f"batch-$batchSeq%06d", txnTags)(write)
       session.clearLog()
       batchSeq += 1
     }
@@ -343,8 +344,11 @@ final class GraphStore[V] private (
         "sealed — a commit now would be shadowed by it on reopen. Retry " +
         "close(), then reopen the store to write more")
 
-  /** Durably append one WAL batch: write to `_staging/<name>`, then publish
-    * with an ATOMIC directory rename into the events dir. Two failure modes
+  /** Durably append one WAL batch: `write` fills the new directory
+    * `_staging/<name>` with the batch's parquet and its `_SUCCESS` marker
+    * (a driver op batch through [[OpBatchFile]], a bulk batch through a
+    * distributed Spark write), then an ATOMIC directory rename publishes
+    * it into the events dir. Two failure modes
     * the reference's retryable-write promise (Storage.hs:154-177) requires:
     *
     *  - a failed write must not poison the slot: staging debris (ours
@@ -355,12 +359,12 @@ final class GraphStore[V] private (
     *  - a reader must never observe a half-written batch: the rename is the
     *    publish point, so replay and live-tail followers either see the
     *    complete batch (with its _SUCCESS marker already inside) or nothing.
-    *    Without staging there is a window between Spark's per-task file
-    *    renames and the _SUCCESS marker where a follower can apply ops the
-    *    writer then loses in crash recovery (phantom ops).
+    *    Without staging there is a window between the data files landing
+    *    and the _SUCCESS marker where a follower can apply ops the writer
+    *    then loses in crash recovery (phantom ops).
     */
-  private def writeWalBatch(name: String, df: org.apache.spark.sql.DataFrame,
-      txnTags: Seq[String] = Seq.empty): Unit = {
+  private def writeWalBatch(name: String, txnTags: Seq[String])(
+      write: Path => Unit): Unit = {
     val staging = path.resolve("_staging").resolve(name)
     val target = path.resolve(s"$eventsIndex.events").resolve(name)
     GraphStore.deleteRecursively(staging)
@@ -369,7 +373,7 @@ final class GraphStore[V] private (
     if (Files.exists(target) && !Files.exists(target.resolve("_SUCCESS")))
       GraphStore.deleteRecursively(target)
     try {
-      df.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
+      write(staging)
       // `_`-prefixed so every parquet reader (replay, followers) ignores it;
       // inside the staged dir so the atomic publish covers batch AND tags.
       // One flattened tag per line — normalized at WRITE time so the live
@@ -427,8 +431,10 @@ final class GraphStore[V] private (
       // routed through the same queue in buffered mode: a bulk batch that
       // landed while an earlier driver-op batch was still queued would
       // survive a crash as a non-prefix WAL (hole before it) otherwise
-      if (buffered) enqueueWal(f"batch-$batchSeq%06d-bulk", df)
-      else writeWalBatch(f"batch-$batchSeq%06d-bulk", df)
+      val write = (dir: Path) =>
+        df.write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
+      if (buffered) enqueueWal(f"batch-$batchSeq%06d-bulk", Seq.empty)(write)
+      else writeWalBatch(f"batch-$batchSeq%06d-bulk", Seq.empty)(write)
       batchSeq += 1
       session.applyBulkTargets(delta)
     }
@@ -747,10 +753,11 @@ object GraphStore {
       val allBatches = listPaths(dir)
         .filter(p => p.getFileName.toString.startsWith("batch-"))
         .sortBy(_.getFileName.toString)
-      // _SUCCESS is Spark's write-commit marker: a batch dir without it is
-      // a torn write from a crash mid-commit() — those ops were never
-      // acknowledged to the writer, so drop the debris (the WAL-batch
-      // analog of the partial-checkpoint _meta.json rule above)
+      // _SUCCESS is the batch's write-commit marker, written last by both
+      // WAL writers: a batch dir without it is a torn write from a crash
+      // mid-commit() — those ops were never acknowledged to the writer, so
+      // drop the debris (the WAL-batch analog of the partial-checkpoint
+      // _meta.json rule above)
       val (ready, torn) = allBatches.partition(b => Files.exists(b.resolve("_SUCCESS")))
       torn.foreach(deleteRecursively)
       ready.foreach { b =>

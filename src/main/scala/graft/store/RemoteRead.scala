@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import graft.functions.Param
 import graft.graph.{GraphModel, IndexKey}
 
 /** Thin-client READ shipping — the serve/client read-action analog
@@ -302,10 +303,10 @@ object RemoteRead {
           if (ids.isEmpty)
             st.nodes.select(col("id"), col("kind"), col("value")).limit(0)
           else {
-            // same 10k cutover as GraphReplica.getValues: a giant
-            // in-list stresses codegen; a broadcast semi-join scales
+            // same 10k cutover as GraphReplica.getValues: a larger set
+            // would ship inside every task; a broadcast semi-join scales
             val wanted =
-              if (ids.size <= 10000) st.nodes.where(col("id").isin(ids: _*))
+              if (ids.size <= 10000) st.nodes.where(Param.in(col("id"), ids))
               else {
                 import spark.implicits._
                 st.nodes.join(broadcast(ids.toDF("id")), Seq("id"), "left_semi")

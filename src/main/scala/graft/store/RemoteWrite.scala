@@ -2,13 +2,14 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import graft.functions.Param
 import graft.graph._
 
 /** File-queue write shipping — the Spark-suitable analog of the reference's
@@ -316,7 +317,8 @@ object RemoteWrite {
     }
 
     /** Ship one transaction; returns its txnId. Published atomically: ops
-      * parquet + meta land in a staging dir, then one rename — a reader
+      * parquet (one file written on this driver, no Spark job:
+      * [[OpBatchFile]]) + meta land in a staging dir, then one rename — a reader
       * (the server) sees the whole txn or nothing, the same staged-publish
       * rule as the WAL (GraphStore.writeWalBatch).
       */
@@ -348,8 +350,6 @@ object RemoteWrite {
       val rows = txn.ops.toSeq.zipWithIndex.map { case (op, i) =>
         GraphStore.opToRow(model, op, i.toLong)
       }
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), GraphStore.opSchema(model))
       // snapshot-read dependencies ride the txn meta so the server can
       // conflict-check at apply time; bounded — interactive reads are
       // handfuls, and an unbounded list would be driver/meta pressure
@@ -364,7 +364,7 @@ object RemoteWrite {
           s""", "targetMembers": [${tm.toSeq.sorted.mkString(", ")}]"""
       }.getOrElse("")
       try {
-        df.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
+        OpBatchFile.write(spark, GraphStore.opSchema(model), rows, staging)
         Files.writeString(staging.resolve(MetaName),
           s"""{"formatVersion": ${GraphStore.FormatVersion}, "txnId": "$txnId", "ops": ${txn.ops.size}$readsJson}""")
         Files.createDirectories(target.getParent)
@@ -445,7 +445,7 @@ object RemoteWrite {
     val tTriage0 = System.nanoTime()
     val committed = GraphStore.listPaths(inbox)
       .filter(p => p.getFileName.toString.endsWith(".txn"))
-      // _SUCCESS (Spark's commit marker) + _meta.json are both inside the
+      // _SUCCESS (the batch's commit marker) + _meta.json are both inside the
       // atomically-renamed dir: present ⇔ fully published; anything else is
       // a foreign partial write — skip, never delete (it's not ours)
       .filter(p => Files.exists(p.resolve("_SUCCESS")) &&
@@ -535,11 +535,11 @@ object RemoteWrite {
       else {
         val nodes = store.session.applied().nodes
         val wanted =
-          if (allGlobals.size <= 10000) nodes.where(col("id").isin(allGlobals: _*))
+          if (allGlobals.size <= 10000) nodes.where(Param.in(col("id"), allGlobals))
           else {
-            // a giant in-list stresses codegen; past ~10k ids a broadcast
-            // semi-join is the plan that scales (same cutover as
-            // GraphReplica.getValues)
+            // past ~10k ids the set would ship inside every task; a
+            // broadcast semi-join is the plan that scales (same cutover
+            // as GraphReplica.getValues)
             val spark = store.sparkOf
             import spark.implicits._
             nodes.join(broadcast(allGlobals.toDF("id")), Seq("id"), "left_semi")

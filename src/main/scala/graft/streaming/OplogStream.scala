@@ -83,8 +83,8 @@ object OplogStream {
       .start()
   }
 
-  /** Admit only rows from batch dirs carrying Spark's `_SUCCESS` commit
-    * marker. The writer publishes batches with an atomic directory rename
+  /** Admit only rows from batch dirs carrying the `_SUCCESS` commit marker
+    * (written last by both WAL writers). The writer publishes batches with an atomic directory rename
     * (graft.store.GraphStore.writeWalBatch), so with a current-format store
     * this filter never drops anything — it is defense against legacy or
     * tampered stores where a torn batch dir (no marker) could otherwise be

@@ -20,7 +20,8 @@ object CostProbe {
   final case class Job(id: Int, description: String, seconds: Double)
 
   /** A completed stage with its summed task metrics; `site` is the first
-    * graft (or Dataset) frame of its call site.
+    * graft (or Dataset) frame of its call site, else the operation scopes
+    * of its RDDs.
     */
   final case class Stage(id: Int, site: String, tasks: Int, seconds: Double,
       runMs: Long, cpuMs: Long, shuffleRead: Long, shuffleWritten: Long,
@@ -62,8 +63,12 @@ object CostProbe {
         val i = e.stageInfo
         val seconds = (for (a <- i.completionTime; b <- i.submissionTime)
           yield (a - b) / 1e3).getOrElse(0d)
+        // AQE submits query stages from its own pool, whose call site
+        // names no graft or Dataset frame: name those by their RDDs' scopes
         val site = i.details.linesIterator
           .find(l => l.contains("graft.") || l.contains("Dataset"))
+          .orElse(Some(ListenerBusShim.scopeNames(i)).filter(_.nonEmpty)
+            .map(_.mkString(", ")))
           .getOrElse(i.name).trim
         val m = Option(i.taskMetrics)
         stages.add(Stage(i.stageId, site, i.numTasks, seconds,

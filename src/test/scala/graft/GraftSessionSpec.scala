@@ -48,6 +48,9 @@ class GraftSessionSpec extends AnyFunSuite {
       .findFirstMatchIn(out)
     assert(wall.exists(_.group(1).toInt >= 1), out)
     assert(out.contains("slowest stages of run 1:\n  stage "), out)
+    // stages AQE submits from its pool are named by their RDDs' scopes
+    val stages = out.linesIterator.filter(_.startsWith("  stage ")).toSeq
+    assert(stages.nonEmpty && !stages.exists(_.contains("CompletableFuture")), out)
     stillWorks()
   }
 }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.store.{GraphReplica, GraphStore}
 import graft.tools.CostProbe
 
 /** What a point read costs: one Spark job, and no codegen compile for a new
@@ -66,5 +67,24 @@ class ReadCostSpec extends AnyFunSuite {
     })
     assert(values === 0L, s"getValue compiled $values classes over 20 new ids")
     assert(targets === 0L, s"getTargets compiled $targets classes over 20 new ids")
+  }
+
+  test("GraphReplica.getValues: 20 distinct small id lists compile no class after the first") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-getvalues-cost-").toString
+    val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
+    val g = store.session
+    val artists = (1 to 24).map { i =>
+      val a = g.newNode(Artist(i, s"A$i")); g.addTarget(g.root, a); a -> Artist(i, s"A$i")
+    }
+    store.close() // a checkpoint: the replica's tables hold no tail
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
+    replica.catchUp()
+    // 1 to 3 ids per list, every list distinct; an unknown id is absent
+    val lists = (0 to 20).map(i => artists.slice(i, i + 1 + i % 3))
+    def read(l: Seq[(Long, Cat)]): Unit =
+      assert(replica.getValues(l.map(_._1) :+ 424242L) === l.toMap)
+    read(lists.head)
+    val compiles = CostProbe.compilesOf(lists.tail.foreach(read))
+    assert(compiles === 0L, s"getValues compiled $compiles classes over 20 new id lists")
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.TestSpark
+import graft.tools.CostProbe
 
 /** The events `ts` normalization (Tables.nanosToTs) must handle BOTH
   * driver fixture generations — TIMESTAMP(NANOS) surfaced as nanos LONG
@@ -53,5 +54,18 @@ class TablesSpec extends AnyFunSuite {
       Seq((1L, java.time.LocalDateTime.of(2024, 1, 1, 0, 0))).toDF("event_id", "ts"))
     assert(a.columns.toSeq === b.columns.toSeq,
       "downstream queries select by name AND position (driver hash compare)")
+  }
+
+  test("spread reads the planned partition count: no job, the same decision as df.rdd") {
+    val sf = "/root/testdata/sf0.001"
+    val cores = spark.sparkContext.defaultParallelism
+    graft.Tables.names.foreach { name =>
+      val narrow = graft.Tables.load(spark, sf, name).rdd.getNumPartitions < cores
+      val df = graft.Tables.load(spark, sf, name)
+      var out = df
+      val cost = CostProbe.costOf(spark) { out = graft.Tables.spread(df) }
+      assert(cost.jobs === 0, s"spread($name): $cost")
+      assert((out ne df) === narrow, s"spread($name) repartitioned: ${out ne df}")
+    }
   }
 }

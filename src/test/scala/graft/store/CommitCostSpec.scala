@@ -18,8 +18,8 @@ class CommitCostSpec extends AnyFunSuite {
 
   private def parts(df: DataFrame): Int = df.rdd.getNumPartitions
 
-  // the name predates the tail; the assertions below pin ≤ 3 jobs and no
-  // localCheckpoint
+  // the name predates the tail; the assertions below pin ≤ 1 job, no
+  // localCheckpoint and no write action
   test("warm synchronous newNode + addTarget + commit: ≤ 6 jobs, no partition growth") {
     val dir = Files.createTempDirectory("graft-commit-cost-").toString
     val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
@@ -36,11 +36,13 @@ class CommitCostSpec extends AnyFunSuite {
       songs :+= song
     }
     (1 to 4).foreach(insert)
-    // the lookup (a broadcast job and a collect job) and the WAL write
+    // the lookup's collect; the WAL batch is written without a Spark job
     val cost = CostProbe.costOf(spark)(insert(5))
-    assert(cost.jobs <= 3, s"a warm insert + commit ran ${cost.jobs} jobs")
+    assert(cost.jobs <= 1, s"a warm insert + commit ran ${cost.jobs} jobs")
     assert(!cost.actions.contains("localCheckpoint"),
       s"an append-only commit must copy no table: ${cost.actions}")
+    assert(cost.actions.forall(_ == "collect"),
+      s"a commit must run no write action: ${cost.actions}")
     def tableParts() = {
       val st = g.applied()
       (parts(st.nodes), parts(st.edges), parts(st.index))
@@ -57,6 +59,33 @@ class CommitCostSpec extends AnyFunSuite {
     // the control for the action check: a SetValue commit materializes the nodes and index tables
     val set = CostProbe.costOf(spark) { g.setValue(genre, Genre("rock")); store.commit() }
     assert(set.actions.count(_ == "localCheckpoint") === 2, s"a SetValue commit: ${set.actions}")
+    store.close()
+  }
+
+  test("a RemoteWrite submit runs no Spark job") {
+    val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat,
+      Files.createTempDirectory("graft-submit-cost-store-").toString)
+    val inbox = Files.createTempDirectory("graft-submit-cost-inbox-").toString
+    val client = new RemoteWrite.Client(spark, CatalogueModel, inbox, "cost")
+    def ship(name: String): (String, Long) = {
+      var ref = 0L
+      val id = client.submit { txn =>
+        ref = txn.newNode(Genre(name)); txn.addTarget(0L, ref)
+      }
+      (id, ref)
+    }
+    ship("warm")
+    var shipped: (String, Long) = null
+    val cost = CostProbe.costOf(spark) { shipped = ship("jazz") }
+    assert(cost.jobs === 0, s"a submit ran $cost")
+    // the server reads the driver-written txn like any other
+    RemoteWrite.applyPending(store, inbox)
+    val ack = client.await(shipped._1)
+    assert(ack.applied, ack)
+    val jazz = ack.assigned(shipped._2)
+    assert(store.session.getValue(jazz) === Genre("jazz"))
+    assert(store.session.getTargets(store.session.root,
+      IndexKey("Catalogue_Genre_Name", "jazz")) === Seq(jazz))
     store.close()
   }
 
