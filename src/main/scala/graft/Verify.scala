@@ -297,13 +297,14 @@ object Verify {
       auxExport("px55_sim_ivf_append")(Seq("px55_cells", "px55_probes")) {
         // px55: the appended index (built on the even half, odd half
         // assigned to the SAME centroids) — the exact index the query
-        // serves from, via the shared memoized builder
+        // serves from, via the shared memoized builder; one sub-cell per
+        // cell, so the level-1 cell IS the flat cell the oracle joins on
         val idx = pipeline.PipelineQueries.ivfAppendIndex(spark, sfDir)
-        idx.cells.select(col("nbr"), col("_cell"))
+        idx.cells.select(col("nbr"), col("_c1").as("_cell"))
           .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/px55_cells")
         pipeline.Similarity.ivfProbes(
           embs.where(col("vec_id") < 20).select(col("vec_id"), col("embedding")),
-          "vec_id", "embedding", idx.centroids, nprobe = 4)
+          "vec_id", "embedding", idx.l1, nprobe = 4)
           .select(col("qid"), col("_cell"))
           .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/px55_probes")
       }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** Per-subspace PQ code assignment as ONE native expression — the r19
-  * replacement for the ksub-way replication join in `pqAssign`
-  * ([[graft.pipeline.Similarity]]): a trained PQ codebook is m × ksub ×
+  * replacement for the ksub-way replication join `pqAssign` (now the
+  * test-side oracle in PqCodesSpec): a trained PQ codebook is m × ksub ×
   * (dim/m) = dim × ksub floats — driver-bounded at ANY corpus size, the
   * same model class as [[NearestCentroid]]'s l1 matrix — so the argmax
   * over codebook entries runs as a fused per-row loop instead of
@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * profile charged ~7 of the build's ~9.5 s to the two jobs carrying
   * that join).
   *
-  * Numerics replicate `pqAssign` exactly (spec-pinned): per sub, the
+  * Numerics replicate that join exactly (spec-pinned): per sub, the
   * slice `v[sub·subLen, sub·subLen+subLen)` (bounded by the vector's
   * length, as SQL `slice` is) scores each codebook entry by
   * [[CosineSim]]'s double arithmetic — separate ascending-index dot and

@@ -8,13 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * published (`gc` — deleted one generation later, see
   * [[CellsLayout.publish]]).
   *
-  * The manifest generalizes the r17 `_cells` directory pointer from
-  * "which directory is current" to "which FILES are current" — the move
-  * that makes every cells mutation an atomic publish (write new files
-  * beside the live ones, swap one tiny pointer) instead of an in-place
-  * directory rewrite. Reference anchor: the atomic checkpoint publish +
-  * archive rules, /root/reference/library/GraphDB/Storage.hs:104-207 and
-  * Rules.hs:7-25 — the manifest is the cells table's commit marker
+  * The manifest says which FILES are current — the move that makes every
+  * cells mutation (and the save itself, generation 1) an atomic publish
+  * (write new files beside the live ones, swap one tiny pointer) instead
+  * of an in-place directory rewrite. Reference anchor: the reference
+  * store's atomic checkpoint publish + archive rules (GraphDB/Storage.hs
+  * and Rules.hs) — the manifest is the cells table's commit marker
   * exactly as `_meta.json` is the graph checkpoint's.
   *
   * Entries and gc lists are kept root-sorted/file-sorted so a manifest's
@@ -26,6 +25,11 @@ private[pipeline] final case class CellsManifest(
     gc: Seq[(String, Seq[String])]) {
   def fileCount: Int = entries.iterator.map(_._2.size).sum
   def name: String = CellsLayout.manifestName(gen)
+  /** A FRESH logical plan over exactly this generation's files on each
+    * call, so a serve that scans the table twice (codes + float fetch)
+    * reads ONE consistent generation even if a maintainer publishes
+    * mid-call. */
+  def df(spark: SparkSession): DataFrame = CellsLayout.manifestDF(spark, this)
   /** Distinct partition-value tuples present (parsed from the relative
     * paths) — the live cell count, O(manifest) with zero FS calls. */
   def cellCount: Int =
@@ -34,41 +38,11 @@ private[pipeline] final case class CellsManifest(
     }.toSet.size
 }
 
-/** How a cells table is resolved for reading: either the legacy
-  * directory layout (an index that was never mutated — `spark.read`
-  * straight over the partitioned dir, zero overhead on the common serve
-  * path) or a manifest generation (exact file list). `df()` builds a
-  * FRESH logical plan over the same resolved file set each call, so a
-  * serve that scans the table twice (codes + float fetch) reads ONE
-  * consistent generation even if a maintainer publishes mid-call.
-  */
-private[pipeline] sealed trait CellsSource {
-  def df(spark: SparkSession): DataFrame
-  /** root -> relative parquet paths, the manifest view (listed on demand
-    * for legacy dirs — only mutations need it, never serves). */
-  def entries(spark: SparkSession): Seq[(String, Seq[String])]
-  def manifest: Option[CellsManifest]
-}
-
-private[pipeline] final case class DirCells(path: String) extends CellsSource {
-  def df(spark: SparkSession): DataFrame = spark.read.parquet(path)
-  def entries(spark: SparkSession): Seq[(String, Seq[String])] =
-    Seq(path -> CellsLayout.listRelParquet(spark, path))
-  def manifest: Option[CellsManifest] = None
-}
-
-private[pipeline] final case class ManifestCells(dir: String,
-    m: CellsManifest) extends CellsSource {
-  def df(spark: SparkSession): DataFrame = CellsLayout.manifestDF(spark, m)
-  def entries(spark: SparkSession): Seq[(String, Seq[String])] = m.entries
-  def manifest: Option[CellsManifest] = Some(m)
-}
-
-/** The cells-table storage layout of persisted ANN indexes
-  * ([[Similarity.saveIndex]] / [[Similarity.saveTwoLevelIndex]] and
-  * their maintenance ops): pointer resolution, manifest IO, the
-  * stage-and-move protocol mutations publish through, and the deferred
-  * (one-generation grace) reclamation of superseded files.
+/** The cells-table storage layout of the persisted ANN index
+  * ([[Similarity.saveTwoLevelIndex]] and its maintenance ops): pointer
+  * resolution, manifest IO, the stage-and-move protocol mutations
+  * publish through, and the deferred (one-generation grace) reclamation
+  * of superseded files.
   *
   * CONCURRENCY CONTRACT — read this before calling any mutation.
   * Readers are always safe: a serve resolves the pointer once and reads
@@ -90,7 +64,6 @@ private[pipeline] object CellsLayout {
 
   def manifestName(gen: Int): String = s"_manifest_g$gen"
 
-  private val ManifestRe = "manifest:(_manifest_g\\d+)".r
   private val ManifestFileRe = "_manifest_g(\\d+)".r
 
   private def hadoopFs(spark: SparkSession, path: String)
@@ -101,26 +74,24 @@ private[pipeline] object CellsLayout {
 
   // ---------------------------------------------------------- pointer IO
 
-  /** Raw `_cells` pointer content: `cells`, `cells_gN` (legacy directory
-    * generations) or `manifest:_manifest_gN`; absent pointer → `cells`.
+  /** Raw `_cells` pointer content, `manifest:_manifest_gN` — every save
+    * publishes generation 1, so a dir without a pointer holds no index.
     */
   def pointer(spark: SparkSession, dir: String): String = {
     val (fs, p) = hadoopFs(spark, s"$dir/_cells")
-    if (!fs.exists(p)) "cells"
-    else {
-      val in = fs.open(p)
-      val s =
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](256)
-          var n = in.read(buf)
-          while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-          out.toString("UTF-8").trim
-        } finally in.close()
-      require(s.matches("cells(_g\\d+)?|manifest:_manifest_g\\d+"),
-        s"corrupt cells-generation pointer '$s' in $dir")
-      s
-    }
+    require(fs.exists(p), s"no persisted index at $dir (no cells pointer)")
+    val in = fs.open(p)
+    val s =
+      try {
+        val out = new java.io.ByteArrayOutputStream()
+        val buf = new Array[Byte](256)
+        var n = in.read(buf)
+        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
+        out.toString("UTF-8").trim
+      } finally in.close()
+    require(s.matches("manifest:_manifest_g\\d+"),
+      s"corrupt cells-generation pointer '$s' in $dir")
+    s
   }
 
   /** Atomically repoint the index: write beside, one FileContext rename
@@ -234,51 +205,41 @@ private[pipeline] object CellsLayout {
 
   // ----------------------------------------------------------- resolve
 
-  def resolve(spark: SparkSession, dir: String): CellsSource =
-    pointer(spark, dir) match {
-      case ManifestRe(name) => ManifestCells(dir, readManifest(spark, dir, name))
-      case legacy => DirCells(s"$dir/$legacy")
-    }
+  /** The index's CURRENT generation — every reader and maintainer
+    * resolves through this ONCE per call. */
+  def resolve(spark: SparkSession, dir: String): CellsManifest =
+    readManifest(spark, dir, pointer(spark, dir).stripPrefix("manifest:"))
 
-  /** The DataFrame over a manifest generation's exact files. One root —
-    * the common case (every non-cloned index) — reads through the public
-    * `basePath` + explicit-file-list API; multiple roots (a mutated
-    * clone, before its first compaction localizes it) assemble a single
-    * partitioned relation over all roots via
-    * [[org.apache.spark.sql.GraftShim.partitionedParquetDF]], so the
-    * probe join's dynamic partition pruning sees ONE partitioned scan
-    * either way.
+  /** The DataFrame over a manifest generation's exact files, as ONE
+    * partitioned relation over every root
+    * ([[org.apache.spark.sql.GraftShim.partitionedParquetDF]] — no Spark
+    * job), so the probe join's dynamic partition pruning sees one
+    * partitioned scan whether the files live under one root (every
+    * non-cloned index) or several (a mutated clone before its first
+    * compaction localizes it).
     */
   def manifestDF(spark: SparkSession, m: CellsManifest): DataFrame = {
     val es = m.entries.filter(_._2.nonEmpty)
     require(es.nonEmpty,
       "cells manifest references no files — the index holds zero vectors " +
         "(removed in full?); rebuild it before serving")
-    if (es.size == 1) {
-      val (root, files) = es.head
-      spark.read.option("basePath", root)
-        .parquet(files.map(f => s"$root/$f"): _*)
-    } else {
-      val partCols = splitCell(es.head._2.head).map(_._1)
-      val dirVals = scala.collection.mutable.LinkedHashMap
-        .empty[String, Seq[Int]]
-      val files = Vector.newBuilder[String]
-      es.foreach { case (root, fs) =>
-        fs.foreach { f =>
-          val kvs = splitCell(f)
-          require(kvs.map(_._1) == partCols,
-            s"inconsistent partition columns in manifest: $f vs $partCols")
-          val d = s"$root/${f.substring(0, f.lastIndexOf('/'))}"
-          dirVals.getOrElseUpdate(d, kvs.map(_._2))
-          files += s"$root/$f"
-        }
+    val partCols = splitCell(es.head._2.head).map(_._1)
+    val dirVals = scala.collection.mutable.LinkedHashMap
+      .empty[String, Seq[Int]]
+    val files = Vector.newBuilder[String]
+    es.foreach { case (root, fs) =>
+      fs.foreach { f =>
+        val kvs = splitCell(f)
+        require(kvs.map(_._1) == partCols,
+          s"inconsistent partition columns in manifest: $f vs $partCols")
+        val d = s"$root/${f.substring(0, f.lastIndexOf('/'))}"
+        dirVals.getOrElseUpdate(d, kvs.map(_._2))
+        files += s"$root/$f"
       }
-      val fileSeq = files.result()
-      val dataSchema = spark.read.parquet(fileSeq.head).schema
-      org.apache.spark.sql.GraftShim.partitionedParquetDF(
-        spark, partCols, dirVals.toSeq.map { case (d, v) => (v, d) },
-        fileSeq, dataSchema)
     }
+    org.apache.spark.sql.GraftShim.partitionedParquetDF(
+      spark, partCols, dirVals.toSeq.map { case (d, v) => (v, d) },
+      files.result())
   }
 
   /** `_c1=3/_c2=7/part-x.parquet` → Seq(("_c1", 3), ("_c2", 7)). */
@@ -314,11 +275,6 @@ private[pipeline] object CellsLayout {
     out.result().sorted
   }
 
-  /** The next manifest generation number for `dir` — strictly above
-    * every existing manifest file, legacy generation dir, and the
-    * current pointer, so a crashed publish's orphan manifest is never
-    * re-used. One glob listing.
-    */
   /** globStatus returns NULL (not empty) when the glob's parent is
     * missing — normalize. */
   private def glob(fs: org.apache.hadoop.fs.FileSystem,
@@ -326,6 +282,11 @@ private[pipeline] object CellsLayout {
     Option(fs.globStatus(new org.apache.hadoop.fs.Path(pattern)))
       .map(_.toSeq).getOrElse(Seq.empty)
 
+  /** The next manifest generation number for `dir` — strictly above
+    * every existing manifest file and every `cells_gN` root a compaction
+    * wrote, so a crashed publish's orphan manifest or rewrite is never
+    * re-used. One glob listing per kind.
+    */
   def nextGen(spark: SparkSession, dir: String): Int = {
     val (fs, _) = hadoopFs(spark, dir)
     val manifests = glob(fs, s"$dir/_manifest_g*")
@@ -333,11 +294,11 @@ private[pipeline] object CellsLayout {
         case ManifestFileRe(n) => Some(n.toInt)
         case _ => None
       })
-    val legacyDirs = glob(fs, s"$dir/cells_g*")
+    val compacted = glob(fs, s"$dir/cells_g*")
       .flatMap(st =>
         "cells_g(\\d+)".r.findFirstMatchIn(st.getPath.getName)
           .map(_.group(1).toInt))
-    (manifests ++ legacyDirs :+ 1).max + 1
+    (manifests ++ compacted :+ 1).max + 1
   }
 
   // ------------------------------------------------------- stage & move

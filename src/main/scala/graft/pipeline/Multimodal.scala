@@ -36,30 +36,23 @@ object Multimodal {
     StructField("format", StringType, nullable = true),
     StructField("feature", ArrayType(DoubleType), nullable = true)))
 
-  /** Codec stages cost orders of magnitude more per BYTE than the scan
-    * that feeds them (WAV ~30 µs/row, PNG encode ~180 µs/row vs ~0.1 µs
-    * to scan a 300-byte document), so a corpus that fits in fewer parquet
-    * splits than the cluster has cores would run the decode nearly
-    * serially — maxPartitionBytes splits by input bytes, which is the
-    * wrong unit for compute-bound stages. Widen to the session's default
-    * parallelism when (and only when) the incoming partitioning is
-    * narrower: one narrow-payload shuffle here buys full-core decode. At
-    * real corpus scale the scan already yields splits ≫ cores and this
-    * is a structural no-op — no shuffle is added.
-    *
-    * Applied only to the guaranteed-codec ops (toImages / toWavs /
-    * decodeImages / decodeAudio). NOT applied to [[decodeFeatures]] /
-    * [[resize]]: their dominant path on non-codec payloads is the ~1 µs
-    * byte-histogram / subsample, i.e. scan-cost work where the extra
-    * stage is pure overhead — and when they do meet real codec payloads,
-    * those arrived either from toImages/toWavs (already widened, and the
-    * chain between is narrow) or from a stored corpus whose scan splits
-    * exceed cores at any real size.
-    */
-  private def widen(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
+  // Codec stages cost orders of magnitude more per BYTE than the scan
+  // that feeds them (WAV ~30 µs/row, PNG encode ~180 µs/row vs ~0.1 µs
+  // to scan a 300-byte document), so a corpus that fits in fewer parquet
+  // splits than the cluster has cores would run the decode nearly
+  // serially — maxPartitionBytes splits by input bytes, which is the
+  // wrong unit for compute-bound stages. The guaranteed-codec ops
+  // (toImages / toWavs / decodeImages / decodeAudio) therefore widen
+  // their input with graft.Tables.spread: to the session's default
+  // parallelism when (and only when) the incoming partitioning is
+  // narrower, and a no-op at real corpus scale, where the scan already
+  // yields splits ≫ cores. NOT applied to [[decodeFeatures]] /
+  // [[resize]]: their dominant path on non-codec payloads is the ~1 µs
+  // byte-histogram / subsample, i.e. scan-cost work where the extra
+  // stage is pure overhead — and when they do meet real codec payloads,
+  // those arrived either from toImages/toWavs (already widened, and the
+  // chain between is narrow) or from a stored corpus whose scan splits
+  // exceed cores at any real size.
 
   /** Fallback decoder for formats the JDK has no codec for (video /
     * compressed audio / exotic images): a deterministic 8-bucket byte
@@ -384,7 +377,7 @@ object Multimodal {
     * its row (null payload), the row-preservation invariant.
     */
   def toImages(media: DataFrame, width: Int, pngForOdd: Boolean = true): DataFrame =
-    widen(media.select("media_id", "media")).mapPartitions { it =>
+    graft.Tables.spread(media.select("media_id", "media")).mapPartitions { it =>
       // encoder init once per partition (the batch shape)
       it.map { r =>
         val id = r.getLong(0)
@@ -411,7 +404,7 @@ object Multimodal {
     * null payload keeps its row with null outputs.
     */
   def decodeImages(media: DataFrame): DataFrame =
-    widen(media.select("media_id", "media")).mapPartitions { it =>
+    graft.Tables.spread(media.select("media_id", "media")).mapPartitions { it =>
       // ImageIO reader init once per partition (the batch shape)
       it.map { r =>
         val id = r.getLong(0)
@@ -432,7 +425,7 @@ object Multimodal {
     * its row (null payload) — the row-preservation invariant.
     */
   def toWavs(media: DataFrame, sampleRate: Int = 8000): DataFrame =
-    widen(media.select("media_id", "media")).mapPartitions { it =>
+    graft.Tables.spread(media.select("media_id", "media")).mapPartitions { it =>
       // encoder init once per partition (the batch shape)
       it.map { r =>
         val id = r.getLong(0)
@@ -456,7 +449,7 @@ object Multimodal {
     * error, a null payload keeps its row with null outputs.
     */
   def decodeAudio(media: DataFrame): DataFrame =
-    widen(media.select("media_id", "media")).mapPartitions { it =>
+    graft.Tables.spread(media.select("media_id", "media")).mapPartitions { it =>
       // javax.sound SPI reader init ONCE per partition (the batch shape —
       // see loadAudioReaders for why per-row AudioSystem dispatch is a
       // scale-killer: synchronized per-call provider discovery)

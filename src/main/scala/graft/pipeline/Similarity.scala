@@ -71,8 +71,8 @@ object Similarity {
 
   /** A save defines generation 1: drop the cells pointer, every stale
     * generation dir except `cells` itself (the save overwrites it),
-    * every manifest file, and staging leftovers — a lingering manifest
-    * would otherwise shadow the freshly saved table.
+    * every manifest file, and staging leftovers, before the save
+    * publishes its own generation-1 manifest over the fresh `cells` dir.
     */
   private def resetCellsState(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
@@ -91,11 +91,9 @@ object Similarity {
     }
   }
 
-  /** The `_cells` pointer's raw content: a legacy generation DIRECTORY
-    * name (`cells`, `cells_gN` — an index never mutated since its save)
-    * or `manifest:_manifest_gN` (an index whose mutations publish
-    * file-listing manifests, [[CellsLayout]]). Absent pointer → `cells`.
-    * One FS metadata probe per serve; the pointer file is a few bytes.
+  /** The `_cells` pointer's raw content, `manifest:_manifest_gN` — the
+    * index's current file-listing manifest ([[CellsLayout]]). One FS
+    * metadata probe per serve; the pointer file is a few bytes.
     */
   private[graft] def cellsSubdir(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
@@ -107,7 +105,7 @@ object Similarity {
     * maintainer publishes mid-call.
     */
   private[pipeline] def resolveCells(
-      spark: org.apache.spark.sql.SparkSession, dir: String): CellsSource =
+      spark: org.apache.spark.sql.SparkSession, dir: String): CellsManifest =
     CellsLayout.resolve(spark, dir)
 
   /** Rewrite the cells table into a fresh generation with exactly ONE
@@ -142,41 +140,28 @@ object Similarity {
     * readers are always safe.
     */
   def compactTwoLevelIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    compactCells(spark, dir, Seq("_c1", "_c2"))
-
-  /** [[compactTwoLevelIndex]] for the FLAT persisted index family
-    * ([[saveIndex]]/[[appendToIndex]], px53/px55) — same manifest
-    * publish over the single `_cell` partition column; [[loadIndex]] and
-    * [[appendToIndex]] resolve through the pointer, so serving is
-    * generation-transparent (spec-pinned with the two-level family's
-    * invariants).
-    */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    compactCells(spark, dir, Seq("_cell"))
-
-  private def compactCells(spark: org.apache.spark.sql.SparkSession,
-      dir: String, partCols: Seq[String]): Unit = {
+      dir: String): Unit = {
     val src = resolveCells(spark, dir)
     val gen = CellsLayout.nextGen(spark, dir)
     val outDir = s"$dir/cells_g$gen"
     src.df(spark)
-      .repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*)
+      .repartition(col("_c1"), col("_c2"))
+      .write.mode("overwrite").partitionBy(CellCols: _*)
       .parquet(outDir)
     val files = CellsLayout.listRelParquet(spark, outDir)
     CellsLayout.publish(spark, dir,
-      CellsManifest(gen, Seq(outDir -> files), gc = src.entries(spark)),
-      src.manifest)
+      CellsManifest(gen, Seq(outDir -> files), gc = src.entries), Some(src))
   }
+
+  /** The cells table's partition columns: the compound (level-1,
+    * level-2) cell every save, append, remove and compaction writes. */
+  private val CellCols = Seq("_c1", "_c2")
 
   /** Whether the index's cells table has fragmented past
     * `maxFilesPerCell` live files per live cell — the compaction trigger
-    * [[appendToIndex]]/[[appendToTwoLevelIndex]] consult when
-    * `autoCompact` is on. Manifest-mode indexes answer from the manifest
-    * alone (zero file listings); a never-mutated dir answers from one
-    * recursive listing. The default threshold is set from the measured
+    * [[appendToTwoLevelIndex]] consults when `autoCompact` is on —
+    * answered from the manifest alone (zero file listings). The default
+    * threshold is set from the measured
     * serve-decay curve (SERVE_r17, 200k vectors: 1 file/cell → 1.9 s,
     * ~8 append batches → 5.5 s, 32 → 25.1 s): compacting every ~8
     * batches bounds serve latency at <3× floor for an amortized ~1/8 of
@@ -184,13 +169,8 @@ object Similarity {
     */
   def shouldCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
       maxFilesPerCell: Double = DefaultCompactFilesPerCell): Boolean = {
-    val (files, cells) = resolveCells(spark, dir) match {
-      case ManifestCells(_, m) => (m.fileCount, m.cellCount)
-      case DirCells(path) =>
-        val rels = CellsLayout.listRelParquet(spark, path)
-        (rels.size, rels.map(CellsLayout.cellValuesOf).toSet.size)
-    }
-    cells > 0 && files.toDouble / cells > maxFilesPerCell
+    val m = resolveCells(spark, dir)
+    m.cellCount > 0 && m.fileCount.toDouble / m.cellCount > maxFilesPerCell
   }
 
   /** See [[shouldCompact]]. */
@@ -201,7 +181,7 @@ object Similarity {
     * for receipts (tools/CompactionRehearsal). */
   def liveCellFileCount(spark: org.apache.spark.sql.SparkSession,
       dir: String): Long =
-    resolveCells(spark, dir).entries(spark).iterator.map(_._2.size.toLong).sum
+    resolveCells(spark, dir).fileCount.toLong
 
   /** Remove vectors from a persisted two-level index WITHOUT retraining —
     * the maintenance-on-unlink half of the lifecycle (the reference
@@ -234,56 +214,34 @@ object Similarity {
     * [[CellsLayout]]'s concurrency contract.
     */
   def removeFromTwoLevelIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, idCol: String): Unit =
-    removeCells(spark, dir, ids, idCol, Seq("_c1", "_c2"))
-
-  /** [[removeFromTwoLevelIndex]] for the FLAT persisted index family —
-    * same touched-cells-only staged rewrite + atomic manifest publish
-    * over the single `_cell` partition column, same retry-idempotence.
-    * Together with [[compactIndex]] the flat family carries the full
-    * lifecycle (build / persist / append / remove / compact / clone /
-    * serve) the two-level family has.
-    */
-  def removeFromIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, idCol: String): Unit =
-    removeCells(spark, dir, ids, idCol, Seq("_cell"))
-
-  private def removeCells(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, idCol: String,
-      partCols: Seq[String]): Unit = {
+      dir: String, ids: DataFrame, idCol: String): Unit = {
     val src = resolveCells(spark, dir)
     val cells = src.df(spark)
     val rm = ids.select(col(idCol).as("nbr")).distinct()
-    val touched = cells.select("nbr", partCols: _*)
-      .join(rm, Seq("nbr")).select(partCols.map(col): _*).distinct()
-      .collect().map(r => partCols.indices.map(r.getInt).toVector).toSeq
+    val touched = cells.select("nbr", CellCols: _*)
+      .join(rm, Seq("nbr")).select(col("_c1"), col("_c2")).distinct()
+      .collect().map(r => Vector(r.getInt(0), r.getInt(1))).toSeq
     if (touched.isEmpty) return
     val touchedDf = broadcast(
       spark.createDataFrame(
         spark.sparkContext.parallelize(
           touched.map(v => org.apache.spark.sql.Row.fromSeq(v)), 1),
-        org.apache.spark.sql.types.StructType(partCols.map(c =>
+        org.apache.spark.sql.types.StructType(CellCols.map(c =>
           org.apache.spark.sql.types.StructField(c,
             org.apache.spark.sql.types.IntegerType)))))
     val staging = s"$dir/_rm_staging"
-    // the prior entries MUST be captured before any file moves: a legacy
-    // source lists its directory on demand, and listing after the move
-    // would sweep the just-moved survivors into the gc partition below —
-    // deleting live files one generation later (caught by ManifestDebug
-    // during the r18 build; manifest sources are immutable and immune)
-    val prior = src.entries(spark)
     // stage the touched cells' survivors OUTSIDE the table as a
     // partitioned write (fresh task-UUID file names, partition values in
     // the dir structure exactly as the live files carry them), then MOVE
     // them in — renames, not copies — and publish
-    cells.join(touchedDf, partCols)
+    cells.join(touchedDf, CellCols)
       .join(rm, Seq("nbr"), "left_anti")
-      .repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*).parquet(staging)
+      .repartition(col("_c1"), col("_c2"))
+      .write.mode("overwrite").partitionBy(CellCols: _*).parquet(staging)
     val localRoot = s"$dir/cells"
     val moved = CellsLayout.moveInto(spark, staging, localRoot)
     val touchedSet = touched.toSet
-    val (gcE, keptE) = prior.map { case (root, files) =>
+    val (gcE, keptE) = src.entries.map { case (root, files) =>
       val (g, k) = files.partition(f =>
         touchedSet.contains(CellsLayout.cellValuesOf(f)))
       (root -> g, root -> k)
@@ -292,7 +250,7 @@ object Similarity {
       CellsManifest(CellsLayout.nextGen(spark, dir),
         CellsLayout.mergeRoots(keptE :+ (localRoot -> moved)),
         gc = gcE.filter(_._2.nonEmpty)),
-      src.manifest)
+      Some(src))
     val (fs, _) = hadoopFs(spark, staging)
     scala.util.Try(fs.delete(new org.apache.hadoop.fs.Path(staging), true))
     ()
@@ -303,8 +261,8 @@ object Similarity {
     * table — the data — is cloned by publishing a manifest in `dst` that
     * REFERENCES the source's current files (copy-on-write: a later
     * remove/append on the clone writes only its own new files under
-    * `dst`, and a [[compactTwoLevelIndex]]/[[compactIndex]] on the clone
-    * localizes it completely). This turns a multi-second recursive file
+    * `dst`, and a [[compactTwoLevelIndex]] on the clone localizes it
+    * completely). This turns a multi-second recursive file
     * copy into milliseconds of metadata (clone receipt in
     * tools/CompactionRehearsal → SERVE_r18).
     *
@@ -322,14 +280,14 @@ object Similarity {
     val (dfs, dp) = hadoopFs(spark, dst)
     require(!dfs.exists(dp), s"cloneIndex destination $dst already exists")
     dfs.mkdirs(dp)
-    Seq("l1", "l2", "centroids", "pq_cb", "pq_meta").foreach { a =>
+    Seq("l1", "l2", "pq_cb", "pq_meta").foreach { a =>
       val ap = new org.apache.hadoop.fs.Path(s"$src/$a")
       val afs = ap.getFileSystem(conf)
       if (afs.exists(ap))
         org.apache.hadoop.fs.FileUtil.copy(afs, ap, dfs,
           new org.apache.hadoop.fs.Path(s"$dst/$a"), false, conf)
     }
-    val entries = resolveCells(spark, src).entries(spark)
+    val entries = resolveCells(spark, src).entries
     CellsLayout.publish(spark, dst,
       CellsManifest(CellsLayout.nextGen(spark, dst), entries, gc = Nil),
       prev = None)
@@ -337,16 +295,14 @@ object Similarity {
 
   /** Reclaim everything under the index dir the CURRENT manifest does
     * not reference: orphan files from crashed mutations, superseded
-    * files whose deferred deletion was lost to a crash, stale legacy
-    * generation dirs, staging leftovers, and old manifest files. Runs
-    * under the single-maintainer rule (a concurrent mutation's staged-
-    * but-unpublished files WOULD be reclaimed — serialize with mutations
-    * exactly like compact). A dir-mode (never-mutated) index only sheds
-    * staging/stale-generation leftovers.
+    * files whose deferred deletion was lost to a crash, staging
+    * leftovers, and old manifest files. Runs under the single-maintainer
+    * rule (a concurrent mutation's staged-but-unpublished files WOULD be
+    * reclaimed — serialize with mutations exactly like compact).
     */
   def vacuumIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    val src = resolveCells(spark, dir)
+    val m = resolveCells(spark, dir)
     val (fs, _) = hadoopFs(spark, dir)
     def del(p: String, recursive: Boolean): Unit = {
       scala.util.Try(
@@ -354,51 +310,36 @@ object Similarity {
     }
     del(s"$dir/_rm_staging", true)
     del(s"$dir/_append_staging", true)
-    src match {
-      case DirCells(path) =>
-        // legacy mode: the pointer names one dir; every other cells* dir
-        // is stale
-        fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/cells*"))
-          .foreach { st =>
-            if (st.isDirectory && st.getPath.toString != fs.makeQualified(
-                new org.apache.hadoop.fs.Path(path)).toString)
-              del(st.getPath.toString, true)
+    val live = m.entries.flatMap { case (root, files) =>
+      files.map(f => s"$root/$f")
+    }.map(p => fs.makeQualified(
+      new org.apache.hadoop.fs.Path(p)).toString).toSet
+    fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/cells*"))
+      .filter(_.isDirectory).foreach { st =>
+        val it = fs.listFiles(st.getPath, true)
+        val doomed = Vector.newBuilder[org.apache.hadoop.fs.Path]
+        while (it.hasNext) {
+          val f = it.next()
+          if (f.isFile && !live.contains(f.getPath.toString))
+            doomed += f.getPath
+        }
+        doomed.result().foreach(p => scala.util.Try(fs.delete(p, false)))
+        // reap emptied dirs bottom-up (partition dirs whose every file
+        // was unreferenced, then the root itself)
+        def sweep(p: org.apache.hadoop.fs.Path): Boolean = {
+          val children = fs.listStatus(p)
+          val kept = children.count { c =>
+            if (c.isDirectory) !sweep(c.getPath) else true
           }
-        fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/_manifest_g*"))
-          .foreach(st => del(st.getPath.toString, false))
-      case ManifestCells(_, m) =>
-        val live = m.entries.flatMap { case (root, files) =>
-          files.map(f => s"$root/$f")
-        }.map(p => fs.makeQualified(
-          new org.apache.hadoop.fs.Path(p)).toString).toSet
-        fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/cells*"))
-          .filter(_.isDirectory).foreach { st =>
-            val it = fs.listFiles(st.getPath, true)
-            val doomed = Vector.newBuilder[org.apache.hadoop.fs.Path]
-            while (it.hasNext) {
-              val f = it.next()
-              if (f.isFile && !live.contains(f.getPath.toString))
-                doomed += f.getPath
-            }
-            doomed.result().foreach(p => scala.util.Try(fs.delete(p, false)))
-            // reap emptied dirs bottom-up (partition dirs whose every
-            // file was unreferenced, then the root itself)
-            def sweep(p: org.apache.hadoop.fs.Path): Boolean = {
-              val children = fs.listStatus(p)
-              val kept = children.count { c =>
-                if (c.isDirectory) !sweep(c.getPath) else true
-              }
-              if (kept == 0) { scala.util.Try(fs.delete(p, true)); true }
-              else false
-            }
-            scala.util.Try(sweep(st.getPath))
-          }
-        fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/_manifest_g*"))
-          .foreach { st =>
-            if (st.getPath.getName != m.name)
-              del(st.getPath.toString, false)
-          }
-    }
+          if (kept == 0) { scala.util.Try(fs.delete(p, true)); true }
+          else false
+        }
+        scala.util.Try(sweep(st.getPath))
+      }
+    fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/_manifest_g*"))
+      .foreach { st =>
+        if (st.getPath.getName != m.name) del(st.getPath.toString, false)
+      }
   }
 
   /** Top-k per query over scored candidates (`qid, nbr, sim`) as ONE
@@ -617,150 +558,6 @@ object Similarity {
         explode(graft.functions.TopPCentroids(col("qv"), centroids, nprobe))
           .as("_cell"))
 
-  /** A persisted IVF index, reloaded: the driver-side centroid matrix
-    * plus the cell-partitioned codes table (`nbr, cv, _cell`).
-    */
-  final case class IvfIndex(centroids: Array[Array[Float]], cells: DataFrame)
-
-  /** Persist an IVF index: centroids as one tiny parquet (nlist×dim —
-    * driver-bounded by construction) and the assigned corpus PARTITIONED
-    * BY CELL on disk. The partition layout is the read-path win: a probe
-    * join against `nprobe` cells triggers dynamic partition pruning, so
-    * a search reads only the probed cells' files — at 100 TB the scan
-    * cost is corpus·nprobe/nlist, and the train cost (the expensive part,
-    * [[ivfCentroids]]) is paid ONCE here instead of per query
-    * (the reference's persistent-store posture: build once, serve many,
-    * /root/reference/library/GraphDB/Persistent.hs:62-88).
-    */
-  def saveIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, nlist: Int = 16, iters: Int = 1): Unit = {
-    import graft.functions.NearestCentroid
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // a save defines generation 1 — reset the cells pointer and reclaim
-    // stale generations, manifests, and staging leftovers (the
-    // saveTwoLevelIndex rule)
-    resetCellsState(spark, dir)
-    val cents = ivfCentroids(corpus, idCol, vecCol, nlist, iters)
-    cents.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("_cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    corpus.select(col(idCol).as("nbr"), col(vecCol).as("cv"))
-      .withColumn("_cell", NearestCentroid(col("cv"), cents))
-      // one file per cell, not tasks × cells — see saveTwoLevelIndex
-      .repartition(col("_cell"))
-      .write.mode("overwrite").partitionBy("_cell").parquet(s"$dir/cells")
-  }
-
-  /** Reload a persisted index. Centroid floats round-trip parquet
-    * bit-exactly, so probes computed from a loaded index are identical to
-    * probes from the freshly trained matrix (px53's oracle relies on it).
-    */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): IvfIndex = {
-    val cents = cachedL1(spark, s"$dir/centroids")(
-      spark.read.parquet(s"$dir/centroids")
-        .select("_cell", "centroid").orderBy("_cell").collect()
-        .map(_.getSeq[Float](1).toArray))
-    val raw = resolveCells(spark, dir).df(spark)
-    // partition-column type inference reads `_cell=N` back as int; keep
-    // the attribute UNCAST so the probe join key stays the partition
-    // column itself and dynamic partition pruning applies.
-    require(raw.schema("_cell").dataType ==
-      org.apache.spark.sql.types.IntegerType,
-      s"unexpected _cell partition type: ${raw.schema("_cell").dataType}")
-    IvfIndex(cents, raw.select("nbr", "cv", "_cell"))
-  }
-
-  /** Incrementally add vectors to a persisted index WITHOUT retraining:
-    * new rows are assigned to the EXISTING centroids (one map pass — the
-    * IVF update posture: centroids drift slowly, assignment is cheap) and
-    * appended to the cell-partitioned codes table; a subsequent
-    * [[loadIndex]] + [[ivfTopKFromIndex]] serves the union. Searches over
-    * the appended index are identical to an index whose cells were
-    * assigned from the same centroid matrix over the full corpus
-    * (PipelineSpec proves it) — recall degrades only as far as the
-    * centroids have gone stale, the documented tradeoff that schedules
-    * re-training ([[saveIndex]]) as a periodic job, not a per-batch one.
-    */
-  def appendToIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      newRows: DataFrame, idCol: String, vecCol: String,
-      dedupeIds: Boolean = true, autoCompact: Boolean = true): Unit = {
-    import graft.functions.NearestCentroid
-    val idx = loadIndex(spark, dir)
-    // Idempotence under retries: a re-submitted batch (crashed writer,
-    // ids already indexed) must not duplicate code rows, so by default the
-    // new ids are anti-joined against the existing codes table — a
-    // column-pruned scan of `nbr` only, cheap relative to the append.
-    // Callers with an external exactly-once guarantee can pass false.
-    val base = newRows.select(col(idCol).as("nbr"), col(vecCol).as("cv"))
-    val fresh =
-      if (dedupeIds) base.join(idx.cells.select("nbr"), Seq("nbr"), "left_anti")
-      else base
-    appendCells(spark, dir,
-      fresh.withColumn("_cell", NearestCentroid(col("cv"), idx.centroids)),
-      Seq("_cell"), autoCompact)
-  }
-
-  /** The shared append commit: stage the batch as a partitioned write,
-    * MOVE the staged files into the index's local root (renames — one
-    * per touched cell after the repartition), and publish the manifest
-    * that adds them ([[CellsLayout.publish]]). The batch becomes visible
-    * at the atomic pointer swap — a crash anywhere before it leaves the
-    * served table EXACTLY as it was (the r17 "parquet append is not
-    * atomic / partial part-files" caveat is gone; orphans from a crashed
-    * move are invisible and reclaimed by [[vacuumIndex]]). An empty
-    * batch (all ids deduped away) publishes nothing. With `autoCompact`
-    * (the default) the append then runs [[shouldCompact]] — one manifest
-    * read, zero listings — and compacts past the measured fragmentation
-    * threshold, so serve latency stays bounded across an append-heavy
-    * lifetime without any scheduled maintenance (receipt: SERVE_r18).
-    * SINGLE-MAINTAINER — see [[CellsLayout]]'s concurrency contract.
-    */
-  private def appendCells(spark: org.apache.spark.sql.SparkSession,
-      dir: String, rows: DataFrame, partCols: Seq[String],
-      autoCompact: Boolean): Unit = {
-    val src = resolveCells(spark, dir)
-    // capture BEFORE the move — a legacy source lists its dir on demand
-    // and must not see the staged batch (see removeCells)
-    val prior = src.entries(spark)
-    val staging = s"$dir/_append_staging"
-    rows
-      .repartition(partCols.map(col): _*) // one file per touched cell
-      .write.mode("overwrite").partitionBy(partCols: _*).parquet(staging)
-    val localRoot = s"$dir/cells"
-    val moved = CellsLayout.moveInto(spark, staging, localRoot)
-    val (fs, _) = hadoopFs(spark, staging)
-    if (moved.nonEmpty) {
-      CellsLayout.publish(spark, dir,
-        CellsManifest(CellsLayout.nextGen(spark, dir),
-          CellsLayout.mergeRoots(prior :+ (localRoot -> moved)),
-          gc = Nil),
-        src.manifest)
-    }
-    scala.util.Try(fs.delete(new org.apache.hadoop.fs.Path(staging), true))
-    if (autoCompact && moved.nonEmpty && shouldCompact(spark, dir))
-      compactCells(spark, dir, partCols)
-  }
-
-  /** ANN search served from a persisted index — [[ivfTopK]] minus the
-    * training cost. The cells scan prunes to the probed partitions
-    * (dynamic partition pruning on `_cell`; set the session conf noted on
-    * [[twoLevelTopKFromIndex]] or runtime pruning silently degrades to a
-    * full scan).
-    */
-  def ivfTopKFromIndex(index: IvfIndex, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    val probes = ivfProbes(queries, idCol, vecCol, index.centroids, nprobe)
-    topKPerQuery(
-      index.cells.withColumn("_cn", vecNorm(col("cv")))
-        .join(probes.withColumn("_qn", vecNorm(col("qv"))), Seq("_cell"))
-        .where(col("qid") =!= col("nbr"))
-        .withColumn("sim",
-          round(cosinePre(col("qv"), col("cv"), col("_qn"), col("_cn")), 6)),
-      k)
-  }
-
   /** A two-level IVF coarse quantizer: the level-1 centroid matrix on the
     * driver, the level-2 centroids as a DISTRIBUTED table
     * (`_c1, _c2, _cent`) — never collected.
@@ -813,7 +610,7 @@ object Similarity {
     // localCheckpoint was A/B'd (the minhashPairs precedent) and did NOT
     // win here: the recompute is cheaper than the extra materialization
     // job at every scale tried, so the plan stays pure. Persist-once
-    // serving belongs to the px53 saveIndex posture, not the trainer.
+    // serving belongs to saveTwoLevelIndex, not the trainer.
     TwoLevelModel(l1, l2)
   }
 
@@ -912,14 +709,6 @@ object Similarity {
   final case class TwoLevelIndex(l1: Array[Array[Float]], l2: DataFrame,
     cells: DataFrame)
 
-  /** Persist a two-level index — the [[saveIndex]] posture for the
-    * √-scale quantizer: the tiny level-1 matrix and the level-2 centroid
-    * table as parquet, and the assigned corpus PARTITIONED BY the
-    * compound (c1, c2) cell so a probe join dynamically prunes to the
-    * probed sub-cells' files. Train is paid ONCE here; note the level-2
-    * table is written by the CLUSTER (it was never on the driver) —
-    * at nlist = 10⁶ it is a 10⁶-row parquet, not a driver matrix.
-    */
   /** The number of PQ subspaces actually used for a given dim and
     * requested `pqM`: the largest divisor of `dim` that is ≤ `pqM`
     * (slices must split the vector evenly), or 0 when `pqM ≤ 0` (PQ
@@ -930,7 +719,20 @@ object Similarity {
     if (pqM <= 0) 0
     else (math.min(pqM, dim) to 1 by -1).find(dim % _ == 0).getOrElse(1)
 
-  /** `pqKsub` defaults to 127 — the int8-pack bound: codes are stored as
+  /** Persist a two-level index: the tiny level-1 matrix and the level-2
+    * centroid table as parquet, and the assigned corpus PARTITIONED BY
+    * the compound (c1, c2) cell so a probe join dynamically prunes to the
+    * probed sub-cells' files. Train is paid ONCE here, not per query (the
+    * reference's persistent-store posture: build once, serve many); note
+    * the level-2 table is written by the CLUSTER (it was never on the
+    * driver) — at nlist = 10⁶ it is a 10⁶-row parquet, not a driver
+    * matrix. `k2 = 1` is the flat IVF index: one sub-cell per level-1
+    * cell, the same `ivfCentroids` matrix and `NearestCentroid`
+    * assignment as [[ivfModel]] (px53/px55 serve it). The cells table is
+    * published as manifest generation 1 ([[CellsLayout]]), the one
+    * layout every later mutation extends.
+    *
+    * `pqKsub` defaults to 127 — the int8-pack bound: codes are stored as
     * one signed byte PER SUBSPACE regardless of ksub, so a 16-entry
     * codebook uses 4 of the byte's 8 bits and a 127-entry one costs the
     * SAME 8 B/vec with 8× the resolution. MEASURED (SERVE_r17, 200k
@@ -1012,8 +814,7 @@ object Similarity {
     // bit-exactly (the same guarantee loadTwoLevelIndex serves on), and
     // the old plan recomputed the seeds-window + decimal-Lloyd chain once
     // for the cells table and once more inside the PQ residual input.
-    val l2df = spark.read.parquet(s"$dir/l2")
-      .select(col("_c1"), col("_c2"), col("_cent"))
+    val l2df = readL2(spark, dir)
     val assigned = corpus.select(col(idCol).as("nbr"), col(vecCol).as("cv"))
       .withColumn("_c1", NearestCentroid(col("cv"), m.l1))
     // the cells table carries THREE precisions: `cv` (float32) for exact
@@ -1055,8 +856,13 @@ object Similarity {
         withPackedPqCodes(base, cb,
           if (pqResidual) Some(l2df) else None, dim, mSub))
         .repartition(col("_c1"), col("_c2"))
-        .write.mode("overwrite").partitionBy("_c1", "_c2")
+        .write.mode("overwrite").partitionBy(CellCols: _*)
         .parquet(s"$dir/cells"))
+    CellsLayout.publish(spark, dir,
+      CellsManifest(1,
+        Seq(s"$dir/cells" -> CellsLayout.listRelParquet(spark, s"$dir/cells")),
+        gc = Nil),
+      prev = None)
   }
 
   /** Residual rows (`nbr, _pqv = cv − centroid(c1, c2)`) for PQ training
@@ -1088,7 +894,7 @@ object Similarity {
     new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
   // r18: the driver-held centroid matrices are model artifacts written
   // once at save time — the per-serve collect() job (one Spark job +
-  // parquet read per loadIndex/loadTwoLevelIndex call) joins the same
+  // parquet read per loadTwoLevelIndex call) joins the same
   // mtime-stamped cache family; a re-save invalidates via the stamp.
   // r19 (ADVICE): keyed by PATH with the mtime in the VALUE, so a
   // re-train in a long-lived serving JVM REPLACES the previous matrix
@@ -1172,6 +978,13 @@ object Similarity {
       .drop("_pqv")
   }
 
+  /** The persisted level-2 centroid table (`_c1, _c2, _cent`), read with
+    * its known schema — inferring it would cost a Spark job per load. */
+  private def readL2(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    spark.read.schema(
+      "_c1 INT, _c2 INT, _cent ARRAY<FLOAT>").parquet(s"$dir/l2")
+
   /** Reload a persisted two-level index. Floats round-trip parquet
     * bit-exactly — level-1, level-2, AND the assigned cells are
     * identical to the freshly trained model's, so probes and serves from
@@ -1186,7 +999,7 @@ object Similarity {
       spark.read.parquet(s"$dir/l1")
         .select("_c1", "centroid").orderBy("_c1").collect()
         .map(_.getSeq[Float](1).toArray))
-    val l2 = spark.read.parquet(s"$dir/l2").select("_c1", "_c2", "_cent")
+    val l2 = readL2(spark, dir)
     val raw = resolveCells(spark, dir).df(spark)
     Seq("_c1", "_c2").foreach { c =>
       require(raw.schema(c).dataType ==
@@ -1197,13 +1010,17 @@ object Similarity {
   }
 
   /** Incrementally add vectors to a persisted two-level index WITHOUT
-    * retraining — [[appendToIndex]]'s posture for the √-scale quantizer:
-    * new rows are assigned level-1 against the loaded driver matrix and
-    * level-2 against the loaded (distributed) centroid table — two
-    * bounded map/join passes — and appended to the compound-partitioned
-    * codes table. Same retry idempotence rule (id anti-join on a
-    * column-pruned `nbr` scan by default) and the same staleness
-    * tradeoff: re-train ([[saveTwoLevelIndex]]) on a cadence.
+    * retraining: new rows are assigned level-1 against the loaded driver
+    * matrix and level-2 against the loaded (distributed) centroid table
+    * — two bounded map/join passes, the IVF update posture (centroids
+    * drift slowly, assignment is cheap) — and appended to the
+    * compound-partitioned codes table. Idempotent under retries: by
+    * default the new ids are anti-joined against a column-pruned `nbr`
+    * scan, so a re-submitted batch does not duplicate rows. Searches
+    * over the appended index equal an index whose cells were assigned
+    * from the same centroids over the full corpus (spec-pinned); recall
+    * degrades only as far as the centroids go stale — re-train
+    * ([[saveTwoLevelIndex]]) on a cadence.
     *
     * WHEN to retrain — the measured rule (tools/RetrainCadence,
     * SCALE_r15): appending drifted batches (whole-corpus 30°-per-batch
@@ -1279,7 +1096,44 @@ object Similarity {
         withPackedPqCodes(assigned, cb,
           if (pqIsResidual(spark, dir)) Some(idx.l2) else None, dim, mSub)
       }
-    appendCells(spark, dir, withPq, Seq("_c1", "_c2"), autoCompact)
+    appendCells(spark, dir, withPq, autoCompact)
+  }
+
+  /** The shared append commit: stage the batch as a partitioned write,
+    * MOVE the staged files into the index's local root (renames — one
+    * per touched cell after the repartition), and publish the manifest
+    * that adds them ([[CellsLayout.publish]]). The batch becomes visible
+    * at the atomic pointer swap — a crash anywhere before it leaves the
+    * served table EXACTLY as it was (the r17 "parquet append is not
+    * atomic / partial part-files" caveat is gone; orphans from a crashed
+    * move are invisible and reclaimed by [[vacuumIndex]]). An empty
+    * batch (all ids deduped away) publishes nothing. With `autoCompact`
+    * (the default) the append then runs [[shouldCompact]] — one manifest
+    * read, zero listings — and compacts past the measured fragmentation
+    * threshold, so serve latency stays bounded across an append-heavy
+    * lifetime without any scheduled maintenance (receipt: SERVE_r18).
+    * SINGLE-MAINTAINER — see [[CellsLayout]]'s concurrency contract.
+    */
+  private def appendCells(spark: org.apache.spark.sql.SparkSession,
+      dir: String, rows: DataFrame, autoCompact: Boolean): Unit = {
+    val src = resolveCells(spark, dir)
+    val staging = s"$dir/_append_staging"
+    rows
+      .repartition(col("_c1"), col("_c2")) // one file per touched cell
+      .write.mode("overwrite").partitionBy(CellCols: _*).parquet(staging)
+    val localRoot = s"$dir/cells"
+    val moved = CellsLayout.moveInto(spark, staging, localRoot)
+    val (fs, _) = hadoopFs(spark, staging)
+    if (moved.nonEmpty) {
+      CellsLayout.publish(spark, dir,
+        CellsManifest(CellsLayout.nextGen(spark, dir),
+          CellsLayout.mergeRoots(src.entries :+ (localRoot -> moved)),
+          gc = Nil),
+        Some(src))
+    }
+    scala.util.Try(fs.delete(new org.apache.hadoop.fs.Path(staging), true))
+    if (autoCompact && moved.nonEmpty && shouldCompact(spark, dir))
+      compactTwoLevelIndex(spark, dir)
   }
 
   /** ANN top-k served from a persisted two-level index — [[twoLevelTopK]]
@@ -1558,28 +1412,6 @@ object Similarity {
         col("v"))
       .select(col("nbr"), col("sub"),
         expr(s"slice(v, sub * $subLen + 1, $subLen)").as("sv"))
-
-  /** Assign each slice to its best codebook entry WITHIN its subspace —
-    * the per-subspace analog of [[assignToL2]]: a join on `sub`
-    * replicates each slice ksub times (bounded — ksub is a constant),
-    * cosine-scored, argmax with smaller-code tie-breaks. Zero-norm
-    * slices (cosine NULL) coalesce below any real score and land in
-    * code 0 deterministically.
-    *
-    * r19: retired from the build/encode hot path — the codebook is
-    * driver-bounded (dim × ksub floats), so [[graft.functions.PqCodes]]
-    * performs this argmax as one fused per-row loop with no explode, no
-    * ksub-way join and no exchange. Kept (private[pipeline]) as the
-    * reference implementation the PqCodesSpec equality test pins the
-    * native kernel against.
-    */
-  private[pipeline] def pqAssign(slices: DataFrame, codebook: DataFrame): DataFrame =
-    slices.join(codebook, Seq("sub"))
-      .withColumn("_s", coalesce(cosine(col("sv"), col("cent")), lit(-2d)))
-      .groupBy(col("nbr"), col("sub"))
-      .agg(first(col("sv")).as("sv"),
-        max(struct(col("_s").as("s"), (-col("code")).as("n"))).as("_b"))
-      .select(col("nbr"), col("sub"), col("sv"), (-col("_b.n")).as("code"))
 
   /** Train per-subspace PQ codebooks — TRUE product quantization (the
     * FAISS PQ shape), vs [[quantizeInt8]]'s scalar quantization: the
@@ -2083,21 +1915,17 @@ object Similarity {
     }
 
   /** The index's corpus row count, cached per (dir, cells-state stamp):
-    * the `_cells` pointer file is rewritten at every maintenance publish
-    * and absent dir-mode indexes stamp on the cells dir itself, so a
-    * mutation bumps the stamp and the count job re-runs once. Used by
+    * the `_cells` pointer file is rewritten at every save and
+    * maintenance publish, so a mutation bumps the stamp and the count job
+    * re-runs once. Used by
     * the [[autoRerank]] sentinel's probed-mass estimate — an estimate,
     * so a racing concurrent publish (reader resolved old, stamp already
     * new) only perturbs the rerank budget, never correctness.
     */
   private def corpusCountFor(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: CellsSource): Long = {
-    val stamp = mtimeOf(spark, s"$dir/_cells") match {
-      case -1L => mtimeOf(spark, s"$dir/cells")
-      case t => t
-    }
-    corpusCountCache.computeIfAbsent((dir, stamp), _ => src.df(spark).count())
-  }
+      dir: String, src: CellsManifest): Long =
+    corpusCountCache.computeIfAbsent((dir, mtimeOf(spark, s"$dir/_cells")),
+      _ => src.df(spark).count())
 
   /** Per-level side of an occupancy-scaled √/√ two-level split: each
     * level gets ⌈√autoNlist(n)⌉ cells (floor 4), so total cell count
@@ -2242,7 +2070,7 @@ object Similarity {
 
   /** Cluster assignment of a base corpus AND an arriving batch against
     * centroids trained on the BASE ONLY (the stale-centroid append
-    * posture of [[appendToIndex]]) — shared by [[semanticPruneAppend]]
+    * posture of [[appendToTwoLevelIndex]]) — shared by [[semanticPruneAppend]]
     * and graft.Verify's px61 aux export so the query and its oracle
     * cannot drift. Returns (baseCells, batchCells), each
     * (`_id`, `_v`, `_cell`).
@@ -2260,7 +2088,7 @@ object Similarity {
   }
 
   /** Incremental SemDeDup — the dedup-maintained-on-write posture
-    * ([[appendToIndex]]'s analog for [[semanticClusterPrune]], and the
+    * ([[appendToTwoLevelIndex]]'s analog for [[semanticClusterPrune]], and the
     * embedding-space sibling of Dedup.incrementalNew): an arriving batch
     * is assigned to the EXISTING base centroids (no retrain — one map
     * pass) and each batch vector is pruned iff, within its cell, it has
@@ -2274,7 +2102,7 @@ object Similarity {
     * and pays only the batch-side cost — batch × occupancy comparisons
     * plus one batch×batch within-cell pass, never a base re-pairing.
     * Centroid staleness is the same documented tradeoff as
-    * [[appendToIndex]]: re-train ([[semanticClusterPrune]] from scratch)
+    * [[appendToTwoLevelIndex]]: re-train ([[semanticClusterPrune]] from scratch)
     * on a cadence, not per batch. Cell occupancy is sized from the BASE
     * corpus — a base far smaller than the batch (degenerate: empty)
     * collapses the batch into few cells and the batch-internal compare

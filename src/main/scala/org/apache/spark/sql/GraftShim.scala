@@ -23,18 +23,25 @@ object GraftShim {
   def wrongNumArgs(fn: String, expected: Int, actual: Int): Throwable =
     errors.QueryCompilationErrors.wrongNumArgsError(fn, Seq(expected), actual)
 
-  /** ONE partitioned parquet relation over an EXPLICIT file list that may
-    * span multiple root directories — the multi-root read a mutated index
-    * clone needs (graft.pipeline.CellsLayout: a clone's manifest
-    * references the source's files until its own mutations write local
-    * ones). `spark.read.option("basePath", …)` accepts exactly one base,
-    * so partition values are supplied directly as a user
+  /** ONE partitioned parquet relation over an EXPLICIT file list, which
+    * may span several root directories — the read of a persisted index's
+    * cells manifest (graft.pipeline.CellsLayout; a mutated clone's
+    * manifest references the source's files until its own mutations
+    * write local ones). Partition values are supplied directly as a user
     * [[execution.datasources.PartitionSpec]] (parsed from the manifest's
-    * relative paths by the caller) and the listing is restricted to the
-    * named files via InMemoryFileIndex's explicit-paths constructor. The
-    * result is an ordinary partitioned HadoopFsRelation: static partition
-    * pruning AND dynamic partition pruning apply exactly as they do to a
-    * directory-resolved scan (plan-asserted in PipelineSpec).
+    * relative paths by the caller). The result is an ordinary partitioned
+    * HadoopFsRelation: static partition pruning AND dynamic partition
+    * pruning apply exactly as they do to a directory-resolved scan
+    * (plan-asserted in PipelineSpec).
+    *
+    * The read runs no Spark job. `spark.read` over more than 32 explicit
+    * paths lists them with a parallel-listing job on every read (its
+    * file-status cache is per read), and without a schema it infers one
+    * with another job. Here the file statuses come from one
+    * `getFileStatus` per named file on the driver, served to the index
+    * through its file-status cache, and the data schema from the first
+    * file's footer, read with Spark's own footer-to-schema rule — every
+    * file of a manifest generation carries the table's one schema.
     *
     * `partitionDirs` maps each leaf partition directory (absolute) to its
     * partition-column values; every file's parent must appear in it. The
@@ -46,27 +53,45 @@ object GraftShim {
       spark: SparkSession,
       partCols: Seq[String],
       partitionDirs: Seq[(Seq[Int], String)],
-      files: Seq[String],
-      dataSchema: types.StructType): DataFrame = {
+      files: Seq[String]): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
     import org.apache.spark.sql.execution.datasources._
+    import org.apache.spark.sql.execution.datasources.parquet._
     val cs = spark.asInstanceOf[classic.SparkSession]
     val hconf = cs.sparkContext.hadoopConfiguration
     val partSchema = types.StructType(partCols.map(c =>
       types.StructField(c, types.IntegerType, nullable = true)))
+    // one directory per partition: an index addressed by two path forms
+    // (`/x` and `file:/x`) lists the same directory under two roots, and
+    // a repeated partition would read its files twice
     val parts = partitionDirs.map { case (vals, d) =>
-      val p = new org.apache.hadoop.fs.Path(d)
+      val p = new Path(d)
       val q = p.getFileSystem(hconf).makeQualified(p)
       PartitionPath(
         catalyst.InternalRow.fromSeq(vals), q)
+    }.distinctBy(_.path)
+    val paths = files.map(f => new Path(f))
+    val statuses: Map[Path, Array[FileStatus]] = paths.map(p =>
+      p -> Array(p.getFileSystem(hconf).getFileStatus(p))).toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        statuses.get(path)
+      def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
     }
-    val index = new InMemoryFileIndex(cs,
-      files.map(f => new org.apache.hadoop.fs.Path(f)),
-      Map.empty, None, FileStatusCache.getOrCreate(cs),
+    val first = statuses(paths.head).head.getPath
+    val dataSchema = ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(first,
+        ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(first,
+            cs.sessionState.newHadoopConf()),
+          org.apache.parquet.format.converter.ParquetMetadataConverter
+            .SKIP_ROW_GROUPS)),
+      new ParquetToSparkSchemaConverter(cs.sessionState.conf)).asNullable
+    val index = new InMemoryFileIndex(cs, paths, Map.empty, None, listed,
       Some(PartitionSpec(partSchema, parts)), None)
     val rel = HadoopFsRelation(index, partSchema, dataSchema, None,
-      new org.apache.spark.sql.execution.datasources.parquet
-        .ParquetFileFormat,
-      Map.empty)(cs)
+      new ParquetFileFormat, Map.empty)(cs)
     val df = cs.baseRelationToDataFrame(rel)
     val matched = df.inputFiles.length
     require(matched == files.size,

@@ -199,7 +199,8 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("IntCodes / QScale == legacy lambda chains bit-for-bit") {
     // adversarial vectors: normal, zero, empty, single, huge/tiny floats,
-    // negatives, a NULL element (array SQL-built so floats stay floats)
+    // negatives, a NULL element, NaN, +Inf, -Inf, and NaN beside a NULL
+    // (array SQL-built so floats stay floats)
     val df = spark.range(0, 1).select(
       expr("""array(
         array(cast(1.5 as float),  cast(-2.25 as float), cast(0.1 as float)),
@@ -208,7 +209,11 @@ class FunctionsSpec extends AnyFunSuite {
         array(cast(-3.0 as float)),
         array(cast(null as float), cast(4.0 as float)),
         array(cast(null as float), cast(null as float)),
-        array(cast(127.0 as float), cast(-127.0 as float), cast(63.5 as float))
+        array(cast(127.0 as float), cast(-127.0 as float), cast(63.5 as float)),
+        array(cast('NaN' as float), cast(1.0 as float)),
+        array(cast('Infinity' as float), cast(2.0 as float)),
+        array(cast('-Infinity' as float), cast(-2.0 as float)),
+        array(cast('NaN' as float), cast(null as float), cast(3.0 as float))
       ) as vs"""))
       .select(posexplode(col("vs")).as(Seq("i", "v")))
     // the exact lambda chains IntCodes/QScale replaced (r19)
@@ -225,7 +230,7 @@ class FunctionsSpec extends AnyFunSuite {
       IntCodes(col("v")).as("nc"), legacyCodes.as("lc"),
       QScale(col("v")).as("ns"), legacyScale.as("ls"))
       .orderBy("i").collect()
-    assert(rows.length === 7)
+    assert(rows.length === 11)
     rows.foreach { r =>
       assert(r.get(1) === r.get(2), s"codes differ at ${r.getInt(0)}")
       val (n, l) = (r.isNullAt(3), r.isNullAt(4))

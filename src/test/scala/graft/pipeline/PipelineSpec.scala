@@ -309,31 +309,41 @@ class PipelineSpec extends AnyFunSuite {
     val queries = embs.where(col("vec_id") < 10).select(col("vec_id"), col("embedding"))
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
     try {
-      Similarity.saveIndex(corpus, "vec_id", "embedding", dir, nlist = 16, iters = 1)
-      val idx = Similarity.loadIndex(spark, dir)
-      // centroids round-trip parquet bit-exactly
+      // the flat IVF index (px53): one sub-cell per level-1 cell
+      Similarity.saveTwoLevelIndex(corpus, "vec_id", "embedding", dir,
+        nlist1 = 16, k2 = 1, iters = 1, pqM = 0)
+      // the save publishes the cells dir as manifest generation 1
+      assert(Similarity.cellsSubdir(spark, dir) === "manifest:_manifest_g1")
+      val idx = Similarity.loadTwoLevelIndex(spark, dir)
+      // the level-1 matrix IS the flat centroid matrix, round-tripped
+      // through parquet bit-exactly
       val fresh = Similarity.ivfCentroids(corpus, "vec_id", "embedding", nlist = 16)
-      assert(idx.centroids.length === fresh.length)
-      idx.centroids.zip(fresh).foreach { case (a, b) => assert(a.toSeq === b.toSeq) }
+      assert(idx.l1.length === fresh.length)
+      idx.l1.zip(fresh).foreach { case (a, b) => assert(a.toSeq === b.toSeq) }
+      assert(idx.l2.select("_c2").distinct().collect().map(_.getInt(0))
+        .toSeq === Seq(0))
       // on-disk layout is partitioned by cell (the pruning unit)
       val cellDirs = new java.io.File(s"$dir/cells").listFiles()
-        .filter(_.getName.startsWith("_cell=")).map(_.getName).toSet
+        .filter(_.getName.startsWith("_c1=")).map(_.getName).toSet
       assert(cellDirs.nonEmpty)
-      // served results identical to the refit search, row for row
-      val served = Similarity.ivfTopKFromIndex(idx, queries,
-        "vec_id", "embedding", k = 5, nprobe = 4)
+      // served results identical to the refit flat search, row for row
+      // (p1 = nprobe with one sub-cell per cell keeps every probed,
+      // non-empty cell)
+      val served = Similarity.twoLevelTopKFromIndex(idx, queries,
+        "vec_id", "embedding", k = 5, p1 = 4, nprobe = 4)
         .orderBy("qid", "rank").collect().toSeq
       val refit = Similarity.ivfTopK(corpus, queries,
         "vec_id", "embedding", k = 5, nlist = 16, nprobe = 4)
         .orderBy("qid", "rank").collect().toSeq
+      assert(served.nonEmpty)
       assert(served === refit)
       // the probe join prunes the cells scan: the physical plan carries a
-      // dynamic-pruning partition filter on _cell
-      val plan = Similarity.ivfTopKFromIndex(idx, queries,
-        "vec_id", "embedding", k = 5, nprobe = 4)
+      // dynamic-pruning partition filter on _c1
+      val plan = Similarity.twoLevelTopKFromIndex(idx, queries,
+        "vec_id", "embedding", k = 5, p1 = 4, nprobe = 4)
         .queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruning") || plan.contains("PartitionFilters: [isnotnull(_cell"),
-        s"expected a partition-pruned cells scan, got:\n$plan")
+      assert("dynamicpruningexpression\\(_c1#".r.findFirstIn(plan).isDefined,
+        s"expected a dynamic-pruning filter on _c1, got:\n$plan")
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
@@ -917,9 +927,9 @@ class PipelineSpec extends AnyFunSuite {
     val queries = embs.where(col("vec_id") < 8)
       .select(col("vec_id"), col("embedding"))
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf2_compact").toString
-    // files per cell from the LIVE view (manifest or legacy dir)
+    // files per cell from the LIVE view (the current manifest)
     def liveFilesPerCell(): Map[Vector[Int], Int] =
-      CellsLayout.resolve(spark, dir).entries(spark)
+      CellsLayout.resolve(spark, dir).entries
         .flatMap(_._2).groupBy(CellsLayout.cellValuesOf)
         .map { case (k, v) => k -> v.size }
     def serveAll() = (
@@ -944,9 +954,9 @@ class PipelineSpec extends AnyFunSuite {
       }
       assert(liveFilesPerCell().values.exists(_ > 1),
         "precondition: appends must have fragmented at least one cell")
-      // appends already migrated the dir to manifest mode; pick one file
-      // the compaction will supersede to observe the DEFERRED reclamation
-      val preCompactFile = CellsLayout.resolve(spark, dir).entries(spark)
+      // pick one file the compaction will supersede to observe the
+      // DEFERRED reclamation
+      val preCompactFile = CellsLayout.resolve(spark, dir).entries
         .flatMap { case (r, fs) => fs.map(f => s"$r/$f") }.head
       val before = serveAll()
       Similarity.compactTwoLevelIndex(spark, dir)
@@ -979,7 +989,7 @@ class PipelineSpec extends AnyFunSuite {
       // after the final compaction the live view is ONE root with one
       // file per cell again
       assert(liveFilesPerCell().values.forall(_ === 1))
-      assert(CellsLayout.resolve(spark, dir).entries(spark)
+      assert(CellsLayout.resolve(spark, dir).entries
         .count(_._2.nonEmpty) === 1)
     } finally {
       def rm(f: java.io.File): Unit = {
@@ -996,7 +1006,7 @@ class PipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf2_remove").toString
     // the LIVE view: cell -> absolute live file paths (manifest-resolved)
     def liveCellFiles(): Map[Vector[Int], Set[String]] =
-      CellsLayout.resolve(spark, dir).entries(spark)
+      CellsLayout.resolve(spark, dir).entries
         .flatMap { case (r, fs) => fs.map(f => (CellsLayout.cellValuesOf(f),
           s"$r/$f")) }
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
@@ -1095,62 +1105,6 @@ class PipelineSpec extends AnyFunSuite {
         s"vacuum must keep live file $f"))
       assert(Similarity.loadTwoLevelIndex(spark, dir).cells.count()
         === embs.count() - cellN)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
-
-  test("flat-index lifecycle symmetry: removeFromIndex + compactIndex mirror the two-level family") {
-    val queries = embs.where(col("vec_id") < 10)
-      .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_flat_lc").toString
-    try {
-      Similarity.saveIndex(
-        embs.where(col("vec_id") % 2 === 0).select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding", dir, nlist = 16, iters = 1)
-      Similarity.appendToIndex(spark,  dir,
-        embs.where(col("vec_id") % 2 === 1).select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding")
-      val rmIds = embs.where(col("vec_id") % 5 === 0).select(col("vec_id"))
-      val rmSet = rmIds.collect().map(_.getLong(0)).toSet
-      Similarity.removeFromIndex(spark, dir, rmIds, "vec_id")
-      Similarity.compactIndex(spark, dir)
-      assert(Similarity.cellsSubdir(spark, dir).startsWith("manifest:"))
-      val idx = Similarity.loadIndex(spark, dir)
-      assert(idx.cells.count() === embs.count() - rmSet.size)
-      assert(idx.cells.where(col("nbr").isin(rmSet.toSeq: _*)).count() === 0L)
-      // one live file per cell after compaction, all under one root
-      val entries = CellsLayout.resolve(spark, dir).entries(spark)
-        .filter(_._2.nonEmpty)
-      assert(entries.size === 1)
-      val perCell = entries.head._2.groupBy(CellsLayout.cellValuesOf)
-      assert(perCell.nonEmpty && perCell.values.forall(_.size === 1))
-      // serving == an index that never contained the removed ids (same
-      // loaded centroids over the kept corpus's own assignment)
-      def rows3(df: org.apache.spark.sql.DataFrame) =
-        df.select("qid", "nbr", "rank").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          .sortBy(t => (t._1, t._3)).toSeq
-      val kept = embs.where(col("vec_id") % 5 =!= 0)
-        .select(col("vec_id").as("nbr"), col("embedding").as("cv"))
-        .withColumn("_cell",
-          graft.functions.NearestCentroid(col("cv"), idx.centroids))
-      val expected = rows3(Similarity.ivfTopKFromIndex(
-        Similarity.IvfIndex(idx.centroids, kept), queries,
-        "vec_id", "embedding", k = 5, nprobe = 4))
-      assert(rows3(Similarity.ivfTopKFromIndex(idx, queries,
-        "vec_id", "embedding", k = 5, nprobe = 4)) === expected)
-      // retry idempotence + re-add via append, through the pointer
-      Similarity.removeFromIndex(spark, dir, rmIds, "vec_id")
-      assert(Similarity.loadIndex(spark, dir).cells.count()
-        === embs.count() - rmSet.size)
-      Similarity.appendToIndex(spark, dir,
-        embs.where(col("vec_id") % 5 === 0).select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding")
-      assert(Similarity.loadIndex(spark, dir).cells.count() === embs.count())
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
@@ -1258,7 +1212,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(idx.cells.where(col("nbr").isin(rmSet.toSeq: _*)).count() === 0L)
       // the mutated clone reads from BOTH roots (source untouched cells +
       // its own survivors) through one partitioned relation
-      val roots = CellsLayout.resolve(spark, dst).entries(spark)
+      val roots = CellsLayout.resolve(spark, dst).entries
         .filter(_._2.nonEmpty).map(_._1)
       assert(roots.size === 2, s"expected src+dst roots, got $roots")
       val postRemove = serveAll(dst)
@@ -1266,7 +1220,7 @@ class PipelineSpec extends AnyFunSuite {
       // compaction LOCALIZES: one root under the clone's own dir, serving
       // unchanged — and the source can now disappear entirely
       Similarity.compactTwoLevelIndex(spark, dst)
-      val rootsAfter = CellsLayout.resolve(spark, dst).entries(spark)
+      val rootsAfter = CellsLayout.resolve(spark, dst).entries
         .filter(_._2.nonEmpty).map(_._1)
       assert(rootsAfter.size === 1 && rootsAfter.head.startsWith(dst))
       assert(serveAll(dst) === postRemove)
@@ -1447,6 +1401,30 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("a manifest read runs no Spark job, past Spark's 32-path listing threshold") {
+    // `spark.read` over more than 32 explicit files lists them with a
+    // parallel-listing job, and infers the schema with another, on every
+    // read; the manifest already names every file
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf2_nolist").toString
+    try {
+      Similarity.saveTwoLevelIndex(
+        embs.select(col("vec_id"), col("embedding")), "vec_id", "embedding",
+        dir, nlist1 = 8, k2 = 8, iters = 1, pqM = 0)
+      val m = CellsLayout.resolve(spark, dir)
+      assert(m.fileCount > 32, s"only ${m.fileCount} cell files")
+      var df: org.apache.spark.sql.DataFrame = null
+      val cost = graft.tools.CostProbe.costOf(spark) { df = m.df(spark) }
+      assert(cost.jobs === 0, cost.toString)
+      assert(df.count() === embs.count())
+      assert(df.inputFiles.length === m.fileCount)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(new java.io.File(dir))
+    }
+  }
+
   test("cells manifest: render/parse round-trip and pointer discipline") {
     val m = CellsManifest(7,
       entries = Seq("/a/cells" -> Seq("_c1=0/_c2=1/x.parquet",
@@ -1596,16 +1574,18 @@ class PipelineSpec extends AnyFunSuite {
     val queries = embs.where(col("vec_id") < 10).select(col("vec_id"), col("embedding"))
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_append").toString
     try {
-      // build on A only, then append B without retraining
-      Similarity.saveIndex(partA, "vec_id", "embedding", dir, nlist = 16, iters = 1)
-      val centsA = Similarity.loadIndex(spark, dir).centroids
-      Similarity.appendToIndex(spark, dir, partB, "vec_id", "embedding")
-      val idx = Similarity.loadIndex(spark, dir)
+      // build the flat index (px55) on A only, then append B without
+      // retraining
+      Similarity.saveTwoLevelIndex(partA, "vec_id", "embedding", dir,
+        nlist1 = 16, k2 = 1, iters = 1, pqM = 0)
+      val centsA = Similarity.loadTwoLevelIndex(spark, dir).l1
+      Similarity.appendToTwoLevelIndex(spark, dir, partB, "vec_id", "embedding")
+      val idx = Similarity.loadTwoLevelIndex(spark, dir)
       // centroids untouched by the append
-      idx.centroids.zip(centsA).foreach { case (a, b) => assert(a.toSeq === b.toSeq) }
+      idx.l1.zip(centsA).foreach { case (a, b) => assert(a.toSeq === b.toSeq) }
       assert(idx.cells.count() === embs.count())
-      val served = Similarity.ivfTopKFromIndex(idx, queries,
-        "vec_id", "embedding", k = 5, nprobe = 4)
+      val served = Similarity.twoLevelTopKFromIndex(idx, queries,
+        "vec_id", "embedding", k = 5, p1 = 4, nprobe = 4)
         .orderBy("qid", "rank").collect().toSeq
       // reference: assign the FULL corpus to the SAME centroid matrix
       val full = embs.select(col("vec_id").as("nbr"), col("embedding").as("cv"))

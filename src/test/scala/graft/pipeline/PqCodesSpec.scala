@@ -10,7 +10,7 @@ import graft.graph.TestSpark
 /** Pins the r19 native PQ kernels ([[graft.functions.PqCodes]] and the
   * driver-held trainer in [[Similarity.pqCodebook]]) bit-identical to the
   * join/window pipeline they replaced:
-  *  - pqEncode (native argmax) vs the retained reference `pqAssign`
+  *  - pqEncode (native argmax) vs the reference `pqAssign` kept here
   *    (slice-explode → ksub-way join → struct-max argmax) on adversarial
   *    inputs: duplicate vectors (exact score ties → smaller code), zero
   *    slices (cosine NULL → −2.0 → deterministic smallest code), ragged
@@ -42,6 +42,21 @@ class PqCodesSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
   }
 
+  /** Assign each slice to its best codebook entry WITHIN its subspace —
+    * the join path [[graft.functions.PqCodes]] replaced: a join on `sub`
+    * replicates each slice ksub times, cosine-scored, argmax with
+    * smaller-code tie-breaks. Zero-norm slices (cosine NULL) coalesce
+    * below any real score and land in code 0 deterministically.
+    */
+  private def pqAssign(slices: DataFrame, codebook: DataFrame): DataFrame =
+    slices.join(codebook, Seq("sub"))
+      .withColumn("_s",
+        coalesce(Similarity.cosine(col("sv"), col("cent")), lit(-2d)))
+      .groupBy(col("nbr"), col("sub"))
+      .agg(first(col("sv")).as("sv"),
+        max(struct(col("_s").as("s"), (-col("code")).as("n"))).as("_b"))
+      .select(col("nbr"), col("sub"), col("sv"), (-col("_b.n")).as("code"))
+
   /** The legacy trainer, verbatim (window seeds + pqAssign refinement). */
   private def legacyCodebook(c: DataFrame, ksub: Int, iters: Int): DataFrame = {
     val subLen = dim / m
@@ -52,7 +67,7 @@ class PqCodesSpec extends AnyFunSuite {
       .select(col("sub"), (col("_rn") - 1).as("code"), col("sv").as("cent"))
     var cb = seeds
     for (_ <- 1 to math.max(iters, 0)) {
-      cb = Similarity.pqAssign(slices, cb)
+      cb = pqAssign(slices, cb)
         .select(col("sub"), col("code"),
           posexplode(col("sv")).as(Seq("_dim", "_x")))
         .groupBy("sub", "code", "_dim")
@@ -87,7 +102,7 @@ class PqCodesSpec extends AnyFunSuite {
       dim, m, ksub = 7, iters = 1)
     val native = Similarity.pqEncode(corpus, "vec_id", "embedding", cb, dim, m)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted.toSeq
-    val joined = Similarity.pqAssign(
+    val joined = pqAssign(
       Similarity.pqSlices(corpus, "vec_id", "embedding", m, dim / m), cb)
       .select(col("nbr"), col("sub"), col("code"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted.toSeq

@@ -796,76 +796,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(prefixes.last._2.exists(_._3) && prefixes.last._2.exists(!_._3))
   }
 
-  test("streaming appendToIndex: served top-k after every micro-batch == one-shot append") {
-    // the ANN index maintained ON WRITE — the reference's addTarget
-    // update-the-index-as-you-write posture (Graph.hs:57-61) for the
-    // similarity family: an embedding stream appends each micro-batch to
-    // the persisted IVF index via foreachBatch (assignment to EXISTING
-    // centroids, no retrain), and after EVERY batch the served top-k must
-    // equal an index built from the same base with the same rows appended
-    // in one call. Centroids are deterministic per base corpus, so the
-    // comparison is exact.
-    import graft.pipeline.Similarity
-    val emb = graft.Tables.load(spark, sf, "embeddings")
-    val base = emb.where(col("vec_id") % 3 === 0)
-      .select(col("vec_id"), col("embedding"))
-    val rest = emb.where(col("vec_id") % 3 =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val queries = emb.where(col("vec_id") < 15)
-      .select(col("vec_id"), col("embedding"))
-    def serve(dir: String): Seq[(Long, Long, Long, Double)] =
-      Similarity.ivfTopKFromIndex(Similarity.loadIndex(spark, dir), queries,
-        "vec_id", "embedding", k = 5, nprobe = 2)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .sortBy(t => (t._1, t._3)).toSeq
-    val root = Files.createTempDirectory("graft-ann-stream-")
-    val streamIdx = root.resolve("stream_idx").toString
-    Similarity.saveIndex(base, "vec_id", "embedding", streamIdx,
-      nlist = 8, iters = 1)
-    val inDir = root.resolve("in").toString
-    (0 until 2).foreach { i =>
-      rest.where(pmod(col("vec_id"), lit(2)) === i).coalesce(1)
-        .write.mode("append").parquet(inDir)
-    }
-    val prefixes = scala.collection.mutable
-      .Buffer[(Set[Long], Seq[(Long, Long, Long, Double)])]()
-    val seen = scala.collection.mutable.Set[Long]()
-    val q = spark.readStream.schema(rest.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Similarity.appendToIndex(spark, streamIdx, batch,
-          "vec_id", "embedding")
-        seen ++= batch.select("vec_id").collect().map(_.getLong(0))
-        prefixes += ((seen.toSet, serve(streamIdx)))
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(300000)
-    assert(prefixes.size === 2, s"expected 2 batches, got ${prefixes.size}")
-    assert(prefixes.last._1 ===
-      rest.select("vec_id").collect().map(_.getLong(0)).toSet)
-    prefixes.zipWithIndex.foreach { case ((ids, streamed), i) =>
-      val dir = root.resolve(s"batch_idx_$i").toString
-      Similarity.saveIndex(base, "vec_id", "embedding", dir,
-        nlist = 8, iters = 1)
-      Similarity.appendToIndex(spark, dir,
-        rest.where(col("vec_id").isin(ids.toSeq: _*)), "vec_id", "embedding")
-      assert(streamed === serve(dir),
-        s"prefix $i (${ids.size} rows): streamed serve != one-shot serve")
-      assert(streamed.nonEmpty)
-    }
-    // retry-idempotence (the dedupeIds default): re-appending rows the
-    // index already holds must not change what is served
-    val before = serve(streamIdx)
-    Similarity.appendToIndex(spark, streamIdx,
-      rest.where(col("vec_id").isin(prefixes.last._1.toSeq: _*)),
-      "vec_id", "embedding")
-    assert(serve(streamIdx) === before,
-      "re-appended rows must dedupe, not duplicate")
-  }
-
   test("px29 composed curation re-curates incrementally (every streamed prefix == batch)") {
     // The curation flagship as a STREAMING job: documents arrive in
     // chunks; foreachBatch appends each chunk to the accumulated corpus
