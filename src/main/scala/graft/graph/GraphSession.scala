@@ -19,17 +19,20 @@ import scala.collection.mutable.ArrayBuffer
   *
   * A run's cost follows its delta, not the state. NewNode and AddTarget
   * runs append their rows to the tables' driver-held tails and copy no
-  * table; an AddTarget run first runs one lookup, a single collect job
-  * that binds the batch's ids by reference. A driver-issued commit of new
-  * nodes and edges between them runs 1 Spark job, that lookup, however
-  * large the graph: the WAL batch is written on the driver without a
-  * Spark job (graft.store.OpBatchFile). A table materializes only when its tail would pass
-  * `GraphState.TailBound` rows, or when a SetValue, RemoveTarget or
+  * table; an AddTarget run first runs one lookup, a single Spark job over
+  * the nodes and edges tables. A driver-issued commit of new nodes and
+  * edges between them runs 1 Spark job, that lookup, however large the
+  * graph: the WAL batch is written on the driver without a Spark job
+  * (graft.store.OpBatchFile). A table materializes only when its tail would
+  * pass `GraphState.TailBound` rows, or when a SetValue, RemoveTarget or
   * RemoveNode run changes it (SetValue: nodes and index; the two removes:
   * edges and index) — see [[GraphState.checkpointedSince]]. A point read
-  * (getValue, getTargets, targets, sources) runs one Spark job and compiles
-  * no class for a new id. Bulk commits (GraphStore.commitBulk) never touch
-  * the driver: they stay distributed joins over the whole delta.
+  * (getValue, getTargets, targets, sources) and the lookup build no
+  * DataFrame: each is one Spark job run straight on the tables' planned
+  * base RDDs, with the tails filtered on the driver, so a read makes no
+  * Catalyst pass and compiles no class. Bulk commits
+  * (GraphStore.commitBulk) never touch the driver: they stay distributed
+  * joins over the whole delta.
   *
   * Applied ops additionally accumulate in a drainable log so a persistent
   * wrapper (graft.store.GraphStore) can append them as WAL batches.

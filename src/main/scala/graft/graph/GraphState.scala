@@ -1,8 +1,11 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -24,21 +27,28 @@ import graft.functions.Param
   * checkpoint ⊕ replay(ops) (Persistent/Log.hs:38-52). Driver-issued op
   * batches carry driver-sized deltas: they enter plans as local relations,
   * and addTarget derives its index rows on the driver after one lookup job
-  * that binds the batch's ids by reference ([[GraphState.withTargets]]).
+  * ([[GraphState.withTargets]]).
   *
   * Each table is a materialized base plus a TAIL of rows appended on the
-  * driver ([[GraphState.Table]]); readers see base ∪ tail as one
-  * DataFrame, the tail entering the plan as one local relation scanned as
-  * one partition. NewNode and AddTarget append to the tail and copy
-  * nothing; a table materializes (through [[checkpointedSince]]) when its
-  * tail would pass [[GraphState.TailBound]] rows, or when a run that is not
-  * append-only (SetValue, RemoveTarget, RemoveNode, a bulk edge delta)
-  * changes it. The tail is part of this immutable value, so an aborted
-  * batch discards it with the rest of its local copy.
+  * driver ([[GraphState.Table]]), held in Catalyst's internal row form.
+  * DataFrame readers (`nodes`, `edges`, `index`, [[targetsDF]], the bulk
+  * paths) see base ∪ tail as one DataFrame, the tail entering the plan as
+  * one local relation scanned as one partition. NewNode and AddTarget
+  * append to the tail and copy nothing; a table materializes (through
+  * [[checkpointedSince]]) when its tail would pass [[GraphState.TailBound]]
+  * rows, or when a run that is not append-only (SetValue, RemoveTarget,
+  * RemoveNode, a bulk edge delta) changes it. The tail is part of this
+  * immutable value, so an aborted batch discards it with the rest of its
+  * local copy.
   *
-  * Point reads ([[getValue]], [[getTargets]], [[targets]], [[sources]])
-  * run one Spark job each and bind their ids by reference
-  * ([[graft.functions.Param]]), so a read of a new id compiles no class.
+  * Point reads ([[getValue]], [[getValues]], [[getTargets]], [[targets]],
+  * [[sources]]) and addTarget's lookup build no DataFrame. Each table
+  * keeps its base's physical RDD, planned once when the base materializes
+  * and carried through appends; a read is one row predicate, run as one
+  * Spark job over that RDD ([[probe]]) and over the tail on the driver.
+  * A read makes no Catalyst pass and compiles no class, whatever its id —
+  * the fixed-shape-operation-as-physical-dataflow move of Pregelix (VLDB
+  * 2014), in place of the reference's hash-adjacency probe (Graph.hs:27-34).
   *
   * At 100 TB the bulk paths run as batch jobs: deltas arrive as DataFrames
   * (see [[GraphState.bulkLoad]], [[GraphState.withTargetsDF]]), index
@@ -64,49 +74,78 @@ object GraphState {
     StructField("value", model.valueSchema, nullable = true)))
 
   /** Most rows a table's tail holds: an append that would pass it
-    * materializes the table instead. Reads filter the tail on the driver
-    * (the optimizer evaluates a filter over a local relation in place), so
-    * the bound keeps that work and the plan's size small.
+    * materializes the table instead. Every point read and commit lookup
+    * tests each tail row on the driver, and `df` carries the tail as one
+    * local relation, so the bound keeps both small.
     */
   private[graft] val TailBound = 1024
 
+  /** Most ids a probe's id set carries inside its task closure; a larger
+    * set ships once per executor as a broadcast (`GraphState.withIdSet`).
+    */
+  private val ClosureIds = 10000
+
   /** One table of a state: a base plan plus the rows appended to it on the
-    * driver since it last materialized. `df` is base ∪ tail; the tail
+    * driver since it last materialized, held in Catalyst's internal row
+    * form (converted once, at append). `df` is base ∪ tail; the tail
     * enters it as ONE local relation, scanned as one partition.
     */
   final class Table private[GraphState] (
-      val base: DataFrame, val tail: Vector[Row], schema: StructType) {
+      val base: DataFrame, val tail: Vector[InternalRow], schema: StructType,
+      planned: Planned) {
 
     lazy val df: DataFrame = withTail(_.coalesce(1))
 
     private def withTail(scan: DataFrame => DataFrame): DataFrame =
       if (tail.isEmpty) base
-      else base.unionByName(scan(base.sparkSession.createDataFrame(tail.asJava, schema)))
+      else base.unionByName(scan(GraftShim.localRelation(base.sparkSession, schema, tail)))
+
+    /** The base's physical rows in `schema`'s column order — the base's
+      * plan run through Catalyst once, shared by every table appended from
+      * it.
+      */
+    private[GraphState] def baseRows: RDD[InternalRow] = planned.rows
 
     private[GraphState] def appended(rows: Seq[Row]): Table =
-      if (rows.isEmpty) this else new Table(base, tail ++ rows, schema)
+      if (rows.isEmpty) this
+      else {
+        val internal = CatalystTypeConverters.createToCatalystConverter(schema)
+        new Table(base, tail ++ rows.map(internal(_).asInstanceOf[InternalRow]), schema, planned)
+      }
 
     /** A change that is not an append: `plan` becomes the base, to be
       * materialized by the next [[GraphState.checkpointedSince]].
       */
-    private[GraphState] def replaced(plan: DataFrame): Table =
-      new Table(plan, Vector.empty, schema)
+    private[GraphState] def replaced(plan: DataFrame): Table = Table(plan, schema)
 
-    /** Base ∪ tail as a new materialized base, coalesced to `partitions`.
+    /** Base ∪ tail as a new materialized base, coalesced to `partitions`,
+      * with its physical rows planned now, so the next read plans nothing.
       * The tail is scanned in parallel here, not as one partition: one
       * batch past the bound (a bulk replay) must not shrink the table to a
       * single partition.
       */
-    private[GraphState] def materialized(partitions: Option[Int]): Table =
-      replaced(partitions.fold(df)(withTail(identity).coalesce).localCheckpoint(true))
+    private[GraphState] def materialized(partitions: Option[Int]): Table = {
+      val t = replaced(partitions.fold(df)(withTail(identity).coalesce).localCheckpoint(true))
+      t.baseRows
+      t
+    }
+  }
+
+  private object Table {
+    def apply(base: DataFrame, schema: StructType): Table =
+      new Table(base, Vector.empty, schema, new Planned(base, schema))
+  }
+
+  /** A base's physical RDD, planned on first use. */
+  private[GraphState] final class Planned(base: DataFrame, schema: StructType) {
+    lazy val rows: RDD[InternalRow] =
+      base.select(schema.fieldNames.toIndexedSeq.map(col): _*).queryExecution.toRdd
   }
 
   def apply[V](spark: SparkSession, model: GraphModel[V],
       nodes: DataFrame, edges: DataFrame, index: DataFrame): GraphState[V] =
     GraphState(spark, model,
-      new Table(nodes, Vector.empty, nodesSchema(model)),
-      new Table(edges, Vector.empty, edgesSchema),
-      new Table(index, Vector.empty, indexSchema))
+      Table(nodes, nodesSchema(model)), Table(edges, edgesSchema), Table(index, indexSchema))
 
   def empty[V](spark: SparkSession, model: GraphModel[V]): GraphState[V] = {
     def e(s: StructType) =
@@ -203,14 +242,14 @@ final case class GraphState[V](
     *
     * One lookup job fetches both things the delta needs: the endpoints'
     * `(id, kind, value)` rows, and the existing edges among those endpoints
-    * (a superset of the requested pairs that already exist). The batch's
-    * id set `S` enters as a filter, `id ∈ S` on nodes and `src ∈ S ∧
-    * dst ∈ S` on edges, bound by reference ([[Param.in]]): no join, no
-    * broadcast job, and no class compiled for a new batch. The edge and
-    * index deltas are then computed here,
-    * the index rows by the model's own `indexes(target, source)` — the
-    * function [[GraphState.deriveIndex]] runs on the executors for the
-    * bulk paths — and appended to the tables' tails.
+    * (a superset of the requested pairs that already exist). It is one
+    * [[probe]] over the nodes and edges tables, testing `id ∈ S` on nodes
+    * and `src ∈ S ∧ dst ∈ S` on edges for the batch's id set `S`
+    * ([[withIdSet]]): no join, no Catalyst pass and no generated class.
+    * The edge and index deltas are then computed here, the index rows by
+    * the model's own `indexes(target, source)` — the function
+    * [[GraphState.deriveIndex]] runs on the executors for the bulk paths —
+    * and appended to the tables' tails.
     *
     * Endpoint ids of new edges are validated: the reference errors on an
     * invalid node ref, and without the check a typo'd id would silently
@@ -232,22 +271,14 @@ final case class GraphState[V](
   def withTargets(pairs: Seq[(Long, Long)],
       validate: Boolean = true): GraphState[V] = {
     val wanted = pairs.distinct
-    val ids = wanted.flatMap(p => Seq(p._1, p._2)).toSet
-    val hits = nodes.where(Param.in(col("id"), ids))
-      .select(col("id"), lit(null).cast(LongType).as("dst"),
-        col("kind"), col("value"))
-      .unionByName(edges
-        .where(Param.in(col("src"), ids) && Param.in(col("dst"), ids))
-        .select(col("src").as("id"), col("dst"),
-          lit(null).cast(StringType).as("kind"),
-          lit(null).cast(model.valueSchema).as("value")))
-      .collect()
-    val (nodeHits, edgeHits) = hits.partition(_.isNullAt(1))
+    val Seq(nodeHits, edgeHits) = withIdSet(wanted.flatMap(p => Seq(p._1, p._2))) { in =>
+      probe(nodeTable -> (r => in(r.getLong(0))),
+        edgeTable -> (r => in(r.getLong(0)) && in(r.getLong(1))))
+    }
     val present = edgeHits.map(r => (r.getLong(0), r.getLong(1))).toSet
     val delta = wanted.filterNot(present)
     if (delta.isEmpty) return this
-    val known: Map[Long, V] = nodeHits.map(r =>
-      r.getLong(0) -> model.fromValueRow(r.getString(2), r.getStruct(3))).toMap
+    val known: Map[Long, V] = nodeHits.map(r => r.getLong(0) -> valueOf(r)).toMap
     if (validate) for ((s, d) <- delta; (side, id) <- Seq("src" -> s, "dst" -> d)
         if !known.contains(id))
       throw new IllegalArgumentException(
@@ -408,61 +439,106 @@ final case class GraphState[V](
     def settle(was: Table, now: Table): Table =
       if (now eq was) was
       else if ((now.base eq was.base) && now.tail.size <= TailBound) now
-      else now.materialized(Some(math.max(partitions(was.base), shufflePartitions)))
+      else now.materialized(Some(math.max(partitions(was), shufflePartitions)))
     copy(
       nodeTable = settle(prev.nodeTable, nodeTable),
       edgeTable = settle(prev.edgeTable, edgeTable),
       indexTable = settle(prev.indexTable, indexTable))
   }
 
-  /** Partition count of a table, read from its physical RDD: planning only,
-    * no action (`Dataset.rdd` would register one).
+  /** Partition count of a table's base, read from its physical RDD:
+    * planning only, no action (`Dataset.rdd` would register one).
     */
-  private def partitions(df: DataFrame): Int =
-    df.queryExecution.toRdd.getNumPartitions
+  private def partitions(t: Table): Int = t.baseRows.getNumPartitions
 
   // ------------------------------------------------------------ point reads
-  // One Spark job each: the filter is collected (`head()` would scan one
-  // partition, then the rest, in two jobs) and ids are deduped on the
-  // driver (a planned `distinct()` runs as a map job plus a result job
-  // under AQE). Ids and keys bind as [[Param]]s, so every id shares one
-  // generated class.
+  // Each read is one [[probe]]: one Spark job over the table's planned base
+  // RDD, with no Catalyst pass and no generated class, and the same row
+  // predicate over the tail on the driver. Ids are deduped on the driver.
+
+  /** The rows of each table that pass its predicate, in probe order: ONE
+    * Spark job (`runJob`) over the union of the tables' physical base RDDs,
+    * then the same predicates over the tails here. Base rows are copied
+    * off the scan's reused buffers before they leave the task.
+    */
+  private def probe(probes: (Table, InternalRow => Boolean)*): Seq[Seq[InternalRow]] = {
+    val sc = spark.sparkContext
+    val tagged = probes.zipWithIndex.map { case ((t, p), i) =>
+      t.baseRows.mapPartitions(_.filter(p).map(r => (i, r.copy())))
+    }
+    val hits = sc.runJob(if (tagged.size == 1) tagged.head else sc.union(tagged),
+      (rows: Iterator[(Int, InternalRow)]) => rows.toArray).flatten
+    probes.zipWithIndex.map { case ((t, p), i) =>
+      hits.collect { case (`i`, r) => r }.toSeq ++ t.tail.filter(p)
+    }
+  }
+
+  /** [[probe]] of one table. */
+  private def scan(t: Table)(p: InternalRow => Boolean): Seq[InternalRow] = probe(t -> p).head
+
+  /** Run `f` with a membership test of `ids` that tasks can carry: the
+    * sorted ids ride in the task closure up to [[GraphState.ClosureIds]]
+    * of them, and above that in a broadcast, destroyed once `f` returns.
+    */
+  private def withIdSet[T](ids: Iterable[Long])(f: (Long => Boolean) => T): T = {
+    val sorted = ids.toArray.distinct.sorted
+    if (sorted.length <= ClosureIds) f(id => java.util.Arrays.binarySearch(sorted, id) >= 0)
+    else {
+      val shipped = spark.sparkContext.broadcast(sorted)
+      try f(id => java.util.Arrays.binarySearch(shipped.value, id) >= 0)
+      finally shipped.destroy()
+    }
+  }
+
+  private lazy val nodeRow = CatalystTypeConverters.createToScalaConverter(nodesSchema(model))
+
+  /** The value of a nodes row in internal form. */
+  private def valueOf(r: InternalRow): V = {
+    val row = nodeRow(r).asInstanceOf[Row]
+    model.fromValueRow(row.getString(1), row.getStruct(2))
+  }
 
   /** getValue (op #2). Throws NoSuchElementException for an unknown id (the
     * reference's invalid-ref failure).
     */
-  def getValue(n: Long): V = {
-    val rows = nodes.where(col("id") === Param(n))
-      .select(col("kind"), col("value")).collect()
-    if (rows.isEmpty) throw new NoSuchElementException(s"no node with id $n")
-    model.fromValueRow(rows(0).getString(0), rows(0).getStruct(1))
-  }
+  def getValue(n: Long): V =
+    scan(nodeTable)(_.getLong(0) == n).headOption.map(valueOf)
+      .getOrElse(throw new NoSuchElementException(s"no node with id $n"))
+
+  /** Batched getValue: the values of the known ids among `ids`, in one
+    * probe whatever their number ([[withIdSet]]). Unknown ids are absent.
+    */
+  def getValues(ids: Iterable[Long]): Map[Long, V] =
+    if (ids.isEmpty) Map.empty
+    else withIdSet(ids)(in => scan(nodeTable)(r => in(r.getLong(0))))
+      .map(r => r.getLong(0) -> valueOf(r)).toMap
 
   /** getTargets (op #5, Graph.hs:69-70): nodes reachable from `n` via
     * index key `k`. Distinct per key (the multimap holds a set per key).
     */
-  def getTargets(n: Long, k: IndexKey): Seq[Long] = distinctIds(keyed(n, k))
+  def getTargets(n: Long, k: IndexKey): Seq[Long] = {
+    val (kind, key) = (UTF8String.fromString(k.kind), UTF8String.fromString(k.key))
+    distinctAt(3, scan(indexTable)(r =>
+      r.getLong(0) == n && r.getUTF8String(1) == kind && r.getUTF8String(2) == key))
+  }
 
   /** Dataset form of [[getTargets]] — the composable hop for analytics
-    * plans, deduped in the plan.
+    * plans, deduped in the plan. Ids and keys bind as [[Param]]s, so every
+    * id shares one generated class.
     */
-  def targetsDF(n: Long, k: IndexKey): DataFrame = keyed(n, k).distinct()
-
-  /** Distinct targets regardless of key (traverseTargets, Graph.hs:72-77). */
-  def targets(n: Long): Seq[Long] =
-    distinctIds(edges.where(col("src") === Param(n)).select(col("dst")))
-
-  /** Sources of a node (traverseSources/getSources, Graph.hs:79-80,135-139). */
-  def sources(n: Long): Seq[Long] =
-    distinctIds(edges.where(col("dst") === Param(n)).select(col("src")))
-
-  private def keyed(n: Long, k: IndexKey): DataFrame =
+  def targetsDF(n: Long, k: IndexKey): DataFrame =
     index.where(col("src") === Param(n) && col("kkind") === Param(k.kind) &&
         col("key") === Param(k.key))
-      .select(col("dst"))
+      .select(col("dst")).distinct()
 
-  private def distinctIds(df: DataFrame): Seq[Long] =
-    df.collect().map(_.getLong(0)).distinct.toSeq
+  /** Distinct targets regardless of key (traverseTargets, Graph.hs:72-77). */
+  def targets(n: Long): Seq[Long] = distinctAt(1, scan(edgeTable)(_.getLong(0) == n))
+
+  /** Sources of a node (traverseSources/getSources, Graph.hs:79-80,135-139). */
+  def sources(n: Long): Seq[Long] = distinctAt(0, scan(edgeTable)(_.getLong(1) == n))
+
+  private def distinctAt(column: Int, rows: Seq[InternalRow]): Seq[Long] =
+    rows.map(_.getLong(column)).distinct
 
   /** getStats (op #9, Graph.hs:82-118): (reachable nodes, distinct edges
     * among them, index entries among them), scoped by BFS from `from`.

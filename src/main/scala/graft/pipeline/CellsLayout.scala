@@ -72,6 +72,22 @@ private[pipeline] object CellsLayout {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** A root's one spelling, under which it is recorded and compared:
+    * qualified against its filesystem, with the scheme and authority left
+    * out when they are the default filesystem's. So `/x/cells` and
+    * `file:/x/cells` name one root on a local default filesystem, while
+    * a root on another filesystem keeps its full URI.
+    */
+  def canonicalRoot(spark: SparkSession, path: String): String = {
+    val (fs, p) = hadoopFs(spark, path)
+    val q = fs.makeQualified(p).toUri
+    val default = org.apache.hadoop.fs.FileSystem.getDefaultUri(
+      spark.sparkContext.hadoopConfiguration)
+    if (q.getScheme == default.getScheme &&
+        java.util.Objects.equals(q.getAuthority, default.getAuthority)) q.getPath
+    else q.toString
+  }
+
   // ---------------------------------------------------------- pointer IO
 
   /** Raw `_cells` pointer content, `manifest:_manifest_gN` — every save
@@ -334,9 +350,12 @@ private[pipeline] object CellsLayout {
     }
   }
 
-  /** Merge entry groups sharing a root (sorted, distinct). */
-  def mergeRoots(es: Seq[(String, Seq[String])]): Seq[(String, Seq[String])] =
-    es.groupBy(_._1).toSeq.sortBy(_._1)
+  /** Merge entry groups sharing a root (sorted, distinct), whatever
+    * spelling each group was recorded under. */
+  def mergeRoots(spark: SparkSession,
+      es: Seq[(String, Seq[String])]): Seq[(String, Seq[String])] =
+    es.map { case (r, fs) => canonicalRoot(spark, r) -> fs }
+      .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (r, gs) => r -> gs.flatMap(_._2).distinct.sorted }
       .filter(_._2.nonEmpty)
 
@@ -385,10 +404,10 @@ private[pipeline] object CellsLayout {
   private def gcFiles(spark: SparkSession, dir: String,
       gc: Seq[(String, Seq[String])]): Unit = {
     val (fs, _) = hadoopFs(spark, dir)
-    val prefix = dir.stripSuffix("/") + "/"
-    gc.foreach { case (root, files) =>
-      if (root.stripSuffix("/").startsWith(prefix) ||
-          root.stripSuffix("/") + "/" == prefix) {
+    val home = canonicalRoot(spark, dir)
+    gc.foreach { case (recorded, files) =>
+      val root = canonicalRoot(spark, recorded)
+      if (root == home || root.startsWith(home + "/")) {
         val dirs = scala.collection.mutable.LinkedHashSet.empty[String]
         files.foreach { f =>
           scala.util.Try(fs.delete(
@@ -399,8 +418,7 @@ private[pipeline] object CellsLayout {
         dirs.toSeq.sortBy(-_.length).foreach { d =>
           var p = new org.apache.hadoop.fs.Path(d)
           var done = false
-          while (!done && p.toString.length >= root.length &&
-              p.toString != dir.stripSuffix("/")) {
+          while (!done && p.toString.length >= root.length && p.toString != home) {
             val empty = scala.util.Try(
               !fs.listFiles(p, true).hasNext).getOrElse(false)
             if (empty) { scala.util.Try(fs.delete(p, true)); p = p.getParent }

@@ -150,7 +150,8 @@ object Similarity {
       .parquet(outDir)
     val files = CellsLayout.listRelParquet(spark, outDir)
     CellsLayout.publish(spark, dir,
-      CellsManifest(gen, Seq(outDir -> files), gc = src.entries), Some(src))
+      CellsManifest(gen, Seq(CellsLayout.canonicalRoot(spark, outDir) -> files),
+        gc = src.entries), Some(src))
   }
 
   /** The cells table's partition columns: the compound (level-1,
@@ -238,7 +239,7 @@ object Similarity {
       .join(rm, Seq("nbr"), "left_anti")
       .repartition(col("_c1"), col("_c2"))
       .write.mode("overwrite").partitionBy(CellCols: _*).parquet(staging)
-    val localRoot = s"$dir/cells"
+    val localRoot = CellsLayout.canonicalRoot(spark, s"$dir/cells")
     val moved = CellsLayout.moveInto(spark, staging, localRoot)
     val touchedSet = touched.toSet
     val (gcE, keptE) = src.entries.map { case (root, files) =>
@@ -248,7 +249,7 @@ object Similarity {
     }.unzip
     CellsLayout.publish(spark, dir,
       CellsManifest(CellsLayout.nextGen(spark, dir),
-        CellsLayout.mergeRoots(keptE :+ (localRoot -> moved)),
+        CellsLayout.mergeRoots(spark, keptE :+ (localRoot -> moved)),
         gc = gcE.filter(_._2.nonEmpty)),
       Some(src))
     val (fs, _) = hadoopFs(spark, staging)
@@ -860,7 +861,8 @@ object Similarity {
         .parquet(s"$dir/cells"))
     CellsLayout.publish(spark, dir,
       CellsManifest(1,
-        Seq(s"$dir/cells" -> CellsLayout.listRelParquet(spark, s"$dir/cells")),
+        Seq(CellsLayout.canonicalRoot(spark, s"$dir/cells") ->
+          CellsLayout.listRelParquet(spark, s"$dir/cells")),
         gc = Nil),
       prev = None)
   }
@@ -1121,13 +1123,13 @@ object Similarity {
     rows
       .repartition(col("_c1"), col("_c2")) // one file per touched cell
       .write.mode("overwrite").partitionBy(CellCols: _*).parquet(staging)
-    val localRoot = s"$dir/cells"
+    val localRoot = CellsLayout.canonicalRoot(spark, s"$dir/cells")
     val moved = CellsLayout.moveInto(spark, staging, localRoot)
     val (fs, _) = hadoopFs(spark, staging)
     if (moved.nonEmpty) {
       CellsLayout.publish(spark, dir,
         CellsManifest(CellsLayout.nextGen(spark, dir),
-          CellsLayout.mergeRoots(src.entries :+ (localRoot -> moved)),
+          CellsLayout.mergeRoots(spark, src.entries :+ (localRoot -> moved)),
           gc = Nil),
         Some(src))
     }

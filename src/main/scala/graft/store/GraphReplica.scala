@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.functions.Param
 import graft.graph.{GraphModel, GraphState, IndexKey}
 import graft.streaming.OplogStream
 
@@ -68,30 +67,13 @@ final class GraphReplica[V] private (
     */
   def getValue(n: Long): V = state.getValue(n)
 
-  /** Batched point reads: N lookups answered by ONE Spark job. The
-    * single-id [[getValue]] runs a full DataFrame filter per call (fine
-    * for analytics serving, but local-mode scheduling alone costs ~0.3 s
-    * per job — see PLANS.md) — a serving layer fanning out point reads
+  /** Batched point reads: N lookups answered by ONE Spark job
+    * ([[GraphState.getValues]]) — a serving layer fanning out point reads
     * should batch them here. Unknown ids are simply absent from the
     * result (the single-id API keeps its throwing contract). Result is
-    * driver-sized: one row per requested id. Up to 10k ids bind by
-    * reference ([[Param.in]]), so a new id list compiles no class.
+    * driver-sized: one row per requested id.
     */
-  def getValues(ns: Seq[Long]): Map[Long, V] =
-    if (ns.isEmpty) Map.empty
-    else {
-      val wanted =
-        if (ns.size <= 10000) state.nodes.where(Param.in(col("id"), ns))
-        else {
-          // past ~10k ids the set would ship inside every task; a
-          // broadcast semi-join ships it once
-          import spark.implicits._
-          state.nodes.join(broadcast(ns.toDF("id")), Seq("id"), "left_semi")
-        }
-      wanted.select(col("id"), col("kind"), col("value")).collect()
-        .map(r => r.getLong(0) -> model.fromValueRow(r.getString(1), r.getStruct(2)))
-        .toMap
-    }
+  def getValues(ns: Seq[Long]): Map[Long, V] = state.getValues(ns)
 
   /** getTargets under an index key — distinct, like the writer side. */
   def getTargets(n: Long, k: IndexKey): Seq[Long] = state.getTargets(n, k)

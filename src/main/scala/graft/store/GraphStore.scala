@@ -289,7 +289,7 @@ final class GraphStore[V] private (
     }
     if (dirs.isEmpty) Right((Set.empty, Set.empty))
     else Try {
-      val rows = spark.read.parquet(dirs.map(_.toString): _*)
+      val rows = spark.read.schema(opSchema).parquet(dirs.map(_.toString): _*)
         .where(org.apache.spark.sql.functions.col("op")
           .isin("set", "add", "rmt", "rm"))
         .select(org.apache.spark.sql.functions.col("op"),
@@ -747,6 +747,9 @@ object GraphStore {
     */
   private def replay[V](spark: SparkSession, model: GraphModel[V], path: Path,
       session: GraphSession[V], after: Long): Long = {
+    // every batch carries the op schema (driver- and Spark-written alike):
+    // reading with it runs no schema-inference job
+    val schema = opSchema(model)
     val eventDirs = list(path, ".events").filter(_ > after).sorted
     eventDirs.foreach { idx =>
       val dir = path.resolve(s"$idx.events")
@@ -766,7 +769,7 @@ object GraphStore {
           // must not be collected to the driver; order within the batch is
           // irrelevant (idempotent set union)
           session.applyBulkTargets(
-            spark.read.parquet(b.toString).select("src", "dst"))
+            spark.read.schema(schema).parquet(b.toString).select("src", "dst"))
         } else {
           // non-bulk batches are collected to the driver for ordered
           // replay — driver-sized BY CONSTRUCTION (session ops are
@@ -774,7 +777,7 @@ object GraphStore {
           // implicit: a store whose WAL somehow carries an oversized
           // non-bulk batch (hand-written, foreign tooling) must fail
           // loudly here, not OOM the driver
-          val rows = spark.read.parquet(b.toString)
+          val rows = spark.read.schema(schema).parquet(b.toString)
             .orderBy("seq").limit(maxReplayBatchRows + 1).collect()
           if (rows.length > maxReplayBatchRows)
             throw new OversizedReplayBatchException(b.toString, maxReplayBatchRows)

@@ -303,7 +303,7 @@ object RemoteRead {
           if (ids.isEmpty)
             st.nodes.select(col("id"), col("kind"), col("value")).limit(0)
           else {
-            // same 10k cutover as GraphReplica.getValues: a larger set
+            // the 10k cutover of GraphState.getValues: a larger set
             // would ship inside every task; a broadcast semi-join scales
             val wanted =
               if (ids.size <= 10000) st.nodes.where(Param.in(col("id"), ids))

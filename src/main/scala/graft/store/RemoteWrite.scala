@@ -3,13 +3,12 @@ package graft.store
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
+import org.apache.spark.sql.functions.{col, input_file_name}
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import graft.functions.Param
 import graft.graph._
 
 /** File-queue write shipping — the Spark-suitable analog of the reference's
@@ -531,21 +530,7 @@ object RemoteWrite {
       .collect { case Right(ops) => ops }.flatten
       .flatMap(refsOf).filter(_ >= 0).toSeq.distinct
     val existsAtStart: Set[Long] =
-      if (allGlobals.isEmpty) Set.empty
-      else {
-        val nodes = store.session.applied().nodes
-        val wanted =
-          if (allGlobals.size <= 10000) nodes.where(Param.in(col("id"), allGlobals))
-          else {
-            // past ~10k ids the set would ship inside every task; a
-            // broadcast semi-join is the plan that scales (same cutover
-            // as GraphReplica.getValues)
-            val spark = store.sparkOf
-            import spark.implicits._
-            nodes.join(broadcast(allGlobals.toDF("id")), Seq("id"), "left_semi")
-          }
-        wanted.select("id").collect().map(_.getLong(0)).toSet
-      }
+      store.session.applied().getValues(allGlobals).keySet
     val createdThisPoll = mutable.Set[Long]()
     val removedThisPoll = mutable.Set[Long]()
     // ids mutated by txns applied EARLIER IN THIS POLL (their WAL batch is

@@ -1,12 +1,14 @@
 package graft.tools
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusShim
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.jdk.CollectionConverters._
@@ -30,12 +32,14 @@ object CostProbe {
   /** The Spark jobs a block started, the Dataset actions it ran by name
     * ("collect", "localCheckpoint", …, failed ones included), the executed
     * plans of its successful actions (final adaptive plans), its finished
-    * jobs and stages, and the codegen compiles meanwhile.
+    * jobs and stages, the codegen compiles meanwhile, and the SQL
+    * executions it started — each one a planned query run through
+    * Catalyst; a job run straight on an RDD starts none.
     */
   final case class Cost(jobs: Int, actions: Seq[String], plans: Seq[SparkPlan],
-      finished: Seq[Job], stages: Seq[Stage], compiles: Long) {
+      finished: Seq[Job], stages: Seq[Stage], compiles: Long, sqlExecutions: Int) {
     override def toString: String =
-      s"Cost($jobs jobs, actions $actions, $compiles compiles)"
+      s"Cost($jobs jobs, $sqlExecutions SQL executions, actions $actions, $compiles compiles)"
   }
 
   /** Run `f` and return its [[Cost]]. Listener events are asynchronous, so
@@ -48,7 +52,12 @@ object CostProbe {
     val stages = new ConcurrentLinkedQueue[Stage]()
     val actions = new ConcurrentLinkedQueue[String]()
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val executions = new AtomicInteger()
     val jobListener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet(); ()
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val description = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
@@ -95,7 +104,7 @@ object CostProbe {
       ListenerBusShim.drain(spark.sparkContext)
       Cost(started.size, actions.asScala.toList, plans.asScala.toList,
         finished.asScala.toList.sortBy(_.id), stages.asScala.toList.sortBy(_.id),
-        compiles)
+        compiles, executions.get)
     } finally {
       spark.listenerManager.unregister(actionListener)
       spark.sparkContext.removeSparkListener(jobListener)

@@ -23,6 +23,16 @@ object GraftShim {
   def wrongNumArgs(fn: String, expected: Int, actual: Int): Throwable =
     errors.QueryCompilationErrors.wrongNumArgsError(fn, Seq(expected), actual)
 
+  /** One local relation over rows already in Catalyst's internal form —
+    * `createDataFrame` minus its per-row conversion (`Dataset.ofRows` and
+    * `LocalRelation`'s attribute helper are `private[sql]`).
+    */
+  def localRelation(spark: SparkSession, schema: types.StructType,
+      rows: Seq[catalyst.InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(
+        catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** ONE partitioned parquet relation over an EXPLICIT file list, which
     * may span several root directories — the read of a persisted index's
     * cells manifest (graft.pipeline.CellsLayout; a mutated clone's

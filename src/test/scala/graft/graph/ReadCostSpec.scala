@@ -5,10 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.store.{GraphReplica, GraphStore}
 import graft.tools.CostProbe
 
-/** What a point read costs: one Spark job, and no codegen compile for a new
-  * id — the id enters the generated code by reference (`graft.functions.
-  * Param`), so an optimizer that folded it back into a literal would fail
-  * the compile count here.
+/** What a point read costs: one Spark job run straight on the tables'
+  * planned base RDDs — no SQL execution, so no Catalyst pass — and no
+  * codegen compile, not even for the first read of a state.
   */
 class ReadCostSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -44,29 +43,30 @@ class ReadCostSpec extends AnyFunSuite {
     val (g, genres) = fixture
     for ((genre, songs) <- Seq(genres.head, genres.last)) {
       val v = CostProbe.costOf(spark)(assert(g.getValue(genre).isInstanceOf[Genre]))
-      assert(v.jobs === 1, s"getValue($genre): $v")
+      assert(v.jobs === 1 && v.sqlExecutions === 0, s"getValue($genre): $v")
       val t = CostProbe.costOf(spark)(assert(g.getTargets(genre, songKey).toSet === songs))
-      assert(t.jobs === 1, s"getTargets($genre): $t")
+      assert(t.jobs === 1 && t.sqlExecutions === 0, s"getTargets($genre): $t")
+      val o = CostProbe.costOf(spark)(assert(g.targets(genre).toSet === songs))
+      assert(o.jobs === 1 && o.sqlExecutions === 0, s"targets($genre): $o")
+      val i = CostProbe.costOf(spark)(assert(g.sources(genre) === Seq(g.root)))
+      assert(i.jobs === 1 && i.sqlExecutions === 0, s"sources($genre): $i")
     }
     intercept[NoSuchElementException](g.getValue(424242L))
   }
 
   test("20 reads of 20 distinct ids compile no class after the first of each plan shape") {
     val (g, genres) = fixture
-    // an id in the base and an id in the tail optimize to two plan shapes
-    // (the tail's filtered local relation is empty or not): the first read
-    // of each may compile
-    val (warm, fresh) = genres.zipWithIndex.partition { case (_, i) => i == 0 || i == 11 }
-    warm.foreach { case ((genre, _), _) => g.getValue(genre); g.getTargets(genre, songKey) }
-    assert(fresh.size === 20)
-    val values = CostProbe.compilesOf(fresh.foreach { case ((genre, _), i) =>
+    // the first read of a base id and of a tail id included: a read plans
+    // nothing, so no plan shape has a first compile
+    assert(genres.size === 22)
+    val values = CostProbe.compilesOf(genres.zipWithIndex.foreach { case ((genre, _), i) =>
       assert(g.getValue(genre) === Genre(s"g$i"))
     })
-    val targets = CostProbe.compilesOf(fresh.foreach { case ((genre, songs), _) =>
+    val targets = CostProbe.compilesOf(genres.foreach { case (genre, songs) =>
       assert(g.getTargets(genre, songKey).toSet === songs)
     })
-    assert(values === 0L, s"getValue compiled $values classes over 20 new ids")
-    assert(targets === 0L, s"getTargets compiled $targets classes over 20 new ids")
+    assert(values === 0L, s"getValue compiled $values classes over 22 new ids")
+    assert(targets === 0L, s"getTargets compiled $targets classes over 22 new ids")
   }
 
   test("GraphReplica.getValues: 20 distinct small id lists compile no class after the first") {

@@ -3,6 +3,7 @@ package graft.graph
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,7 +19,11 @@ import graft.store.GraphStore
   * The same holds across the tables' tails: sequences that cross the tail
   * bound, mix SetValue/RemoveTarget/RemoveNode into appended tails and
   * abort a batch with a non-empty tail equal both that oracle and the
-  * store reopened from its WAL.
+  * store reopened from its WAL. After every batch of those sequences the
+  * point reads (getValue, getValues, getTargets, targets, sources), which
+  * probe the tables' base RDDs and filter their tails on the driver, equal
+  * the DataFrame reads of the same state (`nodes.where`, `targetsDF`,
+  * `edges.where`).
   */
 class WithTargetsPropertySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -169,6 +174,40 @@ class WithTargetsPropertySpec extends AnyFunSuite {
     assert(indexBag(got.index) === indexBag(want.index), s"index, $clue")
   }
 
+  private val unknownId = 1L << 41
+
+  /** The point reads of `ids` (and of an unknown id) against the DataFrame
+    * reads of the same state: values through `nodes.where`, neighbours
+    * through `edges.where`, and each of a node's first two index keys (and
+    * an absent one) through `targetsDF`. Point reads answer without
+    * duplicates, so each is compared as a sorted sequence to the distinct
+    * DataFrame answer.
+    */
+  private def assertReads(g: GraphSession[Cat], ids: Seq[Long], clue: String): Unit = {
+    val st = g.applied()
+    val values = st.nodes.where(col("id").isin(ids: _*)).select("id", "kind", "value")
+      .collect().map(r => r.getLong(0) -> CatalogueModel.fromValueRow(r.getString(1), r.getStruct(2)))
+    assert(values.length === values.toMap.size, s"duplicate node rows, $clue")
+    assert(st.getValues(ids :+ unknownId) === values.toMap, s"getValues, $clue")
+    val edges = st.edges.where(col("src").isin(ids: _*) || col("dst").isin(ids: _*))
+      .select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val keys = st.index.where(col("src").isin(ids: _*)).select("src", "kkind", "key")
+      .distinct().collect().map(r => r.getLong(0) -> IndexKey(r.getString(1), r.getString(2)))
+      .groupBy(_._1).map { case (n, ks) => n -> ks.map(_._2).sortBy(k => (k.kind, k.key)).take(2).toSeq }
+    intercept[NoSuchElementException](g.getValue(unknownId))
+    ids.foreach { n =>
+      assert(g.getValue(n) === values.toMap.apply(n), s"getValue($n), $clue")
+      assert(g.targets(n).sorted === edges.filter(_._1 == n).map(_._2).distinct.sorted,
+        s"targets($n), $clue")
+      assert(g.sources(n).sorted === edges.filter(_._2 == n).map(_._1).distinct.sorted,
+        s"sources($n), $clue")
+      (keys.getOrElse(n, Seq.empty[IndexKey]) :+ IndexKey("Genre_Song", "absent")).foreach { k =>
+        assert(g.getTargets(n, k).sorted ===
+          st.targetsDF(n, k).collect().map(_.getLong(0)).toSeq.sorted, s"getTargets($n, $k), $clue")
+      }
+    }
+  }
+
   private def copyTree(from: Path, to: Path): Unit =
     Files.walk(from).iterator().asScala.foreach { p =>
       val rel = from.relativize(p).toString
@@ -203,6 +242,7 @@ class WithTargetsPropertySpec extends AnyFunSuite {
         val (ids0, pairs0) = (ids, pairs)
         var logged = Vector.empty[GraphOp[Cat]]
         var unknown = false
+        var touched = Vector.empty[Long]
         def pick(n: Int) = ids(n % ids.size)
         def add(p: (Long, Long)): Unit = {
           g.addTarget(p._1, p._2); logged :+= GraphOp.AddTarget[Cat](p._1, p._2); pairs :+= p
@@ -220,13 +260,15 @@ class WithTargetsPropertySpec extends AnyFunSuite {
           case Again(_) => ()
           case SetV(n, v) =>
             val id = pick(n); g.setValue(id, v); logged :+= GraphOp.SetValue(id, v)
+            touched :+= id
           case Unlink(k) if pairs.nonEmpty =>
             val p = pairs(k % pairs.size)
             g.removeTarget(p._1, p._2); logged :+= GraphOp.RemoveTarget[Cat](p._1, p._2)
+            touched ++= Seq(p._1, p._2)
           case Unlink(_) => ()
           case Drop(n) =>
             val id = pick(n)
-            if (id != g.root) { g.remove(id); logged :+= GraphOp.RemoveNode[Cat](id) }
+            if (id != g.root) { g.remove(id); logged :+= GraphOp.RemoveNode[Cat](id); touched :+= id }
         }
         if (unknown) {
           assert(before.nodeTable.tail.nonEmpty && before.edgeTable.tail.nonEmpty,
@@ -243,6 +285,12 @@ class WithTargetsPropertySpec extends AnyFunSuite {
           crossed._1 || st.nodeTable.tail.size < before.nodeTable.tail.size + ops.size,
           crossed._2 || st.edgeTable.tail.size < before.edgeTable.tail.size + ops.size)
         assertSame(st, oracle, clue)
+        // the root (its value's fields are null), the oldest and newest
+        // nodes (base and tail), nodes the batch touched, and seeded picks
+        val rnd = new scala.util.Random(seed * 31 + b)
+        val sample = (Seq(g.root) ++ ids.slice(1, 3) ++ ids.takeRight(2) ++
+          touched.take(3) ++ Seq.fill(2)(ids(rnd.nextInt(ids.size)))).distinct
+        assertReads(g, sample, clue)
       }
       assert(crossed === ((true, true)), s"(nodes, edges) tails crossed the bound, seed $seed")
       // the store reopened from its WAL, without close()

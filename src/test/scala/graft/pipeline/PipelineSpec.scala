@@ -4,6 +4,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.graph.TestSpark
 
 /** Cross-checks for the hash-based pipeline operators that have no SQL
@@ -913,6 +915,57 @@ class PipelineSpec extends AnyFunSuite {
         "every appended row must carry PQ codes when the dir is a file: URI")
       assert(spark.read.parquet(s"$dir/cells")
         .where(col("pqcodes").isNull).count() === 0L)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(new java.io.File(dir))
+    }
+  }
+
+  test("a cells root spelled /x and file:/x is one root: compaction reclaims every superseded file") {
+    val partA = embs.where(col("vec_id") % 2 === 0)
+      .select(col("vec_id"), col("embedding"))
+    val partB = embs.where(col("vec_id") % 2 === 1)
+      .select(col("vec_id"), col("embedding"))
+    val queries = embs.where(col("vec_id") < 8)
+      .select(col("vec_id"), col("embedding"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf2_spelling").toString
+    def serve() = Similarity.twoLevelTopKFromIndex(
+      Similarity.loadTwoLevelIndex(spark, dir), queries,
+      "vec_id", "embedding", k = 5, p1 = 2, nprobe = 4)
+      .orderBy("qid", "rank").collect().toSeq
+    // the local files a manifest generation names, whatever the spelling
+    def files(m: CellsManifest): Set[String] = m.entries.flatMap { case (r, fs) =>
+      fs.map(f => new org.apache.hadoop.fs.Path(s"$r/$f").toUri.getPath)
+    }.toSet
+    def onDisk(): Set[String] = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try w.iterator().asScala.map(_.toString)
+        .filter(p => p.endsWith(".parquet") && p.stripPrefix(dir).startsWith("/cells")).toSet
+      finally w.close()
+    }
+    try {
+      Similarity.saveTwoLevelIndex(partA, "vec_id", "embedding", dir,
+        nlist1 = 4, k2 = 4, iters = 1)
+      Similarity.appendToTwoLevelIndex(spark, s"file:$dir", partB,
+        "vec_id", "embedding", autoCompact = false)
+      val appended = CellsLayout.resolve(spark, dir)
+      assert(appended.entries.map(_._1) === Seq(s"$dir/cells"),
+        "the save's and the append's spellings must record one root")
+      val before = serve()
+      Similarity.compactTwoLevelIndex(spark, dir)
+      val compacted = CellsLayout.resolve(spark, dir)
+      // the next publish reclaims what the compaction superseded (its
+      // deferred gc list), under the other spelling of the index dir
+      Similarity.compactTwoLevelIndex(spark, s"file:$dir")
+      val superseded = files(appended)
+      assert(superseded.nonEmpty)
+      assert(superseded.filter(f => new java.io.File(f).exists()) === Set.empty[String],
+        "every file the first compaction superseded must be deleted")
+      // left on disk: the live generation and the one in its grace window
+      assert(onDisk() === files(CellsLayout.resolve(spark, dir)) ++ files(compacted))
+      assert(serve() === before)
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.graph._
 import graft.tools.CostProbe
 
@@ -18,7 +20,8 @@ class CommitCostSpec extends AnyFunSuite {
 
   private def parts(df: DataFrame): Int = df.rdd.getNumPartitions
 
-  // the name predates the tail; the assertions below pin ≤ 1 job, no
+  // the name predates the tail; the assertions below pin 1 job and no SQL
+  // execution (the lookup runs on the tables' planned RDDs), no
   // localCheckpoint and no write action
   test("warm synchronous newNode + addTarget + commit: ≤ 6 jobs, no partition growth") {
     val dir = Files.createTempDirectory("graft-commit-cost-").toString
@@ -36,9 +39,10 @@ class CommitCostSpec extends AnyFunSuite {
       songs :+= song
     }
     (1 to 4).foreach(insert)
-    // the lookup's collect; the WAL batch is written without a Spark job
+    // the lookup's job; the WAL batch is written without a Spark job
     val cost = CostProbe.costOf(spark)(insert(5))
-    assert(cost.jobs <= 1, s"a warm insert + commit ran ${cost.jobs} jobs")
+    assert(cost.jobs === 1, s"a warm insert + commit ran ${cost.jobs} jobs")
+    assert(cost.sqlExecutions === 0, s"a warm insert + commit ran a planned query: $cost")
     assert(!cost.actions.contains("localCheckpoint"),
       s"an append-only commit must copy no table: ${cost.actions}")
     assert(cost.actions.forall(_ == "collect"),
@@ -59,6 +63,40 @@ class CommitCostSpec extends AnyFunSuite {
     // the control for the action check: a SetValue commit materializes the nodes and index tables
     val set = CostProbe.costOf(spark) { g.setValue(genre, Genre("rock")); store.commit() }
     assert(set.actions.count(_ == "localCheckpoint") === 2, s"a SetValue commit: ${set.actions}")
+    store.close()
+  }
+
+  test("reopening N driver-written WAL batches runs at most N + 1 jobs: no schema inference") {
+    val dir = Files.createTempDirectory("graft-reopen-cost-")
+    val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir.toString)
+    val g = store.session
+    val genre = g.newNode(Genre("rock"))
+    g.addTarget(g.root, genre)
+    store.commit()
+    val n = 12
+    (1 to n - 1).foreach { i => g.addTarget(genre, g.newNode(Song(s"s$i"))); store.commit() }
+    // the store reopened from its WAL, without close(): N batches to replay
+    val copy = Files.createTempDirectory("graft-reopen-cost-copy-")
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.foreach { p =>
+      val rel = dir.relativize(p).toString
+      if (Files.isDirectory(p)) Files.createDirectories(copy.resolve(rel))
+      else if (rel != "lock") Files.copy(p, copy.resolve(rel))
+    } finally walk.close()
+    val listed = Files.walk(copy)
+    val batches = try listed.iterator().asScala
+      .count(p => p.getFileName.toString.startsWith("batch-")) finally listed.close()
+    assert(batches === n, s"WAL batches written: $batches")
+    var reopened: GraphStore[Cat] = null
+    val cost = CostProbe.costOf(spark) {
+      reopened = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, copy.toString)
+    }
+    // one read per batch, plus the one lookup that applies the replayed
+    // ops at open; a schemaless read infers the schema with one more job
+    // per batch (2N + 1)
+    assert(cost.jobs <= n + 1, s"reopening $n WAL batches: $cost")
+    assert(reopened.session.getTargets(genre, IndexKey("Genre_Song")).size === n - 1)
+    reopened.close()
     store.close()
   }
 

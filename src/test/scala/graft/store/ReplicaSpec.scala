@@ -215,31 +215,16 @@ class ReplicaSpec extends AnyFunSuite {
     val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
     replica.catchUp()
 
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { actions.add(funcName); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
+    // counted as Spark jobs: the read runs on the tables' planned RDDs,
+    // with no Dataset action to count
+    var got = Map.empty[Long, Cat]
+    val cost = graft.tools.CostProbe.costOf(spark) {
+      got = replica.getValues(ids :+ 424242L) // unknown id → absent
     }
-    spark.listenerManager.register(listener)
-    try {
-      val got = replica.getValues(ids :+ 424242L) // unknown id → absent
-      assert(got === ids.zipWithIndex.map { case (id, i) =>
-        id -> Artist(i + 1, s"A${i + 1}")
-      }.toMap)
-      // listener events are async — wait until the action list stabilizes
-      var prev = -1; var cur = actions.size(); var spins = 0
-      while (cur != prev || spins < 3) {
-        prev = cur; Thread.sleep(200); cur = actions.size(); spins += 1
-      }
-      val names = scala.jdk.CollectionConverters.IteratorHasAsScala(
-        actions.iterator()).asScala.toList
-      assert(names.size === 1,
-        s"N point reads must batch into ONE job, saw $names")
-    } finally spark.listenerManager.unregister(listener)
+    assert(got === ids.zipWithIndex.map { case (id, i) =>
+      id -> Artist(i + 1, s"A${i + 1}")
+    }.toMap)
+    assert(cost.jobs === 1, s"N point reads must batch into ONE job, saw $cost")
   }
 
   test("replica bootstrap refuses an incompatible store format (handshake)") {
