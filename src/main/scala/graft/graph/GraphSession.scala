@@ -29,8 +29,9 @@ import scala.collection.mutable.ArrayBuffer
   * edges and index) — see [[GraphState.checkpointedSince]]. A point read
   * (getValue, getTargets, targets, sources) and the lookup build no
   * DataFrame: each is one Spark job run straight on the tables' planned
-  * base RDDs, with the tails filtered on the driver, so a read makes no
-  * Catalyst pass and compiles no class. Bulk commits
+  * base RDDs, with the tails filtered on the driver (no job while no table
+  * has materialized), so a read makes no Catalyst pass and compiles no
+  * class. Bulk commits
   * (GraphStore.commitBulk) never touch the driver: they stay distributed
   * joins over the whole delta.
   *

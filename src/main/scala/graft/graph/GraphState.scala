@@ -68,10 +68,23 @@ object GraphState {
     StructField("key", StringType, nullable = false),
     StructField("dst", LongType, nullable = false)))
 
-  def nodesSchema(model: GraphModel[_]): StructType = StructType(Seq(
+  def nodesSchema(model: GraphModel[_]): StructType = nodesSchema(model.valueSchema)
+
+  private def nodesSchema(value: DataType): StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("kind", StringType, nullable = false),
-    StructField("value", model.valueSchema, nullable = true)))
+    StructField("value", value, nullable = true)))
+
+  /** Ordinals of the columns the point reads test in a table's physical
+    * rows, which [[Planned]] and the tail hold in the schema's order.
+    */
+  private val NodeId = nodesSchema(NullType).fieldIndex("id")
+  private val EdgeSrc = edgesSchema.fieldIndex("src")
+  private val EdgeDst = edgesSchema.fieldIndex("dst")
+  private val IndexSrc = indexSchema.fieldIndex("src")
+  private val IndexKind = indexSchema.fieldIndex("kkind")
+  private val IndexKeyAt = indexSchema.fieldIndex("key")
+  private val IndexDst = indexSchema.fieldIndex("dst")
 
   /** Most rows a table's tail holds: an append that would pass it
     * materializes the table instead. Every point read and commit lookup
@@ -79,11 +92,6 @@ object GraphState {
     * local relation, so the bound keeps both small.
     */
   private[graft] val TailBound = 1024
-
-  /** Most ids a probe's id set carries inside its task closure; a larger
-    * set ships once per executor as a broadcast (`GraphState.withIdSet`).
-    */
-  private val ClosureIds = 10000
 
   /** One table of a state: a base plan plus the rows appended to it on the
     * driver since it last materialized, held in Catalyst's internal row
@@ -245,7 +253,7 @@ final case class GraphState[V](
     * (a superset of the requested pairs that already exist). It is one
     * [[probe]] over the nodes and edges tables, testing `id ∈ S` on nodes
     * and `src ∈ S ∧ dst ∈ S` on edges for the batch's id set `S`
-    * ([[withIdSet]]): no join, no Catalyst pass and no generated class.
+    * ([[idSet]]): no join, no Catalyst pass and no generated class.
     * The edge and index deltas are then computed here, the index rows by
     * the model's own `indexes(target, source)` — the function
     * [[GraphState.deriveIndex]] runs on the executors for the bulk paths —
@@ -271,14 +279,13 @@ final case class GraphState[V](
   def withTargets(pairs: Seq[(Long, Long)],
       validate: Boolean = true): GraphState[V] = {
     val wanted = pairs.distinct
-    val Seq(nodeHits, edgeHits) = withIdSet(wanted.flatMap(p => Seq(p._1, p._2))) { in =>
-      probe(nodeTable -> (r => in(r.getLong(0))),
-        edgeTable -> (r => in(r.getLong(0)) && in(r.getLong(1))))
-    }
-    val present = edgeHits.map(r => (r.getLong(0), r.getLong(1))).toSet
+    val in = idSet(wanted.flatMap(p => Seq(p._1, p._2)))
+    val Seq(nodeHits, edgeHits) = probe(nodeTable -> (r => in(r.getLong(NodeId))),
+      edgeTable -> (r => in(r.getLong(EdgeSrc)) && in(r.getLong(EdgeDst))))
+    val present = edgeHits.map(r => (r.getLong(EdgeSrc), r.getLong(EdgeDst))).toSet
     val delta = wanted.filterNot(present)
     if (delta.isEmpty) return this
-    val known: Map[Long, V] = nodeHits.map(r => r.getLong(0) -> valueOf(r)).toMap
+    val known: Map[Long, V] = nodeHits.map(r => r.getLong(NodeId) -> valueOf(r)).toMap
     if (validate) for ((s, d) <- delta; (side, id) <- Seq("src" -> s, "dst" -> d)
         if !known.contains(id))
       throw new IllegalArgumentException(
@@ -459,15 +466,19 @@ final case class GraphState[V](
   /** The rows of each table that pass its predicate, in probe order: ONE
     * Spark job (`runJob`) over the union of the tables' physical base RDDs,
     * then the same predicates over the tails here. Base rows are copied
-    * off the scan's reused buffers before they leave the task.
+    * off the scan's reused buffers before they leave the task. Bases with
+    * no partition (a store that has never materialized a table) are left
+    * out, so a probe of tails alone runs no job.
     */
   private def probe(probes: (Table, InternalRow => Boolean)*): Seq[Seq[InternalRow]] = {
     val sc = spark.sparkContext
     val tagged = probes.zipWithIndex.map { case ((t, p), i) =>
       t.baseRows.mapPartitions(_.filter(p).map(r => (i, r.copy())))
-    }
-    val hits = sc.runJob(if (tagged.size == 1) tagged.head else sc.union(tagged),
-      (rows: Iterator[(Int, InternalRow)]) => rows.toArray).flatten
+    }.filter(_.partitions.nonEmpty)
+    val hits =
+      if (tagged.isEmpty) Array.empty[(Int, InternalRow)]
+      else sc.runJob(if (tagged.size == 1) tagged.head else sc.union(tagged),
+        (rows: Iterator[(Int, InternalRow)]) => rows.toArray).flatten
     probes.zipWithIndex.map { case ((t, p), i) =>
       hits.collect { case (`i`, r) => r }.toSeq ++ t.tail.filter(p)
     }
@@ -476,18 +487,13 @@ final case class GraphState[V](
   /** [[probe]] of one table. */
   private def scan(t: Table)(p: InternalRow => Boolean): Seq[InternalRow] = probe(t -> p).head
 
-  /** Run `f` with a membership test of `ids` that tasks can carry: the
-    * sorted ids ride in the task closure up to [[GraphState.ClosureIds]]
-    * of them, and above that in a broadcast, destroyed once `f` returns.
+  /** A membership test of `ids` that tasks can carry: the sorted ids ride
+    * in the task closure, which Spark ships to each executor once per job
+    * inside the broadcast task binary.
     */
-  private def withIdSet[T](ids: Iterable[Long])(f: (Long => Boolean) => T): T = {
+  private def idSet(ids: Iterable[Long]): Long => Boolean = {
     val sorted = ids.toArray.distinct.sorted
-    if (sorted.length <= ClosureIds) f(id => java.util.Arrays.binarySearch(sorted, id) >= 0)
-    else {
-      val shipped = spark.sparkContext.broadcast(sorted)
-      try f(id => java.util.Arrays.binarySearch(shipped.value, id) >= 0)
-      finally shipped.destroy()
-    }
+    id => java.util.Arrays.binarySearch(sorted, id) >= 0
   }
 
   private lazy val nodeRow = CatalystTypeConverters.createToScalaConverter(nodesSchema(model))
@@ -495,31 +501,33 @@ final case class GraphState[V](
   /** The value of a nodes row in internal form. */
   private def valueOf(r: InternalRow): V = {
     val row = nodeRow(r).asInstanceOf[Row]
-    model.fromValueRow(row.getString(1), row.getStruct(2))
+    model.fromValueRow(row.getAs[String]("kind"), row.getAs[Row]("value"))
   }
 
   /** getValue (op #2). Throws NoSuchElementException for an unknown id (the
     * reference's invalid-ref failure).
     */
   def getValue(n: Long): V =
-    scan(nodeTable)(_.getLong(0) == n).headOption.map(valueOf)
+    scan(nodeTable)(_.getLong(NodeId) == n).headOption.map(valueOf)
       .getOrElse(throw new NoSuchElementException(s"no node with id $n"))
 
   /** Batched getValue: the values of the known ids among `ids`, in one
-    * probe whatever their number ([[withIdSet]]). Unknown ids are absent.
+    * probe whatever their number ([[idSet]]). Unknown ids are absent.
     */
   def getValues(ids: Iterable[Long]): Map[Long, V] =
     if (ids.isEmpty) Map.empty
-    else withIdSet(ids)(in => scan(nodeTable)(r => in(r.getLong(0))))
-      .map(r => r.getLong(0) -> valueOf(r)).toMap
+    else {
+      val in = idSet(ids)
+      scan(nodeTable)(r => in(r.getLong(NodeId))).map(r => r.getLong(NodeId) -> valueOf(r)).toMap
+    }
 
   /** getTargets (op #5, Graph.hs:69-70): nodes reachable from `n` via
     * index key `k`. Distinct per key (the multimap holds a set per key).
     */
   def getTargets(n: Long, k: IndexKey): Seq[Long] = {
     val (kind, key) = (UTF8String.fromString(k.kind), UTF8String.fromString(k.key))
-    distinctAt(3, scan(indexTable)(r =>
-      r.getLong(0) == n && r.getUTF8String(1) == kind && r.getUTF8String(2) == key))
+    distinctAt(IndexDst, scan(indexTable)(r => r.getLong(IndexSrc) == n &&
+      r.getUTF8String(IndexKind) == kind && r.getUTF8String(IndexKeyAt) == key))
   }
 
   /** Dataset form of [[getTargets]] — the composable hop for analytics
@@ -532,10 +540,10 @@ final case class GraphState[V](
       .select(col("dst")).distinct()
 
   /** Distinct targets regardless of key (traverseTargets, Graph.hs:72-77). */
-  def targets(n: Long): Seq[Long] = distinctAt(1, scan(edgeTable)(_.getLong(0) == n))
+  def targets(n: Long): Seq[Long] = distinctAt(EdgeDst, scan(edgeTable)(_.getLong(EdgeSrc) == n))
 
   /** Sources of a node (traverseSources/getSources, Graph.hs:79-80,135-139). */
-  def sources(n: Long): Seq[Long] = distinctAt(0, scan(edgeTable)(_.getLong(1) == n))
+  def sources(n: Long): Seq[Long] = distinctAt(EdgeSrc, scan(edgeTable)(_.getLong(EdgeDst) == n))
 
   private def distinctAt(column: Int, rows: Seq[InternalRow]): Seq[Long] =
     rows.map(_.getLong(column)).distinct

@@ -303,8 +303,8 @@ object RemoteRead {
           if (ids.isEmpty)
             st.nodes.select(col("id"), col("kind"), col("value")).limit(0)
           else {
-            // the 10k cutover of GraphState.getValues: a larger set
-            // would ship inside every task; a broadcast semi-join scales
+            // past 10k ids a Param.in set would ship inside every
+            // task's plan; a broadcast semi-join scales
             val wanted =
               if (ids.size <= 10000) st.nodes.where(Param.in(col("id"), ids))
               else {

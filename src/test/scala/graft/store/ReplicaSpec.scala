@@ -208,10 +208,19 @@ class ReplicaSpec extends AnyFunSuite {
 
   test("getValues answers N point reads in one Spark job") {
     val dir = Files.createTempDirectory("graft-replica-batchread-").toString
+    // A1-A3 in a snapshot (the replica's materialized bases), A4 and A5
+    // in the WAL after it (the replica's tails)
+    def artists(s: GraphStore[Cat], from: Int, to: Int): Seq[Long] = {
+      val ids = (from to to).map(i => s.session.newNode(Artist(i, s"A$i")))
+      ids.foreach(s.session.addTarget(s.session.root, _))
+      s.commit()
+      ids
+    }
     val s1 = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
-    val ids = (1 to 5).map(i => s1.session.newNode(Artist(i, s"A$i")))
-    ids.foreach(s1.session.addTarget(s1.session.root, _))
-    s1.commit()
+    val inSnapshot = artists(s1, 1, 3)
+    s1.close()
+    val s2 = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
+    val ids = inSnapshot ++ artists(s2, 4, 5)
     val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
     replica.catchUp()
 
@@ -225,6 +234,7 @@ class ReplicaSpec extends AnyFunSuite {
       id -> Artist(i + 1, s"A${i + 1}")
     }.toMap)
     assert(cost.jobs === 1, s"N point reads must batch into ONE job, saw $cost")
+    s2.close()
   }
 
   test("replica bootstrap refuses an incompatible store format (handshake)") {
