@@ -2,13 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{InSet, LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-import scala.collection.immutable.HashSet
 
 /** A driver value that enters generated code BY REFERENCE, not as a Java
   * literal: a point read filtering on `col("id") === Param(n)` generates
@@ -49,14 +47,4 @@ case class Param(value: Any, dataType: DataType) extends LeafExpression {
 object Param {
   def apply(v: Long): Column = GraftShim.column(Param(v, LongType))
   def apply(s: String): Column = GraftShim.column(Param(UTF8String.fromString(s), StringType))
-
-  /** `c ∈ ids` with the id set bound by reference: Catalyst's `InSet` on a
-    * `LongType` column reads its set through `addReferenceObj`, so every
-    * id list shares one generated class. (`isin` inlines up to 10 values
-    * as literals and compiles again for each new list.) The set is always
-    * a `HashSet`: the generated code casts to the set's runtime class, and
-    * `toSet` would pick `Set1`…`Set4` by size.
-    */
-  def in(c: Column, ids: Iterable[Long]): Column =
-    GraftShim.column(InSet(GraftShim.expression(c), HashSet.from(ids.iterator.map(id => id: Any))))
 }

@@ -462,6 +462,8 @@ final case class GraphState[V](
   // Each read is one [[probe]]: one Spark job over the table's planned base
   // RDD, with no Catalyst pass and no generated class, and the same row
   // predicate over the tail on the driver. Ids are deduped on the driver.
+  // Each read has one implementation, its batched form; a single-id read
+  // is the batched form over one id.
 
   /** The rows of each table that pass its predicate, in probe order: ONE
     * Spark job (`runJob`) over the union of the tables' physical base RDDs,
@@ -508,8 +510,7 @@ final case class GraphState[V](
     * reference's invalid-ref failure).
     */
   def getValue(n: Long): V =
-    scan(nodeTable)(_.getLong(NodeId) == n).headOption.map(valueOf)
-      .getOrElse(throw new NoSuchElementException(s"no node with id $n"))
+    getValues(Seq(n)).getOrElse(n, throw new NoSuchElementException(s"no node with id $n"))
 
   /** Batched getValue: the values of the known ids among `ids`, in one
     * probe whatever their number ([[idSet]]). Unknown ids are absent.
@@ -524,11 +525,24 @@ final case class GraphState[V](
   /** getTargets (op #5, Graph.hs:69-70): nodes reachable from `n` via
     * index key `k`. Distinct per key (the multimap holds a set per key).
     */
-  def getTargets(n: Long, k: IndexKey): Seq[Long] = {
-    val (kind, key) = (UTF8String.fromString(k.kind), UTF8String.fromString(k.key))
-    distinctAt(IndexDst, scan(indexTable)(r => r.getLong(IndexSrc) == n &&
-      r.getUTF8String(IndexKind) == kind && r.getUTF8String(IndexKeyAt) == key))
-  }
+  def getTargets(n: Long, k: IndexKey): Seq[Long] = getTargets(Seq(n -> k)).getOrElse(n -> k, Nil)
+
+  /** Batched getTargets: the distinct targets of each (node, key) pair, in
+    * one probe. Pairs without a target are absent.
+    */
+  def getTargets(keys: Iterable[(Long, IndexKey)]): Map[(Long, IndexKey), Seq[Long]] =
+    if (keys.isEmpty) Map.empty
+    else {
+      val in = idSet(keys.map(_._1))
+      val wanted = keys.iterator.map { case (n, k) =>
+        (n, UTF8String.fromString(k.kind), UTF8String.fromString(k.key)) }.toSet
+      val keyOf = (r: InternalRow) =>
+        (r.getLong(IndexSrc), r.getUTF8String(IndexKind), r.getUTF8String(IndexKeyAt))
+      grouped(scan(indexTable)(r => in(r.getLong(IndexSrc)) && wanted(keyOf(r))), IndexDst) { r =>
+        val (n, kind, key) = keyOf(r)
+        n -> IndexKey(kind.toString, key.toString)
+      }
+    }
 
   /** Dataset form of [[getTargets]] — the composable hop for analytics
     * plans, deduped in the plan. Ids and keys bind as [[Param]]s, so every
@@ -540,13 +554,30 @@ final case class GraphState[V](
       .select(col("dst")).distinct()
 
   /** Distinct targets regardless of key (traverseTargets, Graph.hs:72-77). */
-  def targets(n: Long): Seq[Long] = distinctAt(EdgeDst, scan(edgeTable)(_.getLong(EdgeSrc) == n))
+  def targets(n: Long): Seq[Long] = targets(Seq(n)).getOrElse(n, Nil)
+
+  /** Batched [[targets]], in one probe; ids without a target are absent. */
+  def targets(ns: Iterable[Long]): Map[Long, Seq[Long]] = hop(ns, EdgeSrc, EdgeDst)
 
   /** Sources of a node (traverseSources/getSources, Graph.hs:79-80,135-139). */
-  def sources(n: Long): Seq[Long] = distinctAt(EdgeSrc, scan(edgeTable)(_.getLong(EdgeDst) == n))
+  def sources(n: Long): Seq[Long] = sources(Seq(n)).getOrElse(n, Nil)
 
-  private def distinctAt(column: Int, rows: Seq[InternalRow]): Seq[Long] =
-    rows.map(_.getLong(column)).distinct
+  /** Batched [[sources]], in one probe; ids without a source are absent. */
+  def sources(ns: Iterable[Long]): Map[Long, Seq[Long]] = hop(ns, EdgeDst, EdgeSrc)
+
+  /** The distinct `to` ends of the edges whose `from` end is in `ns`, per
+    * `from` id.
+    */
+  private def hop(ns: Iterable[Long], from: Int, to: Int): Map[Long, Seq[Long]] =
+    if (ns.isEmpty) Map.empty
+    else {
+      val in = idSet(ns)
+      grouped(scan(edgeTable)(r => in(r.getLong(from))), to)(_.getLong(from))
+    }
+
+  /** The distinct ids at `column` of `rows`, per `key`. */
+  private def grouped[K](rows: Seq[InternalRow], column: Int)(key: InternalRow => K): Map[K, Seq[Long]] =
+    rows.groupMap(key)(_.getLong(column)).map { case (k, ids) => k -> ids.distinct }
 
   /** getStats (op #9, Graph.hs:82-118): (reachable nodes, distinct edges
     * among them, index entries among them), scoped by BFS from `from`.

@@ -19,6 +19,13 @@ object Reachability {
 
   private val idSchema = StructType(Seq(StructField("id", LongType, nullable = false)))
 
+  /** BFS levels between checkpoints of `visited`: each level unions one
+    * checkpointed frontier into it, so without a checkpoint a deep walk
+    * grows its plan (and the analysis of every later level's anti-join)
+    * one leaf per level without bound.
+    */
+  private val CheckpointEvery = 16
+
   /** DataFrame(id) of every node reachable from `seeds` (inclusive). */
   def reachable(edges: DataFrame, seeds: Seq[Long]): DataFrame = {
     val spark = edges.sparkSession
@@ -27,6 +34,7 @@ object Reachability {
       .localCheckpoint(true)
     var frontier = visited
     var frontierSize = seeds.distinct.size.toLong
+    var level = 0
     while (frontierSize > 0) {
       // broadcast only while the frontier is actually small — a BFS level
       // that fans out to hundreds of millions of ids must shuffle-join, or
@@ -40,11 +48,13 @@ object Reachability {
         .localCheckpoint(true)
       frontierSize = next.count()
       if (frontierSize > 0) {
-        // r19: no per-level eager checkpoint of the union — `visited` is
-        // only ever a union of already-checkpointed frontiers (each
-        // `next` is materialized for its count), so lineage stays flat
-        // without one extra eager job per level; rows identical
+        // `visited` is a union of checkpointed frontiers (each `next` is
+        // materialized for its count), so lineage stays flat without an
+        // eager job per level; every CheckpointEvery levels the union
+        // itself is checkpointed, so its leaves stay bounded too
+        level += 1
         visited = visited.unionByName(next)
+        if (level % CheckpointEvery == 0) visited = visited.localCheckpoint(true)
         frontier = next
       }
     }

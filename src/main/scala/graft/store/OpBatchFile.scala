@@ -14,12 +14,14 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
-/** A driver-sized batch of op rows written as ONE parquet file by parquet's
+/** A driver-sized batch of rows written as ONE parquet file by parquet's
   * own writer, on the calling thread, followed by an empty `_SUCCESS`: the
   * directory a one-task `df.write.parquet` leaves, without the Spark job,
   * Hadoop's local file system or its commit protocol. Rows are encoded by
   * Spark's `ParquetWriteSupport`, so `spark.read.parquet` reads the batch
-  * back with the schema it was written with.
+  * back with the schema it was written with. It writes the WAL's op
+  * batches, RemoteWrite's shipped transactions, and RemoteRead's answer
+  * batches (one per op kind of a poll).
   *
   * The write settings come from `spark.conf`, not the thread-local
   * `SQLConf.get`: the buffered WAL worker writes from its own thread.

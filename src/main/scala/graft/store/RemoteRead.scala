@@ -2,14 +2,14 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import scala.jdk.CollectionConverters._
-import scala.util.Try
+import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
-import graft.functions.Param
-import graft.graph.{GraphModel, IndexKey}
+import graft.graph.{GraphModel, GraphState, IndexKey}
 
 /** Thin-client READ shipping — the serve/client read-action analog
   * (/root/reference/library/GraphDB/Client.hs:71-117 runs every read
@@ -23,19 +23,26 @@ import graft.graph.{GraphModel, IndexKey}
   *
   * {{{
   *   <dir>/<clientId>-<seq>.req.json    one read request (atomic publish)
-  *   <dir>/acks/<reqId>/                parquet answer (atomic dir rename;
-  *                                      _SUCCESS inside ⇔ complete)
-  *   <dir>/acks/<reqId>.err.json        typed refusal (unknown id etc.)
+  *   <dir>/acks/batches/<reqId>/        the answers of one poll to one op:
+  *                                      one parquet file led by a _reqId
+  *                                      column (atomic dir rename, named
+  *                                      after the group's first request)
+  *   <dir>/acks/<reqId>.ptr.json        the request's pointer to its batch
+  *   <dir>/acks/<reqId>.err.json        typed refusal (unknown op etc.)
   * }}}
   *
   * Request ops mirror the served read surface: `getValues` (batched —
   * the single-id round-trip of the reference is its scalability defect,
   * so the protocol is batched-first and `getValue` is the 1-element
   * case), `getTargets` under an index key, `targets`, `sources`,
-  * `getStats`. Answers are parquet (the exact value fidelity of the
-  * checkpoint format — any `valueSchema` round-trips), one Spark job per
-  * request on each side: that IS the per-action round-trip cost model of
-  * the reference, which is why a read-heavy deployment runs a local
+  * `getStats`, and the replica's `watermark`. The server answers them
+  * with the replica state's own reads: each op kind of a poll is one
+  * [[GraphState]] read over all of its requests (one Spark job for the
+  * point reads, no Catalyst pass), written as one parquet file on the
+  * driver ([[OpBatchFile]]) — the exact value fidelity of the checkpoint
+  * format, so any `valueSchema` round-trips. The client reads its rows
+  * back with one Spark read per answer: the per-action round trip of the
+  * reference, which is why a read-heavy deployment runs a local
   * [[GraphReplica]] instead; this exists so the THIN-client posture has a
   * runnable analog too.
   *
@@ -163,16 +170,13 @@ object RemoteRead {
         s"read ${ack.reqId} refused: $err")
     }
 
-    /** Block until the server answers `reqId`. Three answer forms: a typed
-      * refusal (`.err.json`), a dedicated parquet dir (per-request path),
-      * or a pointer (`.ptr.json`) into a shared batch dir — the server
-      * answers same-op requests of one poll in a single Spark job and
-      * splits per-request by the `_reqId` column, so a pointer answer is
-      * the batch filtered to this request (schema-exact even when the
-      * filter matches zero rows).
+    /** Block until the server answers `reqId`: a typed refusal
+      * (`.err.json`), or a pointer (`.ptr.json`) into the batch dir that
+      * answers the poll's requests of one op, whose rows for this request
+      * (the `_reqId` column) are the answer — schema-exact even when they
+      * are none.
       */
     def await(reqId: String, timeoutMs: Long = 30000L): ReadAck = {
-      val ansDir = base.resolve("acks").resolve(reqId)
       val errFile = base.resolve("acks").resolve(s"$reqId.err.json")
       val ptrFile = base.resolve("acks").resolve(s"$reqId.ptr.json")
       val deadline = System.nanoTime() + timeoutMs * 1000000L
@@ -193,8 +197,6 @@ object RemoteRead {
             spark.read.parquet(batch.toString)
               .where(col("_reqId") === reqId).drop("_reqId")))
         }
-        if (Files.exists(ansDir.resolve("_SUCCESS")))
-          return ReadAck(reqId, Right(spark.read.parquet(ansDir.toString)))
         Thread.sleep(10L)
       }
       throw new java.util.concurrent.TimeoutException(
@@ -216,68 +218,133 @@ object RemoteRead {
         .replace("\\\"", "\"").replace("\\\\", "\\"))
   }
 
-  /** Total (_reqId, id) pairs one poll may answer in a single batched job:
-    * the pairs side is broadcast, so it is driver-bounded by the same
-    * contract as RemoteWrite's replay bound — beyond it the poll falls
-    * back to per-request answers (each with its own 100k cap). Deployments
-    * with bigger/smaller drivers tune it via -Dgraft.read.maxBatchPairs.
-    */
-  private val MaxBatchPairs: Int =
-    sys.props.get("graft.read.maxBatchPairs")
-      .flatMap(s => Try(s.toInt).toOption).getOrElse(1000000)
+  /** Most distinct ids one getValues request may carry. */
+  private val MaxRequestIds = 100000
 
-  /** Test-only fault injection: the next [[answerPendingBounded]] batch
-    * publish throws AFTER the atomic batch-dir move but BEFORE any pointer
-    * write — the orphaned-batch-dir window the fallback must reclaim.
+  /** Most ids one poll reads. A poll's getValues ids ride to the executors
+    * in one task closure and its answers are built on the driver, so a
+    * poll takes pending requests in name order while their ids fit, and
+    * always at least one; the rest wait for the next poll.
+    */
+  private val PollIdBudget = 1000000
+
+  /** Test-only fault injection: the next batch publish throws AFTER the
+    * atomic batch-dir move but BEFORE any pointer write — the
+    * orphaned-batch-dir window a group failure must sweep.
     */
   private[store] var failNextBatchPublish: Boolean = false
 
-  /** Answer every unanswered request in `dir` from the replica's current
+  /** A parsed request: its op, the ids it reads, and getTargets' key. */
+  private final case class Read(reqId: String, op: String, ids: Seq[Long],
+      key: Option[IndexKey] = None)
+
+  private def parse(reqId: String, req: String): Read = {
+    def field(k: String) = fld(req, k).getOrElse(
+      throw new IllegalArgumentException(s"read request has no '$k'"))
+    field("op") match {
+      case "getValues" =>
+        val ids = parseIds(req).distinct
+        require(ids.size <= MaxRequestIds, "getValues request exceeds 100k ids")
+        Read(reqId, "getValues", ids)
+      case "getTargets" => Read(reqId, "getTargets", Seq(field("id").toLong),
+        Some(IndexKey(field("kkind"), field("key"))))
+      case op @ ("targets" | "sources") => Read(reqId, op, Seq(field("id").toLong))
+      case "getStats" => Read(reqId, "getStats", Seq(fld(req, "id").fold(0L)(_.toLong)))
+      case "watermark" => Read(reqId, "watermark", Nil)
+      case other => throw new IllegalArgumentException(s"unknown read op '$other'")
+    }
+  }
+
+  private def longs(names: String*): Seq[StructField] =
+    names.map(StructField(_, LongType, nullable = false))
+
+  /** The answer columns of one op and the rows answering `reads` (all of
+    * that op), each row led by its request's id. Every op kind is ONE
+    * GraphState read over all of its requests: one probe for the point
+    * reads, one BFS per distinct root for getStats.
+    */
+  private def answer[V](replica: GraphReplica[V], st: GraphState[V], op: String,
+      reads: Seq[Read]): (Seq[StructField], Seq[Row]) = op match {
+    case "getValues" =>
+      val values = st.getValues(reads.flatMap(_.ids))
+      (GraphState.nodesSchema(st.model).fields.toSeq,
+        for (r <- reads; id <- r.ids; v <- values.get(id))
+          yield Row(r.reqId, id, st.model.kindOf(v), st.model.toValueRow(v)))
+    case "getTargets" =>
+      val hits = st.getTargets(reads.map(r => r.ids.head -> r.key.get))
+      (longs("id"), for (r <- reads; id <- hits.getOrElse(r.ids.head -> r.key.get, Nil))
+        yield Row(r.reqId, id))
+    case "targets" | "sources" =>
+      val roots = reads.map(_.ids.head)
+      val hits = if (op == "targets") st.targets(roots) else st.sources(roots)
+      (longs("id"), for (r <- reads; id <- hits.getOrElse(r.ids.head, Nil))
+        yield Row(r.reqId, id))
+    case "getStats" =>
+      val stats = reads.map(_.ids.head).distinct.map(from => from -> st.stats(from)).toMap
+      (longs("nodes", "edges", "index"), reads.map { r =>
+        val (n, e, i) = stats(r.ids.head)
+        Row(r.reqId, n, e, i)
+      })
+    case "watermark" =>
+      // the replica state's WAL coverage stamp — what a mid-txn-read
+      // snapshot carries so the write server can conflict-check at apply
+      // time (RemoteWrite stale-read detection)
+      val (eidx, bseq) = replica.watermark
+      (longs("eidx", "bseq"), reads.map(r => Row(r.reqId, eidx, bseq)))
+  }
+
+  /** Answer the unanswered requests in `dir` from the replica's current
     * state — the read-dispatch loop body (Server.hs:17-69 for reads).
-    * Returns the request ids answered this poll. The caller owns freshness:
-    * interleave `replica.catchUp()` in its serve loop at the staleness
-    * budget it wants. ONE server per inbox, like RemoteWrite's owner-only
-    * applyPending: concurrent servers would race the batch publish below.
+    * Returns the request ids answered this poll: pending requests in name
+    * order up to [[PollIdBudget]] ids (at least one); later polls answer
+    * the rest. The caller owns freshness: interleave `replica.catchUp()`
+    * in its serve loop at the staleness budget it wants. ONE server per
+    * inbox, like RemoteWrite's owner-only applyPending: concurrent servers
+    * would race the batch publish below.
     *
-    * Same-op requests are answered in ONE Spark job per op group (the
-    * RemoteWrite single-load-poll discipline, one file over): the parsed
-    * id lists become a broadcast (_reqId, key) DataFrame, one equi-join
-    * against the replica state writes one batch parquet, and each request
-    * gets an atomic `.ptr.json` pointer into it — so a burst of N point
-    * reads costs O(op kinds) jobs, not N. `getStats` (driver-computed),
-    * unknown ops, oversized requests, and any batch-level failure take the
-    * per-request path, so one bad request never poisons its neighbors.
-    * Answered request files are archived to `answered/` so the poll's
-    * inbox listing stays O(pending), not O(all requests ever shipped).
+    * Each request is parsed and validated on its own, so a malformed one
+    * is its own typed refusal. The rest are grouped by op; each group is
+    * one GraphState read ([[answer]]) whose rows go into ONE parquet file
+    * written on the driver ([[OpBatchFile]]), and each request gets an
+    * atomic `.ptr.json` pointer into it — a burst of N point reads costs
+    * one Spark job per op kind, not N. Answered request files are
+    * archived to `answered/` so the poll's inbox listing stays
+    * O(pending), not O(all requests ever shipped).
     */
   def answerPending[V](replica: GraphReplica[V], dir: String): Seq[String] =
-    answerPendingBounded(replica, dir, MaxBatchPairs)
+    answerPoll(replica, dir, PollIdBudget)
 
-  /** [[answerPending]] with an explicit batch-pair cap — seam for the
-    * oversized-group fallback spec and the ServeBench per-request-path
-    * measurement (the production cap is driver-memory-sized).
-    */
-  private[graft] def answerPendingBounded[V](replica: GraphReplica[V],
-      dir: String, maxBatchPairs: Int): Seq[String] = {
+  /** [[answerPending]] with the poll's id budget as a parameter. */
+  private[store] def answerPoll[V](replica: GraphReplica[V], dir: String,
+      idBudget: Int): Seq[String] = {
     val base = Paths.get(dir)
     if (!Files.isDirectory(base)) return Seq.empty
     val acks = base.resolve("acks")
     Files.createDirectories(acks)
+    def ptr(reqId: String) = acks.resolve(s"$reqId.ptr.json")
+    def err(reqId: String) = acks.resolve(s"$reqId.err.json")
+    // a TRANSIENT read failure on a request file must not become a
+    // permanent typed refusal + archival: skip the request this poll — it
+    // stays in the inbox and the next poll retries
     val pending = GraphStore.listPaths(base)
       .filter(_.getFileName.toString.endsWith(".req.json"))
       .sortBy(_.getFileName.toString)
-      .filter { p =>
-        val reqId = p.getFileName.toString.stripSuffix(".req.json")
-        !Files.exists(acks.resolve(reqId).resolve("_SUCCESS")) &&
-          !Files.exists(acks.resolve(s"$reqId.err.json")) &&
-          !Files.exists(acks.resolve(s"$reqId.ptr.json"))
+      .iterator
+      .map(p => (p, p.getFileName.toString.stripSuffix(".req.json")))
+      .filterNot { case (_, reqId) => Files.exists(ptr(reqId)) || Files.exists(err(reqId)) }
+      .flatMap { case (p, reqId) =>
+        Try(Files.readString(p)).toOption.map(req => (p, reqId, Try(parse(reqId, req))))
       }
-    if (pending.isEmpty) return Seq.empty
+    var ids = 0L
+    val taken = pending.zipWithIndex.takeWhile { case ((_, _, read), i) =>
+      ids += read.fold(_ => 0, _.ids.size)
+      i == 0 || ids <= idBudget
+    }.map(_._1).toVector
+    if (taken.isEmpty) return Seq.empty
     val st = replica.currentState
-    val spark = st.nodes.sparkSession
 
     def refuse(reqId: String, e: Throwable): Unit =
-      writeJsonAtomic(acks.resolve(s"$reqId.err.json"),
+      writeJsonAtomic(err(reqId),
         s"""{"reqId": "$reqId", "error": "${esc(
           s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")}"}""")
 
@@ -290,192 +357,51 @@ object RemoteRead {
       Files.move(p, dst.resolve(p.getFileName), StandardCopyOption.REPLACE_EXISTING)
     }
 
-    /** Per-request answer path (fallback + getStats + unknown ops). */
-    def answerOne(reqId: String, req: String): Unit = try {
-      val answer: DataFrame = fld(req, "op").getOrElse("?") match {
-        case "getValues" =>
-          // SAME parse + cap as the batch path (answerGroup): the fallback
-          // contract is "identical results through either path", so a
-          // request with >100k raw but ≤100k distinct ids must be accepted
-          // (or refused) identically by both
-          val ids = parseIds(req).distinct
-          require(ids.size <= 100000, "getValues request exceeds 100k ids")
-          if (ids.isEmpty)
-            st.nodes.select(col("id"), col("kind"), col("value")).limit(0)
-          else {
-            // past 10k ids a Param.in set would ship inside every
-            // task's plan; a broadcast semi-join scales
-            val wanted =
-              if (ids.size <= 10000) st.nodes.where(Param.in(col("id"), ids))
-              else {
-                import spark.implicits._
-                st.nodes.join(broadcast(ids.toDF("id")), Seq("id"), "left_semi")
-              }
-            wanted.select(col("id"), col("kind"), col("value"))
-          }
-        case "getTargets" =>
-          st.index.where(col("src") === fld(req, "id").get.toLong &&
-              col("kkind") === fld(req, "kkind").get &&
-              col("key") === fld(req, "key").get)
-            .select(col("dst").as("id")).distinct()
-        case "targets" =>
-          st.edges.where(col("src") === fld(req, "id").get.toLong)
-            .select(col("dst").as("id")).distinct()
-        case "sources" =>
-          st.edges.where(col("dst") === fld(req, "id").get.toLong)
-            .select(col("src").as("id")).distinct()
-        case "getStats" =>
-          val (n, e, i) = replica.getStats(fld(req, "id").fold(0L)(_.toLong))
-          import spark.implicits._
-          Seq((n, e, i)).toDF("nodes", "edges", "index")
-        case "watermark" =>
-          // the replica state's WAL coverage stamp — what a mid-txn-read
-          // snapshot carries so the write server can conflict-check at
-          // apply time (RemoteWrite stale-read detection)
-          val (we, wb) = replica.watermark
-          import spark.implicits._
-          Seq((we, wb)).toDF("eidx", "bseq")
-        case other =>
-          throw new IllegalArgumentException(s"unknown read op '$other'")
-      }
-      // staged atomic publish, same rule as every other inbox artifact:
-      // the client sees a complete answer dir or nothing. A target dir
-      // without _SUCCESS is debris from a dead server — clear it so the
-      // retry succeeds instead of refusing on a name collision.
-      val staging = base.resolve("_staging").resolve(reqId)
-      val target = acks.resolve(reqId)
-      deleteRecursively(staging)
-      if (Files.exists(target) && !Files.exists(target.resolve("_SUCCESS")))
-        deleteRecursively(target)
-      answer.coalesce(1).write
-        .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-        .parquet(staging.toString)
-      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case scala.util.control.NonFatal(e) => refuse(reqId, e)
-    }
-
-    /** Publish one batch answer dir + per-request pointers. Crash-safety
-      * of the name: the dir is named after the group's FIRST pending
-      * reqId and that request's pointer is written FIRST — so a same-name
-      * dir found here is provably an orphan of a poll that died before
-      * writing ANY pointer (had any pointer been written, the first
-      * request would not be pending now), and deleting it is safe.
+    /** One op group → one batch dir plus per-request pointers. The dir is
+      * named after the group's FIRST request and that request's pointer is
+      * written FIRST, so a same-name dir found here is an orphan of a poll
+      * that died before writing ANY pointer (had any pointer been written,
+      * the first request would not be pending now), and deleting it is
+      * safe. A failure of the read, the write or the publish sweeps the dir
+      * when no pointer references it (head's pointer missing ⟺ none
+      * exists) and refuses each request still without a pointer, with the
+      * cause; a resubmitted request is answered by a later poll.
       */
-    def publishBatch(ans: DataFrame, reqIds: Seq[String]): Unit = {
-      val name = reqIds.head
-      val batches = acks.resolve("batches")
-      Files.createDirectories(batches)
-      val staging = base.resolve("_staging").resolve(s"batch-$name")
-      val target = batches.resolve(name)
-      deleteRecursively(staging)
-      deleteRecursively(target)
-      ans.coalesce(1).write
-        .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-        .parquet(staging.toString)
-      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-      if (failNextBatchPublish) {
-        failNextBatchPublish = false
-        throw new RuntimeException("injected batch publish failure (test hook)")
-      }
-      reqIds.foreach { r =>
-        writeJsonAtomic(acks.resolve(s"$r.ptr.json"),
-          s"""{"reqId": "$r", "batch": "batches/$name"}""")
+    def answerGroup(op: String, group: Seq[Read]): Unit = {
+      val name = group.head.reqId
+      val batch = acks.resolve("batches").resolve(name)
+      try {
+        val (columns, rows) = answer(replica, st, op, group)
+        val staging = base.resolve("_staging").resolve(s"batch-$name")
+        deleteRecursively(staging)
+        deleteRecursively(batch)
+        OpBatchFile.write(st.spark,
+          StructType(StructField("_reqId", StringType, nullable = false) +: columns),
+          rows, staging)
+        Files.createDirectories(batch.getParent)
+        Files.move(staging, batch, StandardCopyOption.ATOMIC_MOVE)
+        if (failNextBatchPublish) {
+          failNextBatchPublish = false
+          throw new RuntimeException("injected batch publish failure (test hook)")
+        }
+        group.foreach(r => writeJsonAtomic(ptr(r.reqId),
+          s"""{"reqId": "${r.reqId}", "batch": "batches/$name"}"""))
+      } catch {
+        case NonFatal(e) =>
+          if (!Files.exists(ptr(name))) Try(deleteRecursively(batch))
+          group.filterNot(r => Files.exists(ptr(r.reqId))).foreach(r => refuse(r.reqId, e))
       }
     }
 
-    /** One op group → one join job, or the per-request fallback when the
-      * group is oversized or the batch job itself fails.
-      */
-    def answerGroup(op: String, group: Seq[(String, String)]): Unit = {
-      import spark.implicits._
-      // per-request parse/validate first: an oversized or malformed
-      // request is its OWN typed refusal, never a group-wide error
-      val parsed = group.map { case (reqId, req) =>
-        (reqId, req, Try {
-          op match {
-            case "getValues" =>
-              val ids = parseIds(req).distinct
-              require(ids.size <= 100000, "getValues request exceeds 100k ids")
-              ids.map(id => (reqId, id, "", ""))
-            case "getTargets" =>
-              Seq((reqId, fld(req, "id").get.toLong,
-                fld(req, "kkind").get, fld(req, "key").get))
-            case _ => // targets | sources
-              Seq((reqId, fld(req, "id").get.toLong, "", ""))
-          }
-        })
-      }
-      parsed.foreach {
-        case (reqId, _, scala.util.Failure(e)) => refuse(reqId, e)
-        case _ => ()
-      }
-      val ok = parsed.collect { case (reqId, req, scala.util.Success(rows)) =>
-        (reqId, req, rows) }
-      if (ok.isEmpty) return
-      if (ok.iterator.map(_._3.size).sum > maxBatchPairs) {
-        ok.foreach { case (reqId, req, _) => answerOne(reqId, req) }
-        return
-      }
-      val attempt = Try {
-        val pairs = ok.flatMap(_._3)
-        val ans: DataFrame = op match {
-          case "getValues" =>
-            val wanted = broadcast(pairs.map(p => (p._1, p._2))
-              .toDF("_reqId", "id"))
-            st.nodes.join(wanted, Seq("id"), "inner")
-              .select(col("_reqId"), col("id"), col("kind"), col("value"))
-          case "getTargets" =>
-            val keys = broadcast(pairs.toDF("_reqId", "src", "kkind", "key"))
-            st.index.join(keys, Seq("src", "kkind", "key"), "inner")
-              .select(col("_reqId"), col("dst").as("id")).distinct()
-          case "targets" =>
-            val keys = broadcast(pairs.map(p => (p._1, p._2)).toDF("_reqId", "src"))
-            st.edges.join(keys, Seq("src"), "inner")
-              .select(col("_reqId"), col("dst").as("id")).distinct()
-          case _ => // sources
-            val keys = broadcast(pairs.map(p => (p._1, p._2)).toDF("_reqId", "dst"))
-            st.edges.join(keys, Seq("dst"), "inner")
-              .select(col("_reqId"), col("src").as("id")).distinct()
-        }
-        publishBatch(ans, ok.map(_._1))
-      }
-      // batch-level failure (not attributable to one request): fall back
-      // to per-request answers so the failure lands on the culprit only
-      if (attempt.isFailure) {
-        // a failure AFTER the atomic batch-dir move but BEFORE the first
-        // pointer write would leak the published dir forever (no pointer
-        // will ever reference it, and the fallback answers supersede it).
-        // Pointers are written head-first, so head's pointer missing ⟺ no
-        // pointer of this group exists — then the dir is provably
-        // unreferenced and safe to sweep. Best-effort: a failed delete
-        // leaves an orphan for the retention sweep, never a wrong answer.
-        if (!Files.exists(acks.resolve(s"${ok.head._1}.ptr.json")))
-          Try(deleteRecursively(acks.resolve("batches").resolve(ok.head._1)))
-        ok.foreach { case (reqId, req, _) =>
-          if (!Files.exists(acks.resolve(s"$reqId.ptr.json")))
-            answerOne(reqId, req)
-        }
-      }
+    taken.foreach {
+      case (_, reqId, Failure(e)) => refuse(reqId, e)
+      case _ => ()
     }
-
-    val BatchableOps = Set("getValues", "getTargets", "targets", "sources")
-    // a TRANSIENT read failure on a request file must not become a
-    // permanent typed refusal ('unknown read op ?') + archival: skip the
-    // request this poll — it stays in the inbox and the next poll retries
-    val reqs: Seq[(Path, String, String)] = pending.flatMap { p =>
-      val reqId = p.getFileName.toString.stripSuffix(".req.json")
-      Try(Files.readString(p)).toOption.map(req => (p, reqId, req))
-    }
-    val (batchable, individual) = reqs.partition(r =>
-      BatchableOps(fld(r._3, "op").getOrElse("?")))
-    batchable.groupBy(r => fld(r._3, "op").get).toSeq.sortBy(_._1)
-      .foreach { case (op, group) =>
-        answerGroup(op, group.map(r => (r._2, r._3)))
-      }
-    individual.foreach { case (_, reqId, req) => answerOne(reqId, req) }
-    reqs.foreach { case (p, _, _) => archive(p) }
-    reqs.map(_._2)
+    taken.collect { case (_, _, Success(read)) => read }
+      .groupBy(_.op).toSeq.sortBy(_._1)
+      .foreach { case (op, group) => answerGroup(op, group) }
+    taken.foreach { case (p, _, _) => archive(p) }
+    taken.map(_._2)
   }
 
   private def parseIds(req: String): Seq[Long] =
@@ -489,14 +415,14 @@ object RemoteRead {
     * free). Two reclaims:
     *
     *  1. Orphaned batch dirs. A batch dir is named after its group's head
-    *     reqId and the head's pointer is written FIRST (publishBatch), so
+    *     reqId and the head's pointer is written FIRST (answerPending), so
     *     `batches/<name>` is referenced by SOME pointer iff
     *     `<name>.ptr.json` exists and itself references `batches/<name>`.
     *     A dir failing that check is debris of a poll that died between
     *     the atomic move and the first pointer write (possibly since
     *     re-answered under a different head) — unreferenced now and
     *     forever, safe to sweep. A same-named PENDING request is left for
-    *     publishBatch's own target-clearing.
+    *     answerPending's own target-clearing.
     *
     *  2. `answered/` compaction. Archived request files exist only so a
     *     restarted client never reuses a consumed seq; past `maxAnswered`

@@ -654,12 +654,10 @@ object RemoteWrite {
 
   /** Session-op cap per group-commit flush: bounds the size of the single
     * WAL batch a poll publishes (driver-built, one partition — the same
-    * driver-memory contract as the replay bound). Tunable per deployment
-    * via -Dgraft.write.groupOps; a var only as a chunking test seam.
+    * driver-memory contract as the replay bound). A var only as a chunking
+    * test seam.
     */
-  private[graft] var GroupCommitMaxOps: Int =
-    sys.props.get("graft.write.groupOps")
-      .flatMap(s => Try(s.toInt).toOption).getOrElse(100000)
+  private[graft] var GroupCommitMaxOps: Int = 100000
 
   /** Serve loop: poll-and-apply every `pollMs` until `keepGoing` turns
     * false. The minimal continuous server — a caller owning the store runs

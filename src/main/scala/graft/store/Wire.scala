@@ -116,6 +116,21 @@ object Wire {
       else Seq.empty
     }
 
+  /** Lay received artifacts under `base`, in frame order, each by an
+    * atomic move: a read answer's pointer travels after its batch files,
+    * and an awaiting client polls only for pointers and refusals, so it
+    * never follows a pointer to a half-laid batch.
+    */
+  private def lay(base: Path, files: Seq[(String, Array[Byte])]): Unit =
+    files.foreach { case (rel, bytes) =>
+      val t = base.resolve(requireSafe(rel))
+      Files.createDirectories(t.getParent)
+      val tmp = t.resolveSibling(t.getFileName.toString + ".wiretmp")
+      Files.write(tmp, bytes)
+      Files.move(tmp, t, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+
   // ------------------------------------------------------------ server
 
   /** Serves read frames from `read` and/or write frames against `write`
@@ -139,51 +154,35 @@ object Wire {
     def port: Int = server.getLocalPort
     def host: String = InetAddress.getLoopbackAddress.getHostAddress
 
-    private def lay(base: Path, files: Seq[(String, Array[Byte])]): Unit =
-      files.foreach { case (rel, bytes) =>
-        val t = base.resolve(requireSafe(rel))
-        Files.createDirectories(t.getParent)
-        val tmp = t.resolveSibling(t.getFileName.toString + ".wiretmp")
-        Files.write(tmp, bytes)
-        Files.move(tmp, t, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-
     private def handleRead(files: Seq[(String, Array[Byte])])
         : Seq[(String, Array[Byte])] = {
       val replica = read.getOrElse(
         throw new IllegalStateException("this server has no read replica"))
       lay(readDir, files)
-      RemoteRead.answerPending(replica, readDir.toString)
       val reqIds = files.map(_._1).filter(_.endsWith(".req.json"))
         .map(_.stripSuffix(".req.json"))
       val acks = readDir.resolve("acks")
+      def errOf(id: String) = acks.resolve(s"$id.err.json")
+      def ptrOf(id: String) = acks.resolve(s"$id.ptr.json")
+      // a poll may leave requests past its id budget for the next one
+      while (!reqIds.forall(id => Files.exists(errOf(id)) || Files.exists(ptrOf(id))) &&
+          RemoteRead.answerPending(replica, readDir.toString).nonEmpty) ()
       reqIds.flatMap { id =>
-        val err = acks.resolve(s"$id.err.json")
-        val ptr = acks.resolve(s"$id.ptr.json")
-        val ansDir = acks.resolve(id)
+        val (err, ptr) = (errOf(id), ptrOf(id))
         if (Files.exists(err)) Seq((s"acks/$id.err.json", Files.readAllBytes(err)))
+        else if (!Files.exists(ptr)) Seq.empty
         else {
           // a pointer answer references a shared batch dir — ship the
           // batch alongside so the client's unmodified pointer-follow
           // finds it locally (REPLACE_EXISTING makes re-ships idempotent)
-          val ptrFiles =
-            if (!Files.exists(ptr)) Seq.empty
-            else {
-              val rel = """"batch":\s*"((?:[^"\\]|\\.)*)"""".r
-                .findFirstMatchIn(Files.readString(ptr)).map(_.group(1))
-                .getOrElse(throw new IllegalStateException(
-                  s"malformed pointer answer for $id"))
-              val batch = acks.resolve(requireSafe(rel))
-              regularFilesUnder(batch).map(f =>
-                (s"acks/$rel/${batch.relativize(f)}", Files.readAllBytes(f))) :+
-                ((s"acks/$id.ptr.json", Files.readAllBytes(ptr)))
-            }
-          val dirFiles =
-            if (!Files.isDirectory(ansDir)) Seq.empty
-            else regularFilesUnder(ansDir).map(f =>
-              (s"acks/$id/${ansDir.relativize(f)}", Files.readAllBytes(f)))
-          ptrFiles ++ dirFiles
+          val rel = """"batch":\s*"((?:[^"\\]|\\.)*)"""".r
+            .findFirstMatchIn(Files.readString(ptr)).map(_.group(1))
+            .getOrElse(throw new IllegalStateException(
+              s"malformed pointer answer for $id"))
+          val batch = acks.resolve(requireSafe(rel))
+          regularFilesUnder(batch).map(f =>
+            (s"acks/$rel/${batch.relativize(f)}", Files.readAllBytes(f))) :+
+            ((s"acks/$id.ptr.json", Files.readAllBytes(ptr)))
         }
       }
     }
@@ -359,20 +358,6 @@ object Wire {
     @volatile private var running = true
     @volatile private var failure: Option[Throwable] = None
 
-    private def deliver(files: Seq[(String, Array[Byte])]): Unit = {
-      // _SUCCESS is the completeness marker the awaiting client checks —
-      // lay it LAST so a half-delivered answer is never read as whole
-      val (markers, rest) = files.partition(_._1.endsWith("_SUCCESS"))
-      (rest ++ markers).foreach { case (rel, bytes) =>
-        val t = dir.resolve(requireSafe(rel))
-        Files.createDirectories(t.getParent)
-        val tmp = t.resolveSibling(t.getFileName.toString + ".wiretmp")
-        Files.write(tmp, bytes)
-        Files.move(tmp, t, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-
     private def pumpOnce(): Unit =
       // names are filtered BEFORE any bytes are read — an already-shipped
       // artifact costs a directory listing entry per poll, not a re-read
@@ -388,7 +373,7 @@ object Wire {
           // a server-side failure stops the pump; the wrapped client's
           // next await surfaces it via checkFailed with the real cause
           throw new IllegalStateException(s"server refused frame: $msg")
-        } else deliver(ackFiles)
+        } else lay(dir, ackFiles)
         shipped += name
       }
 

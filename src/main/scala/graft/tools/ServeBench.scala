@@ -6,10 +6,9 @@ import graft.graph.GraphQueries.{CustomerV, GeoModel, GeoRoot, GeoV}
 import graft.store.{GraphReplica, GraphStore, RemoteRead, RemoteWrite}
 
 /** Serve-path throughput receipts: wall-clock requests/sec for the
-  * thin-client READ path (batched poll vs forced per-request) and
-  * acked-txns/sec for the WRITE path, under one realistic burst each —
-  * the measured form of the reference's per-action round-trip cost model
-  * (Client.hs:71-117). Emits ONE JSON line; record it in SERVE_r{N}.json.
+  * thin-client READ path and acked-txns/sec for the WRITE path, under one
+  * realistic burst each — the measured form of the reference's per-action
+  * round-trip cost model (Client.hs:71-117). Emits ONE JSON line; record it in SERVE_r{N}.json.
   *
   * Usage: runMain graft.tools.ServeBench [readClients] [reqsPerClient]
   *                                       [idsPerReq] [writeTxns]
@@ -49,20 +48,19 @@ object ServeBench {
       inbox
     }
     val nReqs = readClients * reqsPerClient
-    def drainReads(inbox: String, cap: Int): Double = {
+    def drainReads(inbox: String): Double = {
       val t0 = System.nanoTime()
       var answered = 0
       while (answered < nReqs) {
-        val got = RemoteRead.answerPendingBounded(replica, inbox, cap).size
+        val got = RemoteRead.answerPending(replica, inbox).size
         require(got > 0, s"stalled at $answered/$nReqs answered")
         answered += got
       }
       (System.nanoTime() - t0) / 1e9
     }
-    // warmup: absorb codegen/JIT so both paths are measured warm
-    drainReads(writeReadBurst(), Int.MaxValue)
-    val batchedSec = drainReads(writeReadBurst(), Int.MaxValue)
-    val perReqSec = drainReads(writeReadBurst(), -1)
+    // warmup: absorb codegen/JIT so the path is measured warm
+    drainReads(writeReadBurst())
+    val readSec = drainReads(writeReadBurst())
 
     // ---- WRITE burst: writeTxns shipped txns (newNode + addTarget each),
     // 8 client namespaces, drained by the owner's applyPending poll loop
@@ -127,9 +125,7 @@ object ServeBench {
 
     println(
       s"""{"metric":"serve","read":{"requests":$nReqs,"ids_per_req":$idsPerReq,""" +
-      s""""batched_sec":${fmt(batchedSec)},"batched_rps":${fmt(nReqs / batchedSec)},""" +
-      s""""per_request_sec":${fmt(perReqSec)},"per_request_rps":${fmt(nReqs / perReqSec)},""" +
-      s""""batched_speedup":${fmt(perReqSec / batchedSec)}},""" +
+      s""""sec":${fmt(readSec)},"rps":${fmt(nReqs / readSec)}},""" +
       s""""write":{"txns":$writeTxns,"sec":${fmt(writeSec)},""" +
       s""""txn_rps":${fmt(writeTxns / writeSec)}},""" +
       s""""wire":{"read_requests":16,"ids_per_req":$idsPerReq,""" +

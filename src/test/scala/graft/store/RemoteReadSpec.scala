@@ -129,65 +129,90 @@ class RemoteReadSpec extends AnyFunSuite {
     store.close()
   }
 
-  test("N same-op requests answer with O(1) Spark jobs (batched poll)") {
-    val (store, dir, mj, bj) = storeWithData()
+  /** The storeWithData graph in a checkpoint — the replica's materialized
+    * bases — then, in the WAL after it (the replica's tails), an artist
+    * whose name (an index key) holds `"` and `\`, linked from the root and
+    * from the song.
+    */
+  private def replicaWithBasesAndTail() = {
+    val (s1, dir, mj, bj) = storeWithData()
+    s1.close()
+    val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
+    val q = store.session.newNode(Artist(2, Quoted))
+    store.session.addTarget(store.session.root, q)
+    store.session.addTarget(bj, q)
+    store.commit()
     val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
     replica.catchUp()
+    (store, replica, mj, bj, q)
+  }
+
+  private val Quoted = "He said \"hi\" \\o/"
+
+  /** A string as a JSON string literal's body (the client's escaping). */
+  private def json(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  test("N same-op requests answer with O(1) Spark jobs (batched poll)") {
+    val (store, replica, mj, bj, q) = replicaWithBasesAndTail()
+    val st = replica.currentState
+    Seq(st.nodeTable, st.edgeTable, st.indexTable).foreach(t =>
+      assert(!t.base.isEmpty, "the replica's bases must be materialized"))
     val inbox = java.nio.file.Paths.get(
       Files.createTempDirectory("graft-rr-batch-").toString)
     val client = new RemoteRead.Client(spark, CatalogueModel, inbox.toString, "jb")
-    // 6 getValues (one of them all-unknown ids → empty answer) + 2 targets,
-    // written directly so ONE poll sees them all
-    (0 until 6).foreach { i =>
-      val ids = if (i == 5) "424242" else s"$mj, $bj"
+    def req(i: Int, body: String) =
       Files.writeString(inbox.resolve(f"jb-$i%06d.req.json"),
-        s"""{"reqId": "jb-00000$i", "op": "getValues", "ids": [$ids]}""")
+        f"""{"reqId": "jb-$i%06d", $body}""")
+    // 6 getValues (one of them all-unknown ids → empty answer), 2 targets,
+    // a malformed getTargets, 1 sources and 1 getTargets, written directly
+    // so ONE poll sees them all
+    (0 until 6).foreach { i =>
+      req(i, s""""op": "getValues", "ids": [${if (i == 5) "424242" else s"$mj, $bj"}]""")
     }
-    Files.writeString(inbox.resolve("jb-000006.req.json"),
-      s"""{"reqId": "jb-000006", "op": "targets", "id": $bj}""")
-    Files.writeString(inbox.resolve("jb-000007.req.json"),
-      s"""{"reqId": "jb-000007", "op": "targets", "id": $mj}""")
+    req(6, s""""op": "targets", "id": $bj""")
+    req(7, s""""op": "targets", "id": $mj""")
     // malformed member of a batchable group: missing its id field — must
     // get its OWN typed refusal without poisoning the group's batch
-    Files.writeString(inbox.resolve("jb-000008.req.json"),
-      """{"reqId": "jb-000008", "op": "getTargets", "kkind": "K"}""")
+    req(8, """"op": "getTargets", "kkind": "K"""")
+    req(9, s""""op": "sources", "id": $mj""")
+    req(10, s""""op": "getTargets", "id": 0, "kkind": "Catalogue_Artist_Name", """ +
+      s""""key": "${json(Quoted)}"""")
 
-    spark.sparkContext.setJobGroup("rr-batched-poll", "batched read poll")
-    val answered =
-      try RemoteRead.answerPending(replica, inbox.toString)
-      finally spark.sparkContext.clearJobGroup()
-    assert(answered.size === 9)
+    // a JVM compiles a scan's row projection the first time it scans a
+    // table schema (the index schema here, unless an earlier spec did):
+    // a one-time cache fill, paid by a poll of other requests first
+    val warm = java.nio.file.Paths.get(Files.createTempDirectory("graft-rr-warm-").toString)
+    Seq(""""op": "getValues", "ids": [0]""", """"op": "targets", "id": 0""",
+      """"op": "sources", "id": 0""", """"op": "getTargets", "id": 0, "kkind": "K", "key": "k"""")
+      .zipWithIndex.foreach { case (b, i) =>
+        Files.writeString(warm.resolve(s"w-$i.req.json"), s"""{"reqId": "w-$i", $b}""")
+      }
+    assert(RemoteRead.answerPending(replica, warm.toString).size === 4)
+
+    var answered = Seq.empty[String]
+    val cost = graft.tools.CostProbe.costOf(spark) {
+      answered = RemoteRead.answerPending(replica, inbox.toString)
+    }
+    assert(answered.size === 11)
+    // one probe per op kind: at most one Spark job each, run on the
+    // tables' planned RDDs — no Catalyst pass, no generated class
+    assert(cost.jobs <= 4 && cost.sqlExecutions === 0 && cost.compiles === 0,
+      s"a poll of 4 op kinds cost $cost")
     assert(client.await("jb-000008", 5000L).result.isLeft,
       "a malformed batchable request is an individual refusal")
 
-    // structural proof of batching: every answer is a POINTER into a
-    // shared batch dir — no per-request parquet dir was written at all
+    // every answer is a POINTER into its op group's batch dir
     val acks = inbox.resolve("acks")
     val ptrs = GraphStore.listPaths(acks)
       .map(_.getFileName.toString).filter(_.endsWith(".ptr.json"))
-    assert(ptrs.size === 8, s"expected 8 pointer answers, got $ptrs")
+    assert(ptrs.size === 10, s"expected 10 pointer answers, got $ptrs")
+    assert(GraphStore.listPaths(acks).forall(p =>
+      !Files.isDirectory(p) || p.getFileName.toString == "batches"),
+      "no per-request answer dir")
     val batches = GraphStore.listPaths(acks.resolve("batches"))
       .map(_.getFileName.toString)
-    assert(batches.toSet === Set("jb-000000", "jb-000006"),
+    assert(batches.toSet === Set("jb-000000", "jb-000006", "jb-000009", "jb-000010"),
       "one batch dir per op group, named after the group's first request")
-
-    // job-count proof: 8 requests, ≤ 6 jobs — O(op groups), not O(N).
-    // Each group is ONE logical write; AQE materializes its shuffle
-    // stages as extra "jobs" (the targets group's distinct costs ~3),
-    // where the per-request path would pay that PER REQUEST (≥ 8 writes
-    // plus per-request AQE stages). The status tracker is fed
-    // asynchronously — poll until the count is stable.
-    def jobs() = spark.sparkContext.statusTracker
-      .getJobIdsForGroup("rr-batched-poll").length
-    var last = -1
-    var stableSince = System.nanoTime()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    while (System.nanoTime() < deadline &&
-        (jobs() != last || System.nanoTime() - stableSince < 1000000000L)) {
-      if (jobs() != last) { last = jobs(); stableSince = System.nanoTime() }
-      Thread.sleep(50L)
-    }
-    assert(last >= 1 && last <= 6, s"batched poll used $last jobs for 8 requests")
 
     // pointer answers round-trip with full value fidelity, including the
     // all-unknown request (empty result, schema intact)
@@ -199,58 +224,81 @@ class RemoteReadSpec extends AnyFunSuite {
       assert(got === Map(mj -> Artist(1, "Michael Jackson"),
         bj -> Song("Billie Jean")))
     }
-    assert(client.await("jb-000005", 5000L).result.toOption.get.count() === 0L,
-      "all-unknown getValues answers empty WITH schema, not an error")
-    assert(client.await("jb-000006", 5000L).result.toOption.get.collect()
-      .map(_.getLong(0)).toSeq === Seq(mj))
-    assert(client.await("jb-000007", 5000L).result.toOption.get.count() === 0L)
+    def ids(i: Int) = client.await(f"jb-$i%06d", 5000L).result.toOption.get
+      .collect().map(_.getLong(0)).toSet
+    assert(ids(5).isEmpty, "all-unknown getValues answers empty WITH schema, not an error")
+    assert(ids(6) === Set(mj, q))
+    assert(ids(7).isEmpty)
+    assert(ids(9) === Set(0L, bj))
+    assert(ids(10) === Set(q))
     // re-poll: pointer answers count as answered
     assert(RemoteRead.answerPending(replica, inbox.toString).isEmpty)
     store.close()
   }
 
-  test("property: batched poll and per-request answers are row-identical") {
-    val (store, dir, mj, bj) = storeWithData()
-    val root = store.session.root
-    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
-    replica.catchUp()
+  test("property: served answers equal DataFrame reads of the replica state") {
+    val (store, replica, mj, bj, q) = replicaWithBasesAndTail()
+    val st = replica.currentState
+    import org.apache.spark.sql.functions.col
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    val ids = Seq(root, mj, bj, 424242L) // known AND unknown ids
-    val genReq: Gen[String] = Gen.frequency(
-      3 -> Gen.someOf(ids).map(s =>
-        s""""op": "getValues", "ids": [${s.mkString(", ")}]"""),
-      2 -> Gen.oneOf(ids).map(id => s""""op": "targets", "id": $id"""),
-      2 -> Gen.oneOf(ids).map(id => s""""op": "sources", "id": $id"""),
-      2 -> Gen.oneOf(ids).map(id => s""""op": "getTargets", "id": $id, """ +
-        s""""kkind": "Catalogue_Artist_Name", "key": "Michael Jackson""""),
-      1 -> Gen.const(""""op": "getStats", "id": 0"""))
-    val genSet: Gen[List[String]] =
-      Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, genReq))
+    // known ids in the bases and in the tail, unknown and negative ones
+    val pool = Seq(0L, mj, bj, q, 424242L, -7L)
+    val keys = Seq(IndexKey("Catalogue_Artist_Name", "Michael Jackson"),
+      IndexKey("Catalogue_Artist_Name", Quoted), IndexKey("Song_Artist"),
+      IndexKey("K\"\\", "\\\"")) // the last one indexes nothing
+    sealed trait Req { def body: String }
+    case class Values(ids: List[Long]) extends Req {
+      def body = s""""op": "getValues", "ids": [${ids.mkString(", ")}]"""
+    }
+    case class Keyed(id: Long, k: IndexKey) extends Req {
+      def body = s""""op": "getTargets", "id": $id, "kkind": "${json(k.kind)}", """ +
+        s""""key": "${json(k.key)}""""
+    }
+    case class Hop(op: String, id: Long) extends Req {
+      def body = s""""op": "$op", "id": $id"""
+    }
+    case class Stats(from: Long) extends Req { def body = s""""op": "getStats", "id": $from""" }
+    case object Alien extends Req { def body = """"op": "dropEverything"""" }
+    val genReq: Gen[Req] = Gen.frequency(
+      3 -> Gen.listOf(Gen.oneOf(pool)).map(Values(_)), // duplicates included
+      1 -> Gen.const(Values(Nil)),
+      2 -> Gen.zip(Gen.oneOf(pool), Gen.oneOf(keys)).map { case (id, k) => Keyed(id, k) },
+      2 -> Gen.zip(Gen.oneOf("targets", "sources"), Gen.oneOf(pool)).map {
+        case (op, id) => Hop(op, id) },
+      1 -> Gen.oneOf(pool).map(Stats(_)),
+      1 -> Gen.const(Alien))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def expected(r: Req): Option[Seq[String]] = r match {
+      case Values(ids) => Some(rows(st.nodes.where(col("id").isin(ids: _*))
+        .select("id", "kind", "value")))
+      case Keyed(id, k) => Some(rows(st.targetsDF(id, k)))
+      case Hop("targets", id) =>
+        Some(rows(st.edges.where(col("src") === id).select("dst").distinct()))
+      case Hop(_, id) =>
+        Some(rows(st.edges.where(col("dst") === id).select("src").distinct()))
+      case Stats(from) =>
+        val (n, e, i) = st.stats(from)
+        Some(Seq(org.apache.spark.sql.Row(n, e, i).toString))
+      case Alien => None
+    }
     // raw scalacheck Gen with fixed seeds (scalatestplus is not in the
     // offline cache) — deterministic across runs, seeds printed on failure
     (1 to 5).foreach { i =>
-      val bodies = genSet(Gen.Parameters.default, Seed(1000L + i))
-        .getOrElse(sys.error(s"gen failed for seed ${1000L + i}"))
-      // cap -1 forces EVERY group through the per-request fallback; the
-      // huge cap keeps every group on the batched join path
-      def runWith(cap: Int): Map[String, Either[String, Seq[String]]] = {
-        val inbox = java.nio.file.Paths.get(
-          Files.createTempDirectory("graft-rr-prop-").toString)
-        bodies.zipWithIndex.foreach { case (b, j) =>
-          Files.writeString(inbox.resolve(f"pp-$j%06d.req.json"),
-            s"""{"reqId": "pp-$j%06d", $b}""")
-        }
-        RemoteRead.answerPendingBounded(replica, inbox.toString, cap)
-        val reader = new RemoteRead.Client(spark, CatalogueModel, inbox.toString, "rd")
-        bodies.indices.map { j =>
-          val reqId = f"pp-$j%06d"
-          reqId -> reader.await(reqId, timeoutMs = 5000L).result
-            .map(df => df.collect().map(_.toString).sorted.toSeq)
-        }.toMap
+      val seed = 1000L + i
+      val reqs = Gen.choose(1, 8).flatMap(Gen.listOfN(_, genReq))(
+        Gen.Parameters.default, Seed(seed)).getOrElse(sys.error(s"gen failed for seed $seed"))
+      val inbox = java.nio.file.Paths.get(Files.createTempDirectory("graft-rr-prop-").toString)
+      reqs.zipWithIndex.foreach { case (r, j) =>
+        Files.writeString(inbox.resolve(f"pp-$j%06d.req.json"),
+          f"""{"reqId": "pp-$j%06d", ${r.body}}""")
       }
-      assert(runWith(1000000) === runWith(-1),
-        s"batched != per-request for seed ${1000L + i}: $bodies")
+      assert(RemoteRead.answerPending(replica, inbox.toString).size === reqs.size)
+      val reader = new RemoteRead.Client(spark, CatalogueModel, inbox.toString, "rd")
+      reqs.zipWithIndex.foreach { case (r, j) =>
+        val served = reader.await(f"pp-$j%06d", timeoutMs = 5000L).result.map(rows)
+        assert(served.toOption === expected(r), s"seed $seed, request $r")
+      }
     }
     store.close()
   }
@@ -330,17 +378,16 @@ class RemoteReadSpec extends AnyFunSuite {
     store.close()
   }
 
-  test("batch publish failure after the dir move sweeps the orphan and falls back") {
+  test("batch publish failure sweeps the orphan and refuses the group") {
     val (store, dir, mj, bj) = storeWithData()
     val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
     replica.catchUp()
     val inbox = java.nio.file.Paths.get(
       Files.createTempDirectory("graft-rr-orph-").toString)
     val client = new RemoteRead.Client(spark, CatalogueModel, inbox.toString, "or")
-    (0 until 2).foreach { i =>
-      Files.writeString(inbox.resolve(f"or-$i%06d.req.json"),
-        s"""{"reqId": "or-00000$i", "op": "getValues", "ids": [$mj, $bj]}""")
-    }
+    def req(i: Int) = Files.writeString(inbox.resolve(f"or-$i%06d.req.json"),
+      f"""{"reqId": "or-$i%06d", "op": "getValues", "ids": [$mj, $bj]}""")
+    (0 until 2).foreach(req)
     // die AFTER the atomic batch-dir move, BEFORE any pointer write: the
     // published dir is unreferenced — it must be swept, not leaked forever
     RemoteRead.failNextBatchPublish = true
@@ -351,49 +398,55 @@ class RemoteReadSpec extends AnyFunSuite {
       .forall(!_.getFileName.toString.endsWith(".ptr.json")),
       "no pointer may reference the failed batch")
     assert(!Files.exists(acks.resolve("batches").resolve("or-000000")),
-      "the unreferenced published batch dir must be swept on fallback")
+      "the unreferenced published batch dir must be swept")
     (0 until 2).foreach { i =>
+      val refusal = client.await(f"or-$i%06d", timeoutMs = 5000L).result
+      assert(refusal.left.toOption.exists(_.contains("injected batch publish failure")),
+        s"each request of the group is refused with the cause: $refusal")
+    }
+    assert(RemoteRead.answerPending(replica, inbox.toString).isEmpty)
+    // the same reads, resubmitted, are answered
+    (2 until 4).foreach(req)
+    assert(RemoteRead.answerPending(replica, inbox.toString) === Seq("or-000002", "or-000003"))
+    (2 until 4).foreach { i =>
       val got = client.await(f"or-$i%06d", timeoutMs = 5000L)
         .result.toOption.get.collect()
         .map(r => r.getLong(0) -> CatalogueModel.fromValueRow(
           r.getString(1), r.getStruct(2))).toMap
       assert(got === Map(mj -> Artist(1, "Michael Jackson"),
-        bj -> Song("Billie Jean")),
-        "fallback answers must be identical to the batched form's")
+        bj -> Song("Billie Jean")))
     }
-    assert(RemoteRead.answerPending(replica, inbox.toString).isEmpty)
     store.close()
   }
 
-  test("oversized group falls back to per-request answers with identical results") {
+  test("a poll past the id budget answers a prefix, the next the rest") {
     val (store, dir, mj, bj) = storeWithData()
     val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
     replica.catchUp()
-    val inbox = java.nio.file.Paths.get(
-      Files.createTempDirectory("graft-rr-fb-").toString)
-    val client = new RemoteRead.Client(spark, CatalogueModel, inbox.toString, "fb")
-    (0 until 3).foreach { i =>
-      Files.writeString(inbox.resolve(f"fb-$i%06d.req.json"),
-        s"""{"reqId": "fb-00000$i", "op": "getValues", "ids": [$mj, $bj]}""")
+    // the same requests into two inboxes: one served under a budget of 4
+    // ids, the other by one unbounded poll
+    val bodies = Seq.fill(3)(s""""op": "getValues", "ids": [$mj, $bj]""") ++ Seq(
+      s""""op": "targets", "id": $bj""",
+      s""""op": "getValues", "ids": [0, $mj, $bj, 424242, -7]""")
+    val (bounded, whole) = (
+      java.nio.file.Paths.get(Files.createTempDirectory("graft-rr-fb-").toString),
+      java.nio.file.Paths.get(Files.createTempDirectory("graft-rr-fb1-").toString))
+    for (inbox <- Seq(bounded, whole); (b, i) <- bodies.zipWithIndex)
+      Files.writeString(inbox.resolve(f"fb-$i%06d.req.json"), f"""{"reqId": "fb-$i%06d", $b}""")
+    def poll() = RemoteRead.answerPoll(replica, bounded.toString, 4)
+    assert(poll() === Seq("fb-000000", "fb-000001"), "2 + 2 ids fill the budget")
+    assert(poll() === Seq("fb-000002", "fb-000003"), "2 + 1 ids; the next 5 would pass it")
+    assert(poll() === Seq("fb-000004"), "a request past the budget is answered alone")
+    assert(poll().isEmpty)
+    assert(RemoteRead.answerPending(replica, whole.toString).size === 5)
+    def answers(inbox: java.nio.file.Path) = {
+      val reader = new RemoteRead.Client(spark, CatalogueModel, inbox.toString, "rd")
+      bodies.indices.map(i => reader.await(f"fb-$i%06d", timeoutMs = 5000L).result
+        .map(_.collect().map(_.toString).sorted.toSeq))
     }
-    // cap of 1 pair: the 6-pair group exceeds it → every request answered
-    // on the per-request path, with the group's results unchanged
-    val answered = RemoteRead.answerPendingBounded(replica, inbox.toString, 1)
-    assert(answered.size === 3)
-    val acks = inbox.resolve("acks")
-    assert(GraphStore.listPaths(acks)
-      .forall(!_.getFileName.toString.endsWith(".ptr.json")),
-      "fallback must not publish pointer answers")
-    (0 until 3).foreach { i =>
-      val ack = client.await(f"fb-$i%06d", timeoutMs = 5000L)
-      val got = ack.result.toOption.get.collect()
-        .map(r => r.getLong(0) -> CatalogueModel.fromValueRow(
-          r.getString(1), r.getStruct(2))).toMap
-      assert(got === Map(mj -> Artist(1, "Michael Jackson"),
-        bj -> Song("Billie Jean")),
-        "per-request fallback answers must equal the batched form's")
-    }
-    assert(RemoteRead.answerPending(replica, inbox.toString).isEmpty)
+    val got = answers(bounded)
+    assert(got.forall(_.isRight))
+    assert(got === answers(whole), "answers must not depend on how polls split the requests")
     store.close()
   }
 }
