@@ -71,11 +71,7 @@ object Bench {
     try {
       val detail = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", s"bench_detail_c$cpus.json"))
-      val tmp = detail.resolveSibling(detail.getFileName.toString + ".tmp")
-      java.nio.file.Files.writeString(tmp, fullLine + "\n")
-      java.nio.file.Files.move(tmp, detail,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      store.GraphStore.writeJsonAtomic(detail, fullLine + "\n")
       System.err.println(s"[bench] per-query detail -> $detail")
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] detail file write failed (non-fatal): $e")

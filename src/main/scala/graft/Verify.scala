@@ -3,13 +3,6 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-    }
-
   def main(args: Array[String]): Unit = {
     // optional 3rd arg (comma-separated query names) = local-iteration
     // filter; the driver always calls with exactly (sfDir, outDir)
@@ -55,7 +48,7 @@ object Verify {
           // this export error into a confusing downstream DuckDB mismatch
           // instead of a clear missing-input failure
           subdirs.foreach { sub =>
-            try deleteRecursively(Paths.get(s"$auxDir/$sub"))
+            try store.GraphStore.deleteRecursively(Paths.get(s"$auxDir/$sub"))
             catch { case e2: Throwable =>
               System.err.println(
                 s"[verify] cleanup of $auxDir/$sub failed: ${e2.getMessage}")

@@ -1,6 +1,7 @@
 package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.{Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -207,35 +208,20 @@ final class GraphStore[V] private (
   private[store] def txnTag(txnId: String): Option[String] = {
     if (txnTagCache == null) {
       val found = scala.collection.mutable.Map[String, String]()
-      val TxnId = """"txnId":\s*"([^"]*)"""".r
       def scanEvents(base: Path): Unit =
         if (Files.isDirectory(base))
           GraphStore.listDirs(base, _.endsWith(".events")).foreach { ev =>
+            // archived dirs carry a one-file tag index (written at
+            // archival time, see cleanUp) — O(dirs) recovery instead of a
+            // walk over every batch dir ever committed. An EMPTY sidecar
+            // still counts: "indexed, no tags". Live dirs (bounded: the
+            // current session's batches) and pre-index archives fall back
+            // to the per-batch walk
             val sidecar = ev.resolve(GraphStore.TxnTagIndexName)
-            if (Files.exists(sidecar)) {
-              // archived dirs carry a one-file tag index (written at
-              // archival time, see cleanUp) — O(dirs) recovery instead of
-              // a walk over every batch dir ever committed. An EMPTY
-              // sidecar still counts: "indexed, no tags".
-              Files.readString(sidecar).linesIterator.foreach { line =>
-                TxnId.findFirstMatchIn(line).foreach(mt => found(mt.group(1)) = line)
-              }
-            } else {
-              // live dirs (bounded: the current session's batches) and
-              // pre-index archives fall back to the per-batch walk
-              GraphStore.listDirs(ev, _.startsWith("batch-")).foreach { b =>
-                val m = b.resolve("_txnmeta.json")
-                if (Files.exists(m)) {
-                  // one tag per line (group-commit batches carry many);
-                  // tags were flattened+trimmed at write time, so per-line
-                  // trim resolves to the same string before/after archival
-                  Files.readString(m).linesIterator.map(_.trim)
-                    .filter(_.nonEmpty).foreach { json =>
-                      TxnId.findFirstMatchIn(json).foreach(mt => found(mt.group(1)) = json)
-                    }
-                }
-              }
-            }
+            val tags =
+              if (Files.exists(sidecar)) GraphStore.tagLines(sidecar)
+              else GraphStore.batchTags(ev)
+            tags.foreach(json => GraphStore.jsonField(json, "txnId").foreach(found(_) = json))
           }
       scanEvents(path)
       scanEvents(path.resolve("archive"))
@@ -287,18 +273,18 @@ final class GraphStore[V] private (
           }
         }
     }
-    if (dirs.isEmpty) Right((Set.empty, Set.empty))
-    else Try {
-      val rows = spark.read.schema(opSchema).parquet(dirs.map(_.toString): _*)
-        .where(org.apache.spark.sql.functions.col("op")
-          .isin("set", "add", "rmt", "rm"))
-        .select(org.apache.spark.sql.functions.col("op"),
-          org.apache.spark.sql.functions.col("id"),
-          org.apache.spark.sql.functions.col("src"))
-        .limit(GraphStore.maxReplayBatchRows + 1)
-        .collect()
-      if (rows.length > GraphStore.maxReplayBatchRows)
-        Left(s"more than ${GraphStore.maxReplayBatchRows} mutations since " +
+    val bound = GraphStore.maxReplayBatchRows
+    val columns = StructType(Seq("op", "id", "src").map(opSchema(_)))
+    val kinds = Set("set", "add", "rmt", "rm")
+    Try {
+      // the bound counts mutations only: each dir reads what is left of it
+      val rows = dirs.foldLeft(Vector.empty[Row]) { (acc, d) =>
+        if (acc.length > bound) acc
+        else acc ++ OpBatchFile.read(spark, Some(columns), d, bound + 1 - acc.length,
+          r => kinds(r.getString(0)))
+      }
+      if (rows.length > bound)
+        Left(s"more than $bound mutations since " +
           "the snapshot mark")
       else {
         val mutated = rows.iterator.map { r =>
@@ -482,11 +468,8 @@ final class GraphStore[V] private (
       // (tmp + rename): a torn marker would otherwise read as a committed
       // checkpoint whose lenient parse silently resets the id watermark to
       // 0, minting a duplicate root and colliding every subsequent id
-      val metaTmp = ckptDir.resolve("_meta.json.tmp")
-      Files.writeString(metaTmp,
+      GraphStore.writeJsonAtomic(ckptDir.resolve("_meta.json"),
         s"""{"formatVersion": ${GraphStore.FormatVersion}, "nextId": ${session.idWatermark}}""")
-      Files.move(metaTmp, ckptDir.resolve("_meta.json"),
-        StandardCopyOption.ATOMIC_MOVE)
       ckptCommitted = true // seal: from here the checkpoint is the record
     }
     if (failNextCleanUp) {
@@ -648,8 +631,7 @@ object GraphStore {
         val nodes = spark.read.parquet(ckpt.resolve("nodes").toString)
         val edges = spark.read.parquet(ckpt.resolve("edges").toString)
         val index = spark.read.parquet(ckpt.resolve("index").toString)
-        val nextId = """"nextId":\s*(\d+)""".r.findFirstMatchIn(meta)
-          .map(_.group(1).toLong).getOrElse(0L)
+        val nextId = jsonField(meta, "nextId").fold(0L)(_.toLong)
         val st = GraphState(spark, model, nodes, edges, index).checkpointed()
         val s = GraphSession.fromState(spark, model, st, nextId)
         (s, replay(spark, model, path, s, after = c))
@@ -743,12 +725,14 @@ object GraphStore {
         "with commitBulk (replayed set-wise, never collected)")
 
   /** Replay event dirs with index > `after`, ascending — Storage.hs:136-148.
-    * Returns the last replayed index (or `after`).
+    * Like the reference, a driver-sized batch is read straight from its
+    * file ([[OpBatchFile.read]]), with no Spark job. Returns the last
+    * replayed index (or `after`).
     */
   private def replay[V](spark: SparkSession, model: GraphModel[V], path: Path,
       session: GraphSession[V], after: Long): Long = {
     // every batch carries the op schema (driver- and Spark-written alike):
-    // reading with it runs no schema-inference job
+    // a bulk batch read with it runs no schema-inference job
     val schema = opSchema(model)
     val eventDirs = list(path, ".events").filter(_ > after).sorted
     eventDirs.foreach { idx =>
@@ -771,17 +755,16 @@ object GraphStore {
           session.applyBulkTargets(
             spark.read.schema(schema).parquet(b.toString).select("src", "dst"))
         } else {
-          // non-bulk batches are collected to the driver for ordered
-          // replay — driver-sized BY CONSTRUCTION (session ops are
+          // non-bulk batches are read on the driver and replayed in seq
+          // order — driver-sized BY CONSTRUCTION (session ops are
           // driver-issued). Make that invariant explicit instead of
           // implicit: a store whose WAL somehow carries an oversized
           // non-bulk batch (hand-written, foreign tooling) must fail
           // loudly here, not OOM the driver
-          val rows = spark.read.schema(schema).parquet(b.toString)
-            .orderBy("seq").limit(maxReplayBatchRows + 1).collect()
+          val rows = OpBatchFile.read(spark, Some(schema), b, maxReplayBatchRows + 1)
           if (rows.length > maxReplayBatchRows)
             throw new OversizedReplayBatchException(b.toString, maxReplayBatchRows)
-          rows.foreach(r => session.replayOp(rowToOp(model, r)))
+          rows.sortBy(_.getLong(0)).foreach(r => session.replayOp(rowToOp(model, r)))
         }
       }
     }
@@ -814,21 +797,21 @@ object GraphStore {
     */
   private[store] val TxnTagIndexName = "_txnmeta-index.json"
   private def writeTxnTagIndex(dir: Path): Unit = Try {
-    val tags = listDirs(dir, _.startsWith("batch-")).sortBy(_.getFileName.toString)
-      .flatMap { b =>
-        val m = b.resolve("_txnmeta.json")
-        if (Files.exists(m))
-          // preserve line structure: a group-commit batch's file carries one
-          // tag per line; each becomes its own index line (tags were
-          // flattened at write time, so lines cannot bleed into neighbors)
-          Files.readString(m).linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-        else Seq.empty
-      }
-    val tmp = dir.resolve(TxnTagIndexName + ".tmp")
-    Files.writeString(tmp, tags.mkString("", "\n", if (tags.isEmpty) "" else "\n"))
-    Files.move(tmp, dir.resolve(TxnTagIndexName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeJsonAtomic(dir.resolve(TxnTagIndexName), batchTags(dir).map(_ + "\n").mkString)
   }
+
+  /** The tags in a `_txnmeta.json` or a tag index, one per line: a
+    * group-commit batch carries many, and tags are flattened and trimmed
+    * at write time, so a line is one tag before and after archival.
+    */
+  private def tagLines(f: Path): Seq[String] =
+    if (!Files.exists(f)) Seq.empty
+    else Files.readString(f).linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** The tags of every batch of events dir `ev`, in batch order. */
+  private def batchTags(ev: Path): Seq[String] =
+    listDirs(ev, _.startsWith("batch-")).sortBy(_.getFileName.toString)
+      .flatMap(b => tagLines(b.resolve("_txnmeta.json")))
 
   /** Drained directory listing with the stream CLOSED — `Files.list`
     * holds an fd until closed (no cleaner), and the tag-cache scan walks
@@ -837,6 +820,57 @@ object GraphStore {
   private[store] def listPaths(base: Path): Seq[Path] = {
     val s = Files.list(base)
     try s.iterator().asScala.toSeq finally s.close()
+  }
+
+  /** Delete `p` and everything under it; a missing `p` is no error. */
+  private[graft] def deleteRecursively(p: Path): Unit = {
+    if (Files.isDirectory(p)) listPaths(p).foreach(deleteRecursively)
+    Files.deleteIfExists(p)
+  }
+
+  /** Replace `target` with `json` by one atomic rename of a sibling tmp
+    * file: a reader sees the old file or the whole new one.
+    */
+  private[graft] def writeJsonAtomic(target: Path, json: String): Unit = {
+    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
+    Files.writeString(tmp, json)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** `s` as the body of a one-line JSON string: backslash and quote
+    * escaped, line breaks blanked.
+    */
+  private[store] def esc(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "\\\"").replaceAll("[\r\n]", " ")
+
+  /** The value of `key` in a flat one-line JSON object written by the
+    * store: a string unescaped (quote, then backslash — the inverse of
+    * [[esc]]), else the bare token; `None` when absent or null.
+    */
+  private[store] def jsonField(json: String, key: String): Option[String] =
+    ("\"" + Pattern.quote(key) + "\":\\s*(\"(?:[^\"\\\\]|\\\\.)*\"|[^,}\\s]+)").r
+      .findFirstMatchIn(json).map(_.group(1)).filter(_ != "null")
+      .map(v => if (!v.startsWith("\"")) v
+        else v.substring(1, v.length - 1).replace("\\\"", "\"").replace("\\\\", "\\"))
+
+  /** The integers of the array `key` in a flat JSON object; none when
+    * absent.
+    */
+  private[store] def jsonLongs(json: String, key: String): Seq[Long] =
+    ("\"" + Pattern.quote(key) + "\":\\s*\\[([^\\]]*)\\]").r.findFirstMatchIn(json).toSeq
+      .flatMap(m => """-?\d+""".r.findAllIn(m.group(1)).map(_.toLong))
+
+  /** Where client `clientId` resumes numbering: one past the highest seq
+    * of a `<clientId>-<seq>…` entry in `dirs` (a missing dir holds none),
+    * and at least `floor` — so a restarted client never reuses an id.
+    */
+  private[store] def nextSeq(clientId: String, dirs: Seq[Path], floor: Long = 0L): Long = {
+    val mine = s"""^${Pattern.quote(clientId)}-(\\d+)""".r
+    dirs.filter(Files.isDirectory(_)).flatMap(listPaths)
+      .flatMap(f => mine.findFirstMatchIn(f.getFileName.toString)
+        .flatMap(m => Try(m.group(1).toLong + 1).toOption))
+      .foldLeft(floor)(_ max _)
   }
 
   private[store] def listDirs(base: Path, nameFilter: String => Boolean): Seq[Path] =
@@ -857,11 +891,6 @@ object GraphStore {
     // the authoritative newer copy; the stale archived one is superseded.
     if (Files.exists(target)) deleteRecursively(target)
     Files.move(from, target, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listPaths(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 
   // ------------------------------------------------------- op serialization

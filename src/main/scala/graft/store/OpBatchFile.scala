@@ -4,36 +4,60 @@ import java.nio.file.{Files, Path}
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.{LocalOutputFile, OutputFile}
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile, OutputFile}
+import org.apache.parquet.io.api.RecordMaterializer
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** A driver-sized batch of rows written as ONE parquet file by parquet's
-  * own writer, on the calling thread, followed by an empty `_SUCCESS`: the
-  * directory a one-task `df.write.parquet` leaves, without the Spark job,
-  * Hadoop's local file system or its commit protocol. Rows are encoded by
-  * Spark's `ParquetWriteSupport`, so `spark.read.parquet` reads the batch
-  * back with the schema it was written with. It writes the WAL's op
-  * batches, RemoteWrite's shipped transactions, and RemoteRead's answer
-  * batches (one per op kind of a poll).
+/** A driver-sized batch of rows as a parquet directory, written and read on
+  * the calling thread by parquet's own writer and reader, with no Spark job.
+  * [[write]] leaves ONE parquet file and an empty `_SUCCESS`: the directory
+  * a one-task `df.write.parquet` leaves, without the Spark job, Hadoop's
+  * local file system or its commit protocol. [[read]] reads back every data
+  * file of such a directory, so a batch written by a Spark job reads too.
+  * Rows are encoded and decoded by Spark's `ParquetWriteSupport` and
+  * `ParquetReadSupport`, so both sides agree with `spark.read.parquet`.
+  * It carries the WAL's op batches, RemoteWrite's shipped transactions, and
+  * RemoteRead's answer batches (one per op kind of a poll).
   *
-  * The write settings come from `spark.conf`, not the thread-local
-  * `SQLConf.get`: the buffered WAL worker writes from its own thread.
+  * The settings come from `spark.conf`, not the thread-local `SQLConf.get`:
+  * the buffered WAL worker writes from its own thread.
   */
 object OpBatchFile {
 
-  /** The settings `ParquetWriteSupport` requires in its configuration. */
-  private val writeSettings = Seq(
-    SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
-    SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
-    SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
-    SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).map(_.key)
+  /** A configuration holding the settings `ParquetWriteSupport` requires,
+    * those `ParquetToSparkSchemaConverter` reads (`ParquetReadSupport`
+    * builds one per file) and the read rebase modes, as `spark.conf` has
+    * them.
+    */
+  private def settings(spark: SparkSession): Configuration = {
+    val conf = new Configuration(false)
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
+      SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
+      SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE,
+      SQLConf.PARQUET_BINARY_AS_STRING,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+      SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
+      SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
+      SQLConf.PARQUET_REBASE_MODE_IN_READ,
+      SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ)
+      .foreach(e => conf.set(e.key, spark.conf.get(e.key)))
+    conf
+  }
 
   private final class Builder(file: OutputFile)
       extends ParquetWriter.Builder[InternalRow, Builder](file) {
@@ -46,9 +70,8 @@ object OpBatchFile {
     * `dir` exists. The caller publishes `dir` (a staged-dir rename).
     */
   def write(spark: SparkSession, schema: StructType, rows: Seq[Row], dir: Path): Unit = {
-    val conf = new Configuration(false)
+    val conf = settings(spark)
     ParquetWriteSupport.setSchema(schema, conf)
-    writeSettings.foreach(k => conf.set(k, spark.conf.get(k)))
     val codecName = spark.conf.get(SQLConf.PARQUET_COMPRESSION.key)
     val codec =
       if (codecName.equalsIgnoreCase("none")) CompressionCodecName.UNCOMPRESSED
@@ -62,5 +85,77 @@ object OpBatchFile {
     try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
     finally writer.close()
     Files.createFile(dir.resolve("_SUCCESS"))
+  }
+
+  /** `ParquetReadSupport` for one file read with `conf`: reads `schema`,
+    * else the Spark schema its writer stored in the footer, with the
+    * file's own datetime rebase modes, as Spark's file source does.
+    */
+  private final class Support(schema: Option[StructType], conf: Configuration)
+      extends ReadSupport[InternalRow] {
+    private var inner: ParquetReadSupport = _
+    var readSchema: StructType = _
+
+    override def init(context: InitContext): ReadSupport.ReadContext = {
+      val meta = context.getKeyValueMetadata
+      val fileMeta = (k: String) => Option(meta.get(k)).map(_.iterator.next).orNull
+      readSchema = schema
+        .orElse(Option(fileMeta(ParquetReadSupport.SPARK_METADATA_KEY))
+          .map(DataType.fromJson(_).asInstanceOf[StructType]))
+        .getOrElse(new ParquetToSparkSchemaConverter(conf).convert(context.getFileSchema))
+      conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, readSchema.json)
+      inner = new ParquetReadSupport(None, false,
+        DataSourceUtils.datetimeRebaseSpec(fileMeta,
+          conf.get(SQLConf.PARQUET_REBASE_MODE_IN_READ.key)),
+        DataSourceUtils.int96RebaseSpec(fileMeta,
+          conf.get(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key)))
+      inner.init(new InitContext(conf, meta, context.getFileSchema))
+    }
+
+    override def prepareForRead(conf: Configuration, keyValueMetaData: java.util.Map[String, String],
+        fileSchema: MessageType, context: ReadSupport.ReadContext): RecordMaterializer[InternalRow] =
+      inner.prepareForRead(conf, keyValueMetaData, fileSchema, context)
+  }
+
+  // given its configuration up front: the one-argument constructor builds
+  // a default Hadoop configuration, whose resource loading costs more than
+  // reading a small batch
+  private final class ReaderBuilder(file: Path, conf: Configuration, support: Support)
+      extends ParquetReader.Builder[InternalRow](new LocalInputFile(file),
+        new HadoopParquetConfiguration(conf)) {
+    override protected def getReadSupport(): ReadSupport[InternalRow] = support
+  }
+
+  /** The rows of the batch directory `dir` that pass `keep`, at most
+    * `limit` of them: every data file (names not starting with `_` or `.`,
+    * the files `spark.read.parquet` reads) in name order, each in file
+    * order. `schema` selects columns by name, as `spark.read.schema` does;
+    * `None` reads each file with the schema stored in its footer.
+    */
+  def read(spark: SparkSession, schema: Option[StructType], dir: Path,
+      limit: Int = Int.MaxValue, keep: Row => Boolean = _ => true): Seq[Row] = {
+    val conf = settings(spark)
+    val files = GraphStore.listPaths(dir)
+      .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.matches("[_.].*"))
+      .sortBy(_.getFileName.toString)
+    val out = Vector.newBuilder[Row]
+    var n = 0
+    val it = files.iterator
+    while (n < limit && it.hasNext) {
+      val support = new Support(schema, conf)
+      val reader = new ReaderBuilder(it.next(), conf, support).build()
+      try {
+        var record = reader.read()
+        // the schema is known once the first read opened the file; the
+        // reader reuses its record, so each is converted before the next
+        lazy val toScala = CatalystTypeConverters.createToScalaConverter(support.readSchema)
+        while (n < limit && record != null) {
+          val row = toScala(record).asInstanceOf[Row]
+          if (keep(row)) { out += row; n += 1 }
+          record = reader.read()
+        }
+      } finally reader.close()
+    }
+    out.result()
   }
 }

@@ -2,8 +2,7 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import scala.util.{Failure, Success, Try}
@@ -41,35 +40,26 @@ import graft.graph.{GraphModel, GraphState, IndexKey}
   * point reads, no Catalyst pass), written as one parquet file on the
   * driver ([[OpBatchFile]]) — the exact value fidelity of the checkpoint
   * format, so any `valueSchema` round-trips. The client reads its rows
-  * back with one Spark read per answer: the per-action round trip of the
-  * reference, which is why a read-heavy deployment runs a local
-  * [[GraphReplica]] instead; this exists so the THIN-client posture has a
-  * runnable analog too.
+  * back from that file on the driver ([[OpBatchFile.read]], no Spark
+  * job): still the per-action round trip of the reference, which is why a
+  * read-heavy deployment runs a local [[GraphReplica]] instead; this
+  * exists so the THIN-client posture has a runnable analog too.
   *
   * Consistency: answers reflect the serving replica's state at dispatch —
   * WAL-prefix-ordered, eventually consistent, same as any follower read.
   */
 object RemoteRead {
 
-  /** One client's view of a completed read — either the answer DataFrame
-    * or the server's typed refusal message.
+  /** One client's view of a completed read — either the answer rows or
+    * the server's typed refusal message.
     */
-  final case class ReadAck(reqId: String, result: Either[String, DataFrame])
-
-  private def writeJsonAtomic(target: Path, json: String): Unit = {
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"").replaceAll("[\r\n]", " ")
+  final case class ReadAck(reqId: String, result: Either[String, Seq[Row]])
 
   // ------------------------------------------------------------- client side
 
-  /** Read client: ships read requests, awaits parquet answers. `spark` is
-    * used only to READ answers — the client runs no graph logic at all
+  /** Read client: ships read requests, awaits parquet answers. `spark`
+    * only supplies the parquet settings answers are read with — the client
+    * runs no Spark job and no graph logic at all
     * (the reference's typed thin client, Client.hs:53-60).
     */
   final class Client[V](spark: SparkSession, model: GraphModel[V],
@@ -78,35 +68,24 @@ object RemoteRead {
       s"clientId '$clientId' must be [A-Za-z0-9_-]+ (it names request files)")
     private val base = Paths.get(dir)
     Files.createDirectories(base)
-    private val mySeq = s"""^${java.util.regex.Pattern.quote(clientId)}-(\\d+)""".r
     private var seq: Long = {
-      def seqsIn(p: Path): Seq[Long] =
-        if (!Files.isDirectory(p)) Seq.empty
-        else GraphStore.listPaths(p)
-          .flatMap(f => mySeq.findFirstMatchIn(f.getFileName.toString)
-            .flatMap(m => Try(m.group(1).toLong).toOption))
       // answered/ holds archived request files — a restarted client must
       // not reuse a seq whose request the server already consumed. Past
       // the retention bound those files compact into the _seq.json
       // high-water map (retention()), so this scan stays O(recent), not
       // O(all requests ever shipped)
-      val compacted: Option[Long] = {
-        val f = base.resolve("answered").resolve("_seq.json")
-        if (!Files.exists(f)) None
-        else ("\"" + java.util.regex.Pattern.quote(clientId) + "\":\\s*(\\d+)").r
-          .findFirstMatchIn(Try(Files.readString(f)).getOrElse(""))
-          .flatMap(m => Try(m.group(1).toLong).toOption)
-      }
-      (seqsIn(base) ++ seqsIn(base.resolve("acks")) ++
-        seqsIn(base.resolve("answered")) ++ compacted)
-        .maxOption.fold(0L)(_ + 1L)
+      val compacted = Try(Files.readString(base.resolve("answered").resolve("_seq.json")))
+        .toOption.flatMap(GraphStore.jsonField(_, clientId))
+        .flatMap(s => Try(s.toLong + 1).toOption)
+      GraphStore.nextSeq(clientId, Seq(base, base.resolve("acks"), base.resolve("answered")),
+        compacted.getOrElse(0L))
     }
 
     private def submit(body: String): String = {
       require(seq < 1000000L,
         s"client '$clientId' exceeded 10^6 requests; use a new clientId")
       val reqId = f"$clientId-$seq%06d"
-      writeJsonAtomic(base.resolve(s"$reqId.req.json"),
+      GraphStore.writeJsonAtomic(base.resolve(s"$reqId.req.json"),
         s"""{"reqId": "$reqId", $body}""")
       seq += 1
       reqId
@@ -131,7 +110,7 @@ object RemoteRead {
     /** getTargets under an index key (distinct), served from the index. */
     def getTargets(id: Long, k: IndexKey, timeoutMs: Long = 30000L): Seq[Long] = {
       val reqId = submit(s""""op": "getTargets", "id": $id, """ +
-        s""""kkind": "${esc(k.kind)}", "key": "${esc(k.key)}"""")
+        s""""kkind": "${GraphStore.esc(k.kind)}", "key": "${GraphStore.esc(k.key)}"""")
       rows(await(reqId, timeoutMs)).map(_.getLong(0)).sorted
     }
 
@@ -165,7 +144,7 @@ object RemoteRead {
     }
 
     private def rows(ack: ReadAck) = ack.result match {
-      case Right(df) => df.collect().toSeq
+      case Right(rows) => rows
       case Left(err) => throw new NoSuchElementException(
         s"read ${ack.reqId} refused: $err")
     }
@@ -173,8 +152,8 @@ object RemoteRead {
     /** Block until the server answers `reqId`: a typed refusal
       * (`.err.json`), or a pointer (`.ptr.json`) into the batch dir that
       * answers the poll's requests of one op, whose rows for this request
-      * (the `_reqId` column) are the answer — schema-exact even when they
-      * are none.
+      * (the `_reqId` column, dropped) are the answer. The batch is read on
+      * this thread with the schema its writer stored in the file.
       */
     def await(reqId: String, timeoutMs: Long = 30000L): ReadAck = {
       val errFile = base.resolve("acks").resolve(s"$reqId.err.json")
@@ -182,20 +161,16 @@ object RemoteRead {
       val deadline = System.nanoTime() + timeoutMs * 1000000L
       while (System.nanoTime() < deadline) {
         if (Files.exists(errFile)) {
-          val msg = """"error":\s*"((?:[^"\\]|\\.)*)"""".r
-            .findFirstMatchIn(Files.readString(errFile))
-            .map(_.group(1)).getOrElse("unknown error")
-          return ReadAck(reqId, Left(msg))
+          return ReadAck(reqId, Left(GraphStore.jsonField(Files.readString(errFile), "error")
+            .getOrElse("unknown error")))
         }
         if (Files.exists(ptrFile)) {
-          val rel = """"batch":\s*"((?:[^"\\]|\\.)*)"""".r
-            .findFirstMatchIn(Files.readString(ptrFile)).map(_.group(1))
-            .getOrElse(throw new IllegalStateException(
-              s"malformed pointer answer for $reqId"))
+          val rel = GraphStore.jsonField(Files.readString(ptrFile), "batch").getOrElse(
+            throw new IllegalStateException(s"malformed pointer answer for $reqId"))
           val batch = base.resolve("acks").resolve(rel)
           return ReadAck(reqId, Right(
-            spark.read.parquet(batch.toString)
-              .where(col("_reqId") === reqId).drop("_reqId")))
+            OpBatchFile.read(spark, None, batch, keep = _.getString(0) == reqId)
+              .map(r => Row.fromSeq(r.toSeq.tail))))
         }
         Thread.sleep(10L)
       }
@@ -205,18 +180,6 @@ object RemoteRead {
   }
 
   // ------------------------------------------------------------- server side
-
-  /** Field extractor over the flat request JSON (inverse of the client's
-    * esc(): unescape quote then backslash — a key containing quotes must
-    * match the index verbatim, not its escaped spelling).
-    */
-  private def fld(req: String, k: String): Option[String] = {
-    val r = ("\"" + java.util.regex.Pattern.quote(k) +
-      "\":\\s*(\"(?:[^\"\\\\]|\\\\.)*\"|[^,}\\s]+)").r
-    r.findFirstMatchIn(req)
-      .map(_.group(1).stripPrefix("\"").stripSuffix("\"")
-        .replace("\\\"", "\"").replace("\\\\", "\\"))
-  }
 
   /** Most distinct ids one getValues request may carry. */
   private val MaxRequestIds = 100000
@@ -239,17 +202,18 @@ object RemoteRead {
       key: Option[IndexKey] = None)
 
   private def parse(reqId: String, req: String): Read = {
-    def field(k: String) = fld(req, k).getOrElse(
+    // unescaped: a key containing quotes must match the index verbatim
+    def field(k: String) = GraphStore.jsonField(req, k).getOrElse(
       throw new IllegalArgumentException(s"read request has no '$k'"))
     field("op") match {
       case "getValues" =>
-        val ids = parseIds(req).distinct
+        val ids = GraphStore.jsonLongs(req, "ids").distinct
         require(ids.size <= MaxRequestIds, "getValues request exceeds 100k ids")
         Read(reqId, "getValues", ids)
       case "getTargets" => Read(reqId, "getTargets", Seq(field("id").toLong),
         Some(IndexKey(field("kkind"), field("key"))))
       case op @ ("targets" | "sources") => Read(reqId, op, Seq(field("id").toLong))
-      case "getStats" => Read(reqId, "getStats", Seq(fld(req, "id").fold(0L)(_.toLong)))
+      case "getStats" => Read(reqId, "getStats", Seq(GraphStore.jsonField(req, "id").fold(0L)(_.toLong)))
       case "watermark" => Read(reqId, "watermark", Nil)
       case other => throw new IllegalArgumentException(s"unknown read op '$other'")
     }
@@ -344,8 +308,8 @@ object RemoteRead {
     val st = replica.currentState
 
     def refuse(reqId: String, e: Throwable): Unit =
-      writeJsonAtomic(err(reqId),
-        s"""{"reqId": "$reqId", "error": "${esc(
+      GraphStore.writeJsonAtomic(err(reqId),
+        s"""{"reqId": "$reqId", "error": "${GraphStore.esc(
           s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")}"}""")
 
     // non-throwing by the marker-cleanup discipline: losing the archive
@@ -373,8 +337,8 @@ object RemoteRead {
       try {
         val (columns, rows) = answer(replica, st, op, group)
         val staging = base.resolve("_staging").resolve(s"batch-$name")
-        deleteRecursively(staging)
-        deleteRecursively(batch)
+        GraphStore.deleteRecursively(staging)
+        GraphStore.deleteRecursively(batch)
         OpBatchFile.write(st.spark,
           StructType(StructField("_reqId", StringType, nullable = false) +: columns),
           rows, staging)
@@ -384,11 +348,11 @@ object RemoteRead {
           failNextBatchPublish = false
           throw new RuntimeException("injected batch publish failure (test hook)")
         }
-        group.foreach(r => writeJsonAtomic(ptr(r.reqId),
+        group.foreach(r => GraphStore.writeJsonAtomic(ptr(r.reqId),
           s"""{"reqId": "${r.reqId}", "batch": "batches/$name"}"""))
       } catch {
         case NonFatal(e) =>
-          if (!Files.exists(ptr(name))) Try(deleteRecursively(batch))
+          if (!Files.exists(ptr(name))) Try(GraphStore.deleteRecursively(batch))
           group.filterNot(r => Files.exists(ptr(r.reqId))).foreach(r => refuse(r.reqId, e))
       }
     }
@@ -403,11 +367,6 @@ object RemoteRead {
     taken.foreach { case (p, _, _) => archive(p) }
     taken.map(_._2)
   }
-
-  private def parseIds(req: String): Seq[Long] =
-    """"ids":\s*\[([^\]]*)\]""".r.findFirstMatchIn(req)
-      .map(m => """-?\d+""".r.findAllIn(m.group(1)).map(_.toLong).toSeq)
-      .getOrElse(Seq.empty)
 
   /** Retention for answer artifacts — the read-inbox analog of
     * GraphStore.cleanUp, run by the inbox OWNER between polls (never
@@ -442,7 +401,7 @@ object RemoteRead {
         Try(Files.readString(ptr)).toOption
           .exists(_.contains(s""""batches/$name""""))
       if (!live && !Files.exists(base.resolve(s"$name.req.json")))
-        Try(deleteRecursively(b))
+        Try(GraphStore.deleteRecursively(b))
     }
     val answered = base.resolve("answered")
     if (Files.isDirectory(answered)) {
@@ -463,7 +422,7 @@ object RemoteRead {
           val hi = math.max(prev.getOrElse(c, -1L), highs.getOrElse(c, -1L))
           s""""$c": $hi"""
         }
-        writeJsonAtomic(seqFile, merged.mkString("{", ", ", "}"))
+        GraphStore.writeJsonAtomic(seqFile, merged.mkString("{", ", ", "}"))
         files.foreach(f => Try(Files.deleteIfExists(f)))
       }
     }
@@ -486,13 +445,5 @@ object RemoteRead {
       Thread.sleep(pollMs)
       i += 1
     }
-  }
-
-  /** Recursive delete shared by the store layer — Wire's request-dir
-    * cleanup and the specs use it too (a production serving path must not
-    * ride a test-named helper, the r16 ADVICE). */
-  private[store] def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) GraphStore.listPaths(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 }

@@ -2,11 +2,9 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import graft.graph._
@@ -80,32 +78,19 @@ object RemoteWrite {
 
   private[store] val MetaName = "_meta.json"
 
-  private def writeJsonAtomic(target: Path, json: String): Unit = {
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   private def ackJson(a: TxnAck): String = {
     val assigned = a.assigned.toSeq.sortBy(_._1)
       .map { case (l, g) => s""""$l": $g""" }.mkString("{", ", ", "}")
-    val err = a.error.fold("null") { e =>
-      "\"" + e.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\r\n]", " ") + "\""
-    }
+    val err = a.error.fold("null")(e => "\"" + GraphStore.esc(e) + "\"")
     s"""{"txnId": "${a.txnId}", "applied": ${a.applied}, "assigned": $assigned, "error": $err}"""
   }
 
   private[store] def parseAck(json: String): TxnAck = {
-    val txnId = """"txnId":\s*"([^"]*)"""".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("")
-    val applied = """"applied":\s*(true|false)""".r.findFirstMatchIn(json)
-      .exists(_.group(1) == "true")
+    val txnId = GraphStore.jsonField(json, "txnId").getOrElse("")
+    val applied = GraphStore.jsonField(json, "applied").contains("true")
     val assigned = """"(-\d+)":\s*(\d+)""".r.findAllMatchIn(json)
       .map(m => m.group(1).toLong -> m.group(2).toLong).toMap
-    val error = """"error":\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(json)
-      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
+    val error = GraphStore.jsonField(json, "error")
     TxnAck(txnId, applied, assigned, error)
   }
 
@@ -303,17 +288,8 @@ object RemoteWrite {
 
     private val inbox = Paths.get(inboxDir)
     Files.createDirectories(inbox)
-    private val mySeq = s"""^${java.util.regex.Pattern.quote(clientId)}-(\\d+)""".r
-
-    private var seq: Long = {
-      def seqsIn(p: Path): Seq[Long] =
-        if (!Files.isDirectory(p)) Seq.empty
-        else GraphStore.listPaths(p)
-          .flatMap(f => mySeq.findFirstMatchIn(f.getFileName.toString)
-            .flatMap(m => Try(m.group(1).toLong).toOption))
-      (seqsIn(inbox) ++ Seq("acks", "applied").flatMap(s => seqsIn(inbox.resolve(s))))
-        .maxOption.fold(0L)(_ + 1L)
-    }
+    private var seq: Long =
+      GraphStore.nextSeq(clientId, Seq(inbox, inbox.resolve("acks"), inbox.resolve("applied")))
 
     /** Ship one transaction; returns its txnId. Published atomically: ops
       * parquet (one file written on this driver, no Spark job:
@@ -345,7 +321,7 @@ object RemoteWrite {
       val txnId = f"$clientId-$seq%06d"
       val staging = inbox.resolve("_staging").resolve(s"$txnId.txn")
       val target = inbox.resolve(s"$txnId.txn")
-      deleteRecursively(staging)
+      GraphStore.deleteRecursively(staging)
       val rows = txn.ops.toSeq.zipWithIndex.map { case (op, i) =>
         GraphStore.opToRow(model, op, i.toLong)
       }
@@ -369,7 +345,7 @@ object RemoteWrite {
         Files.createDirectories(target.getParent)
         Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
       } catch {
-        case e: Throwable => deleteRecursively(staging); throw e
+        case e: Throwable => GraphStore.deleteRecursively(staging); throw e
       }
       seq += 1
       txnId
@@ -409,23 +385,18 @@ object RemoteWrite {
     */
   val MaxApplyAttempts: Int = 2
 
-  /** Per-poll txn-dir load jobs — 1 when the batched read served the whole
-    * poll, N on the per-dir fallback. Observability hook for the spec that
-    * pins the batched-read claim.
-    */
-  private[store] var lastPollTxnLoadJobs: Int = 0
-
   /** Apply every committed, un-acked transaction in `inboxDir` to the open
     * store — the server's worker loop body (Server.hs:17-69). Returns the
     * acks written this poll, in apply order. Call in a loop (or from a
     * scheduler) to serve continuously; [[serveWhile]] wraps exactly that.
     *
-    * Poll cost: all txn dirs are loaded in ONE parquet read (split back
-    * per-txn by `input_file_name`), all global refs across the poll are
-    * existence-checked in ONE job, and all applied txns are made durable by
-    * ONE group-committed WAL batch per [[GroupCommitMaxOps]] ops (tagged
-    * with every member's ack) — a poll finding N txns runs ~3 jobs +
-    * O(N/groupOps) publishes, not O(N).
+    * Poll cost: each txn dir is read on the driver ([[OpBatchFile.read]],
+    * no Spark job), all global refs across the poll are existence-checked
+    * in ONE point read (a job only over a materialized base), and all
+    * applied txns are made durable by ONE group-committed WAL batch per
+    * [[GroupCommitMaxOps]] ops (tagged with every member's ack) — a poll
+    * finding N txns runs at most the existence check's and the commit's
+    * jobs + O(N/groupOps) publishes, not O(N).
     */
   def applyPending[V](store: GraphStore[V], inboxDir: String): Seq[TxnAck] = {
     // the fail-stop is mechanical, not advisory: after a mid-txn failure
@@ -439,7 +410,6 @@ object RemoteWrite {
     val appliedDir = inbox.resolve("applied")
     Files.createDirectories(acksDir)
     Files.createDirectories(appliedDir)
-    if (!Files.isDirectory(inbox)) return Seq.empty
 
     val tTriage0 = System.nanoTime()
     val committed = GraphStore.listPaths(inbox)
@@ -456,7 +426,7 @@ object RemoteWrite {
     // phase 1 — driver-side triage, no Spark jobs: already-acked dirs
     // archive; tagged dirs (applied, ack lost in the crash window) replay
     // their RECORDED ack; repeat poison pills quarantine; version
-    // mismatches refuse. Everything else proceeds to the batched load.
+    // mismatches refuse. Everything else proceeds to the load.
     // The meta string read here rides along to applyOne — the stale-read
     // conflict check parses it from THIS read, so an IO error at apply
     // time can never silently skip the check (fail-closed: a triage-time
@@ -482,7 +452,7 @@ object RemoteWrite {
           // subgraph reachable from root — so replay the recorded ack:
           // the client sees the mapping of the application that is
           // actually durable. Exactly-once restored across the window.
-          writeJsonAtomic(ackFile, recorded)
+          GraphStore.writeJsonAtomic(ackFile, recorded)
           archive(dir, appliedDir)
           // tagged means durably applied — any failure strike is stale;
           // non-throwing like every marker cleanup (a transient FS error
@@ -495,7 +465,7 @@ object RemoteWrite {
             s"quarantined after $n mid-apply failures; txn moved to " +
               "quarantined/ for inspection — a deterministic apply failure " +
               "must not wedge the serve loop"))
-          writeJsonAtomic(ackFile, ackJson(ack))
+          GraphStore.writeJsonAtomic(ackFile, ackJson(ack))
           // same non-throwing replace-aware move as archive(): a stale
           // same-named dir in quarantined/ must not wedge the loop
           archive(dir, inbox.resolve("quarantined"))
@@ -503,13 +473,13 @@ object RemoteWrite {
           acks += ack
         case None =>
           val meta = Try(Files.readString(dir.resolve(MetaName))).getOrElse("")
-          val version = """"formatVersion":\s*(\d+)""".r.findFirstMatchIn(meta)
-            .map(_.group(1).toInt).getOrElse(-1)
+          val version = GraphStore.jsonField(meta, "formatVersion")
+            .flatMap(v => Try(v.toInt).toOption).getOrElse(-1)
           if (version != GraphStore.FormatVersion) {
             val ack = TxnAck(txnId, applied = false, Map.empty, Some(
               s"incompatible format version $version; server speaks " +
                 s"${GraphStore.FormatVersion} — the ClientFailure handshake refusal"))
-            writeJsonAtomic(ackFile, ackJson(ack))
+            GraphStore.writeJsonAtomic(ackFile, ackJson(ack))
             archive(dir, appliedDir)
             acks += ack
           } else todo += ((dir, txnId, meta))
@@ -518,7 +488,7 @@ object RemoteWrite {
     if (todo.isEmpty) return acks.toSeq
     val tLoad0 = System.nanoTime()
 
-    // phase 2 — ONE parquet load over every todo dir (fallback: per-dir)
+    // phase 2 — read and decode each todo dir on the driver
     val loaded = loadTxns(store, todo.toSeq.map(t => (t._1, t._2)))
     val tExists0 = System.nanoTime()
 
@@ -601,7 +571,7 @@ object RemoteWrite {
       }
       group.foreach { case (dir, txnId, ack) =>
         store.recordTxnTag(txnId, ackJson(ack))
-        writeJsonAtomic(acksDir.resolve(s"$txnId.json"), ackJson(ack))
+        GraphStore.writeJsonAtomic(acksDir.resolve(s"$txnId.json"), ackJson(ack))
         // a SUCCESSFUL apply clears any prior failure marker: a txn that
         // fail-stopped once transiently and then succeeded must not carry
         // that strike toward quarantine forever. Best-effort and
@@ -628,7 +598,7 @@ object RemoteWrite {
         groupOps += loaded(txnId).toOption.map(_.size).getOrElse(0)
         if (groupOps >= flushBound) flushGroup()
       } else {
-        writeJsonAtomic(acksDir.resolve(s"$txnId.json"), ackJson(ack))
+        GraphStore.writeJsonAtomic(acksDir.resolve(s"$txnId.json"), ackJson(ack))
         archive(dir, appliedDir)
       }
       acks += ack
@@ -709,58 +679,28 @@ object RemoteWrite {
     case GraphOp.RemoveNode(id) => Seq(id)
   }
 
-  /** Load + decode every todo txn dir: ONE parquet read over all dirs on
-    * the fast path (rows split back per-txn by file name, re-ordered by
-    * seq driver-side), falling back to per-dir reads when the batched load
-    * fails (foreign schema in one dir must not poison its neighbors) or
-    * the poll's total rows exceed the driver bound (so a single oversized
-    * txn gets its typed per-txn refusal, not a whole-poll error).
+  /** Read + decode every todo txn dir, each on its own: a dir that fails
+    * to read (corrupt file, foreign schema) or holds more than the driver
+    * bound is that txn's typed refusal and never its neighbours'.
     * `Left` = refusal message; `Right` = decoded ops in seq order.
     */
   private def loadTxns[V](store: GraphStore[V], todo: Seq[(Path, String)])
       : Map[String, Either[String, Seq[GraphOp[V]]]] = {
     val bound = GraphStore.maxReplayBatchRows
-    def decode(rows: Seq[Row], txnId: String): Either[String, Seq[GraphOp[V]]] =
-      if (rows.length > bound)
-        Left(s"txn exceeds $bound ops; shipped txns are driver-sized by " +
-          "contract — use commitBulk for bulk ingest")
-      else Try(rows.map(r => GraphStore.rowToOp(store.modelOf, r))).toEither
-        .left.map(e => s"undecodable txn: ${e.getClass.getSimpleName}: " +
-          s"${Option(e.getMessage).getOrElse("")}")
-    def perDir(): Map[String, Either[String, Seq[GraphOp[V]]]] = {
-      lastPollTxnLoadJobs = todo.size
-      todo.map { case (dir, txnId) =>
-        txnId -> (Try {
-          store.sparkOf.read.parquet(dir.toString)
-            .select("seq", "op", "id", "src", "dst", "kind", "value")
-            .orderBy("seq").limit(bound + 1).collect().toSeq
-        }.toEither.left.map(e => s"undecodable txn: ${e.getClass.getSimpleName}: " +
-          s"${Option(e.getMessage).getOrElse("")}")
-          .flatMap(rows => decode(rows, txnId)))
-      }.toMap
-    }
-    val batched = Try {
-      val TxnOf = """.*/([^/]+)\.txn/[^/]*$""".r
-      val rows = store.sparkOf.read.parquet(todo.map(_._1.toString): _*)
-        .select(col("seq"), col("op"), col("id"), col("src"), col("dst"),
-          col("kind"), col("value"), input_file_name().as("_file"))
-        .limit(bound + 1).collect()
-      if (rows.length > bound) None // poll exceeds the driver bound: attribute per-dir
-      else Some(rows.toSeq.groupBy(r => r.getString(7) match {
-        case TxnOf(id) => id
-        case other => other
-      }))
-    }.toOption.flatten
-    batched match {
-      case Some(byTxn) =>
-        lastPollTxnLoadJobs = 1
-        todo.map { case (_, txnId) =>
-          val rows = byTxn.getOrElse(txnId, Seq.empty)
-            .sortBy(_.getLong(0)).map(r => Row(r.toSeq.dropRight(1): _*))
-          txnId -> decode(rows, txnId)
-        }.toMap
-      case None => perDir()
-    }
+    val schema = GraphStore.opSchema(store.modelOf)
+    def undecodable(e: Throwable) =
+      s"undecodable txn: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
+    todo.map { case (dir, txnId) =>
+      txnId -> Try(OpBatchFile.read(store.sparkOf, Some(schema), dir, bound + 1))
+        .toEither.left.map(undecodable)
+        .flatMap { rows =>
+          if (rows.length > bound)
+            Left(s"txn exceeds $bound ops; shipped txns are driver-sized by " +
+              "contract — use commitBulk for bulk ingest")
+          else Try(rows.sortBy(_.getLong(0)).map(r => GraphStore.rowToOp(store.modelOf, r)))
+            .toEither.left.map(undecodable)
+        }
+    }.toMap
   }
 
   /** Parse the optional snapshot-read stamp out of a shipped txn's meta:
@@ -770,14 +710,12 @@ object RemoteWrite {
     */
   private[store] def parseReadInfo(meta: String)
       : Option[((Long, Long), Set[Long], Set[Long], Set[Long])] = {
-    def ids(k: String): Set[Long] =
-      (s""""$k":\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(meta)
-        .map(m => """-?\d+""".r.findAllIn(m.group(1)).map(_.toLong).toSet)
-        .getOrElse(Set.empty)
-    """"readMark":\s*\[\s*(-?\d+)\s*,\s*(-?\d+)\s*\]""".r
-      .findFirstMatchIn(meta)
-      .map(m => ((m.group(1).toLong, m.group(2).toLong),
-        ids("valueReads"), ids("targetReads"), ids("targetMembers")))
+    def ids(k: String) = GraphStore.jsonLongs(meta, k).toSet
+    GraphStore.jsonLongs(meta, "readMark") match {
+      case Seq(eidx, bseq) =>
+        Some(((eidx, bseq), ids("valueReads"), ids("targetReads"), ids("targetMembers")))
+      case _ => None
+    }
   }
 
   private def applyOne[V](store: GraphStore[V], inbox: Path, txnId: String,
@@ -946,7 +884,7 @@ object RemoteWrite {
     val moved = Try {
       Files.createDirectories(appliedDir)
       val target = appliedDir.resolve(dir.getFileName)
-      if (Files.exists(target)) deleteRecursively(target)
+      if (Files.exists(target)) GraphStore.deleteRecursively(target)
       Files.move(dir, target, StandardCopyOption.REPLACE_EXISTING)
     }
     if (moved.isFailure)
@@ -955,10 +893,5 @@ object RemoteWrite {
           appliedDir.resolve(s"${dir.getFileName}-dup$i"))))
         .find(_.isSuccess)
     ()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) GraphStore.listPaths(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 }

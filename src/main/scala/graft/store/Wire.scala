@@ -57,9 +57,6 @@ object Wire {
   private def freshClientId(): String =
     s"wire-${ProcessHandle.current.pid}-${clientSeq.incrementAndGet()}"
 
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"").replaceAll("[\r\n]", " ")
-
   private def writeFrame(out: DataOutputStream, header: String,
       files: Seq[(String, Array[Byte])]): Unit = {
     val h = header.getBytes("UTF-8")
@@ -101,8 +98,7 @@ object Wire {
   }
 
   private def kindOf(header: String): String =
-    """"kind":\s*"([a-z]+)"""".r.findFirstMatchIn(header)
-      .map(_.group(1)).getOrElse("?")
+    GraphStore.jsonField(header, "kind").getOrElse("?")
 
   private def daemon(name: String)(body: => Unit): Thread = {
     val t = new Thread(new Runnable { def run(): Unit = body }, name)
@@ -175,10 +171,8 @@ object Wire {
           // a pointer answer references a shared batch dir — ship the
           // batch alongside so the client's unmodified pointer-follow
           // finds it locally (REPLACE_EXISTING makes re-ships idempotent)
-          val rel = """"batch":\s*"((?:[^"\\]|\\.)*)"""".r
-            .findFirstMatchIn(Files.readString(ptr)).map(_.group(1))
-            .getOrElse(throw new IllegalStateException(
-              s"malformed pointer answer for $id"))
+          val rel = GraphStore.jsonField(Files.readString(ptr), "batch").getOrElse(
+            throw new IllegalStateException(s"malformed pointer answer for $id"))
           val batch = acks.resolve(requireSafe(rel))
           regularFilesUnder(batch).map(f =>
             (s"acks/$rel/${batch.relativize(f)}", Files.readAllBytes(f))) :+
@@ -197,7 +191,7 @@ object Wire {
       byTxn.foreach { case (dirName, fs) =>
         require(dirName.endsWith(".txn"), s"unexpected write artifact $dirName")
         val staging = writeDir.resolve("_wirestaging").resolve(dirName)
-        Try(RemoteRead.deleteRecursively(staging))
+        Try(GraphStore.deleteRecursively(staging))
         lay(staging.getParent, fs.map { case (p, b) => (p, b) })
         val target = writeDir.resolve(dirName)
         if (!Files.exists(target))
@@ -242,7 +236,7 @@ object Wire {
       val idCol = str("idCol").getOrElse("vec_id")
       val vecCol = str("vecCol").getOrElse("embedding")
       val base = annDir.resolve(reqId)
-      Try(RemoteRead.deleteRecursively(base))
+      Try(GraphStore.deleteRecursively(base))
       lay(base, files)
       require(Files.isDirectory(base.resolve("queries")),
         "ann frame carried no queries/ parquet")
@@ -296,7 +290,7 @@ object Wire {
                 try Some(readFrame(in))
                 catch {
                   case e: IllegalArgumentException =>
-                    writeFrame(out, s"""{"kind": "error", "message": "${esc(
+                    writeFrame(out, s"""{"kind": "error", "message": "${GraphStore.esc(
                       s"malformed frame: ${Option(e.getMessage).getOrElse("")}")}"}""",
                       Seq.empty)
                     alive = false
@@ -307,7 +301,7 @@ object Wire {
                   try handle(h, fs)
                   catch {
                     case e: Throwable =>
-                      (s"""{"kind": "error", "message": "${esc(
+                      (s"""{"kind": "error", "message": "${GraphStore.esc(
                         s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")}"}""",
                         Seq.empty[(String, Array[Byte])])
                   }
@@ -368,8 +362,7 @@ object Wire {
           readFrame(in)
         }
         if (kindOf(h) == "error") {
-          val msg = """"message":\s*"((?:[^"\\]|\\.)*)"""".r
-            .findFirstMatchIn(h).map(_.group(1)).getOrElse("unknown")
+          val msg = GraphStore.jsonField(h, "message").getOrElse("unknown")
           // a server-side failure stops the pump; the wrapped client's
           // next await surfaces it via checkFailed with the real cause
           throw new IllegalStateException(s"server refused frame: $msg")

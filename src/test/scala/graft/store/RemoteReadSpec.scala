@@ -200,6 +200,9 @@ class RemoteReadSpec extends AnyFunSuite {
       s"a poll of 4 op kinds cost $cost")
     assert(client.await("jb-000008", 5000L).result.isLeft,
       "a malformed batchable request is an individual refusal")
+    // the client reads an answer from its batch file on the driver
+    val read = graft.tools.CostProbe.costOf(spark)(client.await("jb-000006", 5000L))
+    assert(read.jobs === 0 && read.sqlExecutions === 0, s"reading an answer cost $read")
 
     // every answer is a POINTER into its op group's batch dir
     val acks = inbox.resolve("acks")
@@ -218,14 +221,14 @@ class RemoteReadSpec extends AnyFunSuite {
     // all-unknown request (empty result, schema intact)
     (0 until 5).foreach { i =>
       val ack = client.await(f"jb-$i%06d", timeoutMs = 5000L)
-      val got = ack.result.toOption.get.collect()
+      val got = ack.result.toOption.get
         .map(r => r.getLong(0) -> CatalogueModel.fromValueRow(
           r.getString(1), r.getStruct(2))).toMap
       assert(got === Map(mj -> Artist(1, "Michael Jackson"),
         bj -> Song("Billie Jean")))
     }
     def ids(i: Int) = client.await(f"jb-$i%06d", 5000L).result.toOption.get
-      .collect().map(_.getLong(0)).toSet
+      .map(_.getLong(0)).toSet
     assert(ids(5).isEmpty, "all-unknown getValues answers empty WITH schema, not an error")
     assert(ids(6) === Set(mj, q))
     assert(ids(7).isEmpty)
@@ -296,7 +299,8 @@ class RemoteReadSpec extends AnyFunSuite {
       assert(RemoteRead.answerPending(replica, inbox.toString).size === reqs.size)
       val reader = new RemoteRead.Client(spark, CatalogueModel, inbox.toString, "rd")
       reqs.zipWithIndex.foreach { case (r, j) =>
-        val served = reader.await(f"pp-$j%06d", timeoutMs = 5000L).result.map(rows)
+        val served = reader.await(f"pp-$j%06d", timeoutMs = 5000L).result
+          .map(_.map(_.toString).sorted)
         assert(served.toOption === expected(r), s"seed $seed, request $r")
       }
     }
@@ -328,7 +332,7 @@ class RemoteReadSpec extends AnyFunSuite {
     assert(Files.exists(live), "pointer-referenced batch dir must survive")
     // pointer answers still resolve identically after the sweep
     val got = client.await("rt-000001", timeoutMs = 5000L)
-      .result.toOption.get.collect()
+      .result.toOption.get
       .map(r => r.getLong(0) -> CatalogueModel.fromValueRow(
         r.getString(1), r.getStruct(2))).toMap
     assert(got === Map(mj -> Artist(1, "Michael Jackson"),
@@ -363,7 +367,7 @@ class RemoteReadSpec extends AnyFunSuite {
     // a restarted client must get its seq from the compacted map ALONE —
     // even with every acks artifact consumed and cleared, seq 0..5 are
     // burned and the next request must be cp-000006
-    RemoteRead.deleteRecursively(inbox.resolve("acks"))
+    GraphStore.deleteRecursively(inbox.resolve("acks"))
     val c2 = new RemoteRead.Client(spark, CatalogueModel, inbox.toString, "cp")
     val answerer = new Thread(() => {
       Thread.sleep(100L); RemoteRead.answerPending(replica, inbox.toString); ()
@@ -410,7 +414,7 @@ class RemoteReadSpec extends AnyFunSuite {
     assert(RemoteRead.answerPending(replica, inbox.toString) === Seq("or-000002", "or-000003"))
     (2 until 4).foreach { i =>
       val got = client.await(f"or-$i%06d", timeoutMs = 5000L)
-        .result.toOption.get.collect()
+        .result.toOption.get
         .map(r => r.getLong(0) -> CatalogueModel.fromValueRow(
           r.getString(1), r.getStruct(2))).toMap
       assert(got === Map(mj -> Artist(1, "Michael Jackson"),
@@ -442,7 +446,7 @@ class RemoteReadSpec extends AnyFunSuite {
     def answers(inbox: java.nio.file.Path) = {
       val reader = new RemoteRead.Client(spark, CatalogueModel, inbox.toString, "rd")
       bodies.indices.map(i => reader.await(f"fb-$i%06d", timeoutMs = 5000L).result
-        .map(_.collect().map(_.toString).sorted.toSeq))
+        .map(_.map(_.toString).sorted))
     }
     val got = answers(bounded)
     assert(got.forall(_.isRight))

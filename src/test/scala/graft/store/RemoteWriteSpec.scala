@@ -786,7 +786,7 @@ class RemoteWriteSpec extends AnyFunSuite {
     } finally RemoteWrite.GroupCommitMaxOps = prev
   }
 
-  test("a poll serving N txns loads them in ONE parquet read") {
+  test("a poll serving N txns reads the inbox with no Spark job") {
     val (store, _) = freshStore()
     val inbox = freshInbox()
     val ca = new Client(spark, CatalogueModel, inbox, "batch-a")
@@ -794,11 +794,107 @@ class RemoteWriteSpec extends AnyFunSuite {
     ca.submit { txn => txn.addTarget(0L, txn.newNode(Song("s1"))) }
     ca.submit { txn => txn.addTarget(0L, txn.newNode(Song("s2"))) }
     cb.submit { txn => txn.addTarget(0L, txn.newNode(Genre("g1"))) }
-    val acks = RemoteWrite.applyPending(store, inbox)
+    var acks = Seq.empty[TxnAck]
+    val cost = graft.tools.CostProbe.costOf(spark) {
+      acks = RemoteWrite.applyPending(store, inbox)
+    }
     assert(acks.size === 3 && acks.forall(_.applied))
-    assert(RemoteWrite.lastPollTxnLoadJobs === 1,
-      "3 shipped txns must cost ONE load job (split by input_file_name), not 3")
+    // a Spark read of the inbox is a SQL execution whose stages are called
+    // from RemoteWrite; what jobs a poll runs belong to the store
+    assert(cost.sqlExecutions === 0, s"a poll of 3 txns cost $cost")
+    assert(!cost.stages.exists(st => Seq("RemoteWrite", "OpBatchFile").exists(st.site.contains)),
+      s"no job may read the inbox: ${cost.stages.map(_.site)}")
     assert(store.session.getStats()._1 === 4L)
+    store.close()
+  }
+
+  test("a txn one op over the bound is refused alone; its neighbours in the poll apply") {
+    val saved = GraphStore.maxReplayBatchRows
+    val (store, _) = freshStore()
+    val inbox = freshInbox()
+    val c = new Client(spark, CatalogueModel, inbox, "bound")
+    try {
+      GraphStore.maxReplayBatchRows = 4
+      def ship(name: String, sets: Int) = c.submit { txn =>
+        val s = txn.newNode(Song(name))
+        txn.addTarget(0L, s)
+        (1 to sets).foreach(i => txn.setValue(s, Song(s"$name$i")))
+      }
+      val at = ship("at", 2) // 4 ops: the bound
+      val over = ship("over", 3) // 5 ops
+      val after = ship("after", 0)
+      val acks = RemoteWrite.applyPending(store, inbox).map(a => a.txnId -> a).toMap
+      assert(acks(at).applied && acks(after).applied, acks)
+      assert(!acks(over).applied && acks(over).error.exists(_.startsWith("txn exceeds 4 ops")),
+        acks(over))
+    } finally GraphStore.maxReplayBatchRows = saved
+    assert(store.session.getStats()._1 === 3L)
+    store.close()
+  }
+
+  test("a corrupt or foreign-schema txn dir is refused as undecodable alone") {
+    val (store, _) = freshStore()
+    val inbox = freshInbox()
+    val c = new Client(spark, CatalogueModel, inbox, "bad")
+    val ids = (0 until 3).map(i => c.submit(txn => txn.addTarget(0L, txn.newNode(Song(s"s$i")))))
+    def dataFile(txnId: String) = GraphStore.listPaths(Paths.get(inbox).resolve(s"$txnId.txn"))
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    // txn 0: its parquet file is not parquet
+    Files.write(dataFile(ids(0)), Array.fill[Byte](64)(7))
+    // txn 2: a parquet file of a foreign schema
+    val foreign = Files.createTempDirectory("graft-rw-foreign-").resolve("b")
+    OpBatchFile.write(spark,
+      org.apache.spark.sql.types.StructType.fromDDL("a STRING, b BIGINT"),
+      Seq(org.apache.spark.sql.Row("x", 1L), org.apache.spark.sql.Row("y", 2L)), foreign)
+    val f2 = dataFile(ids(2))
+    Files.delete(f2)
+    Files.copy(GraphStore.listPaths(foreign).find(_.getFileName.toString.endsWith(".parquet")).get, f2)
+    val acks = RemoteWrite.applyPending(store, inbox).map(a => a.txnId -> a).toMap
+    assert(acks(ids(1)).applied, acks)
+    Seq(ids(0), ids(2)).foreach { id =>
+      assert(!acks(id).applied && acks(id).error.exists(_.startsWith("undecodable txn")), acks(id))
+    }
+    assert(store.session.getStats()._1 === 2L)
+    store.close()
+  }
+
+  test("a stale-read window over the bound refuses; new nodes do not count toward it") {
+    val saved = GraphStore.maxReplayBatchRows
+    val dir = Files.createTempDirectory("graft-rw-window-").toString
+    val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
+    val n = store.session.newNode(Artist(1, "v0"))
+    store.session.addTarget(store.session.root, n)
+    store.commit()
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
+    replica.catchUp()
+    val snap = RemoteWrite.TxnReads.fromReplica(replica)
+    val inbox = freshInbox()
+    val b = new Client(spark, CatalogueModel, inbox, "wb")
+    val a = new Client(spark, CatalogueModel, inbox, "wa")
+    def apply(id: String, c: Client[Cat]) = {
+      RemoteWrite.applyPending(store, inbox)
+      c.await(id)
+    }
+    def readThenWrite() = a.submitWithReads(snap) { txn =>
+      txn.setValue(n, Artist(1, txn.getValue(n).asInstanceOf[Artist].name + "+A"))
+    }
+    try {
+      GraphStore.maxReplayBatchRows = 2
+      // after the mark: set n; new x + add root→x — 2 mutations, 3 ops
+      assert(apply(b.submit(txn => txn.setValue(n, Artist(1, "B"))), b).applied)
+      val shipped = b.submit { txn => txn.addTarget(0L, txn.newNode(Genre("x"))) }
+      val x = apply(shipped, b).assigned.values.head
+      val inWindow = apply(readThenWrite(), a)
+      assert(!inWindow.applied &&
+        inWindow.error.exists(_.startsWith(s"stale-read conflict: node(s) $n ")), inWindow)
+      // a third mutation passes the bound: the window itself is refused
+      assert(apply(b.submit(txn => txn.setValue(x, Genre("y"))), b).applied)
+      val past = apply(readThenWrite(), a)
+      assert(!past.applied && past.error.exists(e =>
+        e.contains("more than 2 mutations since the snapshot mark") &&
+          e.contains("fresh snapshot")), past)
+    } finally GraphStore.maxReplayBatchRows = saved
+    assert(store.session.getValue(n) === Artist(1, "B"))
     store.close()
   }
 

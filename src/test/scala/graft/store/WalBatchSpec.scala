@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.graph._
 
 /** Driver-written WAL batches ([[OpBatchFile]]) read back through
-  * `spark.read.parquet` exactly as batches written by a Spark job do, and a
-  * WAL that holds both kinds replays to the live session's state.
+  * `spark.read.parquet` exactly as batches written by a Spark job do,
+  * [[OpBatchFile.read]] reads both kinds exactly as `spark.read.parquet`
+  * does, and a WAL that holds both kinds replays to the live session's
+  * state.
   */
 class WalBatchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -60,6 +62,96 @@ class WalBatchSpec extends AnyFunSuite {
     // the writer refuses an existing directory, as ErrorIfExists did
     intercept[java.nio.file.FileAlreadyExistsException](
       OpBatchFile.write(spark, schema, rows, driver))
+  }
+
+  test("property: OpBatchFile.read of a batch == spark.read.parquet (rich values, edge doubles)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import DeriveSpecADT._
+    val model = GraphModel.derive[Rich]((_, _) => Seq.empty)
+    val richSchema = GraphStore.opSchema(model)
+    val edge = Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      0.0, -0.0, Double.MinPositiveValue, Double.MaxValue)
+    val dbl = Gen.frequency(1 -> edge, 1 -> Gen.chooseNum(-1e6, 1e6))
+    val str = Gen.oneOf(Gen.const(""), Gen.alphaNumStr.map(_.take(6)), Gen.const("\"q\" \\ é"))
+    val value: Gen[Rich] = Gen.oneOf(
+      Gen.const(RichRoot: Rich),
+      for (n <- Gen.chooseNum(Long.MinValue, Long.MaxValue); tags <- Gen.listOf(str).map(_.take(4));
+        note <- Gen.option(str); x <- dbl; y <- dbl) yield Wide(n, tags, note, Point(x, y)),
+      Gen.listOf(Gen.chooseNum(-128, 127)).map(bs => Blobby(bs.take(8).map(_.toByte).toArray)))
+    val id = Gen.chooseNum(0L, 50L)
+    val op: Gen[GraphOp[Rich]] = Gen.oneOf(
+      Gen.zip(id, value).map { case (i, v) => GraphOp.NewNode(i, v) },
+      Gen.zip(id, value).map { case (i, v) => GraphOp.SetValue(i, v) },
+      Gen.zip(id, id).map { case (a, b) => GraphOp.AddTarget[Rich](a, b) },
+      Gen.zip(id, id).map { case (a, b) => GraphOp.RemoveTarget[Rich](a, b) },
+      id.map(GraphOp.RemoveNode[Rich](_)))
+    val fixed = Seq[GraphOp[Rich]](
+      GraphOp.NewNode(1L, Wide(0L, Seq(""), Some(""), Point(Double.NaN, -0.0))),
+      GraphOp.SetValue(1L, Wide(-1L, Seq.empty, None,
+        Point(Double.PositiveInfinity, Double.NegativeInfinity))),
+      GraphOp.NewNode(2L, Blobby(Array.emptyByteArray)),
+      GraphOp.RemoveNode(2L))
+    val columns = StructType(Seq("op", "id", "src").map(richSchema(_)))
+    // Row equality calls 0.0 and -0.0 equal: compare doubles by their bits
+    def canon(v: Any): Any = v match {
+      case r: Row => r.toSeq.map(canon)
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case b: Array[Byte] => b.toSeq
+      case xs: scala.collection.Seq[_] => xs.map(canon).toList
+      case x => x
+    }
+    def same(a: Seq[Row], b: Seq[Row], what: String): Unit =
+      assert(a.map(canon) === b.map(canon), what)
+    def bySeq(rows: Seq[Row]) = rows.sortBy(_.getLong(0))
+    (0 until 6).foreach { i =>
+      val seed = 2000L + i
+      val ops = if (i == 0) fixed else if (i == 1) Seq.empty
+        else Gen.choose(1, 12).flatMap(Gen.listOfN(_, op))(Gen.Parameters.default, Seed(seed))
+          .getOrElse(sys.error(s"gen failed for seed $seed"))
+      val rows = ops.zipWithIndex.map { case (o, j) => GraphStore.opToRow(model, o, 100L + j) }
+      val base = Files.createTempDirectory("graft-opbatch-prop-")
+      val driver = base.resolve("driver")
+      OpBatchFile.write(spark, richSchema, rows, driver)
+      val viaSpark = base.resolve("spark")
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), richSchema)
+        .write.parquet(viaSpark.toString)
+      if (rows.size >= 3)
+        assert(GraphStore.listPaths(viaSpark).count(_.getFileName.toString.endsWith(".parquet")) > 1)
+      same(bySeq(spark.read.parquet(driver.toString).collect().toSeq), rows,
+        s"seed $seed: the oracle itself")
+      val got = OpBatchFile.read(spark, Some(richSchema), driver)
+      same(got, rows, s"seed $seed: a driver-written batch reads in write order")
+      same(OpBatchFile.read(spark, None, driver), rows, s"seed $seed: footer schema")
+      same(bySeq(OpBatchFile.read(spark, Some(richSchema), viaSpark)),
+        bySeq(spark.read.parquet(viaSpark.toString).collect().toSeq), s"seed $seed: Spark-written")
+      assert(OpBatchFile.read(spark, Some(columns), driver).map(_.toSeq) ===
+        rows.map(r => Seq(r.get(1), r.get(2), r.get(3))), s"seed $seed: projection")
+      if (rows.size > 1) {
+        val k = rows.size / 2
+        same(OpBatchFile.read(spark, Some(richSchema), driver, k), rows.take(k),
+          s"seed $seed: limit $k")
+        assert(OpBatchFile.read(spark, Some(richSchema), viaSpark, k).size === k)
+      }
+    }
+  }
+
+  test("a batch's ops replay in seq order, not file order") {
+    val dir = Files.createTempDirectory("graft-walorder-")
+    val s1 = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir.toString)
+    s1.commit() // the root's NewNode
+    s1.abandon()
+    val events = GraphStore.listDirs(dir, _.endsWith(".events")).head
+    val ops = Seq[GraphOp[Cat]](GraphOp.NewNode(1L, Genre("rock")),
+      GraphOp.SetValue(1L, Genre("pop")), GraphOp.AddTarget(0L, 1L))
+    val base = (1L << 44) | (1L << 28)
+    OpBatchFile.write(spark, schema, ops.zipWithIndex.reverse.map { case (op, i) =>
+      GraphStore.opToRow(CatalogueModel, op, base + i)
+    }, events.resolve("batch-000001"))
+    val s2 = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir.toString)
+    assert(s2.session.getValue(1L) === Genre("pop"))
+    assert(s2.session.getTargets(0L, IndexKey("Catalogue_Genre_Name", "pop")) === Seq(1L))
+    s2.close()
   }
 
   private def table(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
