@@ -17,7 +17,7 @@ object GraphOp {
   final case class RemoveNode[V](id: Long) extends GraphOp[V]
 
   /** Keep-last per id, preserving last-write order — the SetValue-run
-    * dedupe shared by GraphSession.applied() and the streaming follower.
+    * dedupe of GraphSession.applied(), which every op applier runs.
     * O(n) (the filterNot-fold it replaces was O(n²) on the driver).
     */
   private[graft] def keepLastById[V](kvs: Seq[(Long, V)]): Seq[(Long, V)] = {

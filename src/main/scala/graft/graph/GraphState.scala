@@ -266,18 +266,11 @@ final case class GraphState[V](
     * follower, and persisted dangling by the checkpoint. NodeId is a plain
     * Long, so the typed API cannot make bad refs unrepresentable the way
     * the reference's model typeclass does — the apply must. An unknown id
-    * raises IllegalArgumentException before any table changes.
-    *
-    * `validate = false` is for FOLLOWER replay (OplogStream): a follower
-    * bootstrapped mid-history legitimately lacks nodes its WAL suffix
-    * references (e.g. a checkpoint-less replica of an events-only store) —
-    * the edge is still added, with no index rows for it. Tolerance there is
-    * the documented eventual-consistency posture, while the WRITER session
-    * path always validates (the reference server is what refuses invalid
-    * refs).
+    * raises IllegalArgumentException before any table changes — in a
+    * session, in the writer's WAL recovery and in a replica's catch-up
+    * alike, since all three apply ops through [[graft.graph.GraphSession]].
     */
-  def withTargets(pairs: Seq[(Long, Long)],
-      validate: Boolean = true): GraphState[V] = {
+  def withTargets(pairs: Seq[(Long, Long)]): GraphState[V] = {
     val wanted = pairs.distinct
     val in = idSet(wanted.flatMap(p => Seq(p._1, p._2)))
     val Seq(nodeHits, edgeHits) = probe(nodeTable -> (r => in(r.getLong(NodeId))),
@@ -286,7 +279,7 @@ final case class GraphState[V](
     val delta = wanted.filterNot(present)
     if (delta.isEmpty) return this
     val known: Map[Long, V] = nodeHits.map(r => r.getLong(NodeId) -> valueOf(r)).toMap
-    if (validate) for ((s, d) <- delta; (side, id) <- Seq("src" -> s, "dst" -> d)
+    for ((s, d) <- delta; (side, id) <- Seq("src" -> s, "dst" -> d)
         if !known.contains(id))
       throw new IllegalArgumentException(
         s"addTarget $side references unknown node id $id — nodes must be created first")

@@ -166,8 +166,8 @@ final class GraphStore[V] private (
     val ops = session.peekLog()
     if (ops.nonEmpty) {
       // seq is GLOBALLY monotonic ((eventsIndex, batch, offset) packed into
-      // one long) so any reader — replay or a streaming follower that gets
-      // several batches in one trigger — can totally order ops by it.
+      // one long) so any reader — replay or a replica catching up on
+      // several batches — can totally order ops by it.
       // Packing bounds are enforced, not assumed: 2^28 ops/commit,
       // 2^16 commits/session, 2^19 sessions — exceeding one would silently
       // interleave seq ranges and corrupt replay order (eventsIndex ≥ 2^19
@@ -256,23 +256,7 @@ final class GraphStore[V] private (
     */
   private[store] def mutatedSince(mark: (Long, Long))
       : Either[String, (Set[Long], Set[Long])] = {
-    val BatchRe = """batch-(\d+)(-bulk)?""".r
-    def evDirs(base: Path): Seq[Path] =
-      if (!Files.isDirectory(base)) Seq.empty
-      else GraphStore.listDirs(base, _.endsWith(".events"))
-    val dirs = (evDirs(path) ++ evDirs(path.resolve("archive"))).flatMap { ev =>
-      Try(ev.getFileName.toString.stripSuffix(".events").toLong).toOption
-        .toSeq.flatMap { eidx =>
-          GraphStore.listDirs(ev, _.startsWith("batch-")).flatMap { b =>
-            b.getFileName.toString match {
-              case BatchRe(k, _)
-                  if Ordering[(Long, Long)].gt((eidx, k.toLong), mark) &&
-                    Files.exists(b.resolve("_SUCCESS")) => Some(b)
-              case _ => None
-            }
-          }
-        }
-    }
+    val dirs = GraphStore.committedBatches(path, mark).map(_._2)
     val bound = GraphStore.maxReplayBatchRows
     val columns = StructType(Seq("op", "id", "src").map(opSchema(_)))
     val kinds = Set("set", "add", "rmt", "rm")
@@ -343,7 +327,7 @@ final class GraphStore[V] private (
     *    batchSeq always starts clean instead of dying on ErrorIfExists
     *    forever (which would also break close(), since close commits);
     *  - a reader must never observe a half-written batch: the rename is the
-    *    publish point, so replay and live-tail followers either see the
+    *    publish point, so replay and catching-up replicas either see the
     *    complete batch (with its _SUCCESS marker already inside) or nothing.
     *    Without staging there is a window between the data files landing
     *    and the _SUCCESS marker where a follower can apply ops the writer
@@ -388,9 +372,8 @@ final class GraphStore[V] private (
     * (GraphState.withTargetsDF). Pending driver-side ops flush first as
     * their own batch so WAL order is preserved. The batch dir carries a
     * `-bulk` suffix; replay applies such batches set-wise instead of
-    * collecting rows (see [[GraphStore.replay]]). Streaming followers that
-    * tail a bulk-ingesting store should bootstrap from a checkpoint
-    * (documented on OplogStream.applyOpBatch).
+    * collecting rows (see [[GraphStore.replayBatch]]), in the writer's
+    * recovery and in a replica's catch-up alike.
     */
   def commitBulk(adds: org.apache.spark.sql.DataFrame): Unit = {
     require(!closed, "store is closed")
@@ -543,7 +526,7 @@ object GraphStore {
     */
   /** Exclusive writer lock on the store directory — the analog of the
     * reference's dir lock (Storage.hs:209-216 acquireFileLock). A second
-    * concurrent open throws; readers (OplogStream followers) don't lock.
+    * concurrent open throws; readers (GraphReplica followers) don't lock.
     */
   final class DirLock private[GraphStore] (path: Path) {
     private val channel = java.nio.channels.FileChannel.open(
@@ -725,15 +708,12 @@ object GraphStore {
         "with commitBulk (replayed set-wise, never collected)")
 
   /** Replay event dirs with index > `after`, ascending — Storage.hs:136-148.
-    * Like the reference, a driver-sized batch is read straight from its
-    * file ([[OpBatchFile.read]]), with no Spark job. Returns the last
-    * replayed index (or `after`).
+    * Returns the last replayed index (or `after`). Only the lock holder
+    * walks the events dirs this way: it deletes torn batch dirs, which a
+    * reader must not.
     */
   private def replay[V](spark: SparkSession, model: GraphModel[V], path: Path,
       session: GraphSession[V], after: Long): Long = {
-    // every batch carries the op schema (driver- and Spark-written alike):
-    // a bulk batch read with it runs no schema-inference job
-    val schema = opSchema(model)
     val eventDirs = list(path, ".events").filter(_ > after).sorted
     eventDirs.foreach { idx =>
       val dir = path.resolve(s"$idx.events")
@@ -747,28 +727,78 @@ object GraphStore {
       // _meta.json rule above)
       val (ready, torn) = allBatches.partition(b => Files.exists(b.resolve("_SUCCESS")))
       torn.foreach(deleteRecursively)
-      ready.foreach { b =>
-        if (b.getFileName.toString.endsWith("-bulk")) {
-          // bulk 'add' batches replay set-wise — a 10^9-edge ingest batch
-          // must not be collected to the driver; order within the batch is
-          // irrelevant (idempotent set union)
-          session.applyBulkTargets(
-            spark.read.schema(schema).parquet(b.toString).select("src", "dst"))
-        } else {
-          // non-bulk batches are read on the driver and replayed in seq
-          // order — driver-sized BY CONSTRUCTION (session ops are
-          // driver-issued). Make that invariant explicit instead of
-          // implicit: a store whose WAL somehow carries an oversized
-          // non-bulk batch (hand-written, foreign tooling) must fail
-          // loudly here, not OOM the driver
-          val rows = OpBatchFile.read(spark, Some(schema), b, maxReplayBatchRows + 1)
-          if (rows.length > maxReplayBatchRows)
-            throw new OversizedReplayBatchException(b.toString, maxReplayBatchRows)
-          rows.sortBy(_.getLong(0)).foreach(r => session.replayOp(rowToOp(model, r)))
-        }
-      }
+      ready.foreach(replayBatch(spark, model, session, _))
     }
     eventDirs.lastOption.getOrElse(after)
+  }
+
+  /** Replay one committed WAL batch dir into `session` — the per-batch step
+    * of the writer's recovery ([[replay]]) and of a replica's catch-up
+    * (GraphReplica.catchUp), so a replica holds by construction what the
+    * writer would recover from the same files. Like the reference, a
+    * driver-sized batch is read straight from its file
+    * ([[OpBatchFile.read]]), with no Spark job, and its ops queue on the
+    * session in seq order (they apply at its next `applied()`).
+    */
+  private[store] def replayBatch[V](spark: SparkSession, model: GraphModel[V],
+      session: GraphSession[V], batch: Path): Unit = {
+    // every batch carries the op schema (driver- and Spark-written alike):
+    // a bulk batch read with it runs no schema-inference job
+    val schema = opSchema(model)
+    if (batch.getFileName.toString.endsWith("-bulk")) {
+      // bulk 'add' batches replay set-wise — a 10^9-edge ingest batch must
+      // not be collected to the driver; order within the batch is
+      // irrelevant (idempotent set union)
+      session.applyBulkTargets(
+        spark.read.schema(schema).parquet(batch.toString).select("src", "dst"))
+    } else {
+      // non-bulk batches are driver-sized BY CONSTRUCTION (session ops are
+      // driver-issued). Make that invariant explicit instead of implicit: a
+      // store whose WAL somehow carries an oversized non-bulk batch
+      // (hand-written, foreign tooling) must fail loudly here, not OOM the
+      // driver
+      val rows = OpBatchFile.read(spark, Some(schema), batch, maxReplayBatchRows + 1)
+      if (rows.length > maxReplayBatchRows)
+        throw new OversizedReplayBatchException(batch.toString, maxReplayBatchRows)
+      rows.sortBy(_.getLong(0)).foreach(r => session.replayOp(rowToOp(model, r)))
+    }
+  }
+
+  /** The committed WAL batch dirs after `after`, an (eventsIndex, batchSeq)
+    * mark, keyed by (eventsIndex, batchSeq) and sorted — what a reader
+    * holding no lock may apply (GraphReplica.catchUp, [[mutatedSince]]).
+    * Only `_SUCCESS`-marked `batch-K[-bulk]` dirs count. Live events dirs
+    * are scanned before `archive/`, so a dir that a concurrent close()
+    * moves between the two scans is seen in one of them; a dir that
+    * vanishes mid-scan lists as empty, and a batch seen in both resolves to
+    * its archived copy, which never moves again. The listing stops at the
+    * first gap in batch seqs inside an events dir: the writer never leaves
+    * one (seqs run from 0 and the async WAL queue is fail-stop), so a gap
+    * is a publish this listing raced, and the next call resumes there.
+    */
+  private[graft] def committedBatches(root: Path, after: (Long, Long))
+      : Seq[((Long, Long), Path)] = {
+    val EventsRe = """\d{1,18}\.events""".r
+    val BatchRe = """batch-\d{1,18}(-bulk)?""".r
+    def dirs(base: Path, nameFilter: String => Boolean): Seq[Path] =
+      try listDirs(base, nameFilter)
+      catch { case _: java.nio.file.NoSuchFileException => Seq.empty }
+    def scan(base: Path): Seq[((Long, Long), Path)] = for {
+      ev <- dirs(base, EventsRe.matches)
+      b <- dirs(ev, BatchRe.matches)
+      if Files.exists(b.resolve("_SUCCESS"))
+    } yield (ev.getFileName.toString.stripSuffix(".events").toLong,
+      b.getFileName.toString.stripPrefix("batch-").stripSuffix("-bulk").toLong) -> b
+    val ord = Ordering[(Long, Long)]
+    val found = (scan(root) ++ scan(root.resolve("archive")))
+      .groupMapReduce(_._1)(_._2)((_, archived) => archived)
+      .toSeq.filter(b => ord.gt(b._1, after)).sortBy(_._1)
+    var prev = after
+    found.takeWhile { case (k @ (eidx, seq), _) =>
+      val next = if (eidx == prev._1) seq == prev._2 + 1 else seq == 0L
+      prev = k
+      next
+    }
   }
 
   /** Archive events ≤ index and checkpoints < index; delete checkpoints >
@@ -895,8 +925,8 @@ object GraphStore {
 
   // ------------------------------------------------------- op serialization
 
-  /** WAL op-row schema — single source of truth, shared with the streaming
-    * follower (graft.streaming.OplogStream.readOps).
+  /** WAL op-row schema — single source of truth for every writer and
+    * reader of op batches.
     */
   private[graft] def opSchema(model: GraphModel[_]): StructType = StructType(Seq(
     StructField("seq", LongType, nullable = false),

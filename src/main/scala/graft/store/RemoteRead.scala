@@ -261,8 +261,8 @@ object RemoteRead {
     * state — the read-dispatch loop body (Server.hs:17-69 for reads).
     * Returns the request ids answered this poll: pending requests in name
     * order up to [[PollIdBudget]] ids (at least one); later polls answer
-    * the rest. The caller owns freshness: interleave `replica.catchUp()`
-    * in its serve loop at the staleness budget it wants. ONE server per
+    * the rest. The caller owns freshness: call `replica.catchUp()` before
+    * a poll ([[serveWhile]] does so on every poll). ONE server per
     * inbox, like RemoteWrite's owner-only applyPending: concurrent servers
     * would race the batch publish below.
     *
@@ -429,21 +429,16 @@ object RemoteRead {
   }
 
   /** Serve loop: catch the replica up, answer, repeat — the read-side
-    * accept loop. `catchUpEvery` bounds staleness (0 = every poll);
-    * [[retention]] runs at the same cadence so answer debris stays
-    * bounded over a long-lived inbox.
+    * accept loop. Every poll catches up (with nothing new, a directory
+    * listing) and runs [[retention]], so answer debris stays bounded over
+    * a long-lived inbox.
     */
-  def serveWhile[V](replica: GraphReplica[V], dir: String, pollMs: Long = 50L,
-      catchUpEvery: Int = 10)(keepGoing: () => Boolean): Unit = {
-    var i = 0
+  def serveWhile[V](replica: GraphReplica[V], dir: String, pollMs: Long = 50L)(
+      keepGoing: () => Boolean): Unit =
     while (keepGoing()) {
-      if (catchUpEvery == 0 || i % math.max(1, catchUpEvery) == 0) {
-        replica.catchUp()
-        retention(dir)
-      }
+      replica.catchUp()
+      retention(dir)
       answerPending(replica, dir)
       Thread.sleep(pollMs)
-      i += 1
     }
-  }
 }

@@ -92,23 +92,6 @@ class WithTargetsPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("validate = false: edges to missing endpoints land index-less, like withTargetsDF") {
-    val g = GraphSession.inMemory(spark, CatalogueModel, CatRoot: Cat)
-    val a = g.newNode(Artist(1, "A"))
-    val s = g.newNode(Song("S"))
-    g.addTarget(g.root, a)
-    val st = g.applied()
-    val pairs = Seq((g.root, a), (s, a), (s, 9001L), (9002L, a), (9003L, 9003L),
-      (g.root, s), (s, a), (9002L, a))
-    val got = st.withTargets(pairs, validate = false)
-    val want = st.withTargetsDF(pairsDF(pairs))
-    assert(edgeBag(got.edges) === edgeBag(want.edges))
-    assert(indexBag(got.index) === indexBag(want.index))
-    assert(edgeBag(got.edges).contains(Row(9002L, a)))
-    val e = intercept[IllegalArgumentException](st.withTargets(pairs))
-    assert(e.getMessage.contains("unknown node id"))
-  }
-
   // ------------------------------------------------ tails, mutations, aborts
 
   private case class Child(parent: Int, v: Cat) extends Op // new node under ids(parent)

@@ -37,8 +37,7 @@ class RemoteReadSpec extends AnyFunSuite {
 
     @volatile var serving = true
     val server = new Thread(() =>
-      RemoteRead.serveWhile(replica, inbox, pollMs = 20L,
-        catchUpEvery = 0)(() => serving))
+      RemoteRead.serveWhile(replica, inbox, pollMs = 20L)(() => serving))
     server.start()
     try {
       // the client's answers == the owner's session reads, action by action

@@ -45,8 +45,8 @@ class ReplicaSpec extends AnyFunSuite {
     assert(replica.targets(bj) === Seq(mj))
     assert(replica.sources(mj).sorted === Seq(s2.session.root, bj).sorted)
 
-    // writer keeps writing; a second catchUp resumes from durable offsets
-    // and applies ONLY the new batch
+    // writer keeps writing; a second catchUp resumes from the replica's
+    // mark and applies ONLY the new batch
     val thriller = s2.session.newNode(Song("Thriller"))
     s2.session.addTarget(s2.session.root, thriller)
     s2.session.addTarget(thriller, mj)
@@ -54,57 +54,22 @@ class ReplicaSpec extends AnyFunSuite {
     replica.catchUp()
     assert(replica.getStats() === s2.session.getStats())
     assert(replica.getValue(thriller) === Song("Thriller"))
+    s2.close()
 
-    // a checkpoint-less replica replays the full WAL from empty instead
-    val fromScratch = GraphReplica.bootstrap(spark, CatalogueModel,
-      { // store with events only: copy session-2 events, no checkpoint
-        val d2 = Files.createTempDirectory("graft-replica-nockpt-")
-        val src = java.nio.file.Paths.get(dir)
-        Files.list(src).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".events"))
-          .foreach { ev => copyTree(ev, d2.resolve(ev.getFileName)) }
-        d2.toString
-      })
+    // a checkpoint-less store (a writer that never closed) is replayed from
+    // empty: its WAL holds every op, the root's NewNode included
+    val nockpt = Files.createTempDirectory("graft-replica-nockpt-").toString
+    val s3 = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, nockpt)
+    val a = s3.session.newNode(Artist(1, "A"))
+    s3.session.addTarget(s3.session.root, a)
+    s3.session.addTarget(a, s3.session.newNode(Song("S")))
+    s3.commit()
+    val fromScratch = GraphReplica.bootstrap(spark, CatalogueModel, nockpt)
     assert(fromScratch.bootstrapIndex === 0L)
     fromScratch.catchUp()
-    // session 2's WAL alone holds ops since checkpoint 1 — 2 new nodes
-    assert(fromScratch.currentState.nodes.count() === 2L)
-
-    s2.close()
-  }
-
-  test("replica live-tails a committing writer (ProcessingTime trigger)") {
-    val dir = Files.createTempDirectory("graft-replica-tail-").toString
-    val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
-    val g = store.session
-    val a = g.newNode(Artist(1, "First"))
-    g.addTarget(g.root, a)
-    store.commit()
-
-    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
-    val q = replica.follow(
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-    def awaitNodes(expect: Long): Unit = {
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      var n = -1L
-      while (n != expect && System.nanoTime() < deadline) {
-        Thread.sleep(250)
-        n = replica.currentState.nodes.count()
-      }
-      assert(n === expect, s"replica stuck at $n nodes, want $expect")
-    }
-    awaitNodes(2L) // root + First
-
-    // the writer keeps committing WHILE the replica serves — the tail must
-    // pick the new batch up without a new bootstrap
-    val b = g.newNode(Song("Second"))
-    g.addTarget(g.root, b)
-    store.commit()
-    awaitNodes(3L)
-    assert(replica.getValue(b) === Song("Second"))
-
-    q.stop()
-    store.close()
+    assert(fromScratch.currentState.nodes.count() === 3L)
+    assert(fromScratch.getStats() === s3.session.getStats())
+    s3.abandon()
   }
 
   test("replica folds bulk-ingest WAL batches set-wise") {
@@ -151,39 +116,21 @@ class ReplicaSpec extends AnyFunSuite {
       .size
     assert(bulkFiles > 1, s"expected a multi-file bulk dir, got $bulkFiles file(s)")
 
-    // maxFilesPerTrigger=1: every trigger delivers ONE file, so the bulk
-    // dir is guaranteed to arrive split. Polling between triggers must
-    // only ever observe commit-boundary prefixes — 0 or all 40 bulk edges,
-    // never a torn subset (the scaladoc's prefix guarantee).
+    // a reader polling while the catch-up runs must only ever observe
+    // commit-boundary prefixes — 0 or all 40 bulk edges, never a torn
+    // subset (the scaladoc's prefix guarantee)
     val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
-    replica.trackPendingStats = true
-    val q = replica.follow(
-      org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      maxFilesPerTrigger = 1)
+    @volatile var failure: Throwable = null
+    val catching = new Thread(() =>
+      try replica.catchUp() catch { case e: Throwable => failure = e })
+    catching.start()
     var seen = Set.empty[Int]
-    while (q.isActive) { seen += replica.targets(a).size; Thread.sleep(50) }
-    q.awaitTermination()
+    while (catching.isAlive) { seen += replica.targets(a).size; Thread.sleep(5) }
+    catching.join()
+    assert(failure === null)
     seen += replica.targets(a).size
     assert(seen.subsetOf(Set(0, 40)), s"observed torn bulk edge counts: $seen")
     assert(replica.targets(a).sorted === (100L to 139L))
-
-    // memory bound (the scaladoc's "one in-flight publish unit" claim,
-    // asserted rather than prose): while the split dir dribbled in one
-    // file per trigger, the pending buffer never held more than that ONE
-    // dir, never more than ITS rows checkpointed...
-    assert(replica.maxPendingDirsObserved === 1,
-      s"pending buffer held ${replica.maxPendingDirsObserved} dirs")
-    assert(replica.maxPendingRowsObserved <= 40L,
-      s"pending buffer held ${replica.maxPendingRowsObserved} rows — " +
-        "more than the split dir's own 40")
-    // ...and once the dir applied, the buffer drained and every retained
-    // trigger checkpoint was unpersisted deterministically (not left for
-    // GC): the released RDDs must be gone from block storage
-    assert(replica.pendingDirCount === 0 && replica.retainedCkptCount === 0)
-    assert(replica.releasedRddIds.nonEmpty)
-    val live = spark.sparkContext.getPersistentRDDs.keySet
-    assert(replica.releasedRddIds.forall(id => !live.contains(id)),
-      "released trigger checkpoints must leave block storage")
     s1.close()
   }
 
@@ -235,6 +182,91 @@ class ReplicaSpec extends AnyFunSuite {
     }.toMap)
     assert(cost.jobs === 1, s"N point reads must batch into ONE job, saw $cost")
     s2.close()
+  }
+
+  test("catchUp stops at a gap in batch seqs and resumes there") {
+    val dir = Files.createTempDirectory("graft-replica-gap-")
+    val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir.toString)
+    val g = store.session
+    val a = g.newNode(Artist(1, "A"))
+    g.addTarget(g.root, a)
+    store.commit() // batch 0
+    val b = g.newNode(Song("B"))
+    g.addTarget(g.root, b)
+    store.commit() // batch 1
+    g.setValue(b, Song("B2")) // batch 2 needs batch 1 applied first
+    g.addTarget(a, b)
+    store.commit()
+
+    // batch 1 missing from the listing: a publish the listing raced
+    val events = dir.resolve("1.events")
+    val aside = Files.createTempDirectory("graft-replica-gap-aside-").resolve("b1")
+    Files.move(events.resolve("batch-000001"), aside)
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir.toString)
+    replica.catchUp()
+    assert(replica.watermark === ((1L, 0L)))
+    assert(replica.getValue(a) === Artist(1, "A"))
+    assert(replica.getValues(Seq(b)).isEmpty, "batch 1 must not apply")
+    assert(replica.targets(a).isEmpty, "batch 2 must not apply past the gap")
+
+    Files.move(aside, events.resolve("batch-000001"))
+    replica.catchUp()
+    assert(replica.watermark === ((1L, 2L)))
+    assert(replica.getValue(b) === Song("B2"))
+    assert(replica.targets(a) === Seq(b))
+    assert(replica.getStats() === g.getStats())
+    store.close()
+  }
+
+  test("catchUp refuses what the writer's recovery refuses; state stays") {
+    // session 1 checkpoints the root and an artist; session 2's events
+    // name both, so a copy holding only those events lacks the nodes
+    val dir = Files.createTempDirectory("graft-replica-refuse-")
+    val s1 = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir.toString)
+    val mj = s1.session.newNode(Artist(1, "Michael Jackson"))
+    s1.session.addTarget(s1.session.root, mj)
+    s1.close()
+    val s2 = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir.toString)
+    val bj = s2.session.newNode(Song("Billie Jean"))
+    s2.session.addTarget(s2.session.root, bj)
+    s2.session.addTarget(bj, mj)
+    s2.commit()
+    val copy = Files.createTempDirectory("graft-replica-refuse-copy-")
+    copyTree(dir.resolve("2.events"), copy.resolve("2.events"))
+    s2.close()
+
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, copy.toString)
+    val (state, mark) = (replica.currentState, replica.watermark)
+    intercept[IllegalArgumentException](replica.catchUp())
+    assert(replica.currentState eq state)
+    assert(replica.watermark === mark)
+    assert(replica.currentState.nodes.count() === 0L)
+    intercept[IllegalArgumentException](
+      GraphStore.open(spark, CatalogueModel, CatRoot: Cat, copy.toString))
+  }
+
+  test("catchUp cost: nothing new runs no job; 10 new+add batches one job, no SQL") {
+    val dir = Files.createTempDirectory("graft-replica-cost-").toString
+    val s1 = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
+    s1.session.addTarget(s1.session.root, s1.session.newNode(Artist(1, "A")))
+    s1.close() // the replica's bases are the materialized checkpoint
+    val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
+    val g = store.session
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
+    replica.catchUp()
+
+    val idle = graft.tools.CostProbe.costOf(spark)(replica.catchUp())
+    assert(idle.jobs === 0, s"a catch-up with nothing new ran $idle")
+
+    (1 to 10).foreach { i =>
+      g.addTarget(g.root, g.newNode(Song(s"s$i")))
+      store.commit()
+    }
+    val ten = graft.tools.CostProbe.costOf(spark)(replica.catchUp())
+    assert(ten.jobs <= 1 && ten.sqlExecutions === 0, s"10 batches: $ten")
+    assert(replica.watermark === ((2L, 9L)))
+    assert(replica.getStats() === g.getStats())
+    store.close()
   }
 
   test("replica bootstrap refuses an incompatible store format (handshake)") {

@@ -9,11 +9,18 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph._
-import graft.store.GraphStore
+import graft.store.{GraphReplica, GraphStore}
 
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
+
+  /** A follower's state after catching up on a store's whole WAL. */
+  private def caughtUp(dir: String): GraphState[Cat] = {
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
+    replica.catchUp()
+    replica.currentState
+  }
 
   test("streaming hourly windows equal the batch R9 aggregation") {
     // file streams need a directory source
@@ -361,14 +368,9 @@ class StreamingSpec extends AnyFunSuite {
     g.remove(m)
     store.commit()
 
-    var last: Option[GraphState[Cat]] = None
-    val q = OplogStream.follow[Cat](spark, CatalogueModel, dir,
-      st => last = Some(st))
-    q.awaitTermination(120000)
-    assert(last.isDefined, "follower saw no batches")
     // follower state must fully match the writer's applied state (the WAL
     // contains every op including the root's NewNode)
-    val st = last.get
+    val st = caughtUp(dir)
     assert(st.nodes.count() === g.applied().nodes.count())
     assert(st.edges.count() === g.applied().edges.count())
     assert(st.index.count() === g.applied().index.count())
@@ -390,11 +392,7 @@ class StreamingSpec extends AnyFunSuite {
     g.setValue(hub, Artist(1, "Hub2")) // an op batch AFTER the bulk batch
     store.commit()
 
-    var last: Option[GraphState[Cat]] = None
-    val q = OplogStream.follow[Cat](spark, CatalogueModel, dir,
-      st => last = Some(st))
-    q.awaitTermination(120000)
-    val st = last.get
+    val st = caughtUp(dir)
     assert(st.edges.count() === g.applied().edges.count())
     assert(st.edges.where(col("src") === hub).count() === 3L)
     assert(st.nodes.count() === g.applied().nodes.count())
@@ -409,21 +407,21 @@ class StreamingSpec extends AnyFunSuite {
     val live = base.resolve("1.events").resolve("batch-000000")
     Files.createDirectories(live)
     Files.writeString(live.resolve("_SUCCESS"), "")
-    assert(OplogStream.committedBatchDir(live) === Some(live))
+    def committed = GraphStore.committedBatches(base, (0L, Long.MaxValue)).map(_._2)
+    assert(committed === Seq(live))
     // writer archives the whole events dir (GraphStore.cleanUp shape)
     val archived = base.resolve("archive").resolve("1.events")
     Files.createDirectories(archived.getParent)
     Files.move(base.resolve("1.events"), archived)
-    assert(OplogStream.committedBatchDir(live)
-      === Some(archived.resolve("batch-000000")),
+    assert(committed === Seq(archived.resolve("batch-000000")),
       "a batch moved to archive/ is still committed")
     // marker in neither location: genuinely torn
-    val torn = base.resolve("2.events").resolve("batch-000001")
+    val torn = base.resolve("2.events").resolve("batch-000000")
     Files.createDirectories(torn)
-    assert(OplogStream.committedBatchDir(torn).isEmpty)
+    assert(committed === Seq(archived.resolve("batch-000000")))
   }
 
-  test("follower live-tails a committing writer (ProcessingTime trigger)") {
+  test("follower live-tails a committing writer (catchUp per commit)") {
     val dir = Files.createTempDirectory("graft-oplog-tail-").toString
     val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
     val g = store.session
@@ -431,25 +429,21 @@ class StreamingSpec extends AnyFunSuite {
     g.addTarget(g.root, a)
     store.commit()
 
-    @volatile var nodeCount = 0L
-    val q = OplogStream.follow[Cat](spark, CatalogueModel, dir,
-      st => nodeCount = st.nodes.count(),
-      trigger = Trigger.ProcessingTime("500 milliseconds"))
-    def awaitCount(expect: Long): Unit = {
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (nodeCount != expect && System.nanoTime() < deadline) Thread.sleep(250)
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
+    def catchUpTo(expect: Long): Unit = {
+      replica.catchUp()
+      val nodeCount = replica.currentState.nodes.count()
       assert(nodeCount === expect, s"follower stuck at $nodeCount, want $expect")
     }
-    awaitCount(2L) // root + First
+    catchUpTo(2L) // root + First
 
-    // the writer keeps committing WHILE the follower runs — AvailableNow
-    // would have stopped at catch-up; ProcessingTime must pick these up
+    // the writer keeps committing WHILE the follower serves — the next
+    // catch-up must pick the new batch up without a new bootstrap
     val b = g.newNode(Song("Second"))
     g.addTarget(g.root, b)
     store.commit()
-    awaitCount(3L)
+    catchUpTo(3L)
 
-    q.stop()
     store.close()
   }
 
@@ -488,11 +482,7 @@ class StreamingSpec extends AnyFunSuite {
     g.addTarget(g.root, b)
     store.commit()
 
-    var last: Option[GraphState[Cat]] = None
-    val q = OplogStream.follow[Cat](spark, CatalogueModel, dir.toString,
-      st => last = Some(st))
-    q.awaitTermination(120000)
-    val st = last.get
+    val st = caughtUp(dir.toString)
     // both committed batches applied, the torn batch's phantom rows dropped
     assert(st.nodes.count() === g.applied().nodes.count())
     assert(st.nodes.where(col("id") === phantom).count() === 0L,
@@ -523,11 +513,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     store.commit()
 
-    var last: Option[GraphState[Cat]] = None
-    val q = OplogStream.follow[Cat](spark, CatalogueModel, dir,
-      st => last = Some(st))
-    q.awaitTermination(180000)
-    val st = last.get
+    val st = caughtUp(dir)
     val w = g.applied()
     // full-state equivalence, not just counts: every node row (id, kind,
     // value) and every edge must match the writer exactly
@@ -554,11 +540,7 @@ class StreamingSpec extends AnyFunSuite {
     g.setValue(m, Artist(1, "v2"))
     store.commit()
 
-    var last: Option[GraphState[Cat]] = None
-    val q = OplogStream.follow[Cat](spark, CatalogueModel, dir,
-      st => last = Some(st))
-    q.awaitTermination(120000)
-    val st = last.get
+    val st = caughtUp(dir)
     val mRows = st.nodes.where(col("id") === m).collect()
     assert(mRows.length === 1, s"node $m duplicated: ${mRows.length} rows")
     assert(mRows.head.getStruct(mRows.head.fieldIndex("value")).getString(1) === "v2")
