@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Encoders, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
@@ -42,13 +43,18 @@ import graft.functions.Param
   * local copy.
   *
   * Point reads ([[getValue]], [[getValues]], [[getTargets]], [[targets]],
-  * [[sources]]) and addTarget's lookup build no DataFrame. Each table
-  * keeps its base's physical RDD, planned once when the base materializes
-  * and carried through appends; a read is one row predicate, run as one
-  * Spark job over that RDD ([[probe]]) and over the tail on the driver.
-  * A read makes no Catalyst pass and compiles no class, whatever its id —
-  * the fixed-shape-operation-as-physical-dataflow move of Pregelix (VLDB
-  * 2014), in place of the reference's hash-adjacency probe (Graph.hs:27-34).
+  * [[sources]]) and addTarget's lookup build no DataFrame. A materialized
+  * base is KEYED: its physical rows are hash-partitioned by the table's
+  * lookup key (nodes by `id`, edges and index by `src`), held as unsafe
+  * rows by a local checkpoint, with the partitioner that placed them kept
+  * beside them and carried through appends. A read is one row predicate,
+  * run as one Spark job over the partitions that own its ids ([[probe]])
+  * and over the tail on the driver: a single-id read runs one task,
+  * whatever the partition count. [[sources]] tests `dst`, which no base
+  * is keyed by, so it scans every partition. A read makes no Catalyst
+  * pass and compiles no class, whatever its id — the keyed vertex
+  * partitions of Pregelix (VLDB 2014), in place of the reference's
+  * per-node hash maps (Graph.hs:27-34).
   *
   * At 100 TB the bulk paths run as batch jobs: deltas arrive as DataFrames
   * (see [[GraphState.bulkLoad]], [[GraphState.withTargetsDF]]), index
@@ -96,11 +102,13 @@ object GraphState {
   /** One table of a state: a base plan plus the rows appended to it on the
     * driver since it last materialized, held in Catalyst's internal row
     * form (converted once, at append). `df` is base ∪ tail; the tail
-    * enters it as ONE local relation, scanned as one partition.
+    * enters it as ONE local relation, scanned as one partition. `key` is
+    * the ordinal of the column the point reads look rows up by: the
+    * column a materialized base is hash-partitioned by.
     */
   final class Table private[GraphState] (
       val base: DataFrame, val tail: Vector[InternalRow], schema: StructType,
-      planned: Planned) {
+      private[graft] val key: Int, rows: Rows) {
 
     lazy val df: DataFrame = withTail(_.coalesce(1))
 
@@ -108,52 +116,114 @@ object GraphState {
       if (tail.isEmpty) base
       else base.unionByName(scan(GraftShim.localRelation(base.sparkSession, schema, tail)))
 
-    /** The base's physical rows in `schema`'s column order — the base's
-      * plan run through Catalyst once, shared by every table appended from
-      * it.
+    /** The base's physical rows in `schema`'s column order, shared by
+      * every table appended from it.
       */
-    private[GraphState] def baseRows: RDD[InternalRow] = planned.rows
+    private[graft] def baseRows: RDD[InternalRow] = rows.rdd
+
+    /** The partitioner that placed the base's rows by `key` when it
+      * materialized; None for a base that has not (a bulk load, a loaded
+      * checkpoint, a replaced plan).
+      */
+    private[graft] def partitioner: Option[Partitioner] = rows.partitioner
 
     private[GraphState] def appended(rows: Seq[Row]): Table =
       if (rows.isEmpty) this
       else {
         val internal = CatalystTypeConverters.createToCatalystConverter(schema)
-        new Table(base, tail ++ rows.map(internal(_).asInstanceOf[InternalRow]), schema, planned)
+        new Table(base, tail ++ rows.map(internal(_).asInstanceOf[InternalRow]), schema, key,
+          this.rows)
       }
 
     /** A change that is not an append: `plan` becomes the base, to be
       * materialized by the next [[GraphState.checkpointedSince]].
       */
-    private[GraphState] def replaced(plan: DataFrame): Table = Table(plan, schema)
+    private[GraphState] def replaced(plan: DataFrame): Table = Table(plan, schema, key)
 
-    /** Base ∪ tail as a new materialized base, coalesced to `partitions`,
-      * with its physical rows planned now, so the next read plans nothing.
-      * The tail is scanned in parallel here, not as one partition: one
-      * batch past the bound (a bulk replay) must not shrink the table to a
-      * single partition.
+    /** Base ∪ tail as a new keyed base: its physical rows hash-partitioned
+      * by `key` into `partitions` partitions (a `HashPartitioner`, kept
+      * beside the rows) and held by a local checkpoint, as unsafe rows in
+      * `schema`'s order that a read scans with no projection. One job,
+      * described [[GraphState.MaterializeJob]], runs the shuffle and
+      * counts the rows; the count sizes the base's relation for the
+      * DataFrame readers. The tail is scanned in parallel here, not as
+      * one partition.
       */
-    private[GraphState] def materialized(partitions: Option[Int]): Table = {
-      val t = replaced(partitions.fold(df)(withTail(identity).coalesce).localCheckpoint(true))
-      t.baseRows
-      t
+    private[GraphState] def materialized(partitions: Int): Table = {
+      val part = new HashPartitioner(partitions)
+      val k = key
+      val keyed = physical(withTail(identity), schema)
+        .map(r => (r.getLong(k), r.copy()))
+        .partitionBy(part)
+        .mapPartitions(_.map(_._2), preservesPartitioning = true)
+        .localCheckpoint()
+      val sc = base.sparkSession.sparkContext
+      val description = sc.getLocalProperty(JobDescription)
+      sc.setLocalProperty(JobDescription, MaterializeJob)
+      val count = try keyed.count() finally sc.setLocalProperty(JobDescription, description)
+      new Table(GraftShim.rddRelation(base.sparkSession, schema, keyed, count), Vector.empty,
+        schema, key, new Rows(keyed, Some(part)))
     }
   }
 
   private object Table {
-    def apply(base: DataFrame, schema: StructType): Table =
-      new Table(base, Vector.empty, schema, new Planned(base, schema))
+    def apply(base: DataFrame, schema: StructType, key: Int): Table =
+      new Table(base, Vector.empty, schema, key, new Rows(physical(base, schema), None))
   }
 
-  /** A base's physical RDD, planned on first use. */
-  private[GraphState] final class Planned(base: DataFrame, schema: StructType) {
-    lazy val rows: RDD[InternalRow] =
-      base.select(schema.fieldNames.toIndexedSeq.map(col): _*).queryExecution.toRdd
+  /** A base's physical rows, computed on first use, and the partitioner
+    * that placed them, if any.
+    */
+  private final class Rows(plan: => RDD[InternalRow], val partitioner: Option[Partitioner]) {
+    lazy val rdd: RDD[InternalRow] = plan
+  }
+
+  /** `df`'s physical rows in `schema`'s column order: its plan run through
+    * Catalyst once.
+    */
+  private def physical(df: DataFrame, schema: StructType): RDD[InternalRow] =
+    df.select(schema.fieldNames.toIndexedSeq.map(col): _*).queryExecution.toRdd
+
+  private val JobDescription = "spark.job.description"
+
+  /** The `spark.job.description` of the job that materializes a table. */
+  private[graft] val MaterializeJob = "graft: materialize a keyed base"
+
+  /** A membership test of ids that tasks can carry: the sorted ids ride
+    * in the task closure, which Spark ships to each executor once per job
+    * inside the broadcast task binary.
+    */
+  private final class IdSet(ids: Iterable[Long]) extends (Long => Boolean) with Serializable {
+    val sorted: Array[Long] = ids.toArray.distinct.sorted
+    def apply(id: Long): Boolean = java.util.Arrays.binarySearch(sorted, id) >= 0
+  }
+
+  /** One lookup of a [[GraphState.probe]]: the rows of `table` whose
+    * `column` holds one of `ids` and that pass `and`.
+    */
+  private final case class Lookup(table: Table, column: Int, ids: IdSet,
+      and: InternalRow => Boolean = _ => true) {
+    val keep: InternalRow => Boolean = {
+      val (c, in, p) = (column, ids, and)
+      r => in(r.getLong(c)) && p(r)
+    }
+
+    /** The base partitions that can hold a match: those that own `ids`
+      * when `column` is the key the base was partitioned by — computed by
+      * the partitioner that placed the rows — else every partition.
+      */
+    def base: RDD[InternalRow] = table.partitioner match {
+      case Some(p) if column == table.key =>
+        val owners = ids.sorted.iterator.map(id => p.getPartition(id)).toSet
+        PartitionPruningRDD.create(table.baseRows, owners)
+      case _ => table.baseRows
+    }
   }
 
   def apply[V](spark: SparkSession, model: GraphModel[V],
       nodes: DataFrame, edges: DataFrame, index: DataFrame): GraphState[V] =
-    GraphState(spark, model,
-      Table(nodes, nodesSchema(model)), Table(edges, edgesSchema), Table(index, indexSchema))
+    GraphState(spark, model, Table(nodes, nodesSchema(model), NodeId),
+      Table(edges, edgesSchema, EdgeSrc), Table(index, indexSchema, IndexSrc))
 
   def empty[V](spark: SparkSession, model: GraphModel[V]): GraphState[V] = {
     def e(s: StructType) =
@@ -253,7 +323,8 @@ final case class GraphState[V](
     * (a superset of the requested pairs that already exist). It is one
     * [[probe]] over the nodes and edges tables, testing `id ∈ S` on nodes
     * and `src ∈ S ∧ dst ∈ S` on edges for the batch's id set `S`
-    * ([[idSet]]): no join, no Catalyst pass and no generated class.
+    * ([[GraphState.IdSet]]), on the partitions that own `S` of each keyed
+    * base: no join, no Catalyst pass and no generated class.
     * The edge and index deltas are then computed here, the index rows by
     * the model's own `indexes(target, source)` — the function
     * [[GraphState.deriveIndex]] runs on the executors for the bulk paths —
@@ -272,9 +343,9 @@ final case class GraphState[V](
     */
   def withTargets(pairs: Seq[(Long, Long)]): GraphState[V] = {
     val wanted = pairs.distinct
-    val in = idSet(wanted.flatMap(p => Seq(p._1, p._2)))
-    val Seq(nodeHits, edgeHits) = probe(nodeTable -> (r => in(r.getLong(NodeId))),
-      edgeTable -> (r => in(r.getLong(EdgeSrc)) && in(r.getLong(EdgeDst))))
+    val in = new IdSet(wanted.flatMap(p => Seq(p._1, p._2)))
+    val Seq(nodeHits, edgeHits) = probe(Lookup(nodeTable, NodeId, in),
+      Lookup(edgeTable, EdgeSrc, in, r => in(r.getLong(EdgeDst))))
     val present = edgeHits.map(r => (r.getLong(EdgeSrc), r.getLong(EdgeDst))).toSet
     val delta = wanted.filterNot(present)
     if (delta.isEmpty) return this
@@ -415,31 +486,34 @@ final case class GraphState[V](
         .unionByName(deriveIndex(model, newNodes, incoming))))
   }
 
-  /** Materialize all three tables as they are — for state just loaded from
-    * a checkpoint, whose files a later close() may move to the archive.
+  /** Materialize all three tables as they are, as keyed bases of as many
+    * partitions as each loaded base has (at least one) — for state just
+    * loaded from a checkpoint, whose files a later close() may move to the
+    * archive.
     */
-  def checkpointed(): GraphState[V] = copy(
-    nodeTable = nodeTable.materialized(None),
-    edgeTable = edgeTable.materialized(None),
-    indexTable = indexTable.materialized(None))
+  def checkpointed(): GraphState[V] = {
+    def keyed(t: Table) = t.materialized(math.max(1, partitions(t)))
+    copy(nodeTable = keyed(nodeTable), edgeTable = keyed(edgeTable), indexTable = keyed(indexTable))
+  }
 
   /** The checkpoint rule of every op applier: settle the tables this state
     * changed against `prev` (the state the step started from) and keep the
     * others as they are. A table that only gained tail rows stays as it is
     * while its tail holds at most [[GraphState.TailBound]] rows — no Spark
     * job. Past the bound, or after a change that is not an append, it
-    * materializes: that truncates lineage (without it a long mutation
-    * session accumulates an unbounded plan), and the table is coalesced
-    * back to at most max(the partition count of `prev`'s base,
-    * `spark.sql.shuffle.partitions`), so neither a stream of small deltas
-    * nor the tail's own partition adds a task to every later scan of it.
+    * materializes as a keyed base: that truncates lineage (without it a
+    * long mutation session accumulates an unbounded plan), and the rows
+    * are hash-partitioned by the table's key into max(the partition count
+    * of `prev`'s base, `spark.sql.shuffle.partitions`) partitions, so
+    * neither a stream of small deltas nor the tail's own partition adds a
+    * partition, and a point read still runs one task per owning partition.
     */
   def checkpointedSince(prev: GraphState[V]): GraphState[V] = {
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     def settle(was: Table, now: Table): Table =
       if (now eq was) was
       else if ((now.base eq was.base) && now.tail.size <= TailBound) now
-      else now.materialized(Some(math.max(partitions(was), shufflePartitions)))
+      else now.materialized(math.max(partitions(was), shufflePartitions))
     copy(
       nodeTable = settle(prev.nodeTable, nodeTable),
       edgeTable = settle(prev.edgeTable, edgeTable),
@@ -452,43 +526,36 @@ final case class GraphState[V](
   private def partitions(t: Table): Int = t.baseRows.getNumPartitions
 
   // ------------------------------------------------------------ point reads
-  // Each read is one [[probe]]: one Spark job over the table's planned base
-  // RDD, with no Catalyst pass and no generated class, and the same row
-  // predicate over the tail on the driver. Ids are deduped on the driver.
-  // Each read has one implementation, its batched form; a single-id read
-  // is the batched form over one id.
+  // Each read is one [[probe]]: one Spark job over the owning partitions of
+  // the table's keyed base, with no Catalyst pass and no generated class,
+  // and the same row predicate over the tail on the driver. Ids are
+  // deduped on the driver. Each read has one implementation, its batched
+  // form; a single-id read is the batched form over one id.
 
-  /** The rows of each table that pass its predicate, in probe order: ONE
-    * Spark job (`runJob`) over the union of the tables' physical base RDDs,
-    * then the same predicates over the tails here. Base rows are copied
-    * off the scan's reused buffers before they leave the task. Bases with
-    * no partition (a store that has never materialized a table) are left
-    * out, so a probe of tails alone runs no job.
+  /** The rows each lookup finds, in lookup order: ONE Spark job
+    * (`runJob`) over the union of the tables' base partitions that can
+    * hold a match, then the same predicates over the tails here. A lookup
+    * by the column its base is keyed by runs only on the partitions that
+    * the base's partitioner assigns its ids to (`PartitionPruningRDD`);
+    * a lookup by another column (`sources`, by `dst`) or of a base with no
+    * partitioner (a bulk load) runs on every partition. Base rows are
+    * copied off the scan's reused buffers before they leave the task.
+    * Bases with no partition (a store that has never materialized a
+    * table) are left out, so a probe of tails alone runs no job.
     */
-  private def probe(probes: (Table, InternalRow => Boolean)*): Seq[Seq[InternalRow]] = {
+  private def probe(lookups: Lookup*): Seq[Seq[InternalRow]] = {
     val sc = spark.sparkContext
-    val tagged = probes.zipWithIndex.map { case ((t, p), i) =>
-      t.baseRows.mapPartitions(_.filter(p).map(r => (i, r.copy())))
+    val tagged = lookups.zipWithIndex.map { case (l, i) =>
+      val keep = l.keep
+      l.base.mapPartitions(_.filter(keep).map(r => (i, r.copy())))
     }.filter(_.partitions.nonEmpty)
     val hits =
       if (tagged.isEmpty) Array.empty[(Int, InternalRow)]
       else sc.runJob(if (tagged.size == 1) tagged.head else sc.union(tagged),
         (rows: Iterator[(Int, InternalRow)]) => rows.toArray).flatten
-    probes.zipWithIndex.map { case ((t, p), i) =>
-      hits.collect { case (`i`, r) => r }.toSeq ++ t.tail.filter(p)
+    lookups.zipWithIndex.map { case (l, i) =>
+      hits.collect { case (`i`, r) => r }.toSeq ++ l.table.tail.filter(l.keep)
     }
-  }
-
-  /** [[probe]] of one table. */
-  private def scan(t: Table)(p: InternalRow => Boolean): Seq[InternalRow] = probe(t -> p).head
-
-  /** A membership test of `ids` that tasks can carry: the sorted ids ride
-    * in the task closure, which Spark ships to each executor once per job
-    * inside the broadcast task binary.
-    */
-  private def idSet(ids: Iterable[Long]): Long => Boolean = {
-    val sorted = ids.toArray.distinct.sorted
-    id => java.util.Arrays.binarySearch(sorted, id) >= 0
   }
 
   private lazy val nodeRow = CatalystTypeConverters.createToScalaConverter(nodesSchema(model))
@@ -506,13 +573,14 @@ final case class GraphState[V](
     getValues(Seq(n)).getOrElse(n, throw new NoSuchElementException(s"no node with id $n"))
 
   /** Batched getValue: the values of the known ids among `ids`, in one
-    * probe whatever their number ([[idSet]]). Unknown ids are absent.
+    * probe whatever their number ([[GraphState.IdSet]]), on the
+    * partitions that own them. Unknown ids are absent.
     */
   def getValues(ids: Iterable[Long]): Map[Long, V] =
     if (ids.isEmpty) Map.empty
     else {
-      val in = idSet(ids)
-      scan(nodeTable)(r => in(r.getLong(NodeId))).map(r => r.getLong(NodeId) -> valueOf(r)).toMap
+      probe(Lookup(nodeTable, NodeId, new IdSet(ids))).head
+        .map(r => r.getLong(NodeId) -> valueOf(r)).toMap
     }
 
   /** getTargets (op #5, Graph.hs:69-70): nodes reachable from `n` via
@@ -526,12 +594,12 @@ final case class GraphState[V](
   def getTargets(keys: Iterable[(Long, IndexKey)]): Map[(Long, IndexKey), Seq[Long]] =
     if (keys.isEmpty) Map.empty
     else {
-      val in = idSet(keys.map(_._1))
       val wanted = keys.iterator.map { case (n, k) =>
         (n, UTF8String.fromString(k.kind), UTF8String.fromString(k.key)) }.toSet
       val keyOf = (r: InternalRow) =>
         (r.getLong(IndexSrc), r.getUTF8String(IndexKind), r.getUTF8String(IndexKeyAt))
-      grouped(scan(indexTable)(r => in(r.getLong(IndexSrc)) && wanted(keyOf(r))), IndexDst) { r =>
+      val hits = probe(Lookup(indexTable, IndexSrc, new IdSet(keys.map(_._1)), r => wanted(keyOf(r))))
+      grouped(hits.head, IndexDst) { r =>
         val (n, kind, key) = keyOf(r)
         n -> IndexKey(kind.toString, key.toString)
       }
@@ -563,10 +631,7 @@ final case class GraphState[V](
     */
   private def hop(ns: Iterable[Long], from: Int, to: Int): Map[Long, Seq[Long]] =
     if (ns.isEmpty) Map.empty
-    else {
-      val in = idSet(ns)
-      grouped(scan(edgeTable)(r => in(r.getLong(from))), to)(_.getLong(from))
-    }
+    else grouped(probe(Lookup(edgeTable, from, new IdSet(ns))).head, to)(_.getLong(from))
 
   /** The distinct ids at `column` of `rows`, per `key`. */
   private def grouped[K](rows: Seq[InternalRow], column: Int)(key: InternalRow => K): Map[K, Seq[Long]] =

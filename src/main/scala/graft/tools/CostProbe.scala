@@ -1,5 +1,6 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -32,14 +33,21 @@ object CostProbe {
   /** The Spark jobs a block started, the Dataset actions it ran by name
     * ("collect", "localCheckpoint", …, failed ones included), the executed
     * plans of its successful actions (final adaptive plans), its finished
-    * jobs and stages, the codegen compiles meanwhile, and the SQL
-    * executions it started — each one a planned query run through
-    * Catalyst; a job run straight on an RDD starts none.
+    * jobs and stages, the codegen compiles meanwhile, the SQL executions
+    * it started — each one a planned query run through Catalyst; a job
+    * run straight on an RDD starts none — and the milliseconds the JVM's
+    * JIT compilers and garbage collectors spent meanwhile, in every
+    * thread (the block's own work and whatever ran beside it).
     */
   final case class Cost(jobs: Int, actions: Seq[String], plans: Seq[SparkPlan],
-      finished: Seq[Job], stages: Seq[Stage], compiles: Long, sqlExecutions: Int) {
+      finished: Seq[Job], stages: Seq[Stage], compiles: Long, sqlExecutions: Int,
+      jitMs: Long, gcMs: Long) {
+    /** Tasks run by the block's completed stages. */
+    def tasks: Int = stages.map(_.tasks).sum
+
     override def toString: String =
-      s"Cost($jobs jobs, $sqlExecutions SQL executions, actions $actions, $compiles compiles)"
+      s"Cost($jobs jobs, $tasks tasks, $sqlExecutions SQL executions, actions $actions, " +
+        s"$compiles compiles, JIT $jitMs ms, GC $gcMs ms)"
   }
 
   /** Run `f` and return its [[Cost]]. Listener events are asynchronous, so
@@ -100,16 +108,33 @@ object CostProbe {
     spark.sparkContext.addSparkListener(jobListener)
     spark.listenerManager.register(actionListener)
     try {
+      val (jit0, gc0) = (jitMs(), gcMs())
       val compiles = compilesOf(f)
+      val (jit, gc) = (jitMs() - jit0, gcMs() - gc0)
       ListenerBusShim.drain(spark.sparkContext)
       Cost(started.size, actions.asScala.toList, plans.asScala.toList,
         finished.asScala.toList.sortBy(_.id), stages.asScala.toList.sortBy(_.id),
-        compiles, executions.get)
+        compiles, executions.get, jit, gc)
     } finally {
       spark.listenerManager.unregister(actionListener)
       spark.sparkContext.removeSparkListener(jobListener)
     }
   }
+
+  /** Total JIT compilation ms of this JVM so far; 0 where the JVM does not
+    * report it.
+    */
+  private def jitMs(): Long = {
+    val jit = ManagementFactory.getCompilationMXBean
+    if (jit != null && jit.isCompilationTimeMonitoringSupported) jit.getTotalCompilationTime
+    else 0L
+  }
+
+  /** Total collection ms of this JVM's garbage collectors so far
+    * (a collector that reports none counts 0).
+    */
+  private def gcMs(): Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum
 
   /** Run `f` and return how many classes codegen compiled meanwhile (cache
     * hits are not compiles).

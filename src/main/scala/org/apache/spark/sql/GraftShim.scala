@@ -33,6 +33,24 @@ object GraftShim {
       catalyst.plans.logical.LocalRelation(
         catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
+  /** A relation over `count` rows already in Catalyst's internal form, in
+    * `schema`'s column order — the relation `Dataset.localCheckpoint`
+    * builds, over an RDD the caller placed (`LogicalRDD` and
+    * `Dataset.ofRows` are `private[sql]`). Its partitioning is unknown to
+    * Catalyst, and its size is `count` rows of the schema's estimated
+    * width, as a local relation is sized.
+    */
+  def rddRelation(spark: SparkSession, schema: types.StructType,
+      rows: org.apache.spark.rdd.RDD[catalyst.InternalRow], count: Long): DataFrame = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val output = catalyst.types.DataTypeUtils.toAttributes(schema)
+    val stats = catalyst.plans.logical.Statistics(
+      sizeInBytes = catalyst.plans.logical.statsEstimation.EstimationUtils
+        .getSizePerRow(output) * count,
+      rowCount = Some(count))
+    classic.Dataset.ofRows(cs, execution.LogicalRDD(output, rows)(cs, Some(stats), None))
+  }
+
   /** ONE partitioned parquet relation over an EXPLICIT file list, which
     * may span several root directories — the read of a persisted index's
     * cells manifest (graft.pipeline.CellsLayout; a mutated clone's

@@ -2,8 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
 import graft.graph.TestSpark
-import graft.tools.Inspect
+import graft.tools.{CostProbe, Inspect}
 
 /** The specs run the production configuration, and `Inspect` reports on
   * the shared session without stopping it.
@@ -52,5 +56,21 @@ class GraftSessionSpec extends AnyFunSuite {
     val stages = out.linesIterator.filter(_.startsWith("  stage ")).toSeq
     assert(stages.nonEmpty && !stages.exists(_.contains("CompletableFuture")), out)
     stillWorks()
+  }
+
+  test("CostProbe counts tasks and JIT and GC ms, and starts no job of its own") {
+    val idle = CostProbe.costOf(spark)(())
+    assert(idle.jobs === 0 && idle.tasks === 0 && idle.stages.isEmpty, idle)
+    def gcTotal() = ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime.max(0L)).sum
+    def jitTotal() = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
+    val rdd = spark.sparkContext.parallelize(1 to 100, 6)
+    val (gc0, jit0) = (gcTotal(), jitTotal())
+    val c = CostProbe.costOf(spark) { assert(rdd.map(_ * 2).sum() === 10100d); System.gc() }
+    val (gc, jit) = (gcTotal() - gc0, jitTotal() - jit0)
+    assert(c.jobs === 1 && c.tasks === 6 && c.stages.map(_.tasks).sum === 6, c)
+    // the deltas are taken inside the probe's own window
+    assert(c.gcMs >= 0 && c.gcMs <= gc && c.jitMs >= 0 && c.jitMs <= jit, s"$c: GC $gc, JIT $jit")
+    assert(c.toString.contains("1 jobs, 6 tasks") && c.toString.contains(s"GC ${c.gcMs} ms"), c)
   }
 }

@@ -1,36 +1,86 @@
 package graft.graph
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.{GraphReplica, GraphStore}
 import graft.tools.CostProbe
 
+/** A model whose value schema (a Short and a Double) no other spec scans:
+  * a read that projected its nodes rows would compile a class that no
+  * earlier test in the JVM has cached.
+  */
+sealed trait Gauge
+case object GaugeRoot extends Gauge
+final case class Reading(sensor: Short, level: Double) extends Gauge
+
+object GaugeModel extends GraphModel[Gauge] {
+  val valueSchema: StructType = StructType(Seq(
+    StructField("sensor", ShortType, nullable = true),
+    StructField("level", DoubleType, nullable = true)))
+
+  def kindOf(v: Gauge): String = v match {
+    case GaugeRoot => "Root"
+    case _: Reading => "Reading"
+  }
+
+  def toValueRow(v: Gauge): Row = v match {
+    case GaugeRoot => Row(null, null)
+    case Reading(s, l) => Row(s, l)
+  }
+
+  def fromValueRow(kind: String, row: Row): Gauge = kind match {
+    case "Root" => GaugeRoot
+    case "Reading" => Reading(row.getShort(0), row.getDouble(1))
+  }
+
+  def indexes(target: Gauge, source: Gauge): Seq[IndexKey] = (target, source) match {
+    case (Reading(s, _), GaugeRoot) => Seq(IndexKey("Root_Reading", s.toString))
+    case _ => Seq.empty
+  }
+}
+
 /** What a point read costs: one Spark job run straight on the tables'
-  * planned base RDDs — no SQL execution, so no Catalyst pass — and no
-  * codegen compile, not even for the first read of a state.
+  * keyed bases — no SQL execution, so no Catalyst pass — with one task
+  * per partition that owns a looked-up id, and no codegen compile, not
+  * even for the first read of a state.
   */
 class ReadCostSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** 22 genres under the root, two songs each: genres 0-10 sit in the
-    * materialized bases, genres 11-21 in the tails.
-    */
-  private lazy val fixture: (GraphSession[Cat], Seq[(Long, Set[Long])]) = {
-    val g = GraphSession.inMemory(spark, CatalogueModel, CatRoot: Cat)
-    def genres(from: Int): Seq[(Long, Set[Long])] = (from until from + 11).map { i =>
+  /** 11 genres under the root from genre `from` on, two songs each. */
+  private def genres(g: GraphSession[Cat], from: Int): Seq[(Long, Set[Long])] =
+    (from until from + 11).map { i =>
       val genre = g.newNode(Genre(s"g$i"))
       g.addTarget(g.root, genre)
       genre -> (1 to 2).map { j =>
         val song = g.newNode(Song(s"g$i-s$j")); g.addTarget(genre, song); song
       }.toSet
     }
-    val inBase = genres(0)
-    // a SetValue and a RemoveTarget (of an absent edge) materialize all
-    // three tables without changing what they hold
-    g.setValue(inBase.head._1, Genre("g0"))
-    g.removeTarget(g.root, g.root)
-    g.applied()
-    val inTail = genres(11)
+
+  /** A session whose 11 genres sit in bases of `partitions` partitions:
+    * a SetValue and a RemoveTarget (of an absent edge) materialize all
+    * three tables without changing what they hold.
+    */
+  private def keyed(partitions: Int): (GraphSession[Cat], Seq[(Long, Set[Long])]) =
+    TestSpark.withShufflePartitions(partitions) {
+      val g = GraphSession.inMemory(spark, CatalogueModel, CatRoot: Cat)
+      val inBase = genres(g, 0)
+      g.setValue(inBase.head._1, Genre("g0"))
+      g.removeTarget(g.root, g.root)
+      val st = g.applied()
+      assert(Seq(st.nodeTable, st.edgeTable, st.indexTable).forall(t =>
+        t.tail.isEmpty && t.partitioner.map(_.numPartitions).contains(partitions)))
+      (g, inBase)
+    }
+
+  /** 22 genres under the root, two songs each: genres 0-10 sit in the
+    * materialized bases, genres 11-21 in the tails.
+    */
+  private lazy val fixture: (GraphSession[Cat], Seq[(Long, Set[Long])]) = {
+    val (g, inBase) = keyed(4)
+    val inTail = genres(g, 11)
     val st = g.applied()
     assert(st.nodeTable.tail.nonEmpty && st.edgeTable.tail.nonEmpty &&
       st.indexTable.tail.nonEmpty)
@@ -52,6 +102,52 @@ class ReadCostSpec extends AnyFunSuite {
       assert(i.jobs === 1 && i.sqlExecutions === 0, s"sources($genre): $i")
     }
     intercept[NoSuchElementException](g.getValue(424242L))
+  }
+
+  test("over 64-partition bases a single-id read runs 1 task, a k-id read at most k; sources all") {
+    val (g, genres) = keyed(64)
+    for ((genre, songs) <- genres.take(3)) {
+      def oneTask(read: String)(f: => Unit): Unit = {
+        val c = CostProbe.costOf(spark)(f)
+        assert(c.jobs === 1 && c.tasks === 1 && c.sqlExecutions === 0, s"$read($genre): $c")
+      }
+      oneTask("getValue")(assert(g.getValue(genre).isInstanceOf[Genre]))
+      oneTask("getTargets")(assert(g.getTargets(genre, songKey).toSet === songs))
+      oneTask("targets")(assert(g.targets(genre).toSet === songs))
+      // edges are keyed by src: a lookup by dst scans every partition
+      val s = CostProbe.costOf(spark)(assert(g.sources(genre) === Seq(g.root)))
+      assert(s.jobs === 1 && s.tasks === 64, s"sources($genre): $s")
+    }
+    val st = g.applied()
+    for (k <- Seq(2, 5, 11)) {
+      val ids = genres.take(k).map(_._1)
+      val c = CostProbe.costOf(spark)(assert(st.getValues(ids).keySet === ids.toSet))
+      assert(c.jobs === 1 && c.tasks <= k && c.sqlExecutions === 0, s"getValues of $k ids: $c")
+      val t = CostProbe.costOf(spark)(assert(st.targets(ids).keySet === ids.toSet))
+      assert(t.jobs === 1 && t.tasks <= k, s"targets of $k ids: $t")
+    }
+    val unknown = CostProbe.costOf(spark)(assert(st.getValues(Seq(424242L)).isEmpty))
+    assert(unknown.tasks === 1, s"getValues of an unknown id: $unknown")
+  }
+
+  test("the first reads of a fresh state's keyed bases compile no class") {
+    val g = GraphSession.inMemory(spark, GaugeModel, GaugeRoot: Gauge)
+    val readings = (1 to 6).map { i =>
+      val r = g.newNode(Reading(i.toShort, i / 4d)); g.addTarget(g.root, r); r -> i
+    }
+    g.setValue(readings.head._1, Reading(1, 0.25))
+    g.removeTarget(g.root, g.root)
+    val st = g.applied()
+    assert(Seq(st.nodeTable, st.edgeTable, st.indexTable).forall(t =>
+      t.tail.isEmpty && t.partitioner.isDefined), "the bases did not materialize")
+    val (leaf, i) = readings.last
+    val compiles = CostProbe.compilesOf {
+      assert(g.getValue(leaf) === Reading(i.toShort, i / 4d))
+      assert(g.getTargets(g.root, IndexKey("Root_Reading", i.toString)) === Seq(leaf))
+      assert(g.targets(g.root).toSet === readings.map(_._1).toSet)
+      assert(g.sources(leaf) === Seq(g.root))
+    }
+    assert(compiles === 0L, s"the first reads of a state compiled $compiles classes")
   }
 
   test("20 reads of 20 distinct ids compile no class after the first of each plan shape") {

@@ -6,6 +6,19 @@ import org.apache.spark.sql.types._
 /** The spec session: the production configuration on 4 cores. */
 object TestSpark {
   lazy val spark: SparkSession = graft.GraftSession(4)
+
+  /** `f` with the SQL setting `key` at `value`. */
+  def withConf[A](key: String, value: String)(f: => A): A = {
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  /** `f` with `spark.sql.shuffle.partitions` at `n`: the partition count
+    * a table materializes with after a change.
+    */
+  def withShufflePartitions[A](n: Int)(f: => A): A =
+    withConf("spark.sql.shuffle.partitions", n.toString)(f)
 }
 
 /** The music-catalogue model of the reference's internal tests

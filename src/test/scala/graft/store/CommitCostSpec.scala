@@ -20,9 +20,13 @@ class CommitCostSpec extends AnyFunSuite {
 
   private def parts(df: DataFrame): Int = df.rdd.getNumPartitions
 
-  // the name predates the tail; the assertions below pin 1 job and no SQL
-  // execution (the lookup runs on the tables' planned RDDs), no
-  // localCheckpoint and no write action
+  private def materializations(c: CostProbe.Cost): Int =
+    c.finished.count(_.description == GraphState.MaterializeJob)
+
+  // the name predates the tail; the assertions below pin 1 job of at most
+  // 2 tasks per table and no SQL execution (the lookup runs on the owning
+  // partitions of the tables' keyed bases), no materialization and no
+  // write action
   test("warm synchronous newNode + addTarget + commit: ≤ 6 jobs, no partition growth") {
     val dir = Files.createTempDirectory("graft-commit-cost-").toString
     val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
@@ -52,8 +56,11 @@ class CommitCostSpec extends AnyFunSuite {
     val cost = CostProbe.costOf(spark)(insert(5))
     assert(cost.jobs === 1, s"a warm insert + commit ran ${cost.jobs} jobs")
     assert(cost.sqlExecutions === 0, s"a warm insert + commit ran a planned query: $cost")
-    assert(!cost.actions.contains("localCheckpoint"),
-      s"an append-only commit must copy no table: ${cost.actions}")
+    // the batch names 2 ids (the genre and the new song): each table's
+    // lookup runs on the partitions that own them
+    assert(cost.tasks <= 2 * 2, s"a warm insert + commit ran ${cost.tasks} tasks: $cost")
+    assert(!cost.actions.contains("localCheckpoint") && materializations(cost) === 0,
+      s"an append-only commit must copy no table: $cost")
     assert(cost.actions.forall(_ == "collect"),
       s"a commit must run no write action: ${cost.actions}")
     def tableParts() = {
@@ -69,9 +76,10 @@ class CommitCostSpec extends AnyFunSuite {
       s"(nodes, edges, index) partitions $first → $last")
     assert(g.getTargets(genre, IndexKey("Genre_Song")).toSet.size === 40 + songs.size)
     assert(g.getStats() === ((2L + 40 + songs.size, 1L + 40 + songs.size, 1L + 40 + songs.size)))
-    // the control for the action check: a SetValue commit materializes the nodes and index tables
+    // the control for the materialization check: a SetValue commit
+    // materializes the nodes and index tables
     val set = CostProbe.costOf(spark) { g.setValue(genre, Genre("rock")); store.commit() }
-    assert(set.actions.count(_ == "localCheckpoint") === 2, s"a SetValue commit: ${set.actions}")
+    assert(materializations(set) === 2, s"a SetValue commit: $set, ${set.finished}")
     store.close()
   }
 
