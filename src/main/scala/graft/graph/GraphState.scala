@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.{HashPartitioner, Partitioner, TaskContext}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Encoders, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -55,6 +55,16 @@ import graft.functions.Param
   * pass and compiles no class, whatever its id — the keyed vertex
   * partitions of Pregelix (VLDB 2014), in place of the reference's
   * per-node hash maps (Graph.hs:27-34).
+  *
+  * Every function a read, a commit lookup or a materialization hands to
+  * Spark is a named `Serializable` class ([[GraphState.TagRows]],
+  * [[GraphState.CollectRows]], [[GraphState.KeyRows]],
+  * [[GraphState.DropKeys]]), never a Scala lambda. Spark's
+  * `ClosureCleaner` reads and parses the class file that declares each
+  * lambda it is given, on every call; a named class it passes over at
+  * once. With lambdas, that parsing was most of a warm point read's
+  * driver CPU. Serializability is still checked, when the scheduler
+  * serializes the task.
   *
   * At 100 TB the bulk paths run as batch jobs: deltas arrive as DataFrames
   * (see [[GraphState.bulkLoad]], [[GraphState.withTargetsDF]]), index
@@ -151,11 +161,10 @@ object GraphState {
       */
     private[GraphState] def materialized(partitions: Int): Table = {
       val part = new HashPartitioner(partitions)
-      val k = key
       val keyed = physical(withTail(identity), schema)
-        .map(r => (r.getLong(k), r.copy()))
+        .map(new KeyRows(key))
         .partitionBy(part)
-        .mapPartitions(_.map(_._2), preservesPartitioning = true)
+        .mapPartitions(DropKeys, preservesPartitioning = true)
         .localCheckpoint()
       val sc = base.sparkSession.sparkContext
       val description = sc.getLocalProperty(JobDescription)
@@ -188,6 +197,38 @@ object GraphState {
 
   /** The `spark.job.description` of the job that materializes a table. */
   private[graft] val MaterializeJob = "graft: materialize a keyed base"
+
+  /** A row's lookup key beside a copy of the row: the pairs a keyed base
+    * is shuffled by.
+    */
+  private final class KeyRows(key: Int)
+      extends (InternalRow => (Long, InternalRow)) with Serializable {
+    def apply(r: InternalRow): (Long, InternalRow) = (r.getLong(key), r.copy())
+  }
+
+  /** The rows of a partition of shuffled `(key, row)` pairs. */
+  private object DropKeys
+      extends (Iterator[(Long, InternalRow)] => Iterator[InternalRow]) with Serializable {
+    def apply(pairs: Iterator[(Long, InternalRow)]): Iterator[InternalRow] = pairs.map(_._2)
+  }
+
+  /** The task of lookup `i` of a [[GraphState.probe]] on one partition:
+    * the rows that pass `keep`, copied off the scan's reused buffers and
+    * tagged `i`.
+    */
+  private[graft] final class TagRows(i: Int, keep: InternalRow => Boolean)
+      extends (Iterator[InternalRow] => Iterator[(Int, InternalRow)]) with Serializable {
+    def apply(rows: Iterator[InternalRow]): Iterator[(Int, InternalRow)] =
+      rows.filter(keep).map(r => (i, r.copy()))
+  }
+
+  /** The task function of a probe's job: one partition's tagged rows. */
+  private[graft] object CollectRows
+      extends ((TaskContext, Iterator[(Int, InternalRow)]) => Array[(Int, InternalRow)])
+      with Serializable {
+    def apply(task: TaskContext, rows: Iterator[(Int, InternalRow)]): Array[(Int, InternalRow)] =
+      rows.toArray
+  }
 
   /** A membership test of ids that tasks can carry: the sorted ids ride
     * in the task closure, which Spark ships to each executor once per job
@@ -532,27 +573,39 @@ final case class GraphState[V](
   // deduped on the driver. Each read has one implementation, its batched
   // form; a single-id read is the batched form over one id.
 
-  /** The rows each lookup finds, in lookup order: ONE Spark job
-    * (`runJob`) over the union of the tables' base partitions that can
-    * hold a match, then the same predicates over the tails here. A lookup
-    * by the column its base is keyed by runs only on the partitions that
-    * the base's partitioner assigns its ids to (`PartitionPruningRDD`);
-    * a lookup by another column (`sources`, by `dst`) or of a base with no
-    * partitioner (a bulk load) runs on every partition. Base rows are
-    * copied off the scan's reused buffers before they leave the task.
-    * Bases with no partition (a store that has never materialized a
-    * table) are left out, so a probe of tails alone runs no job.
+  /** The rows each lookup finds, in lookup order: ONE Spark job over the
+    * union of the tables' base partitions that can hold a match, then the
+    * same predicates over the tails here. A lookup by the column its base
+    * is keyed by runs only on the partitions that the base's partitioner
+    * assigns its ids to (`PartitionPruningRDD`); a lookup by another
+    * column (`sources`, by `dst`) or of a base with no partitioner (a bulk
+    * load) runs on every partition. Base rows are copied off the scan's
+    * reused buffers before they leave the task. Bases with no partition (a
+    * store that has never materialized a table) are left out, so a probe
+    * of tails alone runs no job.
+    *
+    * Spark gets named task functions only ([[GraphState.TagRows]],
+    * [[GraphState.CollectRows]]), so its `ClosureCleaner` reads no class
+    * file for the call. The job goes through the `runJob(rdd, func,
+    * partitions, resultHandler)` overload, the one that wraps `func` in no
+    * lambda of its own: the others build one inside `SparkContext`, whose
+    * class file the cleaner would parse on every call. The result handler
+    * runs here on the driver and is not cleaned.
     */
   private def probe(lookups: Lookup*): Seq[Seq[InternalRow]] = {
     val sc = spark.sparkContext
-    val tagged = lookups.zipWithIndex.map { case (l, i) =>
-      val keep = l.keep
-      l.base.mapPartitions(_.filter(keep).map(r => (i, r.copy())))
-    }.filter(_.partitions.nonEmpty)
+    val tagged = lookups.zipWithIndex
+      .map { case (l, i) => l.base.mapPartitions(new TagRows(i, l.keep)) }
+      .filter(_.partitions.nonEmpty)
     val hits =
       if (tagged.isEmpty) Array.empty[(Int, InternalRow)]
-      else sc.runJob(if (tagged.size == 1) tagged.head else sc.union(tagged),
-        (rows: Iterator[(Int, InternalRow)]) => rows.toArray).flatten
+      else {
+        val rdd = if (tagged.size == 1) tagged.head else sc.union(tagged)
+        val parts = new Array[Array[(Int, InternalRow)]](rdd.partitions.length)
+        sc.runJob(rdd, CollectRows, parts.indices,
+          (p: Int, rows: Array[(Int, InternalRow)]) => parts(p) = rows)
+        parts.flatten
+      }
     lookups.zipWithIndex.map { case (l, i) =>
       hits.collect { case (`i`, r) => r }.toSeq ++ l.table.tail.filter(l.keep)
     }

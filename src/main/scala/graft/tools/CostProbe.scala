@@ -37,17 +37,35 @@ object CostProbe {
     * it started — each one a planned query run through Catalyst; a job
     * run straight on an RDD starts none — and the milliseconds the JVM's
     * JIT compilers and garbage collectors spent meanwhile, in every
-    * thread (the block's own work and whatever ran beside it).
+    * thread (the block's own work and whatever ran beside it), and the
+    * CPU of the JVM's Java threads by family ([[ThreadCpu]]).
     */
   final case class Cost(jobs: Int, actions: Seq[String], plans: Seq[SparkPlan],
       finished: Seq[Job], stages: Seq[Stage], compiles: Long, sqlExecutions: Int,
-      jitMs: Long, gcMs: Long) {
+      jitMs: Long, gcMs: Long, threads: ThreadCpu) {
     /** Tasks run by the block's completed stages. */
     def tasks: Int = stages.map(_.tasks).sum
 
     override def toString: String =
       s"Cost($jobs jobs, $tasks tasks, $sqlExecutions SQL executions, actions $actions, " +
-        s"$compiles compiles, JIT $jitMs ms, GC $gcMs ms)"
+        s"$compiles compiles, JIT $jitMs ms, GC $gcMs ms, $threads)"
+  }
+
+  /** CPU ms of Java threads over a block, by family: the thread that ran
+    * the block (`caller`), executor task threads, the DAG scheduler's
+    * event loop, the listener-bus queues, the rpc dispatchers with the
+    * task-result getters, and every other Java thread. The window closes
+    * after the listener bus has delivered the block's events. Read
+    * through `ThreadMXBean`, it misses the CPU of a thread that exits
+    * inside the block, and JIT and GC threads, which are no Java threads,
+    * are in none (see [[Cost]]'s `jitMs` and `gcMs`). All 0 where the JVM
+    * does not measure thread CPU.
+    */
+  final case class ThreadCpu(callerMs: Long, executorMs: Long, schedulerMs: Long,
+      listenerMs: Long, rpcMs: Long, otherMs: Long) {
+    override def toString: String =
+      s"threads: caller $callerMs ms, executor $executorMs ms, dag-scheduler $schedulerMs ms, " +
+        s"listener $listenerMs ms, rpc $rpcMs ms, other $otherMs ms"
   }
 
   /** Run `f` and return its [[Cost]]. Listener events are asynchronous, so
@@ -108,13 +126,13 @@ object CostProbe {
     spark.sparkContext.addSparkListener(jobListener)
     spark.listenerManager.register(actionListener)
     try {
-      val (jit0, gc0) = (jitMs(), gcMs())
+      val (jit0, gc0, threads0) = (jitMs(), gcMs(), threadCpuNs())
       val compiles = compilesOf(f)
       val (jit, gc) = (jitMs() - jit0, gcMs() - gc0)
       ListenerBusShim.drain(spark.sparkContext)
       Cost(started.size, actions.asScala.toList, plans.asScala.toList,
         finished.asScala.toList.sortBy(_.id), stages.asScala.toList.sortBy(_.id),
-        compiles, executions.get, jit, gc)
+        compiles, executions.get, jit, gc, threadCpuSince(threads0))
     } finally {
       spark.listenerManager.unregister(actionListener)
       spark.sparkContext.removeSparkListener(jobListener)
@@ -135,6 +153,43 @@ object CostProbe {
     */
   private def gcMs(): Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum
+
+  private val threadMX = ManagementFactory.getThreadMXBean
+
+  /** CPU ns so far of every live Java thread, with its name, by thread
+    * id; empty where the JVM does not measure thread CPU.
+    */
+  private def threadCpuNs(): Map[Long, (String, Long)] =
+    if (!threadMX.isThreadCpuTimeSupported || !threadMX.isThreadCpuTimeEnabled) Map.empty
+    else {
+      val ids = threadMX.getAllThreadIds
+      ids.iterator.zip(threadMX.getThreadInfo(ids).iterator).collect {
+        case (id, info) if info != null => id -> (info.getThreadName, threadMX.getThreadCpuTime(id))
+      }.filter(_._2._2 >= 0).toMap
+    }
+
+  /** The family of a Spark thread by its name; an executor thread is
+    * renamed for each task it runs, and keeps the prefix.
+    */
+  private def family(name: String): String =
+    if (name.startsWith("Executor task launch worker")) "executor"
+    else if (name.startsWith("dag-scheduler")) "scheduler"
+    else if (name.startsWith("spark-listener-group")) "listener"
+    else if (name.startsWith("dispatcher-") || name.startsWith("rpc-") ||
+        name.startsWith("task-result-getter")) "rpc"
+    else "other"
+
+  /** [[ThreadCpu]] from `before` (a [[threadCpuNs]] reading) to now; a
+    * thread started since counts from 0.
+    */
+  private def threadCpuSince(before: Map[Long, (String, Long)]): ThreadCpu = {
+    val caller = Thread.currentThread.getId
+    val ms = threadCpuNs().toSeq.map { case (id, (name, ns)) =>
+      (if (id == caller) "caller" else family(name)) -> (ns - before.get(id).fold(0L)(_._2))
+    }.groupMapReduce(_._1)(_._2)(_ + _).map { case (f, ns) => f -> ns / 1000000L }
+    def of(f: String) = ms.getOrElse(f, 0L)
+    ThreadCpu(of("caller"), of("executor"), of("scheduler"), of("listener"), of("rpc"), of("other"))
+  }
 
   /** Run `f` and return how many classes codegen compiled meanwhile (cache
     * hits are not compiles).

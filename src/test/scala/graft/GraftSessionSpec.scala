@@ -73,4 +73,32 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c.gcMs >= 0 && c.gcMs <= gc && c.jitMs >= 0 && c.jitMs <= jit, s"$c: GC $gc, JIT $jit")
     assert(c.toString.contains("1 jobs, 6 tasks") && c.toString.contains(s"GC ${c.gcMs} ms"), c)
   }
+
+  test("CostProbe splits Java thread CPU by family, and an idle block starts no job") {
+    val idle = CostProbe.costOf(spark)(())
+    assert(idle.jobs === 0 && idle.tasks === 0, idle)
+    val t = idle.threads
+    assert(Seq(t.callerMs, t.executorMs, t.schedulerMs, t.listenerMs, t.rpcMs, t.otherMs)
+      .forall(_ >= 0), idle)
+    val bean = ManagementFactory.getThreadMXBean
+    val spin = CostProbe.costOf(spark) {
+      val until = bean.getCurrentThreadCpuTime + 200000000L
+      while (bean.getCurrentThreadCpuTime < until) {}
+    }
+    // 200 ms of this thread's CPU, less the coarse clock's rounding
+    assert(spin.jobs === 0 && spin.threads.callerMs >= 150, spin)
+    val rdd = spark.sparkContext.parallelize(1 to 4, 4)
+    val job = CostProbe.costOf(spark) {
+      assert(rdd.map { i =>
+        val task = ManagementFactory.getThreadMXBean
+        val until = task.getCurrentThreadCpuTime + 50000000L
+        while (task.getCurrentThreadCpuTime < until) {}
+        i
+      }.sum() === 10d)
+    }
+    // 4 tasks of 50 ms each run on executor threads, not on the caller
+    assert(job.jobs === 1 && job.tasks === 4 && job.threads.executorMs >= 150, job)
+    assert(job.threads.callerMs < job.threads.executorMs, job)
+    assert(job.toString.contains(s"threads: caller ${job.threads.callerMs} ms, executor"), job)
+  }
 }
