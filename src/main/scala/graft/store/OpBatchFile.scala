@@ -1,5 +1,6 @@
 package graft.store
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.file.{Files, Path}
 import java.util.UUID
 
@@ -8,7 +9,7 @@ import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.{LocalInputFile, LocalOutputFile, OutputFile}
+import org.apache.parquet.io.{DelegatingPositionOutputStream, DelegatingSeekableInputStream, InputFile, LocalInputFile, LocalOutputFile, OutputFile}
 import org.apache.parquet.io.api.RecordMaterializer
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Row, SparkSession}
@@ -27,7 +28,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Rows are encoded and decoded by Spark's `ParquetWriteSupport` and
   * `ParquetReadSupport`, so both sides agree with `spark.read.parquet`.
   * It carries the WAL's op batches, RemoteWrite's shipped transactions, and
-  * RemoteRead's answer batches (one per op kind of a poll).
+  * RemoteRead's answer batches (one per op kind of a poll). [[encode]] and
+  * [[decode]] are the same file as bytes in memory: the payloads of a
+  * [[Wire]] frame.
   *
   * The settings come from `spark.conf`, not the thread-local `SQLConf.get`:
   * the buffered WAL worker writes from its own thread.
@@ -70,21 +73,42 @@ object OpBatchFile {
     * `dir` exists. The caller publishes `dir` (a staged-dir rename).
     */
   def write(spark: SparkSession, schema: StructType, rows: Seq[Row], dir: Path): Unit = {
-    val conf = settings(spark)
-    ParquetWriteSupport.setSchema(schema, conf)
-    val codecName = spark.conf.get(SQLConf.PARQUET_COMPRESSION.key)
-    val codec =
-      if (codecName.equalsIgnoreCase("none")) CompressionCodecName.UNCOMPRESSED
-      else CompressionCodecName.fromConf(codecName)
+    val codec = codecOf(spark)
     Files.createDirectories(dir.getParent)
     Files.createDirectory(dir)
     val file = dir.resolve(s"part-00000-${UUID.randomUUID()}${codec.getExtension}.parquet")
+    writeTo(spark, schema, rows, new LocalOutputFile(file), codec)
+    Files.createFile(dir.resolve("_SUCCESS"))
+  }
+
+  /** The parquet file [[write]] leaves for `rows`, as bytes. */
+  def encode(spark: SparkSession, schema: StructType, rows: Seq[Row]): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    writeTo(spark, schema, rows, new OutputFile {
+      def create(blockSizeHint: Long) = new DelegatingPositionOutputStream(bytes) {
+        def getPos: Long = bytes.size.toLong
+      }
+      def createOrOverwrite(blockSizeHint: Long) = create(blockSizeHint)
+      def supportsBlockSize = false
+      def defaultBlockSize = 0L
+    }, codecOf(spark))
+    bytes.toByteArray
+  }
+
+  private def codecOf(spark: SparkSession): CompressionCodecName = {
+    val name = spark.conf.get(SQLConf.PARQUET_COMPRESSION.key)
+    if (name.equalsIgnoreCase("none")) CompressionCodecName.UNCOMPRESSED
+    else CompressionCodecName.fromConf(name)
+  }
+
+  private def writeTo(spark: SparkSession, schema: StructType, rows: Seq[Row],
+      file: OutputFile, codec: CompressionCodecName): Unit = {
+    val conf = settings(spark)
+    ParquetWriteSupport.setSchema(schema, conf)
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-    val writer = new Builder(new LocalOutputFile(file))
-      .withConf(conf).withCompressionCodec(codec).build()
+    val writer = new Builder(file).withConf(conf).withCompressionCodec(codec).build()
     try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
     finally writer.close()
-    Files.createFile(dir.resolve("_SUCCESS"))
   }
 
   /** `ParquetReadSupport` for one file read with `conf`: reads `schema`,
@@ -120,9 +144,8 @@ object OpBatchFile {
   // given its configuration up front: the one-argument constructor builds
   // a default Hadoop configuration, whose resource loading costs more than
   // reading a small batch
-  private final class ReaderBuilder(file: Path, conf: Configuration, support: Support)
-      extends ParquetReader.Builder[InternalRow](new LocalInputFile(file),
-        new HadoopParquetConfiguration(conf)) {
+  private final class ReaderBuilder(file: InputFile, conf: Configuration, support: Support)
+      extends ParquetReader.Builder[InternalRow](file, new HadoopParquetConfiguration(conf)) {
     override protected def getReadSupport(): ReadSupport[InternalRow] = support
   }
 
@@ -134,10 +157,34 @@ object OpBatchFile {
     */
   def read(spark: SparkSession, schema: Option[StructType], dir: Path,
       limit: Int = Int.MaxValue, keep: Row => Boolean = _ => true): Seq[Row] = {
-    val conf = settings(spark)
     val files = GraphStore.listPaths(dir)
       .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.matches("[_.].*"))
       .sortBy(_.getFileName.toString)
+    readFrom(spark, schema, files.map(new LocalInputFile(_)), limit, keep)
+  }
+
+  /** [[read]] of one file [[encode]] made. */
+  def decode(spark: SparkSession, schema: Option[StructType], bytes: Array[Byte],
+      limit: Int = Int.MaxValue): Seq[Row] = {
+    val file = new InputFile {
+      def getLength: Long = bytes.length.toLong
+      def newStream() = {
+        val in = new ByteArrayInputStream(bytes) {
+          def position: Long = pos.toLong
+          def seekTo(p: Long): Unit = pos = p.toInt
+        }
+        new DelegatingSeekableInputStream(in) {
+          def getPos: Long = in.position
+          def seek(p: Long): Unit = in.seekTo(p)
+        }
+      }
+    }
+    readFrom(spark, schema, Seq(file), limit, _ => true)
+  }
+
+  private def readFrom(spark: SparkSession, schema: Option[StructType], files: Seq[InputFile],
+      limit: Int, keep: Row => Boolean): Seq[Row] = {
+    val conf = settings(spark)
     val out = Vector.newBuilder[Row]
     var n = 0
     val it = files.iterator

@@ -16,9 +16,11 @@ import graft.graph.{GraphModel, GraphState, IndexKey}
   * Server.hs:17-94 dispatches it on a session worker). The Spark-suitable
   * form keeps the reference's thin-client contract — the client holds ZERO
   * graph state — but serves from a [[GraphReplica]] follower instead of
-  * the writer's worker pool, and transports over the same shared-storage
-  * inbox as [[RemoteWrite]] (the deployment's natural medium; a bespoke
-  * socket protocol is Spark Connect's job):
+  * the writer's worker pool. A request travels one of two ways: through a
+  * shared-storage inbox like [[RemoteWrite]]'s (the deployment's natural
+  * medium when clients are jobs sharing distributed storage), laid out as
+  * below, or over a socket ([[Wire]]), where one frame carries the same
+  * request JSON and the reply carries the same parquet answer, in memory:
   *
   * {{{
   *   <dir>/<clientId>-<seq>.req.json    one read request (atomic publish)
@@ -57,13 +59,70 @@ object RemoteRead {
 
   // ------------------------------------------------------------- client side
 
-  /** Read client: ships read requests, awaits parquet answers. `spark`
-    * only supplies the parquet settings answers are read with — the client
-    * runs no Spark job and no graph logic at all
-    * (the reference's typed thin client, Client.hs:53-60).
+  /** The read surface of a thin client, built on one transport call: the
+    * client holds no graph state and runs no Spark job (the reference's
+    * typed thin client, Client.hs:53-60). A subclass supplies [[call]],
+    * which sends one request (its JSON fields after the reqId) and returns
+    * the answer rows with their leading `_reqId` column dropped.
+    */
+  abstract class Reader[V](model: GraphModel[V]) {
+    protected def call(body: String, timeoutMs: Long): ReadAck
+
+    /** Batched point reads (covers the reference's getValue as the
+      * 1-element case). Returns id → value for ids that exist.
+      */
+    def getValues(ids: Seq[Long], timeoutMs: Long = 30000L): Map[Long, V] =
+      rows(call(s""""op": "getValues", "ids": [${ids.mkString(", ")}]""", timeoutMs))
+        .map(r => r.getLong(0) -> model.fromValueRow(r.getString(1), r.getStruct(2)))
+        .toMap
+
+    /** getValue — throws on an unknown id, the session contract. */
+    def getValue(id: Long, timeoutMs: Long = 30000L): V =
+      getValues(Seq(id), timeoutMs).getOrElse(id,
+        throw new NoSuchElementException(s"unknown node id $id"))
+
+    /** getTargets under an index key (distinct), served from the index. */
+    def getTargets(id: Long, k: IndexKey, timeoutMs: Long = 30000L): Seq[Long] =
+      rows(call(s""""op": "getTargets", "id": $id, """ +
+        s""""kkind": "${GraphStore.esc(k.kind)}", "key": "${GraphStore.esc(k.key)}"""",
+        timeoutMs)).map(_.getLong(0)).sorted
+
+    /** traverseTargets — distinct targets regardless of key. */
+    def targets(id: Long, timeoutMs: Long = 30000L): Seq[Long] =
+      rows(call(s""""op": "targets", "id": $id""", timeoutMs)).map(_.getLong(0)).sorted
+
+    /** traverseSources. */
+    def sources(id: Long, timeoutMs: Long = 30000L): Seq[Long] =
+      rows(call(s""""op": "sources", "id": $id""", timeoutMs)).map(_.getLong(0)).sorted
+
+    /** getStats of the closure reachable from `from`. */
+    def getStats(from: Long = 0L, timeoutMs: Long = 30000L): (Long, Long, Long) = {
+      val r = rows(call(s""""op": "getStats", "id": $from""", timeoutMs)).head
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+
+    /** The serving replica's WAL-coverage stamp (GraphReplica.watermark)
+      * — fetched once when a mid-txn-read snapshot is constructed, so the
+      * write server can refuse stale reads at apply time.
+      */
+    def watermark(timeoutMs: Long = 30000L): (Long, Long) = {
+      val r = rows(call(s""""op": "watermark"""", timeoutMs)).head
+      (r.getLong(0), r.getLong(1))
+    }
+
+    private def rows(ack: ReadAck) = ack.result match {
+      case Right(rows) => rows
+      case Left(err) => throw new NoSuchElementException(
+        s"read ${ack.reqId} refused: $err")
+    }
+  }
+
+  /** Inbox read client: publishes each request as a file in `dir` and
+    * awaits its answer there. `spark` only supplies the parquet settings
+    * answers are read with.
     */
   final class Client[V](spark: SparkSession, model: GraphModel[V],
-      dir: String, clientId: String) {
+      dir: String, clientId: String) extends Reader[V](model) {
     require(clientId.matches("[A-Za-z0-9_-]+"),
       s"clientId '$clientId' must be [A-Za-z0-9_-]+ (it names request files)")
     private val base = Paths.get(dir)
@@ -81,72 +140,14 @@ object RemoteRead {
         compacted.getOrElse(0L))
     }
 
-    private def submit(body: String): String = {
+    protected def call(body: String, timeoutMs: Long): ReadAck = {
       require(seq < 1000000L,
         s"client '$clientId' exceeded 10^6 requests; use a new clientId")
       val reqId = f"$clientId-$seq%06d"
       GraphStore.writeJsonAtomic(base.resolve(s"$reqId.req.json"),
         s"""{"reqId": "$reqId", $body}""")
       seq += 1
-      reqId
-    }
-
-    /** Batched point reads (covers the reference's getValue as the
-      * 1-element case). Returns id → value for ids that exist.
-      */
-    def getValues(ids: Seq[Long], timeoutMs: Long = 30000L): Map[Long, V] = {
-      val reqId = submit(
-        s""""op": "getValues", "ids": [${ids.mkString(", ")}]""")
-      rows(await(reqId, timeoutMs))
-        .map(r => r.getLong(0) -> model.fromValueRow(r.getString(1), r.getStruct(2)))
-        .toMap
-    }
-
-    /** getValue — throws on an unknown id, the session contract. */
-    def getValue(id: Long, timeoutMs: Long = 30000L): V =
-      getValues(Seq(id), timeoutMs).getOrElse(id,
-        throw new NoSuchElementException(s"unknown node id $id"))
-
-    /** getTargets under an index key (distinct), served from the index. */
-    def getTargets(id: Long, k: IndexKey, timeoutMs: Long = 30000L): Seq[Long] = {
-      val reqId = submit(s""""op": "getTargets", "id": $id, """ +
-        s""""kkind": "${GraphStore.esc(k.kind)}", "key": "${GraphStore.esc(k.key)}"""")
-      rows(await(reqId, timeoutMs)).map(_.getLong(0)).sorted
-    }
-
-    /** traverseTargets — distinct targets regardless of key. */
-    def targets(id: Long, timeoutMs: Long = 30000L): Seq[Long] = {
-      val reqId = submit(s""""op": "targets", "id": $id""")
-      rows(await(reqId, timeoutMs)).map(_.getLong(0)).sorted
-    }
-
-    /** traverseSources. */
-    def sources(id: Long, timeoutMs: Long = 30000L): Seq[Long] = {
-      val reqId = submit(s""""op": "sources", "id": $id""")
-      rows(await(reqId, timeoutMs)).map(_.getLong(0)).sorted
-    }
-
-    /** getStats of the closure reachable from `from`. */
-    def getStats(from: Long = 0L, timeoutMs: Long = 30000L): (Long, Long, Long) = {
-      val reqId = submit(s""""op": "getStats", "id": $from""")
-      val r = rows(await(reqId, timeoutMs)).head
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-
-    /** The serving replica's WAL-coverage stamp (GraphReplica.watermark)
-      * — fetched once when a mid-txn-read snapshot is constructed, so the
-      * write server can refuse stale reads at apply time.
-      */
-    def watermark(timeoutMs: Long = 30000L): (Long, Long) = {
-      val reqId = submit(s""""op": "watermark"""")
-      val r = rows(await(reqId, timeoutMs)).head
-      (r.getLong(0), r.getLong(1))
-    }
-
-    private def rows(ack: ReadAck) = ack.result match {
-      case Right(rows) => rows
-      case Left(err) => throw new NoSuchElementException(
-        s"read ${ack.reqId} refused: $err")
+      await(reqId, timeoutMs)
     }
 
     /** Block until the server answers `reqId`: a typed refusal
@@ -168,9 +169,8 @@ object RemoteRead {
           val rel = GraphStore.jsonField(Files.readString(ptrFile), "batch").getOrElse(
             throw new IllegalStateException(s"malformed pointer answer for $reqId"))
           val batch = base.resolve("acks").resolve(rel)
-          return ReadAck(reqId, Right(
-            OpBatchFile.read(spark, None, batch, keep = _.getString(0) == reqId)
-              .map(r => Row.fromSeq(r.toSeq.tail))))
+          return ReadAck(reqId, Right(dropReqId(
+            OpBatchFile.read(spark, None, batch, keep = _.getString(0) == reqId))))
         }
         Thread.sleep(10L)
       }
@@ -178,6 +178,10 @@ object RemoteRead {
         s"no answer for $reqId within ${timeoutMs}ms")
     }
   }
+
+  /** Answer rows without their leading `_reqId` column. */
+  private[store] def dropReqId(rows: Seq[Row]): Seq[Row] =
+    rows.map(r => Row.fromSeq(r.toSeq.tail))
 
   // ------------------------------------------------------------- server side
 
@@ -217,6 +221,21 @@ object RemoteRead {
       case "watermark" => Read(reqId, "watermark", Nil)
       case other => throw new IllegalArgumentException(s"unknown read op '$other'")
     }
+  }
+
+  private def answerSchema(columns: Seq[StructField]): StructType =
+    StructType(StructField("_reqId", StringType, nullable = false) +: columns)
+
+  /** Answer one request `req` (the JSON of a request file) from the
+    * replica's current state, in memory: [[parse]] and [[answer]] as a
+    * poll runs them, the rows encoded as one [[OpBatchFile]] payload led
+    * by `_reqId`. A malformed request throws, the caller's typed refusal.
+    */
+  private[store] def answerOne[V](replica: GraphReplica[V], req: String): Array[Byte] = {
+    val read = parse(GraphStore.jsonField(req, "reqId").getOrElse(""), req)
+    val st = replica.currentState
+    val (columns, rows) = answer(replica, st, read.op, Seq(read))
+    OpBatchFile.encode(st.spark, answerSchema(columns), rows)
   }
 
   private def longs(names: String*): Seq[StructField] =
@@ -339,9 +358,7 @@ object RemoteRead {
         val staging = base.resolve("_staging").resolve(s"batch-$name")
         GraphStore.deleteRecursively(staging)
         GraphStore.deleteRecursively(batch)
-        OpBatchFile.write(st.spark,
-          StructType(StructField("_reqId", StringType, nullable = false) +: columns),
-          rows, staging)
+        OpBatchFile.write(st.spark, answerSchema(columns), rows, staging)
         Files.createDirectories(batch.getParent)
         Files.move(staging, batch, StandardCopyOption.ATOMIC_MOVE)
         if (failNextBatchPublish) {

@@ -2,20 +2,22 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 
 import scala.collection.mutable
 import scala.util.Try
 
 import graft.graph._
 
-/** File-queue write shipping — the Spark-suitable analog of the reference's
+/** Write shipping — the Spark-suitable analog of the reference's
   * client/server WRITE path (/root/reference/library/GraphDB/Server.hs:17-94,
   * Client.hs:53-117, Protocol.hs:8-43). The reference accepts socket
   * connections and executes each client's shipped transaction inside a real
-  * local txn on a dedicated worker; here the transport is a shared
-  * filesystem inbox instead of a socket — the natural medium on a Spark
-  * deployment, where "clients" are other jobs sharing distributed storage:
+  * local txn on a dedicated worker. Here a txn (its op rows and meta)
+  * reaches one write core ([[applyTxns]]) by one of two transports: a
+  * socket frame ([[Wire]]), or a shared filesystem inbox — the natural
+  * medium on a Spark deployment, where "clients" are other jobs sharing
+  * distributed storage:
   *
   * {{{
   *   <inbox>/<clientId>-<seq>.txn/     one shipped transaction (parquet ops,
@@ -78,7 +80,7 @@ object RemoteWrite {
 
   private[store] val MetaName = "_meta.json"
 
-  private def ackJson(a: TxnAck): String = {
+  private[store] def ackJson(a: TxnAck): String = {
     val assigned = a.assigned.toSeq.sortBy(_._1)
       .map { case (l, g) => s""""$l": $g""" }.mkString("{", ", ", "}")
     val err = a.error.fold("null")(e => "\"" + GraphStore.esc(e) + "\"")
@@ -114,11 +116,12 @@ object RemoteWrite {
   }
 
   object TxnReads {
-    /** Mid-txn reads against a thin read client (shared-storage or wire —
-      * the wire's ReadClient wraps this same class). Fetches the serving
-      * replica's watermark once, up front, as the snapshot stamp.
+    /** Mid-txn reads against a thin read client, over either transport
+      * (the inbox's [[RemoteRead.Client]] or [[Wire.ReadClient]]). Fetches
+      * the serving replica's watermark once, up front, as the snapshot
+      * stamp.
       */
-    def fromRemoteRead[V](c: RemoteRead.Client[V]): TxnReads[V] = {
+    def fromRemoteRead[V](c: RemoteRead.Reader[V]): TxnReads[V] = {
       val m = c.watermark()
       new TxnReads[V] {
         def getValue(n: Long): Option[V] = c.getValues(Seq(n)).get(n)
@@ -275,28 +278,29 @@ object RemoteWrite {
     }
   }
 
-  /** Write client: builds transactions and ships them to the inbox; polls
-    * acks for the response leg. One instance per logical client; `clientId`
-    * namespaces its txn ids, and a restarted client resumes after its
-    * highest shipped seq (scanning inbox + archive + acks), so ids never
-    * collide.
+  /** Builds transactions and ships each one, as its op rows and meta,
+    * through the transport a subclass supplies: the txn building both
+    * transports share. `clientId` namespaces txn ids (`clientId-seq`),
+    * numbered from `firstSeq`.
     */
-  final class Client[V](spark: SparkSession, model: GraphModel[V],
-      inboxDir: String, clientId: String) {
+  abstract class Writer[V](model: GraphModel[V], clientId: String, firstSeq: Long) {
     require(clientId.matches("[A-Za-z0-9_-]+"),
-      s"clientId '$clientId' must be [A-Za-z0-9_-]+ (it names txn dirs)")
+      s"clientId '$clientId' must be [A-Za-z0-9_-]+ (it names txns)")
+    private var seq = firstSeq
 
-    private val inbox = Paths.get(inboxDir)
-    Files.createDirectories(inbox)
-    private var seq: Long =
-      GraphStore.nextSeq(clientId, Seq(inbox, inbox.resolve("acks"), inbox.resolve("applied")))
+    /** Send txn `txnId`: its op rows ([[GraphStore.opSchema]]) and meta JSON. */
+    protected def ship(txnId: String, rows: Seq[Row], meta: String): Unit
 
-    /** Ship one transaction; returns its txnId. Published atomically: ops
-      * parquet (one file written on this driver, no Spark job:
-      * [[OpBatchFile]]) + meta land in a staging dir, then one rename — a reader
-      * (the server) sees the whole txn or nothing, the same staged-publish
-      * rule as the WAL (GraphStore.writeWalBatch).
+    /** Non-blocking ack poll. */
+    def ack(txnId: String): Option[TxnAck]
+
+    /** Block until the server acks `txnId` — the synchronous round-trip the
+      * reference's client performs per action (Client.hs:71-117); ours is
+      * per-txn, which is strictly fewer round-trips.
       */
+    def await(txnId: String, timeoutMs: Long = 30000L): TxnAck
+
+    /** Ship one transaction; returns its txnId. */
     def submit(build: RemoteTxn[V] => Unit): String =
       submitTxn(new RemoteTxn[V](), build)
 
@@ -318,10 +322,6 @@ object RemoteWrite {
       // enforce the bound instead of silently reordering
       require(seq < 1000000L,
         s"client '$clientId' exceeded 10^6 shipped txns; use a new clientId")
-      val txnId = f"$clientId-$seq%06d"
-      val staging = inbox.resolve("_staging").resolve(s"$txnId.txn")
-      val target = inbox.resolve(s"$txnId.txn")
-      GraphStore.deleteRecursively(staging)
       val rows = txn.ops.toSeq.zipWithIndex.map { case (op, i) =>
         GraphStore.opToRow(model, op, i.toLong)
       }
@@ -338,30 +338,54 @@ object RemoteWrite {
           s""", "targetReads": [${tr.toSeq.sorted.mkString(", ")}]""" +
           s""", "targetMembers": [${tm.toSeq.sorted.mkString(", ")}]"""
       }.getOrElse("")
+      val txnId = f"$clientId-$seq%06d"
+      // a txn that fails to ship burns its id: a server that applied it
+      // before failing must never answer a later txn with its recorded ack
+      seq += 1
+      ship(txnId, rows,
+        s"""{"formatVersion": ${GraphStore.FormatVersion}, "txnId": "$txnId", "ops": ${txn.ops.size}$readsJson}""")
+      txnId
+    }
+  }
+
+  /** Inbox write client: publishes each txn as a dir in the inbox and
+    * polls the inbox's acks. One instance per logical client; a restarted
+    * client resumes after its highest shipped seq (scanning inbox +
+    * archive + acks), so ids never collide.
+    */
+  final class Client[V](spark: SparkSession, model: GraphModel[V],
+      inboxDir: String, clientId: String)
+      extends Writer[V](model, clientId, GraphStore.nextSeq(clientId,
+        Seq("", "acks", "applied").map(Paths.get(inboxDir).resolve))) {
+    private val inbox = Paths.get(inboxDir)
+    Files.createDirectories(inbox)
+
+    /** Published atomically: ops parquet (one file written on this
+      * driver, no Spark job: [[OpBatchFile]]) + meta land in a staging
+      * dir, then one rename — a reader (the server) sees the whole txn or
+      * nothing, the same staged-publish rule as the WAL
+      * (GraphStore.writeWalBatch).
+      */
+    protected def ship(txnId: String, rows: Seq[Row], meta: String): Unit = {
+      val staging = inbox.resolve("_staging").resolve(s"$txnId.txn")
+      val target = inbox.resolve(s"$txnId.txn")
+      GraphStore.deleteRecursively(staging)
       try {
         OpBatchFile.write(spark, GraphStore.opSchema(model), rows, staging)
-        Files.writeString(staging.resolve(MetaName),
-          s"""{"formatVersion": ${GraphStore.FormatVersion}, "txnId": "$txnId", "ops": ${txn.ops.size}$readsJson}""")
+        Files.writeString(staging.resolve(MetaName), meta)
         Files.createDirectories(target.getParent)
         Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
       } catch {
         case e: Throwable => GraphStore.deleteRecursively(staging); throw e
       }
-      seq += 1
-      txnId
     }
 
-    /** Non-blocking ack poll. */
     def ack(txnId: String): Option[TxnAck] = {
       val f = inbox.resolve("acks").resolve(s"$txnId.json")
       if (Files.exists(f)) Some(parseAck(Files.readString(f))) else None
     }
 
-    /** Block until the server acks `txnId` — the synchronous round-trip the
-      * reference's client performs per action (Client.hs:71-117); ours is
-      * per-txn, which is strictly fewer round-trips.
-      */
-    def await(txnId: String, timeoutMs: Long = 30000L): TxnAck = {
+    def await(txnId: String, timeoutMs: Long): TxnAck = {
       val deadline = System.nanoTime() + timeoutMs * 1000000L
       var a = ack(txnId)
       while (a.isEmpty && System.nanoTime() < deadline) {
@@ -387,32 +411,28 @@ object RemoteWrite {
 
   /** Apply every committed, un-acked transaction in `inboxDir` to the open
     * store — the server's worker loop body (Server.hs:17-69). Returns the
-    * acks written this poll, in apply order. Call in a loop (or from a
+    * acks of this poll, in apply order. Call in a loop (or from a
     * scheduler) to serve continuously; [[serveWhile]] wraps exactly that.
     *
-    * Poll cost: each txn dir is read on the driver ([[OpBatchFile.read]],
-    * no Spark job), all global refs across the poll are existence-checked
-    * in ONE point read (a job only over a materialized base), and all
-    * applied txns are made durable by ONE group-committed WAL batch per
-    * [[GroupCommitMaxOps]] ops (tagged with every member's ack) — a poll
-    * finding N txns runs at most the existence check's and the commit's
-    * jobs + O(N/groupOps) publishes, not O(N).
+    * The inbox is this wrapper's alone: it lists the published txn dirs,
+    * archives the ones already acked (the ack is written after commit, so
+    * acked means applied), quarantines repeat poison pills, and hands the
+    * rest to [[applyTxns]], writing each final ack file and archiving its
+    * dir as the core reports it. Each txn dir is read on the driver
+    * ([[OpBatchFile.read]], no Spark job), so a poll finding N txns runs
+    * at most the existence check's and the commit's jobs + O(N/groupOps)
+    * publishes, not O(N).
     */
   def applyPending[V](store: GraphStore[V], inboxDir: String): Seq[TxnAck] = {
-    // the fail-stop is mechanical, not advisory: after a mid-txn failure
-    // the session may hold a partial txn, and polling again would apply
-    // that txn's ops a SECOND time — refuse until the store is reopened
-    if (store.remoteApplyPoisoned) throw new IllegalStateException(
-      "a previous shipped txn failed mid-apply; reopen the store " +
-        "(WAL-prefix recovery) before serving again")
     val inbox = Paths.get(inboxDir)
     val acksDir = inbox.resolve("acks")
     val appliedDir = inbox.resolve("applied")
+    val failedDir = inbox.resolve(FailedDirName)
     Files.createDirectories(acksDir)
     Files.createDirectories(appliedDir)
 
-    val tTriage0 = System.nanoTime()
-    val committed = GraphStore.listPaths(inbox)
+    def txnIdOf(dir: Path) = dir.getFileName.toString.stripSuffix(".txn")
+    val (done, pending) = GraphStore.listPaths(inbox)
       .filter(p => p.getFileName.toString.endsWith(".txn"))
       // _SUCCESS (the batch's commit marker) + _meta.json are both inside the
       // atomically-renamed dir: present ⇔ fully published; anything else is
@@ -420,85 +440,152 @@ object RemoteWrite {
       .filter(p => Files.exists(p.resolve("_SUCCESS")) &&
         Files.exists(p.resolve(MetaName)))
       .sortBy(_.getFileName.toString)
+      .partition(dir => Files.exists(acksDir.resolve(s"${txnIdOf(dir)}.json")))
+    // crash-window recovery leg 1: acked means applied — archive without
+    // re-applying. Clear any stale failure strike too (best-effort,
+    // non-throwing: the txn is done; this leg is also the backstop for a
+    // swallowed delete failure on the apply path)
+    done.foreach { dir =>
+      archive(dir, appliedDir)
+      Try(Files.deleteIfExists(failedDir.resolve(txnIdOf(dir))))
+    }
 
-    val acks = mutable.ArrayBuffer[TxnAck]()
-
-    // phase 1 — driver-side triage, no Spark jobs: already-acked dirs
-    // archive; tagged dirs (applied, ack lost in the crash window) replay
-    // their RECORDED ack; repeat poison pills quarantine; version
-    // mismatches refuse. Everything else proceeds to the load.
-    // The meta string read here rides along to applyOne — the stale-read
+    val dirs = pending.map(dir => txnIdOf(dir) -> dir).toMap
+    val strikes = dirs.keys.map(id => id -> failCount(inbox, id))
+      .filter(_._2 >= MaxApplyAttempts).toMap
+    val schema = GraphStore.opSchema(store.modelOf)
+    // the meta string read here rides along to applyOne — the stale-read
     // conflict check parses it from THIS read, so an IO error at apply
-    // time can never silently skip the check (fail-closed: a triage-time
-    // read failure already refused via the version gate below).
-    val todo = mutable.ArrayBuffer[(Path, String, String)]()
-    committed.foreach { dir =>
-      val txnId = dir.getFileName.toString.stripSuffix(".txn")
-      val ackFile = acksDir.resolve(s"$txnId.json")
-      if (Files.exists(ackFile)) {
-        // crash-window recovery leg 1: acked means applied (ack is written
-        // after commit) — archive without re-applying. Clear any stale
-        // failure strike too (best-effort, non-throwing: the txn is done;
-        // this leg is also the backstop for a swallowed delete failure on
-        // the apply path, since an acked txn never reaches leg 2)
-        archive(dir, appliedDir)
-        Try(Files.deleteIfExists(inbox.resolve(FailedDirName).resolve(txnId)))
-      } else store.txnTag(txnId) match {
+    // time can never silently skip the check (fail-closed: a read failure
+    // here is refused by the version gate)
+    val txns = pending.map { dir =>
+      val txnId = txnIdOf(dir)
+      new Shipped[V](txnId, Try(Files.readString(dir.resolve(MetaName))).getOrElse(""),
+        strikes.get(txnId) match {
+          case Some(n) => Left(s"quarantined after $n mid-apply failures; txn moved to " +
+            "quarantined/ for inspection — a deterministic apply failure " +
+            "must not wedge the serve loop")
+          case None => decode(store, OpBatchFile.read(store.sparkOf, Some(schema), dir, _))
+        })
+    }
+
+    def acked(ack: TxnAck): Unit = {
+      GraphStore.writeJsonAtomic(acksDir.resolve(s"${ack.txnId}.json"), ackJson(ack))
+      // a final ack makes any failure strike stale: a txn that fail-stopped
+      // once transiently and then succeeded must not carry that strike
+      // toward quarantine forever. Best-effort and NON-throwing: the txn is
+      // done, so a transient FS error here must not become a NEW strike
+      Try(Files.deleteIfExists(failedDir.resolve(ack.txnId)))
+      archive(dirs(ack.txnId),
+        if (strikes.contains(ack.txnId)) inbox.resolve("quarantined") else appliedDir)
+    }
+    // a single-member failure is attributable and strikes that txn toward
+    // quarantine. A multi-member flush failure is not: instead of striking
+    // innocents, a poll-level marker forces the NEXT poll into per-txn
+    // flushes, where a deterministic commit-time pill fails ALONE, strikes
+    // individually and quarantines after the usual [[MaxApplyAttempts]]
+    // while every innocent member commits
+    def failed(txnIds: Seq[String]): Unit =
+      if (txnIds.size == 1) recordFailure(inbox, txnIds.head)
+      else Try {
+        Files.createDirectories(failedDir)
+        Files.writeString(failedDir.resolve(FlushFailedMarker), "1")
+      }
+
+    val perTxnMode = Files.exists(failedDir.resolve(FlushFailedMarker))
+    val acks = applyTxns(store, txns, if (perTxnMode) 0 else GroupCommitMaxOps,
+      acked, failed)
+    // every flush of this poll landed: the per-txn degradation (if any) did
+    // its job — the next poll group-commits again
+    if (perTxnMode && txns.nonEmpty)
+      Try(Files.deleteIfExists(failedDir.resolve(FlushFailedMarker)))
+    acks
+  }
+
+  /** Apply one txn received in memory (a [[Wire]] write frame): its meta
+    * JSON and its op rows as one [[OpBatchFile.encode]] payload. Returns
+    * its final ack; a fail-stop throws as in [[applyPending]].
+    */
+  private[store] def applyFrame[V](store: GraphStore[V], meta: String,
+      ops: Array[Byte]): TxnAck = {
+    val txnId = GraphStore.jsonField(meta, "txnId")
+      .filter(_.matches("[A-Za-z0-9_-]+"))
+      .getOrElse(throw new IllegalArgumentException("txn meta has no valid txnId"))
+    val schema = GraphStore.opSchema(store.modelOf)
+    val txn = new Shipped[V](txnId, meta,
+      decode(store, OpBatchFile.decode(store.sparkOf, Some(schema), ops, _)))
+    applyTxns(store, Seq(txn), GroupCommitMaxOps, _ => (), _ => ()).head
+  }
+
+  /** One shipped txn as the server received it: its id, its meta JSON and
+    * its ops, decoded only once the txn passes triage (`Left` is the
+    * refusal message).
+    */
+  private final class Shipped[V](val txnId: String, val meta: String,
+      decoded: => Either[String, Seq[GraphOp[V]]]) {
+    lazy val ops: Either[String, Seq[GraphOp[V]]] = decoded
+  }
+
+  /** The write core every transport calls: apply `txns`, in order, to the
+    * open store. Returns their acks in apply order.
+    *
+    *  1. Triage on the driver, no Spark job: a txn whose id is tagged in
+    *     the WAL (applied, its ack lost in the crash window) replays its
+    *     RECORDED ack, and a format version other than the server's is
+    *     refused.
+    *  1. The rest are decoded, and all their global refs are
+    *     existence-checked in ONE point read (a job only over a
+    *     materialized base).
+    *  1. Each is applied by [[applyOne]]; applied txns are made durable by
+    *     ONE group-committed WAL batch per `flushBound` ops, tagged with
+    *     every member's ack.
+    *
+    * `acked` receives each final ack: a refusal or a replay at once, an
+    * applied txn's only after its WAL batch is durable. On a fail-stop,
+    * `failed` receives the txns it is attributable to (the one that failed
+    * mid-apply, or every member of the failed flush) before
+    * [[ApplyFailedException]] is thrown.
+    */
+  private def applyTxns[V](store: GraphStore[V], txns: Seq[Shipped[V]], flushBound: Int,
+      acked: TxnAck => Unit, failed: Seq[String] => Unit): Seq[TxnAck] = {
+    // the fail-stop is mechanical, not advisory: after a mid-txn failure
+    // the session may hold a partial txn, and applying again would apply
+    // that txn's ops a SECOND time — refuse until the store is reopened
+    if (store.remoteApplyPoisoned) throw new IllegalStateException(
+      "a previous shipped txn failed mid-apply; reopen the store " +
+        "(WAL-prefix recovery) before serving again")
+    val acks = mutable.ArrayBuffer[TxnAck]()
+    def settle(ack: TxnAck): Unit = { acked(ack); acks += ack }
+    val todo = txns.filter { txn =>
+      store.txnTag(txn.txnId) match {
         case Some(recorded) =>
           // crash-window recovery leg 2: the txn's WAL batch is durable and
           // carries its ack as the batch tag (GraphStore.commitTagged), but
-          // the crash hit between drain and ack write. Re-applying would
-          // mint FRESH global ids for the same newNodes — a duplicated
-          // subgraph reachable from root — so replay the recorded ack:
-          // the client sees the mapping of the application that is
-          // actually durable. Exactly-once restored across the window.
-          GraphStore.writeJsonAtomic(ackFile, recorded)
-          archive(dir, appliedDir)
-          // tagged means durably applied — any failure strike is stale;
-          // non-throwing like every marker cleanup (a transient FS error
-          // on best-effort cleanup must never kill the serve loop)
-          Try(Files.deleteIfExists(inbox.resolve(FailedDirName).resolve(txnId)))
-          acks += parseAck(recorded)
-        case None if failCount(inbox, txnId) >= MaxApplyAttempts =>
-          val n = failCount(inbox, txnId)
-          val ack = TxnAck(txnId, applied = false, Map.empty, Some(
-            s"quarantined after $n mid-apply failures; txn moved to " +
-              "quarantined/ for inspection — a deterministic apply failure " +
-              "must not wedge the serve loop"))
-          GraphStore.writeJsonAtomic(ackFile, ackJson(ack))
-          // same non-throwing replace-aware move as archive(): a stale
-          // same-named dir in quarantined/ must not wedge the loop
-          archive(dir, inbox.resolve("quarantined"))
-          Try(Files.deleteIfExists(inbox.resolve(FailedDirName).resolve(txnId)))
-          acks += ack
+          // the crash hit between drain and ack. Re-applying would mint
+          // FRESH global ids for the same newNodes — a duplicated subgraph
+          // reachable from root — so replay the recorded ack: the client
+          // sees the mapping of the application that is actually durable.
+          // Exactly-once restored across the window.
+          settle(parseAck(recorded))
+          false
         case None =>
-          val meta = Try(Files.readString(dir.resolve(MetaName))).getOrElse("")
-          val version = GraphStore.jsonField(meta, "formatVersion")
+          val version = GraphStore.jsonField(txn.meta, "formatVersion")
             .flatMap(v => Try(v.toInt).toOption).getOrElse(-1)
           if (version != GraphStore.FormatVersion) {
-            val ack = TxnAck(txnId, applied = false, Map.empty, Some(
+            settle(TxnAck(txn.txnId, applied = false, Map.empty, Some(
               s"incompatible format version $version; server speaks " +
-                s"${GraphStore.FormatVersion} — the ClientFailure handshake refusal"))
-            GraphStore.writeJsonAtomic(ackFile, ackJson(ack))
-            archive(dir, appliedDir)
-            acks += ack
-          } else todo += ((dir, txnId, meta))
+                s"${GraphStore.FormatVersion} — the ClientFailure handshake refusal")))
+            false
+          } else true
       }
     }
     if (todo.isEmpty) return acks.toSeq
-    val tLoad0 = System.nanoTime()
 
-    // phase 2 — read and decode each todo dir on the driver
-    val loaded = loadTxns(store, todo.toSeq.map(t => (t._1, t._2)))
-    val tExists0 = System.nanoTime()
-
-    // phase 3 — one existence-check job for ALL global refs in the poll;
-    // ids created/removed by earlier txns IN this poll are tracked
-    // driver-side (the server itself assigns/resolves them), so per-txn
-    // validation needs no further jobs
-    val allGlobals = loaded.valuesIterator
-      .collect { case Right(ops) => ops }.flatten
-      .flatMap(refsOf).filter(_ >= 0).toSeq.distinct
+    // one existence-check job for ALL global refs; ids created/removed by
+    // earlier txns of this call are tracked driver-side (the server itself
+    // assigns/resolves them), so per-txn validation needs no further jobs
+    val allGlobals = todo.flatMap(_.ops.toOption).flatten
+      .flatMap(refsOf).filter(_ >= 0).distinct
     val existsAtStart: Set[Long] =
       store.session.applied().getValues(allGlobals).keySet
     val createdThisPoll = mutable.Set[Long]()
@@ -510,117 +597,59 @@ object RemoteWrite {
     // one WAL-suffix scan per distinct snapshot mark per poll
     val mutatedSinceCache =
       mutable.Map[(Long, Long), Either[String, (Set[Long], Set[Long])]]()
-    val tApply0 = System.nanoTime()
-    var flushNanos = 0L
-    var flushCommitNanos = 0L
-    var flushDrainNanos = 0L
 
-    // phase 4 — GROUP COMMIT: applied txns' ops accumulate uncommitted in
-    // the session op log; one commitTaggedAll per group publishes ONE WAL
-    // batch carrying every member's ack tag (batch-durable ⟺ every ack
-    // recoverable — recovery legs 1/2 are unchanged because the tag readers
-    // parse per line). Ack files and archival happen only AFTER the drain
-    // barrier, so no client is ever told "applied" before the WAL has it.
-    // This turns the write path's measured bottleneck (one parquet publish
-    // per txn, SERVE_r10.json) into one publish per poll; groups are capped
-    // at [[GroupCommitMaxOps]] session ops so a huge poll flushes in bounded
-    // driver-memory chunks. Refusals mutate nothing and are deterministic,
-    // so they ack+archive immediately, outside the group.
-    val group = mutable.ArrayBuffer[(Path, String, TxnAck)]()
+    // GROUP COMMIT: applied txns' ops accumulate uncommitted in the session
+    // op log; one commitTaggedAll per group publishes ONE WAL batch carrying
+    // every member's ack tag (batch-durable ⟺ every ack recoverable —
+    // recovery leg 2 parses the tags per line). Acks are final only AFTER
+    // the drain barrier, so no client is ever told "applied" before the WAL
+    // has it. This turns the write path's measured bottleneck (one parquet
+    // publish per txn, SERVE_r10.json) into one publish per call; groups
+    // are capped at `flushBound` session ops so a huge poll flushes in
+    // bounded driver-memory chunks. Refusals mutate nothing and are
+    // deterministic, so they are final at once, outside the group.
+    val group = mutable.ArrayBuffer[TxnAck]()
     var groupOps = 0
-    // a prior multi-member flush failure left the guilty txn unknown: this
-    // poll flushes per-txn (bound 0) so any deterministic pill fails alone
-    // and strikes toward quarantine while innocents commit normally
-    val perTxnMode = Files.exists(inbox.resolve(FailedDirName).resolve(FlushFailedMarker))
-    val flushBound = if (perTxnMode) 0 else GroupCommitMaxOps
     def flushGroup(): Unit = if (group.nonEmpty) {
-      val tF0 = System.nanoTime()
       try {
-        store.commitTaggedAll(group.map(g => ackJson(g._3)).toSeq)
-        flushCommitNanos += System.nanoTime() - tF0
+        store.commitTaggedAll(group.map(ackJson).toSeq)
         // a BUFFERED store acknowledges commit() at enqueue; the acks'
         // durable-after-WAL promise requires the drain barrier (no-op on an
         // unbuffered store) — otherwise a crash could lose txns the clients
         // were told were applied
-        val tD0 = System.nanoTime()
         store.drain()
-        flushDrainNanos += System.nanoTime() - tD0
       } catch {
         case scala.util.control.NonFatal(e) =>
           // a failed group flush leaves COMPLETE txns' ops in the session
-          // log uncommitted — polling again would apply them a SECOND time
+          // log uncommitted — applying again would apply them a SECOND time
           // on top of the first application's ops, so fail-stop exactly as
           // a mid-apply throw does (reopen = WAL-prefix recovery = rollback,
-          // next poll re-applies; no ack was written, exactly-once holds).
-          // Strike attribution: a single-member flush IS attributable, so
-          // it records the member's strike toward quarantine. A multi-
-          // member flush is not — instead of striking innocents, drop a
-          // poll-level marker that forces the NEXT poll into per-txn
-          // flushes: a deterministic commit-time pill then fails ALONE,
-          // strikes individually, and quarantines after the usual
-          // [[MaxApplyAttempts]] while every innocent member commits —
-          // liveness without collateral refusals
-          if (group.size == 1) recordFailure(inbox, group.head._2)
-          else Try {
-            Files.createDirectories(inbox.resolve(FailedDirName))
-            Files.writeString(
-              inbox.resolve(FailedDirName).resolve(FlushFailedMarker), "1")
-          }
+          // the next call re-applies; no ack was final, exactly-once holds)
           store.remoteApplyPoisoned = true
-          throw new ApplyFailedException(group.head._2, e)
+          failed(group.map(_.txnId).toSeq)
+          throw new ApplyFailedException(group.head.txnId, e)
       }
-      group.foreach { case (dir, txnId, ack) =>
-        store.recordTxnTag(txnId, ackJson(ack))
-        GraphStore.writeJsonAtomic(acksDir.resolve(s"$txnId.json"), ackJson(ack))
-        // a SUCCESSFUL apply clears any prior failure marker: a txn that
-        // fail-stopped once transiently and then succeeded must not carry
-        // that strike toward quarantine forever. Best-effort and
-        // NON-throwing: the txn is durably committed at this point, so a
-        // transient FS error here must not be recorded as a NEW strike
-        // (the acked-txn triage leg also clears markers whenever a crash
-        // leaves the dir in the inbox; a marker that survives a swallowed
-        // delete AND a completed archive merely costs one earlier
-        // quarantine strike if its txnId is ever reused after an operator
-        // purge — bounded, and strictly better than poisoning)
-        Try(Files.deleteIfExists(inbox.resolve(FailedDirName).resolve(txnId)))
-        archive(dir, appliedDir)
+      group.foreach { ack =>
+        store.recordTxnTag(ack.txnId, ackJson(ack))
+        acked(ack)
       }
       group.clear()
       groupOps = 0
-      flushNanos += System.nanoTime() - tF0
     }
-    todo.foreach { case (dir, txnId, meta) =>
-      val ack = applyOne(store, inbox, txnId, meta, loaded(txnId),
+    todo.foreach { txn =>
+      val ack = applyOne(store, txn.txnId, txn.meta, txn.ops,
         existsAtStart, createdThisPoll, removedThisPoll,
-        mutatedThisPoll, mutatedSinceCache)
+        mutatedThisPoll, mutatedSinceCache, failed)
       if (ack.applied) {
-        group += ((dir, txnId, ack))
-        groupOps += loaded(txnId).toOption.map(_.size).getOrElse(0)
+        group += ack
+        acks += ack
+        groupOps += txn.ops.toOption.map(_.size).getOrElse(0)
         if (groupOps >= flushBound) flushGroup()
-      } else {
-        GraphStore.writeJsonAtomic(acksDir.resolve(s"$txnId.json"), ackJson(ack))
-        archive(dir, appliedDir)
-      }
-      acks += ack
+      } else settle(ack)
     }
     flushGroup()
-    // every flush of this poll landed: the per-txn degradation (if any) did
-    // its job — the next poll group-commits again
-    if (perTxnMode)
-      Try(Files.deleteIfExists(inbox.resolve(FailedDirName).resolve(FlushFailedMarker)))
-    val tEnd = System.nanoTime()
-    lastPollPhaseNanos = Map(
-      "triage" -> (tLoad0 - tTriage0), "load" -> (tExists0 - tLoad0),
-      "exists" -> (tApply0 - tExists0), "flush" -> flushNanos,
-      "flushCommit" -> flushCommitNanos, "flushDrain" -> flushDrainNanos,
-      "apply" -> (tEnd - tApply0 - flushNanos))
     acks.toSeq
   }
-
-  /** Wall-clock breakdown of the last [[applyPending]] poll that reached
-    * phase 2 — diagnostic only (ServeBench, perf probes).
-    */
-  private[graft] var lastPollPhaseNanos: Map[String, Long] = Map.empty
 
   /** Session-op cap per group-commit flush: bounds the size of the single
     * WAL batch a poll publishes (driver-built, one partition — the same
@@ -679,28 +708,23 @@ object RemoteWrite {
     case GraphOp.RemoveNode(id) => Seq(id)
   }
 
-  /** Read + decode every todo txn dir, each on its own: a dir that fails
-    * to read (corrupt file, foreign schema) or holds more than the driver
-    * bound is that txn's typed refusal and never its neighbours'.
-    * `Left` = refusal message; `Right` = decoded ops in seq order.
+  /** Decode one txn's op rows, read by `read(limit)`: rows that fail to
+    * read (corrupt file, foreign schema) or more than the driver bound are
+    * that txn's typed refusal (`Left`) and never its neighbours'; `Right`
+    * holds the ops in seq order.
     */
-  private def loadTxns[V](store: GraphStore[V], todo: Seq[(Path, String)])
-      : Map[String, Either[String, Seq[GraphOp[V]]]] = {
+  private def decode[V](store: GraphStore[V], read: Int => Seq[Row])
+      : Either[String, Seq[GraphOp[V]]] = {
     val bound = GraphStore.maxReplayBatchRows
-    val schema = GraphStore.opSchema(store.modelOf)
     def undecodable(e: Throwable) =
       s"undecodable txn: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
-    todo.map { case (dir, txnId) =>
-      txnId -> Try(OpBatchFile.read(store.sparkOf, Some(schema), dir, bound + 1))
+    Try(read(bound + 1)).toEither.left.map(undecodable).flatMap { rows =>
+      if (rows.length > bound)
+        Left(s"txn exceeds $bound ops; shipped txns are driver-sized by " +
+          "contract — use commitBulk for bulk ingest")
+      else Try(rows.sortBy(_.getLong(0)).map(r => GraphStore.rowToOp(store.modelOf, r)))
         .toEither.left.map(undecodable)
-        .flatMap { rows =>
-          if (rows.length > bound)
-            Left(s"txn exceeds $bound ops; shipped txns are driver-sized by " +
-              "contract — use commitBulk for bulk ingest")
-          else Try(rows.sortBy(_.getLong(0)).map(r => GraphStore.rowToOp(store.modelOf, r)))
-            .toEither.left.map(undecodable)
-        }
-    }.toMap
+    }
   }
 
   /** Parse the optional snapshot-read stamp out of a shipped txn's meta:
@@ -718,14 +742,15 @@ object RemoteWrite {
     }
   }
 
-  private def applyOne[V](store: GraphStore[V], inbox: Path, txnId: String,
+  private def applyOne[V](store: GraphStore[V], txnId: String,
       meta: String, loaded: Either[String, Seq[GraphOp[V]]],
       existsAtStart: Set[Long],
       createdThisPoll: mutable.Set[Long],
       removedThisPoll: mutable.Set[Long],
       mutatedThisPoll: mutable.Set[Long],
       mutatedSinceCache: mutable.Map[(Long, Long),
-        Either[String, (Set[Long], Set[Long])]]): TxnAck = {
+        Either[String, (Set[Long], Set[Long])]],
+      failed: Seq[String] => Unit): TxnAck = {
     def refused(msg: String) = TxnAck(txnId, applied = false, Map.empty, Some(msg))
     loaded match {
       case Left(msg) => refused(msg)
@@ -831,9 +856,9 @@ object RemoteWrite {
         // commit, earlier applied-but-unflushed txns of the SAME group are
         // equally un-acked and uncommitted, so the reopen rolls them back
         // too and the next poll re-applies them — no ack was written, so
-        // exactly-once is preserved for every group member. The failure
-        // marker feeds the quarantine threshold: a txn that fail-stops
-        // [[MaxApplyAttempts]] times is moved aside on the next poll.
+        // exactly-once is preserved for every group member. `failed` hears
+        // of the txn: the inbox's strike toward [[MaxApplyAttempts]], after
+        // which the txn is moved aside on the next poll.
         val session = store.session
         val mapping = mutable.Map[Long, Long]()
         def resolve(x: Long): Long = if (x < 0) mapping(x) else x
@@ -848,7 +873,7 @@ object RemoteWrite {
           val ack = TxnAck(txnId, applied = true, mapping.toMap, None)
           // the ops now sit in the session op log, UNCOMMITTED: durability
           // (one WAL batch tagged with every member's ack — batch-durable
-          // ⟺ ack-recoverable, see applyPending's recovery leg 2) is the
+          // ⟺ ack-recoverable, see applyTxns's recovery leg 2) is the
           // caller's GROUP flush, so a poll of N applied txns pays one
           // parquet publish, not N
           createdThisPoll ++= mapping.values
@@ -862,8 +887,8 @@ object RemoteWrite {
           ack
         } catch {
           case scala.util.control.NonFatal(e) =>
-            recordFailure(inbox, txnId)
             store.remoteApplyPoisoned = true
+            failed(Seq(txnId))
             throw new ApplyFailedException(txnId, e)
         }
     }

@@ -83,9 +83,7 @@ object ServeBench {
       polls += 1
     }
     val writeSec = (System.nanoTime() - t0) / 1e9
-    val phases = RemoteWrite.lastPollPhaseNanos.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s"$k=${fmt(v / 1e9)}" }.mkString(" ")
-    System.err.println(s"[serve] write polls=$polls last-poll phases: $phases")
+    System.err.println(s"[serve] write polls=$polls")
 
     // ---- WIRE burst: the TCP transport (store.Wire) under the same
     // point-read/write shape — 4 socket clients x 4 getValues requests of
@@ -96,8 +94,8 @@ object ServeBench {
     import graft.store.Wire
     val wireServer = Wire.serve(replica, store)
     val wireReadSec = {
-      val clients = (0 until 4).map(c => new Wire.ReadClient(
-        spark, GeoModel, wireServer.host, wireServer.port, f"wire$c%02d"))
+      val clients = (0 until 4).map(_ => new Wire.ReadClient(
+        spark, GeoModel, wireServer.host, wireServer.port))
       clients.head.getValues(Seq(ids(0))) // warm the path
       val t0 = System.nanoTime()
       for (s <- 0 until 4; c <- clients)
@@ -108,7 +106,7 @@ object ServeBench {
     }
     val wireWriteSec = {
       val wc = new Wire.WriteClient(spark, GeoModel,
-        wireServer.host, wireServer.port, "wirew")
+        wireServer.host, wireServer.port)
       val t0 = System.nanoTime()
       val txnIds = (0 until 16).map { i =>
         wc.submit { txn =>

@@ -8,12 +8,14 @@ import graft.graph._
 
 /** TCP serve/client suite — the wire analog of the reference's socket
   * server (/root/reference/library/GraphDB/Server.hs:17-94,
-  * Client.hs:53-60, Protocol.hs:8-43): the same protocol artifacts as the
-  * shared-storage suites, framed over a loopback socket. Everything the
-  * RemoteRead/RemoteWrite suites prove (batching, refusals, tx-local
-  * refs, atomicity) is inherited — these tests pin that the TRANSPORT
-  * preserves it end to end, plus wire-only concerns: concurrent clients
-  * on one server and value fidelity through the framed parquet.
+  * Client.hs:53-60, Protocol.hs:8-43): each frame carries a read request
+  * or a shipped txn in memory, and the server answers it with the same
+  * RemoteRead parse/answer and RemoteWrite write core the shared-storage
+  * suites prove (batching, refusals, tx-local refs, atomicity). These
+  * tests pin that the wire preserves them end to end, plus wire-only
+  * concerns: concurrent and successive clients on one server, value
+  * fidelity through the parquet payloads, the frame bounds, and the Spark
+  * cost of a wire round trip.
   */
 class WireSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -37,7 +39,7 @@ class WireSpec extends AnyFunSuite {
     replica.catchUp()
     val server = Wire.serveRead(replica)
     val client = new Wire.ReadClient(spark, CatalogueModel,
-      server.host, server.port, "wr")
+      server.host, server.port)
     try {
       assert(client.getValue(mj) === Artist(1, "Michael Jackson"))
       assert(client.getValues(Seq(mj, bj, 424242L)) ===
@@ -60,7 +62,7 @@ class WireSpec extends AnyFunSuite {
     val (store, _, _, _) = storeWithData()
     val server = Wire.serveWrite(store)
     val client = new Wire.WriteClient(spark, CatalogueModel,
-      server.host, server.port, "ww")
+      server.host, server.port)
     try {
       val t1 = client.submit { txn =>
         val p = txn.newNode(Artist(9, "Prince"))
@@ -91,9 +93,9 @@ class WireSpec extends AnyFunSuite {
     replica.catchUp()
     val server = Wire.serve(replica, store)
     val wc = new Wire.WriteClient(spark, CatalogueModel,
-      server.host, server.port, "rw")
+      server.host, server.port)
     val rc = new Wire.ReadClient(spark, CatalogueModel,
-      server.host, server.port, "rr")
+      server.host, server.port)
     try {
       val t = wc.submit { txn =>
         val g = txn.newNode(Genre("Funk"))
@@ -131,7 +133,7 @@ class WireSpec extends AnyFunSuite {
     replica.catchUp()
     val server = Wire.serveRead(replica)
     val client = new Wire.ReadClient(spark, model,
-      server.host, server.port, "blob")
+      server.host, server.port)
     try {
       client.getValue(n) match {
         case DeriveSpecADT.Blobby(b) =>
@@ -151,9 +153,9 @@ class WireSpec extends AnyFunSuite {
     replica.catchUp()
     val server = Wire.serveRead(replica)
     val c1 = new Wire.ReadClient(spark, CatalogueModel,
-      server.host, server.port, "wa")
+      server.host, server.port)
     val c2 = new Wire.ReadClient(spark, CatalogueModel,
-      server.host, server.port, "wb")
+      server.host, server.port)
     try {
       val r1 = c1.getValue(mj)
       val r2 = c2.getValue(bj)
@@ -375,30 +377,137 @@ class WireSpec extends AnyFunSuite {
     val (store, dir, mj, _) = storeWithData()
     val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
     replica.catchUp()
-    val server = Wire.serveRead(replica)
-    try {
-      val (s, out, in) = rawSocket(server)
-      // a path-traversal artifact must be refused (never laid outside the
-      // inbox) and must not desynchronize the connection
+    // read frames carry no paths; the ann frame's query files do. The index
+    // dir is never read: the path check refuses the frame before the serve
+    val idxDir = Files.createTempDirectory("graft-wire-noidx-").toString
+    val server = new Wire.Server[Cat](Some(replica), None, Some((spark, idxDir)))
+    def readFrame(out: java.io.DataOutputStream, request: String): Unit = {
       writeHeader(out, """{"kind": "read"}""")
       out.writeInt(1)
-      val pb = "../evil.req.json".getBytes("UTF-8")
+      val nb = "request".getBytes("UTF-8")
+      out.writeInt(nb.length); out.write(nb)
+      val rb = request.getBytes("UTF-8")
+      out.writeLong(rb.length.toLong); out.write(rb); out.flush()
+    }
+    try {
+      val (s, out, in) = rawSocket(server)
+      // a path-traversal artifact must be refused (never written outside
+      // the request dir) and must not desynchronize the connection
+      writeHeader(out, """{"kind": "ann", "reqId": "u1"}""")
+      out.writeInt(1)
+      val pb = "../evil.parquet".getBytes("UTF-8")
       out.writeInt(pb.length); out.write(pb)
       val payload = "{}".getBytes("UTF-8")
       out.writeLong(payload.length.toLong); out.write(payload); out.flush()
       val h1 = readRespHeader(in)
       assert(h1.contains("\"kind\": \"error\"") && h1.contains("unsafe path"), h1)
-      // same socket, well-formed empty read frame → clean ack
-      writeHeader(out, """{"kind": "read"}""")
-      out.writeInt(0); out.flush()
+      // same socket, well-formed read frame → clean ack
+      readFrame(out, s"""{"reqId": "r1", "op": "getValues", "ids": [$mj]}""")
       val h2 = readRespHeader(in)
       assert(h2.contains("\"kind\": \"ack\""), h2)
+      // a malformed read request is a typed refusal; the socket serves on
+      readFrame(out, """{"reqId": "r2", "op": "zap"}""")
+      val h3 = readRespHeader(in)
+      assert(h3.contains("\"kind\": \"error\"") && h3.contains("unknown read op"), h3)
+      readFrame(out, s"""{"reqId": "r3", "op": "targets", "id": 0}""")
+      val h4 = readRespHeader(in)
+      assert(h4.contains("\"kind\": \"ack\""), h4)
       s.close()
       // and the real client path still works end to end on this server
       val client = new Wire.ReadClient(spark, CatalogueModel,
-        server.host, server.port, "wu")
+        server.host, server.port)
       try assert(client.getValue(mj) === Artist(1, "Michael Jackson"))
       finally client.close()
     } finally { server.close(); store.close() }
+  }
+
+  test("clients opened in turn on one server apply their own txns and read their own answers") {
+    // txn and request ids are minted per client from a random UUID: a
+    // later client never shares an earlier one's ids, so the server never
+    // answers it with the earlier client's recorded ack or answer
+    val (store, dir, _, _) = storeWithData()
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
+    replica.catchUp()
+    val server = Wire.serve(replica, store)
+    try {
+      val written = Seq(Artist(2, "A"), Artist(3, "B")).map { v =>
+        val wc = new Wire.WriteClient(spark, CatalogueModel, server.host, server.port)
+        try {
+          var ref = 0L
+          val t = wc.submit { txn => ref = txn.newNode(v); txn.addTarget(0L, ref) }
+          val ack = wc.await(t)
+          assert(ack.applied && ack.error.isEmpty, ack)
+          ack.assigned(ref) -> v
+        } finally wc.close()
+      }
+      assert(written.map(_._1).distinct.size === 2, written)
+      store.drain()
+      replica.catchUp()
+      written.foreach { case (id, v) =>
+        assert(store.session.getValue(id) === v)
+        val rc = new Wire.ReadClient(spark, CatalogueModel, server.host, server.port)
+        try {
+          assert(rc.getValue(id) === v)
+          assert(rc.targets(0L).contains(id))
+        } finally rc.close()
+      }
+    } finally { server.close(); store.close() }
+  }
+
+  test("a 100,000-id getValues near Long.MaxValue is answered; the connection serves on") {
+    // 100k ids of 19 digits are ~2 MB of request JSON, past the 1 MiB
+    // header bound: the request rides the frame body
+    val (store, dir, mj, bj) = storeWithData()
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
+    replica.catchUp()
+    val server = Wire.serveRead(replica)
+    val client = new Wire.ReadClient(spark, CatalogueModel, server.host, server.port)
+    try {
+      val ids = Seq(mj, bj) ++ (0L until 99998L).map(Long.MaxValue - _)
+      assert(ids.distinct.size === 100000)
+      assert(client.getValues(ids) ===
+        Map(mj -> Artist(1, "Michael Jackson"), bj -> Song("Billie Jean")),
+        "unknown ids are absent")
+      assert(client.getValue(bj) === Song("Billie Jean"))
+    } finally { client.close(); server.close(); store.close() }
+  }
+
+  test("a wire round trip costs the Spark jobs of the serving call it runs") {
+    // a store reopened from its snapshot serves from materialized bases,
+    // so a point read and a commit lookup run real jobs
+    val (first, dir, mj, _) = storeWithData()
+    first.close()
+    val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
+    val replica = GraphReplica.bootstrap(spark, CatalogueModel, dir)
+    replica.catchUp()
+    val server = Wire.serve(replica, store)
+    val rc = new Wire.ReadClient(spark, CatalogueModel, server.host, server.port)
+    val wc = new Wire.WriteClient(spark, CatalogueModel, server.host, server.port)
+    val inbox = Files.createTempDirectory("graft-wire-cost-inbox-").toString
+    val ic = new RemoteWrite.Client(spark, CatalogueModel, inbox, "cost")
+    def cost(f: => Unit) = graft.tools.CostProbe.costOf(spark)(f)
+    try {
+      // reads: the same one-id getValues, in process and over the wire
+      replica.getValues(Seq(mj)); rc.getValues(Seq(mj))
+      val local = cost(replica.getValues(Seq(mj)))
+      val wire = cost(assert(rc.getValues(Seq(mj)).keySet === Set(mj)))
+      assert(local.jobs === 1 && local.tasks === 1, s"replica.getValues: $local")
+      assert(wire.jobs === 1 && wire.tasks === 1,
+        s"a warm wire getValues must run only the replica's read: $wire")
+      // writes: the same one-txn shape through the inbox poll and the wire
+      def txn(name: String)(t: RemoteWrite.RemoteTxn[Cat]): Unit =
+        t.addTarget(mj, t.newNode(Song(name)))
+      ic.submit(txn("warm-inbox")); RemoteWrite.applyPending(store, inbox)
+      assert(wc.await(wc.submit(txn("warm-wire"))).applied)
+      ic.submit(txn("inbox"))
+      val polled = cost(assert(RemoteWrite.applyPending(store, inbox).forall(_.applied)))
+      var acked: RemoteWrite.TxnAck = null
+      val wired = cost { acked = wc.await(wc.submit(txn("wire"))) }
+      assert(acked.applied, acked)
+      assert(polled.jobs >= 1, s"the poll ran no job: $polled")
+      assert(wired.jobs === polled.jobs,
+        s"a one-txn wire write ($wired) must run the jobs of applyPending ($polled)")
+      info(s"getValues: $wire; write: $wired")
+    } finally { rc.close(); wc.close(); server.close(); store.close() }
   }
 }
