@@ -28,9 +28,10 @@ import scala.collection.mutable.ArrayBuffer
   * RemoveNode run changes it (SetValue: nodes and index; the two removes:
   * edges and index) — see [[GraphState.checkpointedSince]]. A point read
   * (getValue, getTargets, targets, sources) and the lookup build no
-  * DataFrame: each is one Spark job run straight on the tables' planned
-  * base RDDs, with the tails filtered on the driver (no job while no table
-  * has materialized), so a read makes no Catalyst pass and compiles no
+  * DataFrame: each scans the owning partitions of the tables' keyed bases
+  * in place where the driver holds their blocks (every one on `local[N]`:
+  * no Spark job) and in one Spark job otherwise, with the tails filtered
+  * on the driver, so a read makes no Catalyst pass and compiles no
   * class. Bulk commits
   * (GraphStore.commitBulk) never touch the driver: they stay distributed
   * joins over the whole delta.

@@ -1,11 +1,12 @@
 package graft.graph
 
-import org.apache.spark.{HashPartitioner, Partitioner, TaskContext}
+import org.apache.spark.{BlockShim, HashPartitioner, Partitioner, TaskContext}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Encoders, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.RDDBlockId
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
@@ -27,7 +28,7 @@ import graft.functions.Param
   * anti-join), mirroring the reference's own WAL-replay model where state =
   * checkpoint ⊕ replay(ops) (Persistent/Log.hs:38-52). Driver-issued op
   * batches carry driver-sized deltas: they enter plans as local relations,
-  * and addTarget derives its index rows on the driver after one lookup job
+  * and addTarget derives its index rows on the driver after one lookup
   * ([[GraphState.withTargets]]).
   *
   * Each table is a materialized base plus a TAIL of rows appended on the
@@ -47,17 +48,20 @@ import graft.functions.Param
   * base is KEYED: its physical rows are hash-partitioned by the table's
   * lookup key (nodes by `id`, edges and index by `src`), held as unsafe
   * rows by a local checkpoint, with the partitioner that placed them kept
-  * beside them and carried through appends. A read is one row predicate,
-  * run as one Spark job over the partitions that own its ids ([[probe]])
-  * and over the tail on the driver: a single-id read runs one task,
-  * whatever the partition count. [[sources]] tests `dst`, which no base
-  * is keyed by, so it scans every partition. A read makes no Catalyst
-  * pass and compiles no class, whatever its id — the keyed vertex
-  * partitions of Pregelix (VLDB 2014), in place of the reference's
-  * per-node hash maps (Graph.hs:27-34).
+  * beside them and carried through appends. A read is one row predicate
+  * over the partitions that own its ids and over the tail ([[probe]]): a
+  * single-id read scans one partition, whatever the partition count.
+  * [[sources]] tests `dst`, which no base is keyed by, so it scans every
+  * partition. A partition whose block the driver's own block manager
+  * holds (every one, on `local[N]`) is scanned in place on the calling
+  * thread, with no Spark job; the rest run as one Spark job. A read
+  * makes no Catalyst pass and compiles no class, whatever its id — the
+  * keyed vertex partitions of Pregelix (VLDB 2014), served where they
+  * are kept, in place of the reference's per-node hash maps
+  * (Graph.hs:27-34).
   *
   * Every function a read, a commit lookup or a materialization hands to
-  * Spark is a named `Serializable` class ([[GraphState.TagRows]],
+  * Spark is a named `Serializable` class ([[GraphState.KeepRows]],
   * [[GraphState.CollectRows]], [[GraphState.KeyRows]],
   * [[GraphState.DropKeys]]), never a Scala lambda. Spark's
   * `ClosureCleaner` reads and parses the class file that declares each
@@ -212,22 +216,18 @@ object GraphState {
     def apply(pairs: Iterator[(Long, InternalRow)]): Iterator[InternalRow] = pairs.map(_._2)
   }
 
-  /** The task of lookup `i` of a [[GraphState.probe]] on one partition:
-    * the rows that pass `keep`, copied off the scan's reused buffers and
-    * tagged `i`.
+  /** A lookup of a [[GraphState.probe]] over one base partition: the rows
+    * that pass `keep`, copied off the scan's reused buffers.
     */
-  private[graft] final class TagRows(i: Int, keep: InternalRow => Boolean)
-      extends (Iterator[InternalRow] => Iterator[(Int, InternalRow)]) with Serializable {
-    def apply(rows: Iterator[InternalRow]): Iterator[(Int, InternalRow)] =
-      rows.filter(keep).map(r => (i, r.copy()))
+  private[graft] final class KeepRows(keep: InternalRow => Boolean)
+      extends (Iterator[InternalRow] => Iterator[InternalRow]) with Serializable {
+    def apply(rows: Iterator[InternalRow]): Iterator[InternalRow] = rows.filter(keep).map(_.copy())
   }
 
-  /** The task function of a probe's job: one partition's tagged rows. */
+  /** The task function of a probe's job: one partition's kept rows. */
   private[graft] object CollectRows
-      extends ((TaskContext, Iterator[(Int, InternalRow)]) => Array[(Int, InternalRow)])
-      with Serializable {
-    def apply(task: TaskContext, rows: Iterator[(Int, InternalRow)]): Array[(Int, InternalRow)] =
-      rows.toArray
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    def apply(task: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] = rows.toArray
   }
 
   /** A membership test of ids that tasks can carry: the sorted ids ride
@@ -249,17 +249,27 @@ object GraphState {
       r => in(r.getLong(c)) && p(r)
     }
 
-    /** The base partitions that can hold a match: those that own `ids`
-      * when `column` is the key the base was partitioned by — computed by
-      * the partitioner that placed the rows — else every partition.
+    /** The base partitions that can hold a match, in index order: those
+      * that own `ids` when `column` is the key the base was partitioned
+      * by — computed by the partitioner that placed the rows — else every
+      * partition.
       */
-    def base: RDD[InternalRow] = table.partitioner match {
+    def partitions: Seq[Int] = table.partitioner match {
       case Some(p) if column == table.key =>
-        val owners = ids.sorted.iterator.map(id => p.getPartition(id)).toSet
-        PartitionPruningRDD.create(table.baseRows, owners)
-      case _ => table.baseRows
+        ids.sorted.iterator.map(id => p.getPartition(id)).toSeq.distinct.sorted
+      case _ => 0 until table.baseRows.getNumPartitions
     }
   }
+
+  /** The rows of base partition `p` of `rows` that `lookup` keeps,
+    * scanned on this thread from the block this JVM's block manager holds
+    * for the partition; None when it holds none — a base that was never
+    * stored as blocks (a planned base), a block held by another
+    * executor's block manager, or a lost one.
+    */
+  private[graft] def scanInPlace(rows: RDD[InternalRow], p: Int, lookup: KeepRows)
+      : Option[Array[InternalRow]] =
+    BlockShim.scan(RDDBlockId(rows.id, p))((values: Iterator[InternalRow]) => lookup(values).toArray)
 
   def apply[V](spark: SparkSession, model: GraphModel[V],
       nodes: DataFrame, edges: DataFrame, index: DataFrame): GraphState[V] =
@@ -359,7 +369,7 @@ final case class GraphState[V](
     * emission for the new edges only — the driver-issued path, whose cost
     * follows the delta, not the tables.
     *
-    * One lookup job fetches both things the delta needs: the endpoints'
+    * One lookup fetches both things the delta needs: the endpoints'
     * `(id, kind, value)` rows, and the existing edges among those endpoints
     * (a superset of the requested pairs that already exist). It is one
     * [[probe]] over the nodes and edges tables, testing `id ∈ S` on nodes
@@ -547,7 +557,7 @@ final case class GraphState[V](
     * are hash-partitioned by the table's key into max(the partition count
     * of `prev`'s base, `spark.sql.shuffle.partitions`) partitions, so
     * neither a stream of small deltas nor the tail's own partition adds a
-    * partition, and a point read still runs one task per owning partition.
+    * partition, and a point read still scans one partition per owning id.
     */
   def checkpointedSince(prev: GraphState[V]): GraphState[V] = {
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -567,24 +577,32 @@ final case class GraphState[V](
   private def partitions(t: Table): Int = t.baseRows.getNumPartitions
 
   // ------------------------------------------------------------ point reads
-  // Each read is one [[probe]]: one Spark job over the owning partitions of
-  // the table's keyed base, with no Catalyst pass and no generated class,
+  // Each read is one [[probe]]: a scan of the owning partitions of the
+  // table's keyed base, in place where this JVM holds their blocks and
+  // else in one Spark job, with no Catalyst pass and no generated class,
   // and the same row predicate over the tail on the driver. Ids are
   // deduped on the driver. Each read has one implementation, its batched
   // form; a single-id read is the batched form over one id.
 
-  /** The rows each lookup finds, in lookup order: ONE Spark job over the
-    * union of the tables' base partitions that can hold a match, then the
-    * same predicates over the tails here. A lookup by the column its base
-    * is keyed by runs only on the partitions that the base's partitioner
-    * assigns its ids to (`PartitionPruningRDD`); a lookup by another
+  /** The rows each lookup finds, in lookup order: each lookup's base
+    * partitions that can hold a match, in index order, then its tail. A
+    * lookup by the column its base is keyed by reads only the partitions
+    * that the base's partitioner assigns its ids to; a lookup by another
     * column (`sources`, by `dst`) or of a base with no partitioner (a bulk
-    * load) runs on every partition. Base rows are copied off the scan's
-    * reused buffers before they leave the task. Bases with no partition (a
-    * store that has never materialized a table) are left out, so a probe
-    * of tails alone runs no job.
+    * load) reads every partition.
     *
-    * Spark gets named task functions only ([[GraphState.TagRows]],
+    * A partition whose block this JVM's block manager holds — every
+    * partition of a keyed base on `local[N]`, where the local checkpoint
+    * stored them — is scanned here, on the calling thread, with no Spark
+    * job ([[GraphState.scanInPlace]]). The others — a planned base, blocks
+    * held by remote executors, a lost block — run as ONE Spark job over
+    * the union of those partitions (`PartitionPruningRDD`), which fails
+    * for a lost block as any read of it does. Bases with no partition (a
+    * store that has never materialized a table) are left out, so a probe
+    * of tails alone reads no block and runs no job. Base rows are copied
+    * off the scan's buffers either way.
+    *
+    * Spark gets named task functions only ([[GraphState.KeepRows]],
     * [[GraphState.CollectRows]]), so its `ClosureCleaner` reads no class
     * file for the call. The job goes through the `runJob(rdd, func,
     * partitions, resultHandler)` overload, the one that wraps `func` in no
@@ -593,21 +611,29 @@ final case class GraphState[V](
     * runs here on the driver and is not cleaned.
     */
   private def probe(lookups: Lookup*): Seq[Seq[InternalRow]] = {
-    val sc = spark.sparkContext
-    val tagged = lookups.zipWithIndex
-      .map { case (l, i) => l.base.mapPartitions(new TagRows(i, l.keep)) }
-      .filter(_.partitions.nonEmpty)
-    val hits =
-      if (tagged.isEmpty) Array.empty[(Int, InternalRow)]
+    val kept = lookups.map(l => new KeepRows(l.keep))
+    // each lookup's partitions, with their rows where this JVM holds the block
+    val inPlace = lookups.indices.map(i =>
+      lookups(i).partitions.map(p => p -> scanInPlace(lookups(i).table.baseRows, p, kept(i))))
+    // (lookup, partition) of each partition left to the job, in the
+    // order of the job's partitions
+    val away = for (i <- inPlace.indices; (p, None) <- inPlace(i)) yield (i, p)
+    val fetched: Map[(Int, Int), Array[InternalRow]] =
+      if (away.isEmpty) Map.empty
       else {
-        val rdd = if (tagged.size == 1) tagged.head else sc.union(tagged)
-        val parts = new Array[Array[(Int, InternalRow)]](rdd.partitions.length)
+        val sc = spark.sparkContext
+        val scans = away.groupMap(_._1)(_._2).toSeq.sortBy(_._1).map { case (i, ps) =>
+          PartitionPruningRDD.create(lookups(i).table.baseRows, ps.toSet).mapPartitions(kept(i))
+        }
+        val rdd = if (scans.size == 1) scans.head else sc.union(scans)
+        val parts = new Array[Array[InternalRow]](away.size)
         sc.runJob(rdd, CollectRows, parts.indices,
-          (p: Int, rows: Array[(Int, InternalRow)]) => parts(p) = rows)
-        parts.flatten
+          (k: Int, rows: Array[InternalRow]) => parts(k) = rows)
+        away.zip(parts).toMap
       }
-    lookups.zipWithIndex.map { case (l, i) =>
-      hits.collect { case (`i`, r) => r }.toSeq ++ l.table.tail.filter(l.keep)
+    lookups.indices.map { i =>
+      inPlace(i).flatMap { case (p, rows) => rows.getOrElse(fetched((i, p))) } ++
+        lookups(i).table.tail.filter(lookups(i).keep)
     }
   }
 

@@ -41,8 +41,9 @@ import graft.graph.{GraphModel, GraphSession, GraphState, IndexKey}
   * Scale notes: bootstrap is a parquet read of the checkpoint (co-partitioned
   * by `src` as written). A catch-up with nothing new is a directory listing
   * and runs no Spark job; driver-written op batches are read on the driver
-  * and apply like one commit of their ops (one lookup job for a stretch of
-  * new nodes and edges). Bulk-ingest WAL batches (`batch-K-bulk`) are
+  * and apply like one commit of their ops (one lookup for a stretch of
+  * new nodes and edges, run in place over the keyed bases the driver
+  * holds). Bulk-ingest WAL batches (`batch-K-bulk`) are
   * folded set-wise via [[GraphState.withTargetsDF]] — a 10^9-edge ingest
   * batch never touches the replica's driver, as in the writer's recovery.
   */
@@ -73,7 +74,7 @@ final class GraphReplica[V] private (
     */
   def getValue(n: Long): V = currentState.getValue(n)
 
-  /** Batched point reads: N lookups answered by ONE Spark job
+  /** Batched point reads: N lookups answered by ONE probe
     * ([[GraphState.getValues]]) — a serving layer fanning out point reads
     * should batch them here. Unknown ids are simply absent from the
     * result (the single-id API keeps its throwing contract). Result is

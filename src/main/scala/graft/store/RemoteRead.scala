@@ -38,8 +38,9 @@ import graft.graph.{GraphModel, GraphState, IndexKey}
   * case), `getTargets` under an index key, `targets`, `sources`,
   * `getStats`, and the replica's `watermark`. The server answers them
   * with the replica state's own reads: each op kind of a poll is one
-  * [[GraphState]] read over all of its requests (one Spark job for the
-  * point reads, no Catalyst pass), written as one parquet file on the
+  * [[GraphState]] read over all of its requests (one probe for the point
+  * reads, no Catalyst pass and, over bases the driver holds, no Spark
+  * job), written as one parquet file on the
   * driver ([[OpBatchFile]]) — the exact value fidelity of the checkpoint
   * format, so any `valueSchema` round-trips. The client reads its rows
   * back from that file on the driver ([[OpBatchFile.read]], no Spark
@@ -188,8 +189,9 @@ object RemoteRead {
   /** Most distinct ids one getValues request may carry. */
   private val MaxRequestIds = 100000
 
-  /** Most ids one poll reads. A poll's getValues ids ride to the executors
-    * in one task closure and its answers are built on the driver, so a
+  /** Most ids one poll reads. A poll's getValues ids are tested by one
+    * probe (and ride in its task closure where it runs a job) and its
+    * answers are built on the driver, so a
     * poll takes pending requests in name order while their ids fit, and
     * always at least one; the rest wait for the next poll.
     */
@@ -290,7 +292,7 @@ object RemoteRead {
     * one GraphState read ([[answer]]) whose rows go into ONE parquet file
     * written on the driver ([[OpBatchFile]]), and each request gets an
     * atomic `.ptr.json` pointer into it — a burst of N point reads costs
-    * one Spark job per op kind, not N. Answered request files are
+    * one probe per op kind, not N. Answered request files are
     * archived to `answered/` so the poll's inbox listing stays
     * O(pending), not O(all requests ever shipped).
     */

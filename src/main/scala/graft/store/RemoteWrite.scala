@@ -420,7 +420,7 @@ object RemoteWrite {
     * rest to [[applyTxns]], writing each final ack file and archiving its
     * dir as the core reports it. Each txn dir is read on the driver
     * ([[OpBatchFile.read]], no Spark job), so a poll finding N txns runs
-    * at most the existence check's and the commit's jobs + O(N/groupOps)
+    * one existence check, the commits' lookups and O(N/groupOps)
     * publishes, not O(N).
     */
   def applyPending[V](store: GraphStore[V], inboxDir: String): Seq[TxnAck] = {
@@ -534,8 +534,8 @@ object RemoteWrite {
     *     RECORDED ack, and a format version other than the server's is
     *     refused.
     *  1. The rest are decoded, and all their global refs are
-    *     existence-checked in ONE point read (a job only over a
-    *     materialized base).
+    *     existence-checked in ONE point read (a Spark job only over base
+    *     partitions whose blocks the driver does not hold).
     *  1. Each is applied by [[applyOne]]; applied txns are made durable by
     *     ONE group-committed WAL batch per `flushBound` ops, tagged with
     *     every member's ack.
@@ -581,9 +581,9 @@ object RemoteWrite {
     }
     if (todo.isEmpty) return acks.toSeq
 
-    // one existence-check job for ALL global refs; ids created/removed by
+    // one existence-check read for ALL global refs; ids created/removed by
     // earlier txns of this call are tracked driver-side (the server itself
-    // assigns/resolves them), so per-txn validation needs no further jobs
+    // assigns/resolves them), so per-txn validation needs no further reads
     val allGlobals = todo.flatMap(_.ops.toOption).flatten
       .flatMap(refsOf).filter(_ >= 0).distinct
     val existsAtStart: Set[Long] =

@@ -127,9 +127,11 @@ object Wire {
   // ------------------------------------------------------------ server
 
   /** Serves read frames from `read` and/or write frames against `write`
-    * on a loopback TCP port. Per-connection worker threads, one global
-    * execution lock (the reference's single-writer discipline; reads
-    * share it for simplicity, so a read waits for a write in progress).
+    * on a loopback TCP port. Per-connection worker threads; write and ANN
+    * frames take one global execution lock (the reference's single-writer
+    * discipline). Read frames take none: each answers from the replica's
+    * current state, an immutable value, so a read never waits for a write
+    * in progress.
     */
   final class Server[V] private[store] (read: Option[GraphReplica[V]],
       write: Option[GraphStore[V]],
@@ -209,14 +211,13 @@ object Wire {
     }
 
     private def handle(header: String, files: Seq[(String, Array[Byte])])
-        : Seq[(String, Array[Byte])] = execLock.synchronized {
+        : Seq[(String, Array[Byte])] =
       kindOf(header) match {
         case "read" => handleRead(files)
-        case "write" => handleWrite(files)
-        case "ann" => handleAnn(header, files)
+        case "write" => execLock.synchronized(handleWrite(files))
+        case "ann" => execLock.synchronized(handleAnn(header, files))
         case k => throw new IllegalArgumentException(s"unknown frame kind '$k'")
       }
-    }
 
     private def error(message: String): String =
       s"""{"kind": "error", "message": "${GraphStore.esc(message)}"}"""

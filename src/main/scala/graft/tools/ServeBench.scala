@@ -85,39 +85,44 @@ object ServeBench {
     val writeSec = (System.nanoTime() - t0) / 1e9
     System.err.println(s"[serve] write polls=$polls")
 
-    // ---- WIRE burst: the TCP transport (store.Wire) under the same
-    // point-read/write shape — 4 socket clients x 4 getValues requests of
-    // idsPerReq ids, then 16 wire txns. Each frame is a synchronous
+    // ---- WIRE: the TCP transport (store.Wire) under the same
+    // point-read/write shape — 4 socket clients x 16 getValues requests of
+    // idsPerReq ids, then 32 wire txns. Each frame is a synchronous
     // request/response (the reference's per-action round trip), so this
-    // measures the per-action serving floor over a real socket; batching
-    // ids per request is the amortization lever, as on the inbox path.
+    // measures the per-action serving floor over a real socket. Every
+    // client makes 4 untimed calls first, so the figures are warm round
+    // trips, reported as the median call.
     import graft.store.Wire
     val wireServer = Wire.serve(replica, store)
-    val wireReadSec = {
+    val (wireReads, wireWrites) = (64, 32)
+    def timed(f: => Unit): Double = {
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
+    }
+    def median(ms: Seq[Double]): Double = ms.sorted.apply(ms.size / 2)
+    val wireReadMs = {
       val clients = (0 until 4).map(_ => new Wire.ReadClient(
         spark, GeoModel, wireServer.host, wireServer.port))
-      clients.head.getValues(Seq(ids(0))) // warm the path
-      val t0 = System.nanoTime()
-      for (s <- 0 until 4; c <- clients)
+      def read(c: Wire.ReadClient[GeoV]): Unit =
         c.getValues(Seq.fill(idsPerReq)(ids(rnd.nextInt(nNodes))))
-      val sec = (System.nanoTime() - t0) / 1e9
+      for (_ <- 0 until 4; c <- clients) read(c)
+      val ms = for (_ <- 0 until wireReads / 4; c <- clients) yield timed(read(c))
       clients.foreach(_.close())
-      sec
+      ms
     }
-    val wireWriteSec = {
+    val wireWriteMs = {
       val wc = new Wire.WriteClient(spark, GeoModel,
         wireServer.host, wireServer.port)
-      val t0 = System.nanoTime()
-      val txnIds = (0 until 16).map { i =>
-        wc.submit { txn =>
+      def write(i: Int): Unit = {
+        val txnId = wc.submit { txn =>
           val n = txn.newNode(CustomerV(900000L + i))
           txn.addTarget(0L, n)
         }
+        require(wc.await(txnId, timeoutMs = 120000L).applied, s"wire txn $i refused")
       }
-      txnIds.foreach(id => wc.await(id, timeoutMs = 120000L))
-      val sec = (System.nanoTime() - t0) / 1e9
+      (0 until 4).foreach(write)
+      val ms = (4 until 4 + wireWrites).map(i => timed(write(i)))
       wc.close()
-      sec
+      ms
     }
     wireServer.close()
 
@@ -126,10 +131,11 @@ object ServeBench {
       s""""sec":${fmt(readSec)},"rps":${fmt(nReqs / readSec)}},""" +
       s""""write":{"txns":$writeTxns,"sec":${fmt(writeSec)},""" +
       s""""txn_rps":${fmt(writeTxns / writeSec)}},""" +
-      s""""wire":{"read_requests":16,"ids_per_req":$idsPerReq,""" +
-      s""""read_sec":${fmt(wireReadSec)},"read_rps":${fmt(16 / wireReadSec)},""" +
-      s""""write_txns":16,"write_sec":${fmt(wireWriteSec)},""" +
-      s""""write_rps":${fmt(16 / wireWriteSec)}}}""")
+      s""""wire":{"read_requests":$wireReads,"ids_per_req":$idsPerReq,""" +
+      s""""read_sec":${fmt(wireReadMs.sum / 1e3)},""" +
+      s""""read_median_ms":${fmt(median(wireReadMs))},""" +
+      s""""write_txns":$wireWrites,"write_sec":${fmt(wireWriteMs.sum / 1e3)},""" +
+      s""""write_median_ms":${fmt(median(wireWriteMs))}}}""")
     store.close()
     spark.stop()
   }

@@ -6,12 +6,15 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
-import org.apache.spark.SparkEnv
+import org.apache.spark.{SparkEnv, SparkException, TestBlocks}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.RDDBlockId
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
@@ -52,10 +55,11 @@ object GaugeModel extends GraphModel[Gauge] {
   }
 }
 
-/** What a point read costs: one Spark job run straight on the tables'
-  * keyed bases — no SQL execution, so no Catalyst pass — with one task
-  * per partition that owns a looked-up id, no codegen compile, not even
-  * for the first read of a state, and no Scala lambda for Spark's
+/** What a point read costs: a scan of the partitions of the tables'
+  * keyed bases that own its ids, in place from the blocks the driver holds
+  * — no Spark job and no SQL execution, so no Catalyst pass — and no
+  * codegen compile, not even for the first read of a state. A read of a
+  * planned base runs one Spark job, with no Scala lambda for Spark's
   * `ClosureCleaner` to parse the declaring class file of.
   */
 class ReadCostSpec extends AnyFunSuite {
@@ -141,26 +145,37 @@ class ReadCostSpec extends AnyFunSuite {
     var songs = (1 to 6).map { i => val s = g.newNode(Song(s"j$i")); g.addTarget(genre, s); s }
     store.commit()
     // a SetValue and a RemoveTarget (of an absent edge) materialize all
-    // three tables, so every read and the commit lookup run a job
+    // three tables, so every read and the commit lookup scan keyed bases
     g.setValue(genre, Genre("jazz"))
     g.removeTarget(g.root, g.root)
     store.commit()
     val st = g.applied()
     assert(Seq(st.nodeTable, st.edgeTable, st.indexTable).forall(t =>
       t.tail.isEmpty && t.partitioner.isDefined), "the bases did not materialize")
+    // the same rows as planned bases: their reads run the probe's job
+    val planned = GraphState(spark, CatalogueModel, st.nodes, st.edges, st.index)
+    val first = songs
     def readsAndCommit(i: Int): Unit = {
       assert(g.getValue(genre) === Genre("jazz"))
       assert(g.applied().getValues(songs).keySet === songs.toSet)
       assert(g.getTargets(genre, songKey).toSet === songs.toSet)
       assert(g.targets(genre).toSet === songs.toSet)
       assert(g.sources(genre) === Seq(g.root))
+      val job = CostProbe.costOf(spark) {
+        assert(planned.getValue(genre) === Genre("jazz"))
+        assert(planned.getValues(first).keySet === first.toSet)
+        assert(planned.getTargets(genre, songKey).toSet === first.toSet)
+        assert(planned.targets(genre).toSet === first.toSet)
+        assert(planned.sources(genre) === Seq(g.root))
+      }
+      assert(job.jobs === 5, s"5 reads of planned bases: $job")
       val c = CostProbe.costOf(spark) {
         val song = g.newNode(Song(s"warm$i"))
         g.addTarget(genre, song)
         store.commit()
         songs :+= song
       }
-      assert(c.jobs === 1, s"newNode + addTarget + commit: $c")
+      assert(c.jobs === 0, s"newNode + addTarget + commit: $c")
     }
     readsAndCommit(1)
     val cleaned = lambdasCleaned(readsAndCommit(2))
@@ -176,51 +191,126 @@ class ReadCostSpec extends AnyFunSuite {
     // serializer that ships them to the executors
     val ser = SparkEnv.get.closureSerializer.newInstance()
     def roundTrip[T <: AnyRef: ClassTag](f: T): T = ser.deserialize[T](ser.serialize[AnyRef](f))
-    val tag = roundTrip(new GraphState.TagRows(3, _.getLong(0) == 7L))
+    val keep = roundTrip(new GraphState.KeepRows(_.getLong(0) == 7L))
     val collect = roundTrip(GraphState.CollectRows)
-    val tagged = collect(null, tag(Iterator(InternalRow(5L), InternalRow(7L))))
-    assert(tagged.map { case (i, r) => (i, r.getLong(0)) }.toSeq === Seq((3, 7L)))
+    val kept = collect(null, keep(Iterator(InternalRow(5L), InternalRow(7L))))
+    assert(kept.map(_.getLong(0)).toSeq === Seq(7L))
   }
 
-  test("getValue and getTargets run one Spark job each") {
+  test("getValue and getTargets on keyed bases run no Spark job") {
     val (g, genres) = fixture
     for ((genre, songs) <- Seq(genres.head, genres.last)) {
       val v = CostProbe.costOf(spark)(assert(g.getValue(genre).isInstanceOf[Genre]))
-      assert(v.jobs === 1 && v.sqlExecutions === 0, s"getValue($genre): $v")
+      assert(v.jobs === 0 && v.sqlExecutions === 0, s"getValue($genre): $v")
       val t = CostProbe.costOf(spark)(assert(g.getTargets(genre, songKey).toSet === songs))
-      assert(t.jobs === 1 && t.sqlExecutions === 0, s"getTargets($genre): $t")
+      assert(t.jobs === 0 && t.sqlExecutions === 0, s"getTargets($genre): $t")
       val o = CostProbe.costOf(spark)(assert(g.targets(genre).toSet === songs))
-      assert(o.jobs === 1 && o.sqlExecutions === 0, s"targets($genre): $o")
+      assert(o.jobs === 0 && o.sqlExecutions === 0, s"targets($genre): $o")
       val i = CostProbe.costOf(spark)(assert(g.sources(genre) === Seq(g.root)))
-      assert(i.jobs === 1 && i.sqlExecutions === 0, s"sources($genre): $i")
+      assert(i.jobs === 0 && i.sqlExecutions === 0, s"sources($genre): $i")
     }
     intercept[NoSuchElementException](g.getValue(424242L))
   }
 
-  test("over 64-partition bases a single-id read runs 1 task, a k-id read at most k; sources all") {
+  /** Drops the blocks of `t`'s base partitions that `keep` does not name. */
+  private def dropBlocksBut(t: GraphState.Table, keep: Set[Int]): Unit =
+    (0 until t.baseRows.getNumPartitions).filterNot(keep).foreach(p =>
+      TestBlocks.remove(RDDBlockId(t.baseRows.id, p)))
+
+  test("over 64-partition bases a read needs only its ids' blocks") {
     val (g, genres) = keyed(64)
-    for ((genre, songs) <- genres.take(3)) {
-      def oneTask(read: String)(f: => Unit): Unit = {
-        val c = CostProbe.costOf(spark)(f)
-        assert(c.jobs === 1 && c.tasks === 1 && c.sqlExecutions === 0, s"$read($genre): $c")
-      }
-      oneTask("getValue")(assert(g.getValue(genre).isInstanceOf[Genre]))
-      oneTask("getTargets")(assert(g.getTargets(genre, songKey).toSet === songs))
-      oneTask("targets")(assert(g.targets(genre).toSet === songs))
-      // edges are keyed by src: a lookup by dst scans every partition
-      val s = CostProbe.costOf(spark)(assert(g.sources(genre) === Seq(g.root)))
-      assert(s.jobs === 1 && s.tasks === 64, s"sources($genre): $s")
-    }
     val st = g.applied()
-    for (k <- Seq(2, 5, 11)) {
-      val ids = genres.take(k).map(_._1)
-      val c = CostProbe.costOf(spark)(assert(st.getValues(ids).keySet === ids.toSet))
-      assert(c.jobs === 1 && c.tasks <= k && c.sqlExecutions === 0, s"getValues of $k ids: $c")
-      val t = CostProbe.costOf(spark)(assert(st.targets(ids).keySet === ids.toSet))
-      assert(t.jobs === 1 && t.tasks <= k, s"targets of $k ids: $t")
+    val tables = Seq(st.nodeTable, st.edgeTable, st.indexTable)
+    for ((genre, songs) <- genres.take(3)) {
+      val c = CostProbe.costOf(spark) {
+        assert(g.getValue(genre).isInstanceOf[Genre])
+        assert(g.getTargets(genre, songKey).toSet === songs)
+        assert(g.targets(genre).toSet === songs)
+        // edges are keyed by src: a lookup by dst scans every partition
+        assert(g.sources(genre) === Seq(g.root))
+      }
+      assert(c.jobs === 0 && c.sqlExecutions === 0, s"reads of $genre: $c")
     }
-    val unknown = CostProbe.costOf(spark)(assert(st.getValues(Seq(424242L)).isEmpty))
-    assert(unknown.tasks === 1, s"getValues of an unknown id: $unknown")
+    // every base keeps only the blocks of the partitions that own the ids
+    // read below (an unknown one among them) and the id of a song added
+    // later; a read of any other partition would fail
+    val five = genres.take(5)
+    val unknown = 424242L
+    val late = g.newNode(Song("late"))
+    val part = st.nodeTable.partitioner.get
+    assert(tables.forall(_.partitioner.contains(part)) && part.numPartitions === 64)
+    val owners = (five.map(_._1) :+ unknown :+ late).map(part.getPartition).toSet
+    assert(owners.size < 64 / 4, s"owners $owners")
+    tables.foreach(dropBlocksBut(_, owners))
+    val c = CostProbe.costOf(spark) {
+      for ((genre, songs) <- five) {
+        assert(st.getValue(genre).isInstanceOf[Genre])
+        assert(st.getTargets(genre, songKey).toSet === songs)
+        assert(st.targets(genre).toSet === songs)
+      }
+      for (k <- Seq(2, 5)) {
+        val ids = five.take(k).map(_._1)
+        assert(st.getValues(ids).keySet === ids.toSet)
+        assert(st.targets(ids).map { case (id, d) => id -> d.toSet } === five.take(k).toMap)
+        assert(st.getTargets(ids.map(_ -> songKey)).map { case ((id, _), d) => id -> d.toSet } ===
+          five.take(k).toMap)
+      }
+      assert(st.getValues(Seq(unknown)).isEmpty)
+      // the commit's endpoint lookup: the genre and the new song
+      g.addTarget(five.head._1, late)
+      assert(g.getTargets(five.head._1, songKey).toSet === five.head._2 + late)
+    }
+    assert(c.jobs === 0 && c.sqlExecutions === 0, s"reads and a commit over the owning blocks: $c")
+    // a read that needs a dropped block fails, as a read of a lost block
+    // does: sources scans every partition
+    intercept[SparkException](st.sources(five.head._1))
+    // and so does a point read once its own owning block is gone
+    val genre = five.head._1
+    TestBlocks.remove(RDDBlockId(st.nodeTable.baseRows.id, part.getPartition(genre)))
+    val e = intercept[SparkException](st.getValue(genre))
+    assert(e.getMessage.contains("not found"), e.getMessage)
+  }
+
+  test("reads of planned bases run one job and answer what keyed bases answer") {
+    val (g, genres) = fixture
+    val st = g.applied()
+    val keyedIds = genres.map(_._1) :+ g.root :+ 424242L
+    val planned = GraphState(spark, CatalogueModel, st.nodes, st.edges, st.index)
+    val loaded = GraphState.bulkLoad(spark, CatalogueModel, st.nodes, st.edges)
+    def sets(m: Map[Long, Seq[Long]]) = m.map { case (k, v) => k -> v.toSet }
+    def keyedTargets(s: GraphState[Cat]) =
+      s.getTargets(keyedIds.map(_ -> songKey)).map { case (k, v) => k -> v.toSet }
+    for ((name, s) <- Seq("GraphState.apply" -> planned, "bulkLoad" -> loaded)) {
+      assert(Seq(s.nodeTable, s.edgeTable, s.indexTable).forall(_.partitioner.isEmpty), name)
+      def oneJob[T](read: String)(f: => T): T = {
+        var out: Option[T] = None
+        val c = CostProbe.costOf(spark) { out = Some(f) }
+        assert(c.jobs === 1 && c.sqlExecutions === 0, s"$name $read: $c")
+        out.get
+      }
+      assert(oneJob("getValues")(s.getValues(keyedIds)) === st.getValues(keyedIds), name)
+      assert(oneJob("getTargets")(keyedTargets(s)) === keyedTargets(st), name)
+      assert(sets(oneJob("targets")(s.targets(keyedIds))) === sets(st.targets(keyedIds)), name)
+      assert(sets(oneJob("sources")(s.sources(keyedIds))) === sets(st.sources(keyedIds)), name)
+      assert(oneJob("getValue")(s.getValue(genres.head._1)) === Genre("g0"), name)
+    }
+  }
+
+  test("a scan whose predicate throws releases its block's read lock") {
+    val (g, _) = keyed(4)
+    val nodes = g.applied().nodeTable
+    val rows = nodes.baseRows
+    // the partition that holds the root: its scan tests at least one row
+    val p = nodes.partitioner.get.getPartition(g.root)
+    val throwing = new GraphState.KeepRows(_ => throw new IllegalStateException("boom"))
+    val e = intercept[IllegalStateException](GraphState.scanInPlace(rows, p, throwing))
+    assert(e.getMessage === "boom")
+    // removal waits for every read lock on the block: a leaked one would
+    // hold it forever
+    val removed = Future(TestBlocks.remove(RDDBlockId(rows.id, p)))(ExecutionContext.global)
+    Await.result(removed, 30.seconds)
+    assert(GraphState.scanInPlace(rows, p, new GraphState.KeepRows(_ => true)).isEmpty,
+      "the block is still there")
   }
 
   test("the first reads of a fresh state's keyed bases compile no class") {

@@ -193,9 +193,9 @@ class RemoteReadSpec extends AnyFunSuite {
       answered = RemoteRead.answerPending(replica, inbox.toString)
     }
     assert(answered.size === 11)
-    // one probe per op kind: at most one Spark job each, run on the
-    // tables' planned RDDs — no Catalyst pass, no generated class
-    assert(cost.jobs <= 4 && cost.sqlExecutions === 0 && cost.compiles === 0,
+    // one probe per op kind, each a scan of the keyed bases' blocks in
+    // place: no Spark job, no Catalyst pass, no generated class
+    assert(cost.jobs === 0 && cost.sqlExecutions === 0 && cost.compiles === 0,
       s"a poll of 4 op kinds cost $cost")
     assert(client.await("jb-000008", 5000L).result.isLeft,
       "a malformed batchable request is an individual refusal")

@@ -1,8 +1,13 @@
 package graft.store
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.util.Try
 
 import graft.graph._
 
@@ -473,8 +478,9 @@ class WireSpec extends AnyFunSuite {
   }
 
   test("a wire round trip costs the Spark jobs of the serving call it runs") {
-    // a store reopened from its snapshot serves from materialized bases,
-    // so a point read and a commit lookup run real jobs
+    // a store reopened from its snapshot serves from materialized keyed
+    // bases, whose blocks the driver holds: a point read and a commit
+    // lookup scan them in place and run no job
     val (first, dir, mj, _) = storeWithData()
     first.close()
     val store = GraphStore.open(spark, CatalogueModel, CatRoot: Cat, dir)
@@ -491,8 +497,8 @@ class WireSpec extends AnyFunSuite {
       replica.getValues(Seq(mj)); rc.getValues(Seq(mj))
       val local = cost(replica.getValues(Seq(mj)))
       val wire = cost(assert(rc.getValues(Seq(mj)).keySet === Set(mj)))
-      assert(local.jobs === 1 && local.tasks === 1, s"replica.getValues: $local")
-      assert(wire.jobs === 1 && wire.tasks === 1,
+      assert(local.jobs === 0 && local.sqlExecutions === 0, s"replica.getValues: $local")
+      assert(wire.jobs === 0 && wire.sqlExecutions === 0,
         s"a warm wire getValues must run only the replica's read: $wire")
       // writes: the same one-txn shape through the inbox poll and the wire
       def txn(name: String)(t: RemoteWrite.RemoteTxn[Cat]): Unit =
@@ -504,10 +510,69 @@ class WireSpec extends AnyFunSuite {
       var acked: RemoteWrite.TxnAck = null
       val wired = cost { acked = wc.await(wc.submit(txn("wire"))) }
       assert(acked.applied, acked)
-      assert(polled.jobs >= 1, s"the poll ran no job: $polled")
+      assert(polled.jobs === 0, s"the poll's existence check and commit lookup: $polled")
       assert(wired.jobs === polled.jobs,
         s"a one-txn wire write ($wired) must run the jobs of applyPending ($polled)")
       info(s"getValues: $wire; write: $wired")
     } finally { rc.close(); wc.close(); server.close(); store.close() }
+  }
+
+  test("a read frame is answered while a write frame applies on another connection") {
+    val dir = Files.createTempDirectory("graft-wire-concurrent-").toString
+    val model = new GatedModel("gate")
+    val store = GraphStore.open(spark, model, CatRoot: Cat, dir)
+    val mj = store.session.newNode(Artist(1, "Michael Jackson"))
+    store.session.addTarget(store.session.root, mj)
+    store.commit()
+    val replica = GraphReplica.bootstrap(spark, model, dir)
+    replica.catchUp()
+    val server = Wire.serve(replica, store)
+    val rc = new Wire.ReadClient(spark, CatalogueModel, server.host, server.port)
+    val wc = new Wire.WriteClient(spark, CatalogueModel, server.host, server.port)
+    try {
+      assert(rc.getValue(mj) === Artist(1, "Michael Jackson"))
+      // 2,000 songs under the root, the gated one last: the frame's apply
+      // waits inside the server's write path until the read below is done
+      val write = Future {
+        wc.await(wc.submit { t =>
+          (1 to 2000).foreach(i => t.addTarget(0L, t.newNode(Song(s"s$i"))))
+          t.addTarget(0L, t.newNode(Song("gate")))
+        })
+      }(ExecutionContext.global)
+      assert(model.applying.await(60, TimeUnit.SECONDS), "the write frame never applied")
+      val read = Try(rc.getValue(mj))
+      val heldWhileRead = !model.passed
+      model.release.countDown()
+      val ack = Await.result(write, 120.seconds)
+      assert(ack.applied, ack)
+      assert(read.toOption.contains(Artist(1, "Michael Jackson")), read)
+      assert(heldWhileRead, "the read was answered only after the write left its apply")
+    } finally {
+      model.release.countDown(); rc.close(); wc.close(); server.close(); store.close()
+    }
+  }
+}
+
+/** [[CatalogueModel]] whose index emission for an edge to or from the song
+  * named `gate` first counts down `applying`, then waits (at most 20 s) for
+  * `release`, and then sets `passed`: a txn that links that song holds its
+  * apply open until the test releases it.
+  */
+private final class GatedModel(gate: String) extends GraphModel[Cat] {
+  @transient lazy val applying = new CountDownLatch(1)
+  @transient lazy val release = new CountDownLatch(1)
+  @volatile var passed = false
+  val valueSchema: org.apache.spark.sql.types.StructType = CatalogueModel.valueSchema
+  def kindOf(v: Cat): String = CatalogueModel.kindOf(v)
+  def toValueRow(v: Cat): org.apache.spark.sql.Row = CatalogueModel.toValueRow(v)
+  def fromValueRow(kind: String, row: org.apache.spark.sql.Row): Cat =
+    CatalogueModel.fromValueRow(kind, row)
+  def indexes(target: Cat, source: Cat): Seq[IndexKey] = {
+    if (Seq(target, source).contains(Song(gate))) {
+      applying.countDown()
+      release.await(20, TimeUnit.SECONDS)
+      passed = true
+    }
+    CatalogueModel.indexes(target, source)
   }
 }
